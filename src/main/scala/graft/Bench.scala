@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 import graft.pipeline.KgPipeline
 import graft.synth.PagesSynth
@@ -10,7 +12,9 @@ import graft.synth.PagesSynth
   * mention/link → triples) at the sf-scaled corpus, plus representative
   * relational / training-data queries. `value` = total seconds across the
   * timed queries (the driver's metric); the queries map carries the
-  * per-query seconds.
+  * per-query seconds. A query that throws is never timed: it is left out
+  * of `queries` and `value`, listed with its error under `failed`, and the
+  * run exits non-zero after printing the line.
   */
 object Bench {
 
@@ -40,6 +44,7 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
 
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
+    val failed = scala.collection.mutable.LinkedHashMap[String, String]()
 
     // warm-up pass (untimed): run every benched plan once so the timed pass
     // measures steady-state execution, not C2/codegen compilation of each
@@ -67,7 +72,7 @@ object Bench {
 
     benchQueries.foreach { name =>
       SparkEntry.queries.get(name).foreach { fn =>
-        try fn(spark, sfDir).count() catch { case _: Throwable => () }
+        try fn(spark, sfDir).count() catch { case NonFatal(_) => () } // the timed passes record it
       }
     }
 
@@ -121,12 +126,18 @@ object Bench {
       benchQueries.foreach { name =>
         SparkEntry.queries.get(name).foreach { fn =>
           System.gc() // fence: previous query's garbage stays out of this timing
-          val (_, qsec) = timed {
-            try fn(spark, sfDir).count() catch { case _: Throwable => -1L }
+          val (ok, qsec) = timed {
+            try { fn(spark, sfDir).count(); true }
+            catch { case NonFatal(e) =>
+              failed.getOrElseUpdate(name, s"${e.getClass.getName}: ${e.getMessage}")
+              false
+            }
           }
-          val old = results.getOrElse(name, Double.MaxValue)
-          if (qsec < old * 0.98) improved = true
-          if (qsec < old) results(name) = qsec
+          if (ok) {
+            val old = results.getOrElse(name, Double.MaxValue)
+            if (qsec < old * 0.98) improved = true
+            if (qsec < old) results(name) = qsec
+          }
         }
       }
       stalePasses = if (improved) 0 else stalePasses + 1
@@ -146,15 +157,20 @@ object Bench {
     }.min
 
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
+    val fails = new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(failed.asJava)
     val total = results.values.sum
     val tps = if (pipeSec > 0) (nTriples / pipeSec).toLong else 0L
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","pages":$n,"triples":$nTriples,"triples_per_sec":$tps,"pipeline_encoded_sec":${f"$encSec%.3f"},"sustained_pages":$nBig,"sustained_triples_per_sec":$sustainedTps,"cpus":$cpus,"passes":$passes,"calib_ms_pre":${f"$calibPre%.1f"},"calib_ms_post":${f"$calibPost%.1f"}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","pages":$n,"triples":$nTriples,"triples_per_sec":$tps,"pipeline_encoded_sec":${f"$encSec%.3f"},"sustained_pages":$nBig,"sustained_triples_per_sec":$sustainedTps,"cpus":$cpus,"passes":$passes,"calib_ms_pre":${f"$calibPre%.1f"},"calib_ms_post":${f"$calibPost%.1f"},"failed":$fails}"""
     println(json)
     // belt-and-braces beside the stdout contract line: a parse-safe copy on
     // disk (round 1's line landed wrapped in sbt "[info] " and went unparsed)
     try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_result.json"), json + "\n")
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"Bench: ${failed.size} queries failed: ${failed.keys.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

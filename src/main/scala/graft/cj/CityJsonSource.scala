@@ -1,7 +1,10 @@
 package graft.cj
 
 import java.util.{Map => JMap}
+import scala.annotation.switch
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader,
@@ -28,13 +31,23 @@ import org.apache.spark.util.SerializableConfiguration
   *    `spark.hadoop.*` SQL conf) and shipped to executors via
   *    [[SerializableConfiguration]] — object-store credentials and custom
   *    filesystem schemes resolve on the reader exactly as on the driver;
-  *  - listing is RECURSIVE (`fs.listFiles(path, true)`), matching how a
-  *    city corpus is laid out in dated/partitioned subdirectories;
-  *  - files are packed into size-binned input partitions the way Spark's
-  *    own file-scan planner does it (`maxSplitBytes = min(maxPartitionBytes,
-  *    max(openCostInBytes, total/defaultParallelism))`, biggest-first greedy
-  *    fill): a 10⁶-tiny-document corpus plans O(cores) multi-file
-  *    partitions instead of 10⁶ single-file tasks.
+  *  - each query lists the corpus ONCE, walking the tree RECURSIVELY with
+  *    `fs.listStatus` (a city corpus is laid out in dated/partitioned
+  *    subdirectories; `.json` files only). The walk never reads a file's
+  *    permission or owner, so a local filesystem without the native Hadoop
+  *    library forks no `stat` process per file. The scan keeps its
+  *    partitions for the copies Spark makes of its plan node; nothing is
+  *    cached across queries, so a file added between two queries shows up
+  *    in the second;
+  *  - files are packed into size-costed input partitions: each file costs
+  *    `len + openCostInBytes`, the bin count is `max(defaultParallelism,
+  *    ⌈totalCost / maxPartitionBytes⌉)`, and files go biggest first into
+  *    the least-loaded bin. Tiny documents share a task instead of each
+  *    taking one, and no bin ends up with more than the mean cost plus one
+  *    file, so a corpus fills every core instead of queueing its largest
+  *    documents behind one task;
+  *  - rows are built from column ordinals resolved once per reader (an
+  *    unknown pruned column fails at reader creation), one array per row.
   *
   * Conversion semantics are [[CjConvert]] — identical to every other entry
   * point (spec-locked against `CjSpark.convert`); doc-level failures follow
@@ -63,32 +76,51 @@ object CityJsonSource {
     s"cj:${name.stripSuffix(".city.json").stripSuffix(".json")}"
   }
 
-  /** Spark-planner-style size binning: biggest-first greedy fill into bins
-    * of `maxSplitBytes`, every file costed at (len + openCost) so a sea of
-    * tiny files still amortizes task startup. Deterministic (stable input
-    * order, stable sort). */
+  /** Least-loaded (LPT) size binning. Every file is costed at
+    * `len + openCost`, so a sea of tiny files still amortizes task startup.
+    * The bin count is fixed up front at `max(minPartitionNum,
+    * ⌈totalCost / maxPartitionBytes⌉)` (at most one bin per file); files
+    * are then taken biggest first (ties by path) and each goes into the
+    * currently least-loaded bin (ties by bin index). The largest bin then
+    * costs at most the mean bin cost plus the largest file's cost, and a
+    * file costlier than `maxPartitionBytes` always ends up alone.
+    * Deterministic for a given file set. */
   private[cj] def packPartitions(files: Seq[(String, Long)], maxPartitionBytes: Long,
       openCostInBytes: Long, minPartitionNum: Int): Array[Array[String]] = {
     if (files.isEmpty) return Array.empty
-    val totalBytes = files.map(_._2 + openCostInBytes).sum
-    val maxSplitBytes = math.min(maxPartitionBytes,
-      math.max(openCostInBytes, totalBytes / math.max(1, minPartitionNum)))
-    val bins = scala.collection.mutable.ArrayBuffer.empty[scala.collection.mutable.ArrayBuffer[String]]
-    var current = scala.collection.mutable.ArrayBuffer.empty[String]
-    var currentBytes = 0L
-    // biggest-first: large docs seed their own bins, small docs backfill
+    val totalCost = files.map(_._2 + openCostInBytes).sum
+    val nBins = math.min(files.size.toLong, math.max(minPartitionNum.toLong,
+      (totalCost + maxPartitionBytes - 1) / maxPartitionBytes)).toInt
+    val bins = Array.fill(nBins)(Array.newBuilder[String])
+    // min-heap on (load, bin index)
+    val leastLoaded = scala.collection.mutable.PriorityQueue.tabulate(nBins)(b => (0L, b))(
+      Ordering[(Long, Int)].reverse)
     files.sortBy { case (p, len) => (-len, p) }.foreach { case (p, len) =>
-      val cost = len + openCostInBytes
-      if (current.nonEmpty && currentBytes + cost > maxSplitBytes) {
-        bins += current
-        current = scala.collection.mutable.ArrayBuffer.empty[String]
-        currentBytes = 0L
-      }
-      current += p
-      currentBytes += cost
+      val (load, b) = leastLoaded.dequeue()
+      bins(b) += p
+      leastLoaded.enqueue((load + len + openCostInBytes, b))
     }
-    if (current.nonEmpty) bins += current
-    bins.map(_.toArray).toArray
+    // zero-cost files (len 0, openCost 0) can leave bins empty
+    bins.map(_.result()).filter(_.nonEmpty)
+  }
+
+  /** Every `.json` file under `root` (recursively), or `root` itself if it
+    * is a file, as (path, length) in listing order. Walks with `listStatus`
+    * only: `listFiles` builds a `LocatedFileStatus` per file, which reads
+    * the file's permission — on a local filesystem without the native
+    * Hadoop library that forks a `stat` process per file. Nothing here
+    * touches a status's permission, owner or group. */
+  private[cj] def listDocuments(fs: FileSystem, root: Path): Array[(String, Long)] = {
+    val files = Array.newBuilder[(String, Long)]
+    def walk(dir: Path): Unit = fs.listStatus(dir).foreach { s =>
+      if (s.isDirectory) walk(s.getPath)
+      else if (s.isFile && s.getPath.getName.endsWith(".json"))
+        files += ((s.getPath.toString, s.getLen))
+    }
+    val rootStatus = fs.getFileStatus(root)
+    if (rootStatus.isDirectory) walk(root)
+    else files += ((rootStatus.getPath.toString, rootStatus.getLen))
+    files.result()
   }
 }
 
@@ -123,26 +155,18 @@ final class CityJsonScan(path: String, required: StructType,
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    // driver-side listing only (recursive) — file CONTENT is read on executors
-    val hadoopPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hadoopPath.getFileSystem(confSer.value)
-    val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    if (fs.getFileStatus(hadoopPath).isDirectory) {
-      val it = fs.listFiles(hadoopPath, true)
-      while (it.hasNext) {
-        val s = it.next()
-        if (s.isFile && s.getPath.getName.endsWith(".json"))
-          files += ((s.getPath.toString, s.getLen))
-      }
-    } else {
-      val s = fs.getFileStatus(hadoopPath)
-      files += ((s.getPath.toString, s.getLen))
-    }
-    CityJsonSource.packPartitions(files.sortBy(_._1).toSeq,
-        maxPartitionBytes, openCostInBytes, minPartitionNum)
+  // Spark asks every copy of the physical scan node for its partitions, and
+  // the copies share this Scan: list once per scan, i.e. once per query (a
+  // new query builds a new scan and lists afresh). Driver-side listing
+  // only — file CONTENT is read on executors.
+  private lazy val partitions: Array[InputPartition] = {
+    val root = new Path(path)
+    val files = CityJsonSource.listDocuments(root.getFileSystem(confSer.value), root)
+    CityJsonSource.packPartitions(files.toSeq, maxPartitionBytes, openCostInBytes, minPartitionNum)
       .map(group => CityJsonFilePartition(group): InputPartition)
   }
+
+  override def planInputPartitions(): Array[InputPartition] = partitions
 
   override def createReaderFactory(): PartitionReaderFactory =
     new CityJsonReaderFactory(required.fieldNames, confSer)
@@ -154,10 +178,16 @@ final class CityJsonReaderFactory(fields: Array[String], confSer: SerializableCo
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val filePaths = partition.asInstanceOf[CityJsonFilePartition].filePaths
+    // column ordinals in the full schema, resolved once per reader
+    val ordinals = fields.map { f =>
+      val i = CityJsonSource.schema.fieldNames.indexOf(f)
+      if (i < 0) throw new IllegalArgumentException(s"unknown column $f")
+      i
+    }
     new PartitionReader[InternalRow] {
       private var current: InternalRow = _
       private lazy val rows: Iterator[InternalRow] = filePaths.iterator.flatMap { filePath =>
-        val p = new org.apache.hadoop.fs.Path(filePath)
+        val p = new Path(filePath)
         // the SESSION's Hadoop conf, not a blank new Configuration(): an
         // object store the driver could list must be one the reader can open
         val fs = p.getFileSystem(confSer.value)
@@ -166,17 +196,21 @@ final class CityJsonReaderFactory(fields: Array[String], confSer: SerializableCo
           finally in.close()
         val docIri = CityJsonSource.docIriFor(filePath)
         val docUtf8 = UTF8String.fromString(docIri)
-        def u(s: String): AnyRef = if (s == null) null else UTF8String.fromString(s)
         CjConvert.convert(docIri, json).triples.iterator.map { t =>
-          InternalRow.fromSeq(fields.toIndexedSeq.map {
-            case "doc_iri" => docUtf8
-            case "subj" => u(t.subj)
-            case "pred" => u(t.pred)
-            case "obj_iri" => u(t.obj_iri)
-            case "obj_lit" => u(t.obj_lit)
-            case "obj_type" => u(t.obj_type)
-            case other => throw new IllegalArgumentException(s"unknown column $other")
-          })
+          val values = new Array[Any](ordinals.length)
+          var i = 0
+          while (i < ordinals.length) {
+            values(i) = (ordinals(i): @switch) match {
+              case 0 => docUtf8
+              case 1 => UTF8String.fromString(t.subj)
+              case 2 => UTF8String.fromString(t.pred)
+              case 3 => UTF8String.fromString(t.obj_iri)
+              case 4 => UTF8String.fromString(t.obj_lit)
+              case _ => UTF8String.fromString(t.obj_type)
+            }
+            i += 1
+          }
+          new GenericInternalRow(values)
         }
       }
       override def next(): Boolean =

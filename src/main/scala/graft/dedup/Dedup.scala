@@ -514,6 +514,7 @@ object Dedup {
     var e = Checkpoints.cut(
       canon(pairs.select(col(a).cast("long").as("u"), col(b).cast("long").as("v"))),
       0, reliableEvery)
+    var eCount = e.count() // each round's count carries into the next comparison
     def sym(d: DataFrame) = d.unionAll(d.select(col("v").as("u"), col("u").as("v")))
     val w = Window.partitionBy("u")
     var converged = false
@@ -534,8 +535,10 @@ object Dedup {
       // edge sets, so |next| == |e| ∧ next \ e = ∅ ⟺ next = e — one count
       // and one anti-join instead of the old union + intersect + except
       // chain (three extra shuffles per round on the biggest intermediate)
-      converged = next.count() == e.count() && next.except(e).isEmpty
+      val nextCount = next.count()
+      converged = nextCount == eCount && next.except(e).isEmpty
       e = next
+      eCount = nextCount
       iter += 1
     }
     if (!converged)

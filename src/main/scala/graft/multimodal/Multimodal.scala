@@ -2,6 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 import graft.util.Rng
 
 /** Multimodal columns: image/audio/video ride as opaque `binary` columns
@@ -67,7 +68,7 @@ object Multimodal {
   def decodeImage(bytes: Array[Byte]): Option[java.awt.image.BufferedImage] =
     if (!isImageBlob(bytes)) None
     else try Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes)))
-    catch { case _: Throwable => None }
+    catch { case NonFatal(_) => None }
 
   def encodePng(img: java.awt.image.BufferedImage): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
@@ -104,7 +105,7 @@ object Multimodal {
         new java.io.ByteArrayInputStream(bytes))
       val fmt = aff.getFormat
       Some((fmt.getSampleRate.toInt, fmt.getChannels, aff.getFrameLength))
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** REAL PCM sample decode through `AudioSystem.getAudioInputStream`:
     * the interleaved 16-bit samples, or None for non-audio input. */
@@ -118,7 +119,7 @@ object Multimodal {
       var i = 0
       while (i < out.length) { out(i) = bb.getShort(); i += 1 }
       Some(out)
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   // ------------------------------------------------------------------ AVI
 

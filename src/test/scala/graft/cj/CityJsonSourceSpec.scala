@@ -1,7 +1,9 @@
 package graft.cj
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 import graft.SparkTestBase
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.SerializableConfiguration
 
@@ -19,7 +21,45 @@ class GraftTestFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("graftfs:///")
 }
 
+/** Local filesystem under the `countfs:` scheme that counts its
+  * `listStatus` calls per directory, and hands out statuses that count every
+  * read of their permission, owner or group (the reads that make a local
+  * filesystem fork a `stat` process per file). Instances are made per
+  * resolve, so the counters live in the companion. */
+class CountingTestFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("countfs:///")
+  override def listStatus(f: Path): Array[FileStatus] = {
+    CountingTestFs.listings.merge(f.toUri.getPath, 1, (a: Integer, b: Integer) => a + b)
+    super.listStatus(f).map { s =>
+      new FileStatus(s.getLen, s.isDirectory, 1, s.getBlockSize, s.getModificationTime, s.getPath) {
+        override def getPermission = { CountingTestFs.attributeReads.incrementAndGet(); super.getPermission }
+        override def getOwner = { CountingTestFs.attributeReads.incrementAndGet(); super.getOwner }
+        override def getGroup = { CountingTestFs.attributeReads.incrementAndGet(); super.getGroup }
+      }
+    }
+  }
+}
+
+object CountingTestFs {
+  val listings = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+  val attributeReads = new AtomicInteger()
+  def reset(): Unit = { listings.clear(); attributeReads.set(0) }
+  def listingsOf(dir: java.nio.file.Path): Int =
+    Option(listings.get(dir.toString)).map(_.intValue).getOrElse(0)
+}
+
 class CityJsonSourceSpec extends SparkTestBase {
+
+  /** A minimal valid document: one Building with one string attribute. */
+  private def writeDoc(file: java.nio.file.Path): Unit = {
+    Files.createDirectories(file.getParent)
+    Files.write(file, """{"type":"CityJSON","version":"1.1","vertices":[],
+      "CityObjects":{"a":{"type":"Building","attributes":{"s":"hello"}}}}""".getBytes("UTF-8"))
+  }
+
+  private def docIris(dir: java.nio.file.Path): Set[String] =
+    spark.read.format("cityjson").load(dir.toString).select("doc_iri").distinct()
+      .collect().map(_.getString(0)).toSet
 
   private val examples = "/root/reference/examples"
 
@@ -124,5 +164,92 @@ class CityJsonSourceSpec extends SparkTestBase {
     // tetra's golden triple count is 47 (CjIndependentGoldenSpec)
     assert(one.count() == 47)
     assert(one.select("doc_iri").distinct().head.getString(0) == "cj:tetra")
+  }
+
+  test("skewed sizes below minPartitionNum x maxPartitionBytes pack into exactly minPartitionNum bins") {
+    // 64 documents whose sizes span 40x (log-uniform), like a city corpus
+    val files = (0 until 64).map(i => (f"d$i%02d.json", (50000 * math.pow(40, ((i * 37) % 64) / 63.0)).toLong))
+    for (openCost <- Seq(4L << 20, 64L << 10, 0L); minParts <- Seq(3, 4, 7)) {
+      assert(files.map(_._2 + openCost).sum < minParts * (128L << 20))
+      val bins = CityJsonSource.packPartitions(files,
+        maxPartitionBytes = 128L << 20, openCostInBytes = openCost, minPartitionNum = minParts)
+      assert(bins.length == minParts, s"openCost=$openCost: ${bins.length} bins")
+      assert(bins.flatten.sorted.toSeq == files.map(_._1).sorted)
+    }
+  }
+
+  test("least-loaded packing: the largest bin costs at most the mean bin cost plus the largest file") {
+    val rnd = new scala.util.Random(7)
+    for (round <- 0 until 50) {
+      val n = 1 + rnd.nextInt(200)
+      // heavy-tailed sizes: most files small, a few up to ~64 MB
+      val files = (0 until n).map(i => (s"r$round-f$i.json", (math.pow(rnd.nextDouble(), 4) * (64L << 20)).toLong))
+      val openCost = Seq(0L, 1L << 20, 4L << 20)(round % 3)
+      val size = files.toMap
+      val bins = CityJsonSource.packPartitions(files,
+        maxPartitionBytes = 32L << 20, openCostInBytes = openCost, minPartitionNum = 1 + round % 8)
+      assert(bins.flatten.sorted.toSeq == files.map(_._1).sorted)
+      val costs = bins.map(_.map(size(_) + openCost).sum)
+      val mean = costs.sum.toDouble / costs.length
+      val largestFile = files.map(_._2 + openCost).max
+      assert(costs.max <= mean + largestFile, s"round $round: ${costs.mkString(",")}")
+    }
+  }
+
+  test("one query lists the corpus root once and reads no file permission or owner") {
+    val dir = Files.createTempDirectory("cjcount")
+    (0 until 12).foreach(i => writeDoc(dir.resolve(s"part=${i % 3}").resolve(s"doc$i.json")))
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.countfs.impl", classOf[CountingTestFs].getName)
+    hc.set("fs.countfs.impl.disable.cache", "true")
+    try {
+      val df = spark.read.format("cityjson").load(s"countfs:$dir")
+      val queries: Seq[(String, () => Any)] = Seq(
+        "count" -> (() => df.count()),
+        "collect" -> (() => df.collect()),
+        "distinct over a shuffle" -> (() => df.select("pred").distinct().count()))
+      queries.foreach { case (name, run) =>
+        CountingTestFs.reset()
+        run()
+        assert(CountingTestFs.listingsOf(dir) == 1, s"$name: root listed ${CountingTestFs.listingsOf(dir)} times")
+        assert(CountingTestFs.listingsOf(dir.resolve("part=1")) == 1, name)
+        assert(CountingTestFs.attributeReads.get == 0, s"$name: permission/owner/group read")
+      }
+      assert(df.select("doc_iri").distinct().count() == 12)
+    } finally {
+      hc.unset("fs.countfs.impl"); hc.unset("fs.countfs.impl.disable.cache")
+    }
+  }
+
+  test("a .json file added between two queries on the same path shows up in the second") {
+    val dir = Files.createTempDirectory("cjfresh")
+    writeDoc(dir.resolve("a.json"))
+    assert(docIris(dir) == Set("cj:a"))
+    writeDoc(dir.resolve("b.city.json"))
+    assert(docIris(dir) == Set("cj:a", "cj:b"))
+  }
+
+  test("nested directories are walked, non-.json files skipped, every file listed exactly once") {
+    val dir = Files.createTempDirectory("cjwalk")
+    val docs = Seq("top.json", "x/one.json", "x/y/two.city.json", "x/y/z/three.json", "w/four.json")
+    docs.foreach(d => writeDoc(dir.resolve(d)))
+    Seq("notes.txt", "x/y/readme.md", "x/data.json.bak", "w/four.jsonl").foreach { f =>
+      Files.write(dir.resolve(f), "{}".getBytes("UTF-8"))
+    }
+    Files.createDirectories(dir.resolve("empty/deeper"))
+    val scan = new CityJsonScan(dir.toString, CityJsonSource.schema,
+      new SerializableConfiguration(spark.sessionState.newHadoopConf()),
+      maxPartitionBytes = 128L << 20, openCostInBytes = 4L << 20, minPartitionNum = 4)
+    val files = scan.planInputPartitions().flatMap(_.asInstanceOf[CityJsonFilePartition].filePaths)
+    val rel = files.map(f => new Path(f).toUri.getPath.stripPrefix(s"$dir/"))
+    assert(rel.sorted.toSeq == docs.sorted, files.toSeq)
+    assert(docIris(dir) == Set("cj:top", "cj:one", "cj:two", "cj:three", "cj:four"))
+  }
+
+  test("an unknown pruned column fails at reader creation") {
+    val factory = new CityJsonReaderFactory(Array("subj", "no_such_column"),
+      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+    val e = intercept[IllegalArgumentException](factory.createReader(CityJsonFilePartition(Array.empty)))
+    assert(e.getMessage.contains("no_such_column"))
   }
 }

@@ -271,6 +271,22 @@ class MultimodalSpec extends SparkTestBase {
     assert(meta.map(_.getAs[Long]("media_id")).toSet == Set(2L))
   }
 
+  test("truncated PNG and WAV bytes decode to None") {
+    val img = new java.awt.image.BufferedImage(16, 16, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    val png = Multimodal.encodePng(img)
+    val wav = Multimodal.encodeWav(8000, 1, Array.tabulate(256)(_.toShort))
+    assert(Multimodal.decodeImage(png).isDefined && Multimodal.decodeAudioMeta(wav).isDefined)
+    // cut inside the IHDR chunk and inside the image data
+    Seq(20, png.length / 2).foreach { n =>
+      assert(Multimodal.decodeImage(png.take(n)).isEmpty, s"PNG cut at $n bytes")
+    }
+    // cut inside the RIFF header and inside the fmt chunk
+    Seq(6, 16, 30).foreach { n =>
+      assert(Multimodal.decodeAudioMeta(wav.take(n)).isEmpty, s"WAV cut at $n bytes")
+      assert(Multimodal.decodeAudioSamples(wav.take(n)).isEmpty, s"WAV cut at $n bytes")
+    }
+  }
+
   test("image features come from pixel luminance (uniform image -> one bucket)") {
     val sps = spark; import sps.implicits._
     val img = new java.awt.image.BufferedImage(8, 8, java.awt.image.BufferedImage.TYPE_INT_RGB)

@@ -11,6 +11,10 @@ for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.refl
          java.base/sun.security.action java.base/sun.util.calendar; do
   OPENS="$OPENS --add-opens=$p=ALL-UNNAMED"
 done
-exec java $OPENS -Xmx32g -XX:+UseParallelGC \
+# heap: half of MemTotal, clamped to 2-8 GB (the same rule as the test gate)
+HEAP="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' \
+  /proc/meminfo 2>/dev/null || echo 2g)"
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+exec java $OPENS "-Xmx$HEAP" -XX:+UseParallelGC \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
+  -cp "$ROOT/target/scala-2.13/classes:${SPARK_HOME:?SPARK_HOME must point at the Spark distribution}/jars/*" "$@"
