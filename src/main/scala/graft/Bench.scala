@@ -2,9 +2,9 @@ package graft
 
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
-import org.apache.spark.sql.SparkSession
 import graft.pipeline.KgPipeline
 import graft.synth.PagesSynth
+import graft.util.GraftSession
 
 /** Driver bench contract: one JSON line on stdout.
   *
@@ -32,16 +32,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.defaultCores
+    val spark = GraftSession.local(cpus)
 
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
     val failed = scala.collection.mutable.LinkedHashMap[String, String]()

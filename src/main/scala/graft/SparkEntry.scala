@@ -129,6 +129,17 @@ object SparkEntry {
       coalesce(col("obj_iri"), col("obj_lit")).as("obj")).localCheckpoint()
   }
 
+  /** Distinct (url, entity_iri) links of the synthesized corpus: the shared
+    * front end of the co-mention graph queries. localCheckpointed once per
+    * query, never across queries: the per-url pair self-join references the
+    * links twice, and without the cut the synth+extract+link chain runs once
+    * per side. */
+  private def comentionLinks(s: SparkSession, dir: String): DataFrame =
+    KgPipeline.links(
+      KgPipeline.extracted(PagesSynth.pages(s, PagesSynth.pageCount(dir))),
+      PagesSynth.aliasMap).toDF().select("url", "entity_iri").distinct()
+      .localCheckpoint()
+
   /** Deterministic global training-order shuffle: every doc gets its
     * 1-based position in the (md5(text), doc_id) total order — rerun-stable
     * at any parallelism (never rand()); a different epoch salt would just
@@ -208,12 +219,7 @@ object SparkEntry {
       // entity co-mention graph (edge = two entities linked on the same
       // page) -> exact triangle count via degree-ordered orientation
       // (Triangles.count: hub-proof wedge generation, no cross products)
-      // localCheckpoint: the per-url pair self-join references links twice —
-      // without it the synth+extract+link chain runs once per side
-      val links = KgPipeline.links(
-        KgPipeline.extracted(PagesSynth.pages(s, PagesSynth.pageCount(dir))),
-        PagesSynth.aliasMap).toDF().select("url", "entity_iri").distinct()
-        .localCheckpoint()
+      val links = comentionLinks(s, dir)
       // hub cap BEFORE pair expansion (same discipline as the dedup MaxBucket
       // fix) — Triangles.groupedPairs bounds a page's C(k,2) fan-out at
       // C(CoMentionHubCap,2); the oracle mirrors the cap
@@ -223,10 +229,7 @@ object SparkEntry {
     "kg_degree_hist" -> ((s, dir) => {
       // degree distribution of the co-mention graph (the first thing anyone
       // plots over a new KG): canonical edges → per-node degree → histogram
-      val links = KgPipeline.links(
-        KgPipeline.extracted(PagesSynth.pages(s, PagesSynth.pageCount(dir))),
-        PagesSynth.aliasMap).toDF().select("url", "entity_iri").distinct()
-        .localCheckpoint()
+      val links = comentionLinks(s, dir)
       val edges = Triangles.canonical(
         Triangles.groupedPairs(links, "url", "entity_iri", CoMentionHubCap))
       edges.select(col("src").as("node"))
@@ -240,10 +243,7 @@ object SparkEntry {
       // across partitionings AND engines, so the oracle can re-derive all
       // five rounds from the aux_links dump in plain SQL (unrolled CTEs).
       // Same capped edge derivation as kg_comention_triangles.
-      val links = KgPipeline.links(
-        KgPipeline.extracted(PagesSynth.pages(s, PagesSynth.pageCount(dir))),
-        PagesSynth.aliasMap).toDF().select("url", "entity_iri").distinct()
-        .localCheckpoint()
+      val links = comentionLinks(s, dir)
       graft.operators.PageRank.ranks(
           Triangles.groupedPairs(links, "url", "entity_iri", CoMentionHubCap), iters = 5)
         .withColumnRenamed("node", "entity_iri")
@@ -254,10 +254,7 @@ object SparkEntry {
       // equi-join expansions + distinct (no cross products; at 100 TB the
       // bucketed-by-subject layout makes these joins shuffle-free —
       // KgPipelineSpec locks that property)
-      val links = KgPipeline.links(
-        KgPipeline.extracted(PagesSynth.pages(s, PagesSynth.pageCount(dir))),
-        PagesSynth.aliasMap).toDF().select("url", "entity_iri").distinct()
-        .localCheckpoint()
+      val links = comentionLinks(s, dir)
       val e0 = Triangles.groupedPairs(links, "url", "entity_iri", CoMentionHubCap)
       val edges = Triangles.canonical(e0).localCheckpoint()
       val sym = edges.unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
@@ -403,10 +400,7 @@ object SparkEntry {
       // (unique whatever the peel schedule), which is what lets the oracle
       // re-derive it as a FIXED 12-round SQL unrolling while the engine
       // converges adaptively. Same capped edge derivation as kg_pagerank.
-      val links = KgPipeline.links(
-        KgPipeline.extracted(PagesSynth.pages(s, PagesSynth.pageCount(dir))),
-        PagesSynth.aliasMap).toDF().select("url", "entity_iri").distinct()
-        .localCheckpoint()
+      val links = comentionLinks(s, dir)
       graft.operators.KCore.nodes(
           Triangles.groupedPairs(links, "url", "entity_iri", CoMentionHubCap), k = 3)
         .withColumnRenamed("node", "entity_iri")
@@ -418,10 +412,7 @@ object SparkEntry {
       // total-order tie-break make round `iters` a pure function of the
       // edge set, so the oracle re-derives all 4 rounds in unrolled
       // MATERIALIZED CTEs. Same capped edge derivation as kg_pagerank.
-      val links = KgPipeline.links(
-        KgPipeline.extracted(PagesSynth.pages(s, PagesSynth.pageCount(dir))),
-        PagesSynth.aliasMap).toDF().select("url", "entity_iri").distinct()
-        .localCheckpoint()
+      val links = comentionLinks(s, dir)
       graft.operators.LabelProp.communities(
           Triangles.groupedPairs(links, "url", "entity_iri", CoMentionHubCap), iters = 4)
         .withColumnRenamed("node", "entity_iri")
@@ -432,10 +423,7 @@ object SparkEntry {
       // many entities sit at each hop distance. Fixed rounds = no
       // convergence clause, so the oracle unrolls the same 6 expansions
       // as MATERIALIZED CTEs and matches at any graph diameter.
-      val links = KgPipeline.links(
-        KgPipeline.extracted(PagesSynth.pages(s, PagesSynth.pageCount(dir))),
-        PagesSynth.aliasMap).toDF().select("url", "entity_iri").distinct()
-        .localCheckpoint()
+      val links = comentionLinks(s, dir)
       val canonEdges = Triangles.canonical(
         Triangles.groupedPairs(links, "url", "entity_iri", CoMentionHubCap)).localCheckpoint()
       val seeds = canonEdges.select(col("src").as("seed"))
@@ -455,10 +443,7 @@ object SparkEntry {
       // no hint — AQE broadcasts them while the entity vocabulary is small
       // and falls back to shuffle when it is not (a web-scale KG has
       // 10^7-10^9 entities; a forced broadcast would OOM the driver there).
-      val links = KgPipeline.links(
-        KgPipeline.extracted(PagesSynth.pages(s, PagesSynth.pageCount(dir))),
-        PagesSynth.aliasMap).toDF().select("url", "entity_iri").distinct()
-        .localCheckpoint()
+      val links = comentionLinks(s, dir)
       val capped = Triangles.cappedMembers(links, "url", "entity_iri", CoMentionHubCap)
       val pairs = capped.as("a")
         .join(capped.as("b"), col("a.url") === col("b.url") &&

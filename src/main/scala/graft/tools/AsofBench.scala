@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.util.GraftSession
 
 /** Micro-benchmark: native sort-merge AsofJoinExec vs the composed
   * union+window as-of join, on a synthetic event stream (many keys, heavy
@@ -16,11 +16,7 @@ object AsofBench {
     val keys = if (args.length > 3) args(3).toLong else 100000L
     val reps = if (args.length > 4) args(4).toInt else 3
     val payloadWidth = if (args.length > 5) args(5).toInt else 1
-    val spark = SparkSession.builder().master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cores)
 
     // deterministic scramble so neither side arrives key- or time-sorted
     val payloadCols = (0 until payloadWidth).map(i => s"payload$i")

@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.util.GraftSession
 
 /** Micro-benchmark: native CosineExpr vs the aggregate(zip_with(...))
   * higher-order formulation over an n×n self-join of real embedding rows.
@@ -13,11 +13,7 @@ object CosineBench {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val headN = if (args.length > 2) args(2).toInt else 2000
     val reps = if (args.length > 3) args(3).toInt else 3
-    val spark = SparkSession.builder().master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cores)
     graft.functions.CosineExpr.register(spark)
 
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet")

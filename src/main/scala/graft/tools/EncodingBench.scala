@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import graft.pipeline.KgPipeline
+import graft.util.GraftSession
 
 /** Quantifies the bytes-per-triple reduction of the dictionary-encoded
   * pipeline (KgPipeline.encodedTriples) vs the string pipeline
@@ -23,13 +23,7 @@ object EncodingBench {
     val pages = if (args.nonEmpty) args(0).toLong else 500000L
     val cores = if (args.length > 1) args(1).toInt else 16
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cores)
 
     def measure(df: org.apache.spark.sql.DataFrame): (Long, Long) =
       df.queryExecution.toRdd.mapPartitions { it =>

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.pipeline.KgPipeline
 import graft.synth.PagesSynth
+import graft.util.GraftSession
 
 /** One scaling-rule measurement (BASELINE.json north rule: throughput
   * scaling efficiency >= 0.8 from N to 4N executors; sandbox proxy = the
@@ -24,9 +24,10 @@ import graft.synth.PagesSynth
   *    to /tmp and reused across invocations) → string triples. This is the
   *    north rule's actual job shape — the input is an Iceberg-style pages
   *    table, not an in-process generator — and it removes the generator's
-  *    allocation cost from the measurement (StageScaling shows synthesis
-  *    alone scales ~1.4x over 4x cores on a shared-DRAM box, polluting the
-  *    inline modes' high-core efficiency).
+  *    allocation cost from the measurement (synthesis alone was measured
+  *    to scale ~1.4x over 4x cores on a shared-DRAM box, polluting the
+  *    inline modes' high-core efficiency; `perfbench/run.py --trace 1`
+  *    reports that layer as `synth.busy_s`).
   */
 object ScalingBench {
 
@@ -38,14 +39,7 @@ object ScalingBench {
     val mode = if (args.length > 4) args(4) else "decoded"
     val pages = PagesSynth.pageCount(sfDir) * mult
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cores)
 
     // stored mode: materialize the pages table once, content-addressed by
     // (count, generator fingerprint) — the fingerprint (a page-0 content

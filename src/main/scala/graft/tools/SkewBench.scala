@@ -1,10 +1,11 @@
 package graft.tools
 
 import java.nio.file.Files
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import graft.model.Triple
 import graft.pipeline.KgPipeline
+import graft.util.GraftSession
 
 /** Measures what the salted graph write actually buys under planted skew
   * (the north rule's hot-host clause): a corpus where ONE host-level
@@ -27,15 +28,9 @@ object SkewBench {
     val cores = if (args.length > 1) args(1).toInt else 16
     val parts = 32
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE would coalesce/split the demo partitions; measure the raw layout
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cores)
+    // AQE would coalesce/split the demo partitions; measure the raw layout
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     import spark.implicits._
 
     // planted Zipf-hot-host corpus: host 0 owns 30% of pages, the rest
