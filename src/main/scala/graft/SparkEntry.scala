@@ -1680,7 +1680,7 @@ object SparkEntry {
       // the DataSource V2 connector path (spark.read.format("cityjson")):
       // same conversion semantics as cj_triples_by_pred, so the two share
       // one golden oracle — regression-locks connector == mapPartitions
-      s.read.format("cityjson").load("/root/reference/examples")
+      s.read.format("cityjson").load(graft.cj.CjSpark.corpusDir(s))
         .groupBy("pred").agg(count(lit(1)).as("n_triples"))
     }),
     "cj_doc_stats" -> ((s, dir) => {

@@ -43,15 +43,28 @@ object CjSpark {
     })
   }
 
-  /** The reference example corpus as a Dataset (read-only fixtures).
+  /** Session conf key naming the CityJSON corpus directory that the `cj_*`
+    * contract queries read. Like any `spark.*` key it can also be passed as
+    * a `-D` JVM system property, which is how session-less tools read it. */
+  val CorpusKey = "spark.graft.cj.corpus"
+  /** Where the corpus is read from when [[CorpusKey]] is unset: the
+    * reference converter's example corpus (FIXTURES.md §1). */
+  val DefaultCorpus = "/root/reference/examples"
+
+  def corpusDir(spark: SparkSession): String = spark.conf.get(CorpusKey, DefaultCorpus)
+
+  /** The corpus at [[corpusDir]] as a Dataset. */
+  def referenceCorpus(spark: SparkSession): Dataset[CjDoc] =
+    referenceCorpus(spark, corpusDir(spark))
+
+  /** The `*.city.json` documents under `dir` as a Dataset (read-only).
     *
     * Read through the `binaryFile` source so EXECUTORS load the bytes from a
     * FileScan — a driver-side `Files.readString` + `createDataset` ships
     * every document inside the task closure (3 MB tasks at 12 fixtures, a
     * driver bottleneck at any real corpus). The doc IRI derives from the
     * file name, matching the golden fixtures. */
-  def referenceCorpus(spark: SparkSession,
-      dir: String = "/root/reference/examples"): Dataset[CjDoc] = {
+  def referenceCorpus(spark: SparkSession, dir: String): Dataset[CjDoc] = {
     import spark.implicits._
     spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.city.json")

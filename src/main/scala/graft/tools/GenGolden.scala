@@ -2,12 +2,15 @@ package graft.tools
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
-import graft.cj.CjConvert
+import graft.cj.{CjConvert, CjSpark}
 import graft.model.Triple
 
 /** Generates the golden triple fixtures (FIXTURES.md §2): runs the frozen
   * reference-semantics emitter over every reference example document and
   * writes `golden/<stem>.triples.ndjson` + a `golden/SUMMARY.tsv`.
+  * Usage: `GenGolden [corpusDir [outDir]]`; the corpus defaults to the
+  * `-Dspark.graft.cj.corpus` setting ([[graft.cj.CjSpark.CorpusKey]]), else
+  * [[graft.cj.CjSpark.DefaultCorpus]], and the output to `golden`.
   *
   * The golden files are checked in; `CjGoldenSpec` locks the emitter against
   * them, so any semantic drift in the converter is caught as a diff.
@@ -54,7 +57,8 @@ object GenGolden {
   }
 
   def main(args: Array[String]): Unit = {
-    val examplesDir = Paths.get(if (args.nonEmpty) args(0) else "/root/reference/examples")
+    val examplesDir = Paths.get(if (args.nonEmpty) args(0)
+      else sys.props.getOrElse(CjSpark.CorpusKey, CjSpark.DefaultCorpus))
     val outDir = Paths.get(if (args.length > 1) args(1) else "golden")
     Files.createDirectories(outDir)
 

@@ -284,7 +284,10 @@ class PlanQualitySpec extends SparkTestBase {
     // ALL queries; emb_pairs_cosine's bounded-head brute force is the
     // documented exception (nested-loop on 120 rows by design)
     val exceptions = Set("emb_pairs_cosine")
-    SparkEntry.queries.keys
+    // the cj_* plans (a file scan, then mapPartitions) do not depend on what
+    // the documents contain, so they are planned over the in-repo fixtures
+    spark.conf.set(graft.cj.CjSpark.CorpusKey, graft.cj.CjFixtures.dir)
+    try SparkEntry.queries.keys
       .filterNot(exceptions)
       .foreach { name =>
         val plan = planOf(name).toString
@@ -292,5 +295,6 @@ class PlanQualitySpec extends SparkTestBase {
         assert(!plan.contains("BroadcastNestedLoopJoin"),
           s"$name plans a broadcast nested-loop join (non-equi join leaked in)")
       }
+    finally spark.conf.unset(graft.cj.CjSpark.CorpusKey)
   }
 }

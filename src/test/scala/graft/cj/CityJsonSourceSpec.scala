@@ -64,25 +64,27 @@ class CityJsonSourceSpec extends SparkTestBase {
   private val examples = "/root/reference/examples"
 
   test("DSv2 source emits exactly the triples of the mapPartitions path, per doc") {
-    val viaSource = spark.read.format("cityjson").load(examples)
-    assert(viaSource.columns.toSeq ==
-      Seq("doc_iri", "subj", "pred", "obj_iri", "obj_lit", "obj_type"))
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
-    val expected = CjSpark.convertStats(CjSpark.referenceCorpus(spark)).collect()
-      .map(d => d.doc_iri -> d.n_triples).toMap
-    // per-document triple counts match the established distributed path
-    val got = viaSource.groupBy("doc_iri").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(got == expected.filter(_._2 > 0), s"$got vs $expected")
-    // and the full triple multiset matches exactly
-    val a = canon(viaSource.select("subj", "pred", "obj_iri", "obj_lit", "obj_type"))
-    val b = canon(CjSpark.convert(CjSpark.referenceCorpus(spark)).toDF())
-    assert(a == b, "DSv2 triple multiset diverged from CjSpark.convert")
+    CjFixtures.corpora.foreach { dir =>
+      val viaSource = spark.read.format("cityjson").load(dir)
+      assert(viaSource.columns.toSeq ==
+        Seq("doc_iri", "subj", "pred", "obj_iri", "obj_lit", "obj_type"))
+      val expected = CjSpark.convertStats(CjSpark.referenceCorpus(spark, dir)).collect()
+        .map(d => d.doc_iri -> d.n_triples).toMap
+      // per-document triple counts match the established distributed path
+      val got = viaSource.groupBy("doc_iri").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(got == expected.filter(_._2 > 0), s"$dir: $got vs $expected")
+      // and the full triple multiset matches exactly
+      val a = canon(viaSource.select("subj", "pred", "obj_iri", "obj_lit", "obj_type"))
+      val b = canon(CjSpark.convert(CjSpark.referenceCorpus(spark, dir)).toDF())
+      assert(a == b, s"$dir: DSv2 triple multiset diverged from CjSpark.convert")
+    }
   }
 
   test("column pruning is pushed into the DSv2 reader") {
-    val df = spark.read.format("cityjson").load(examples).select("pred")
+    val df = spark.read.format("cityjson").load(CjFixtures.dir).select("pred")
     val scans = df.queryExecution.executedPlan.collect {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
     }

@@ -1,0 +1,16 @@
+package graft.cj
+
+import java.nio.file.{Files, Paths}
+
+/** The hand-written CityJSON documents under `src/test/resources/cityjson/`
+  * (FIXTURES.md §1), each one an inline document of a `CjConvertSpec` test.
+  * They are inputs for checks that hold whatever a document contains (plan
+  * shapes, pruned reads, two conversion paths agreeing); no expected triples
+  * are ever derived from them. */
+object CjFixtures {
+  val dir: String = Paths.get(getClass.getResource("/cityjson").toURI).toString
+
+  /** The fixture directory, then the reference corpus where it exists. */
+  def corpora: Seq[String] =
+    dir +: Seq(CjSpark.DefaultCorpus).filter(d => Files.isDirectory(Paths.get(d)))
+}

@@ -37,10 +37,30 @@ class CjSparkSpec extends SparkTestBase {
   }
 
   test("conversion is partition-invariant through the Spark surface") {
-    val corpus = CjSpark.referenceCorpus(spark)
-    val a = CjSpark.convert(corpus.repartition(1)).collect().toSet
-    val b = CjSpark.convert(corpus.repartition(7)).collect().toSet
-    assert(a == b)
+    CjFixtures.corpora.foreach { dir =>
+      val corpus = CjSpark.referenceCorpus(spark, dir)
+      val a = CjSpark.convert(corpus.repartition(1)).collect().toSet
+      val b = CjSpark.convert(corpus.repartition(7)).collect().toSet
+      assert(a == b, dir)
+    }
+  }
+
+  test("the cj_* contract queries read the corpus setting") {
+    assert(CjSpark.corpusDir(spark) == CjSpark.DefaultCorpus)
+    spark.conf.set(CjSpark.CorpusKey, CjFixtures.dir)
+    try {
+      def run(q: String) = graft.SparkEntry.queries(q)(spark, "unused").collect()
+      def rows(q: String) = run(q).map(_.toString).sorted.toSeq
+      val stats = run("cj_doc_stats")
+        .map(r => r.getAs[String]("doc_iri") -> r.getAs[Boolean]("failed")).toMap
+      assert(stats.keySet == Set("cj:empty", "cj:failing_object", "cj:material_color",
+        "cj:semantic_faces", "cj:template_insert", "cj:texture_uv"), stats)
+      assert(stats.filter(_._2).keySet == Set("cj:empty"))
+      // the mapPartitions and DSv2 paths share one oracle
+      assert(rows("cj_triples_by_pred") == rows("cj_triples_by_pred_dsv2"))
+      assert(rows("cj_log_categories").nonEmpty)
+    } finally spark.conf.unset(CjSpark.CorpusKey)
+    assert(CjSpark.corpusDir(spark) == CjSpark.DefaultCorpus)
   }
 
   test("per-document stats isolate failures without failing the task") {
