@@ -304,11 +304,14 @@ object SparkEntry {
       // the aux_links dump. This upgrades the sink's CDC path from
       // spec-locked to oracled.
       val n = PagesSynth.pageCount(dir)
-      val full = KgPipeline.triples(s, n)
+      // a commit writes one file per input task, and the synthesized pages
+      // come in up to 4 × cores small ranges: fold them to one task per core
+      // first (a narrow coalesce, still no exchange)
+      val full = KgPipeline.triples(s, n).coalesce(s.sparkContext.defaultParallelism)
       val prev = full.filter(!(col("pred") === "web:mentions" &&
         col("obj_iri").endsWith("3")))
       val target = freshTmpDir(s"graft_cdc_$n")
-      val sink = new graft.pipeline.GraphSink.Snapshotted(parts = 8)
+      val sink = new graft.pipeline.GraphSink.Snapshotted
       sink.write(prev, target)
       sink.write(full, target)
       val ids = sink.snapshots(s, target)
@@ -1893,12 +1896,14 @@ object SparkEntry {
       // shipped as a Dataset — never a driver list), read the new current
       // snapshot back. The delete is a versioned commit: older snapshots
       // still hold the rows until retention expires them (erasure =
-      // forget + expire), and the anti-join runs on the subject key the
-      // table is already partitioned by
+      // forget + expire); the read applies the takedown as one left-anti
+      // join on the subject key
       val n = PagesSynth.pageCount(dir)
-      val sink = new graft.pipeline.GraphSink.Snapshotted(8)
+      val sink = new graft.pipeline.GraphSink.Snapshotted
       val out = freshTmpDir(s"graft_forget_${new java.io.File(dir).getName}")
-      sink.write(KgPipeline.decodeTriples(KgPipeline.encodedTriples(s, n), n), out)
+      // one file per core, not per synthesized page range (see kg_cdc_changes)
+      sink.write(KgPipeline.decodeTriples(KgPipeline.encodedTriples(s, n), n)
+        .coalesce(s.sparkContext.defaultParallelism), out)
       val takedown = s.range(0, n).filter(col("id") % 10 === 0)
         .map(i => PagesSynth.urlAt(i, n))
       sink.forget(s, out, takedown)

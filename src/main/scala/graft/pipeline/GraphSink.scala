@@ -98,8 +98,12 @@ object GraphSink {
     * provides). `read` resolves the current snapshot; [[readAsOf]] is
     * `VERSION AS OF`; [[snapshots]] is the snapshot log. Old snapshots stay
     * readable until an explicit expire — exactly Iceberg's retention model.
+    * A commit plans no exchange: each input task writes its own file, as
+    * Iceberg's `none` write distribution does for an unpartitioned table.
+    * Nothing downstream reads a layout — [[readAsOf]] is a plain scan,
+    * [[forget]]'s anti-join and [[compact]] plan their own exchanges.
     */
-  final class Snapshotted(parts: Int = 32) extends GraphSink {
+  final class Snapshotted extends GraphSink {
     val name = "snapshotted"
 
     private def fs(spark: SparkSession, target: String) =
@@ -137,15 +141,22 @@ object GraphSink {
           }
         } catch { case _: java.io.IOException | _: NumberFormatException => None }
       fromPtr.getOrElse {
-        val committed = snapshots(spark, target).filter(id =>
-          f.exists(new org.apache.hadoop.fs.Path(s"$target/snap=$id/_COMMITTED")))
-        require(committed.nonEmpty, s"no committed snapshot at $target")
-        committed.last
+        val done = committed(spark, target)
+        require(done.nonEmpty, s"no committed snapshot at $target")
+        done.last
       }
     }
 
+    /** The snapshots whose commit completed (they bear `_COMMITTED`). An
+      * unmarked directory belongs to an aborted or still-running commit. */
+    private def committed(spark: SparkSession, target: String): Seq[Long] = {
+      val f = fs(spark, target)
+      snapshots(spark, target).filter(id =>
+        f.exists(new org.apache.hadoop.fs.Path(s"$target/snap=$id/_COMMITTED")))
+    }
+
     def write(triples: Dataset[Triple], target: String): Unit = {
-      commit(triples.repartition(parts, col("subj")), target)
+      commit(triples, target)
       ()
     }
 
@@ -242,10 +253,15 @@ object GraphSink {
     def read(spark: SparkSession, target: String): DataFrame =
       readAsOf(spark, target, currentId(spark, target))
 
-    /** Retention: drop all but the newest `keep` snapshots (never the
-      * current pointer's target, and never a snapshot a KEPT merge-on-read
-      * snapshot still reads through — Iceberg never expires files reachable
-      * from a live snapshot). Physical erasure of forgotten rows is
+    /** Retention: drop all but the newest `keep` committed snapshots (never
+      * the current pointer's target, and never a snapshot a KEPT
+      * merge-on-read snapshot still reads through — Iceberg never expires
+      * files reachable from a live snapshot). An unmarked directory takes
+      * no retention slot. One below the current id is an aborted commit (or
+      * one that crashed before its marker and has since been superseded) —
+      * with a single writer no running commit can own it — so it is
+      * deleted unless a kept snapshot reads through it; one above the
+      * current id is left alone. Physical erasure of forgotten rows is
       * therefore [[compact]] (materializing rewrite) + expire, the
       * rewrite_data_files → expire_snapshots two-step. Time travel to an
       * expired id fails loudly at read. */
@@ -253,15 +269,16 @@ object GraphSink {
       require(keep >= 1, "must keep at least the current snapshot")
       val f = fs(spark, target)
       val cur = currentId(spark, target)
-      val all = snapshots(spark, target)
-      var kept = all.takeRight(keep).toSet + cur
+      val done = committed(spark, target)
+      var kept = done.takeRight(keep).toSet + cur
       // transitive closure over merge-on-read base pointers
       var frontier: Set[Long] = kept
       while (frontier.nonEmpty) {
         frontier = frontier.flatMap(id => baseOf(spark, target, id)).diff(kept)
         kept ++= frontier
       }
-      val victims = all.filterNot(kept)
+      val victims = snapshots(spark, target)
+        .filter(id => (id < cur || done.contains(id)) && !kept(id))
       victims.foreach { id =>
         f.delete(new org.apache.hadoop.fs.Path(s"$target/snap=$id"), true)
       }
@@ -275,8 +292,8 @@ object GraphSink {
       * O(|takedown batch|) bytes written, where the previous implementation
       * re-wrote EVERY kept row (a 100 TB store paid a full-corpus
       * copy-on-write per takedown call). [[readAsOf]] applies the sidecar
-      * as one left-anti join on the subject key the table is partitioned
-      * by (AQE broadcasts small lists); the base snapshot's files are
+      * as one left-anti join on the subject key, which plans its own
+      * exchange (AQE broadcasts small lists); the base snapshot's files are
       * byte-untouched (spec-locked). The delete is versioned — auditable
       * via [[readChanges]] (pure 'delete' rows), time-travelable until
       * expiry. Physical erasure is [[compact]] (materializes the anti-join
@@ -297,7 +314,7 @@ object GraphSink {
     }
 
     /** Compaction (the OPTIMIZE / rewrite_data_files analog): rewrite the
-      * current snapshot's data into `parts` right-sized files and commit
+      * current snapshot's data into `compactParts` right-sized files and commit
       * the result as a NEW snapshot — the small-files problem is the
       * classic failure mode of high-frequency appends at 100 TB (every
       * tiny file costs a task + a metadata entry on every read). The
@@ -312,5 +329,5 @@ object GraphSink {
   /** Every layout, for parameterized round-trip tests. */
   def all(parts: Int): Seq[GraphSink] =
     Seq(new Salted(parts), new BucketedTable(parts), new PredicatePartitioned(parts),
-      new Snapshotted(parts), new NTriples.Files(parts))
+      new Snapshotted, new NTriples.Files(parts))
 }

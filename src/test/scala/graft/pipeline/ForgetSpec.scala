@@ -17,7 +17,7 @@ class ForgetSpec extends SparkTestBase {
         Triple(s"http://ex.org/p$i", "web:mentions", s"ent:e${i % 5}", null, null))
     }
     val dir = java.nio.file.Files.createTempDirectory("forget").toString
-    val sink = new GraphSink.Snapshotted(4)
+    val sink = new GraphSink.Snapshotted
     sink.write(sp.createDataset(rows), dir)
     (sink, dir, rows)
   }

@@ -2,7 +2,13 @@ package graft.pipeline
 
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkTestBase
 import graft.extract.TextExtract
 import graft.link.Linker
@@ -10,7 +16,7 @@ import graft.mention.MentionDetect
 import graft.model.Mention
 import graft.synth.PagesSynth
 
-class KgPipelineSpec extends SparkTestBase {
+class KgPipelineSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   private val N = 300L
 
@@ -111,7 +117,7 @@ class KgPipelineSpec extends SparkTestBase {
   }
 
   test("snapshotted graph sink: atomic pointer commit + time travel (VERSION AS OF analog)") {
-    val sink = new GraphSink.Snapshotted(parts = 4)
+    val sink = new GraphSink.Snapshotted
     val dir = Files.createTempDirectory("graph_snap").toString + "/g"
     val t1 = KgPipeline.triples(spark, 100)
     val t2 = KgPipeline.triples(spark, 150)
@@ -202,7 +208,7 @@ class KgPipelineSpec extends SparkTestBase {
   }
 
   test("snapshot pointer commits by rename; a torn pointer falls back to the newest complete snapshot") {
-    val sink = new GraphSink.Snapshotted(parts = 2)
+    val sink = new GraphSink.Snapshotted
     val dir = Files.createTempDirectory("graph_ptr").toString + "/g"
     val t1 = KgPipeline.triples(spark, 80)
     sink.write(t1, dir)
@@ -231,7 +237,7 @@ class KgPipelineSpec extends SparkTestBase {
 
   test("incremental CDC read yields the exact multiset delta between snapshots; compaction's delta is empty") {
     val sps = spark; import sps.implicits._
-    val sink = new GraphSink.Snapshotted(parts = 2)
+    val sink = new GraphSink.Snapshotted
     val dir = Files.createTempDirectory("graph_cdc").toString + "/g"
     val t1 = KgPipeline.triples(spark, 100)
     val t2 = KgPipeline.triples(spark, 150) // superset corpus: first 100 pages identical
@@ -259,10 +265,10 @@ class KgPipelineSpec extends SparkTestBase {
   }
 
   test("snapshot compaction rewrites small files as a new commit; expiry drops old snapshots") {
-    val sink = new GraphSink.Snapshotted(parts = 16) // deliberately many small files
+    val sink = new GraphSink.Snapshotted
     val dir = Files.createTempDirectory("graph_compact").toString + "/g"
     val t1 = KgPipeline.triples(spark, 150)
-    sink.write(t1, dir)
+    sink.write(t1.repartition(16), dir) // deliberately many small files
     def partFiles(id: Long): Int =
       new java.io.File(s"$dir/snap=$id").listFiles().count(_.getName.endsWith(".parquet"))
     val before = partFiles(1)
@@ -280,6 +286,60 @@ class KgPipelineSpec extends SparkTestBase {
     // time travel to the expired snapshot fails loudly, current reads fine
     intercept[Exception] { sink.readAsOf(spark, dir, 1L).collect() }
     assert(canon(sink.read(spark, dir)) == canon(t1.toDF()))
+  }
+
+  test("snapshot commit plans no exchange: each input task writes its own file") {
+    val sink = new GraphSink.Snapshotted
+    val dir = Files.createTempDirectory("graph_plan").toString + "/g"
+    val tr = KgPipeline.triples(spark, 200)
+    val inputParts = tr.rdd.getNumPartitions
+    // the listener bus delivers a write's QueryExecution asynchronously
+    val written = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = written.put(qe)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    // AQE wraps the whole command when its child has an exchange
+    def writesHere(qe: QueryExecution) = collectFirst(qe.executedPlan) {
+      case w: DataWritingCommandExec => w.cmd
+    }.exists {
+      case i: InsertIntoHadoopFsRelationCommand => i.outputPath.toString.contains(dir)
+      case _ => false
+    }
+    spark.listenerManager.register(listener)
+    val plan =
+      try {
+        sink.write(tr, dir)
+        def next() = Option(written.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+          .getOrElse(fail("the snapshot write was never reported"))
+        Iterator.continually(next()).find(writesHere).get.executedPlan
+      } finally spark.listenerManager.unregister(listener)
+    assert(collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty,
+      s"the snapshot write plans an exchange:\n$plan")
+    val files = new java.io.File(s"$dir/snap=1").listFiles().count(_.getName.endsWith(".parquet"))
+    assert(files >= 1 && files <= inputParts, s"$files data files from $inputParts input partitions")
+    def canon(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(canon(sink.read(spark, dir)) == canon(tr.toDF()))
+  }
+
+  test("snapshot expiry counts committed snapshots only; an unmarked one goes once it is below the current") {
+    val sink = new GraphSink.Snapshotted
+    val dir = Files.createTempDirectory("graph_expire").toString + "/g"
+    val t1 = KgPipeline.triples(spark, 60)
+    (1 to 3).foreach(_ => sink.write(t1, dir))
+    // an aborted (or still-running) commit: parquet done, no _COMMITTED
+    new java.io.File(s"$dir/snap=4").mkdirs()
+    new java.io.FileOutputStream(s"$dir/snap=4/_SUCCESS").close()
+    assert(sink.expire(spark, dir, keep = 2) == Seq(1L))
+    assert(sink.snapshots(spark, dir) == Seq(2L, 3L, 4L))
+    assert(new java.io.File(s"$dir/snap=4/_SUCCESS").exists())
+    assert(sink.currentId(spark, dir) == 3L)
+    // the next commit supersedes it: snap=4 can no longer be a running
+    // commit's, so it is dropped beside the committed snapshot that aged out
+    sink.write(t1, dir)
+    assert(sink.currentId(spark, dir) == 5L)
+    assert(sink.expire(spark, dir, keep = 2) == Seq(2L, 4L))
+    assert(sink.snapshots(spark, dir) == Seq(3L, 5L))
   }
 
   test("salted write spreads skewed subjects across partitions") {
