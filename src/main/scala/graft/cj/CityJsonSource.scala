@@ -1,7 +1,6 @@
 package graft.cj
 
 import java.util.{Map => JMap}
-import scala.annotation.switch
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -46,12 +45,19 @@ import org.apache.spark.util.SerializableConfiguration
   *    taking one, and no bin ends up with more than the mean cost plus one
   *    file, so a corpus fills every core instead of queueing its largest
   *    documents behind one task;
-  *  - rows are built from column ordinals resolved once per reader (an
-  *    unknown pruned column fails at reader creation), one array per row.
+  *  - column ordinals are resolved once per reader (an unknown pruned
+  *    column fails at reader creation). Each document converts into its own
+  *    [[ArenaRows]]: the converter's triples stream into a byte arena that
+  *    holds only the required columns as UTF-8, each distinct IRI,
+  *    predicate, type tag and short literal once per document, and the rows
+  *    are [[UTF8String]] slices of it. No `Triple` and no whole-document
+  *    triple vector is built; a document's rows are held until it has
+  *    converted, so a document-level failure still yields none.
   *
   * Conversion semantics are [[CjConvert]] — identical to every other entry
-  * point (spec-locked against `CjSpark.convert`); doc-level failures follow
-  * the reference's NULL-model contract and emit zero rows.
+  * point (spec-locked against `CjSpark.convert` and `CjConvert.convert`);
+  * doc-level failures follow the reference's NULL-model contract and emit
+  * zero rows.
   */
 class CityJsonSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "cityjson"
@@ -185,8 +191,13 @@ final class CityJsonReaderFactory(fields: Array[String], confSer: SerializableCo
       i
     }
     new PartitionReader[InternalRow] {
+      private val files = filePaths.iterator
+      private var rows: Iterator[InternalRow] = Iterator.empty
       private var current: InternalRow = _
-      private lazy val rows: Iterator[InternalRow] = filePaths.iterator.flatMap { filePath =>
+
+      /** One document's rows, converted once the previous document's rows
+        * are spent; none for a failed document (NULL model). */
+      private def convert(filePath: String): Iterator[InternalRow] = {
         val p = new Path(filePath)
         // the SESSION's Hadoop conf, not a blank new Configuration(): an
         // object store the driver could list must be one the reader can open
@@ -195,28 +206,151 @@ final class CityJsonReaderFactory(fields: Array[String], confSer: SerializableCo
         val json = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
           finally in.close()
         val docIri = CityJsonSource.docIriFor(filePath)
-        val docUtf8 = UTF8String.fromString(docIri)
-        CjConvert.convert(docIri, json).triples.iterator.map { t =>
-          val values = new Array[Any](ordinals.length)
-          var i = 0
-          while (i < ordinals.length) {
-            values(i) = (ordinals(i): @switch) match {
-              case 0 => docUtf8
-              case 1 => UTF8String.fromString(t.subj)
-              case 2 => UTF8String.fromString(t.pred)
-              case 3 => UTF8String.fromString(t.obj_iri)
-              case 4 => UTF8String.fromString(t.obj_lit)
-              case _ => UTF8String.fromString(t.obj_type)
-            }
-            i += 1
-          }
-          new GenericInternalRow(values)
-        }
+        val arena = new ArenaRows(ordinals, UTF8String.fromString(docIri))
+        if (CjConvert.convertTo(arena, docIri, json).docFailed) Iterator.empty else arena.rows
       }
-      override def next(): Boolean =
+
+      override def next(): Boolean = {
+        while (!rows.hasNext && files.hasNext) rows = convert(files.next())
         if (rows.hasNext) { current = rows.next(); true } else false
+      }
       override def get(): InternalRow = current
       override def close(): Unit = ()
     }
   }
+}
+
+/** The reader's sink for one document: the required columns of each triple
+  * (`ordinals` into [[CityJsonSource.schema]]) are written as UTF-8 into a
+  * byte arena that belongs to this document, and each row, served once the
+  * document has converted, holds [[UTF8String]] slices of it. No `Triple` is
+  * made, and no string is copied per row: subjects, predicates, object IRIs,
+  * type tags and short literals repeat across many triples, so each distinct
+  * one is written once per document and its slice shared by the rows that
+  * repeat it; array literals are copied once, from the converter's buffer.
+  * Sharing is what keeps a held document small: encoding every field anew
+  * raised the benchmark's peak RSS by 12–13% (plans/cj_stream/README.md,
+  * which also gives the caches' hit shares). The arena is a list of chunks
+  * that never move and are never written twice, so a row stays valid
+  * however long Spark holds it. */
+private[cj] final class ArenaRows(ordinals: Array[Int], docIri: UTF8String) extends CjSink {
+  import ArenaRows._
+
+  private val k = ordinals.length
+  // the values of triple t are vals(t * k until (t + 1) * k)
+  private var vals = new Array[AnyRef](math.max(k, 1) * 256)
+  private var n = 0
+
+  private var chunk: Array[Byte] = null
+  private var used = ChunkBytes // bytes used of `chunk`; full until the first one
+
+  // direct-mapped caches of strings already in the arena: IRIs (subjects
+  // and objects), the vocabulary (predicates and type tags), short literals
+  private val iris = new Cache(4096)
+  private val vocab = new Cache(256)
+  private val lits = new Cache(1024)
+
+  private final class Cache(slots: Int) {
+    private val keys = new Array[String](slots)
+    private val slices = new Array[UTF8String](slots)
+    def apply(s: String): UTF8String =
+      if (s == null) null
+      else {
+        val h = s.hashCode
+        val c = (h ^ (h >>> 16)) & (slots - 1)
+        val key = keys(c)
+        if ((key eq s) || (key != null && key == s)) slices(c)
+        else {
+          val u = encode(s)
+          keys(c) = s
+          slices(c) = u
+          u
+        }
+      }
+  }
+
+  private def nextTriple(): Int = {
+    val at = n * k
+    if (at + k > vals.length) vals = java.util.Arrays.copyOf(vals, vals.length * 2)
+    n += 1
+    at
+  }
+
+  /** `len` bytes at the arena's end, copied from `src`. */
+  private def slice(src: Array[Byte], off: Int, len: Int): UTF8String =
+    if (len > ChunkBytes / 4) UTF8String.fromBytes(java.util.Arrays.copyOfRange(src, off, off + len))
+    else {
+      if (len > ChunkBytes - used) { chunk = new Array[Byte](ChunkBytes); used = 0 }
+      System.arraycopy(src, off, chunk, used, len)
+      used += len
+      UTF8String.fromBytes(chunk, used - len, len)
+    }
+
+  /** `s` as UTF-8 at the arena's end. */
+  private def encode(s: String): UTF8String = {
+    val len = s.length
+    if (len > ChunkBytes / 4) return UTF8String.fromString(s)
+    if (len > ChunkBytes - used) { chunk = new Array[Byte](ChunkBytes); used = 0 }
+    var i = 0
+    while (i < len && s.charAt(i) < 0x80) { chunk(used + i) = s.charAt(i).toByte; i += 1 }
+    if (i < len) {
+      val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      slice(b, 0, b.length)
+    } else {
+      used += len
+      UTF8String.fromBytes(chunk, used - len, len)
+    }
+  }
+
+  private def literal(s: String): UTF8String =
+    if (s == null) null else if (s.length <= ShortLiteral) lits(s) else encode(s)
+
+  // the row position of each field, -1 where the field is not required
+  private val atDoc = ordinals.indexOf(0)
+  private val atSubj = ordinals.indexOf(1)
+  private val atPred = ordinals.indexOf(2)
+  private val atIri = ordinals.indexOf(3)
+  private val atLit = ordinals.indexOf(4)
+  private val atType = ordinals.indexOf(5)
+
+  def triple(s: String, p: String, oIri: String, oLit: String, oType: String): Unit = {
+    val at = nextTriple()
+    if (atDoc >= 0) vals(at + atDoc) = docIri
+    if (atSubj >= 0) vals(at + atSubj) = iris(s)
+    if (atPred >= 0) vals(at + atPred) = vocab(p)
+    if (atIri >= 0) vals(at + atIri) = iris(oIri)
+    if (atLit >= 0) vals(at + atLit) = literal(oLit)
+    if (atType >= 0) vals(at + atType) = vocab(oType)
+  }
+
+  def asciiLiteral(s: String, p: String, lit: AsciiBuf, oType: String): Unit = {
+    val at = nextTriple()
+    if (atDoc >= 0) vals(at + atDoc) = docIri
+    if (atSubj >= 0) vals(at + atSubj) = iris(s)
+    if (atPred >= 0) vals(at + atPred) = vocab(p)
+    if (atIri >= 0) vals(at + atIri) = null
+    if (atLit >= 0) vals(at + atLit) = slice(lit.bytes, 0, lit.length)
+    if (atType >= 0) vals(at + atType) = vocab(oType)
+  }
+
+  /** The document's rows, in emission order. */
+  def rows: Iterator[InternalRow] =
+    if (k == 0) Iterator.fill(n)(NoColumns)
+    else new Iterator[InternalRow] {
+      private var at = 0
+      private val end = n * k
+      def hasNext: Boolean = at < end
+      def next(): InternalRow = {
+        val values = java.util.Arrays.copyOfRange(vals, at, at + k)
+        at += k
+        new GenericInternalRow(values.asInstanceOf[Array[Any]])
+      }
+    }
+}
+
+private[cj] object ArenaRows {
+  val ChunkBytes: Int = 1 << 16
+  /** Literals up to this many chars are looked up before they are written. */
+  val ShortLiteral = 16
+  private val NoColumns = new GenericInternalRow(0)
 }

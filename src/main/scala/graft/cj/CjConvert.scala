@@ -67,15 +67,29 @@ object CjConvert {
 
   private val mapper = new ObjectMapper()
 
+  /** What converting one document reports besides its triples, which went
+    * to a [[CjSink]]. */
+  private[cj] final case class Outcome(logs: Vector[LogRow], cityObjectCount: Int, docFailed: Boolean)
+
   /** Convert one CityJSON document. Never throws on malformed content within
     * the document: per-object and per-geometry-item failures are isolated
     * exactly like the reference (CityModel.cpp:182-188, Geometry.cpp:33-41).
-    * A top-level failure (unparseable JSON, missing CityObjects) yields the
-    * partial triples emitted so far plus an Error log — the analog of
-    * CityJsonRDF.cpp:34-37 "Failed to read model".
+    * A top-level failure (unparseable JSON, missing CityObjects) yields no
+    * triples plus an Error log — the analog of CityJsonRDF.cpp:34-37
+    * "Failed to read model".
     */
   def convert(docIri: String, jsonText: String, settings: CjSettings = CjSettings.default): Result = {
-    val m = new CjModel(docIri, settings)
+    val out = new CjSink.Collect
+    val o = convertTo(out, docIri, jsonText, settings)
+    Result(if (o.docFailed) Vector.empty else out.triples.result(), o.logs, o.cityObjectCount, o.docFailed)
+  }
+
+  /** [[convert]] with every triple handed to `sink` as it is emitted. On a
+    * document-level failure the sink has already seen the triples emitted
+    * before it; the caller drops them. */
+  private[cj] def convertTo(sink: CjSink, docIri: String, jsonText: String,
+      settings: CjSettings = CjSettings.default): Outcome = {
+    val m = new CjModel(docIri, settings, sink)
     val root: JsonNode =
       try mapper.readTree(jsonText)
       catch { case _: Exception => null }
@@ -87,7 +101,7 @@ object CjConvert {
       try m.convertCityJSONObject(root)
       catch { case _: CjException => m.logError("Failed to read model"); failed = true }
     }
-    Result(if (failed) Vector.empty else m.triplesOut, m.logsOut, m.cityObjectCount, failed)
+    Outcome(m.logsOut, m.cityObjectCount, failed)
   }
 }
 
@@ -102,18 +116,24 @@ private[cj] object P {
   val DOUBLE = 5
 }
 
-private[cj] final class CjModel(docIri: String, val settings: CjSettings) {
+private[cj] final class CjModel(docIri: String, val settings: CjSettings, sink: CjSink) {
 
   // ------------------------------------------------------------------ output
-  private val triples = Vector.newBuilder[Triple]
   private val logs = Vector.newBuilder[LogRow]
   var cityObjectCount: Int = 0
 
-  def triplesOut: Vector[Triple] = triples.result()
   def logsOut: Vector[LogRow] = logs.result()
 
+  /** The single emission point: every triple goes to the sink from here. */
   def emit(s: String, p: String, oIri: String, oLit: String, oType: String): Unit =
-    triples += Triple(s, p, oIri, oLit, oType)
+    sink.triple(s, p, oIri, oLit, oType)
+
+  /** The literal triple `(s, p, lit)` whose ASCII text is in [[lit]]. */
+  def emitLit(s: String, p: String, oType: String): Unit =
+    sink.asciiLiteral(s, p, lit, oType)
+
+  /** Scratch buffer for array literals, reused by every [[emitLit]]. */
+  val lit = new AsciiBuf(1 << 12)
 
   // ----------------------------------------------------- converter state/path
   // ConverterState analog (CommonDefs.h:106-162): JSON-path lineage stack.
@@ -277,50 +297,43 @@ private[cj] final class CjModel(docIri: String, val settings: CjSettings) {
   }
 
   // --------------------------------------------------------------- instances
-  private var instCount = 0
-  private val instClass = mutable.HashMap[String, String]()
-  private val instName = mutable.HashMap[String, String]()
+  // the creation index of each minted instance; its class and name by index
+  private val instPrefix = docIri + "/i"
+  private val instIndex = mutable.HashMap[String, Int]()
+  private val instClass = mutable.ArrayBuffer[String]()
+  private val instName = mutable.ArrayBuffer[String]()
 
   /** engine CreateInstance: mints a deterministic per-document IRI (no blank
     * nodes — SURVEY.md §7.4). */
   def createInstance(cls: String, name: String = null): String = {
-    instCount += 1
-    val iri = s"$docIri/i$instCount"
-    instClass(iri) = cls
+    val iri = instPrefix + (instClass.length + 1)
+    instIndex(iri) = instClass.length
+    instClass += cls
+    instName += null
     emit(iri, V.RdfType, cls, null, null)
     if (name != null) setInstanceName(iri, name)
     iri
   }
+
+  private def indexOf(inst: String): Int = instIndex.getOrElse(inst,
+    throw new NoSuchElementException(s"not an instance of this document: $inst"))
+
   def setInstanceName(inst: String, name: String): Unit = {
-    instName(inst) = name
+    instName(indexOf(inst)) = name
     emit(inst, V.RdfName, null, name, V.XsdString)
   }
-  def nameOfInstance(inst: String): String = if (inst == null) null else instName.getOrElse(inst, null)
-  def classOfInstance(inst: String): String = instClass(inst)
+  def nameOfInstance(inst: String): String =
+    if (inst == null) null else { val i = instIndex.getOrElse(inst, -1); if (i < 0) null else instName(i) }
+  def classOfInstance(inst: String): String = instClass(indexOf(inst))
 
   def fmtD(d: Double): String = java.lang.Double.toString(d)
 
   def setDatatype(inst: String, prop: String, lit: String, xsd: String): Unit =
     emit(inst, prop, null, lit, xsd)
-  def setDatatypeDoubles(inst: String, prop: String, values: Seq[Double]): Unit =
-    emit(inst, prop, null, lexDoubles(values), V.XsdDoubleArray)
-
-  /** JSON-array lexical forms via direct StringBuilder appends — these carry
-    * the mesh payload (the bulk of the output bytes), so no per-element
-    * intermediate strings. */
-  def lexDoubles(values: Iterable[Double]): String = {
-    val sb = new java.lang.StringBuilder(values.size * 8 + 2)
-    sb.append('[')
-    var first = true
-    values.foreach { v => if (!first) sb.append(','); sb.append(v); first = false }
-    sb.append(']').toString
-  }
-  def lexLongs(values: Iterable[Long]): String = {
-    val sb = new java.lang.StringBuilder(values.size * 4 + 2)
-    sb.append('[')
-    var first = true
-    values.foreach { v => if (!first) sb.append(','); sb.append(v); first = false }
-    sb.append(']').toString
+  def setDatatypeDoubles(inst: String, prop: String, values: Seq[Double]): Unit = {
+    lit.clear()
+    lit.appendDoubles(values)
+    emitLit(inst, prop, V.XsdDoubleArray)
   }
   def setObjectProp(inst: String, prop: String, target: String): Unit =
     emit(inst, prop, target, null, null)

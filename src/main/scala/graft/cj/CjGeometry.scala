@@ -41,14 +41,62 @@ private[cj] final class CjGeometry(m: CjModel) {
       materials: TreeMap[String, Int],
       textures: TreeMap[String, Int])
 
-  private final class FaceGroup(val key: FaceGroupKey) {
-    val coordinates = mutable.ArrayBuffer[Double]()
-    val indices = mutable.ArrayBuffer[Long]()
-    val cityVert2Coord = mutable.HashMap[Int, Long]()
-    val texCoordinates = mutable.ArrayBuffer[Double]()
-    val texIndices = mutable.ArrayBuffer[Long]()
-    val texVert2Coord = mutable.HashMap[Int, Long]()
+  /** A face group's mesh. Coordinate slot `k` holds vertex `vertices(k)`
+    * of `texts`' pool and UV slot `k` texture vertex `uvs(k)`; their texts
+    * are formatted once per document. */
+  private final class FaceGroup(val key: FaceGroupKey, val texts: PointTexts) {
+    val vertices = new IntBuf
+    val indices = new IntBuf
+    val cityVert2Coord = mutable.HashMap[Int, Int]()
+    val uvs = new IntBuf
+    val texIndices = new IntBuf
+    val texVert2Coord = mutable.HashMap[Int, Int]()
   }
+
+  /** The coordinate text (`x,y,z` or `u,v`) of each point of one pool,
+    * formatted with `Double.toString` from `read`'s coordinates the first
+    * time a face group takes the point, and appended from here for every
+    * face group after that. A point `read` rejects (by throwing) is never
+    * stored, so every later use fails through `read` again. */
+  private final class PointTexts(pool: JsonNode, read: Int => Array[Double]) {
+    private val size = if (pool != null && pool.isArray) pool.size else 0
+    private val text = new AsciiBuf(math.max(64, size * 24))
+    private val start = new Array[Int](size)
+    private val end = new Array[Int](size) // 0 until formatted
+
+    /** Checks (and formats) point `i`, as `read` would. */
+    def take(i: Int): Unit =
+      if (i < 0 || i >= size || end(i) == 0) {
+        val c = read(i)
+        start(i) = text.length
+        var d = 0
+        while (d < c.length) { if (d > 0) text.append(','); text.appendDouble(c(d)); d += 1 }
+        end(i) = text.length
+      }
+
+    def appendTo(i: Int, out: AsciiBuf): Unit = out.append(text.bytes, start(i), end(i) - start(i))
+
+    /** `[p0,p1,…]` for the points `ids`, which have all been taken. */
+    def appendList(ids: IntBuf, out: AsciiBuf): Unit = {
+      out.append('[')
+      var k = 0
+      while (k < ids.length) { if (k > 0) out.append(','); appendTo(ids(k), out); k += 1 }
+      out.append(']')
+    }
+  }
+  private var cityTexts: PointTexts = null
+  private var templateTexts: PointTexts = null
+  private var uvTexts: PointTexts = null
+
+  /** The vertex texts of the pool [[getVertex]] reads now. */
+  private def currentTexts(): PointTexts =
+    if (useTemplateVertices) {
+      if (templateTexts == null) templateTexts = new PointTexts(templateVertices, getVertex)
+      templateTexts
+    } else {
+      if (cityTexts == null) cityTexts = new PointTexts(cityVertices, getVertex)
+      cityTexts
+    }
 
   // ------------------------------------------------------------- top entries
 
@@ -179,7 +227,7 @@ private[cj] final class CjGeometry(m: CjModel) {
   /** Geometry::ConvertSurfaceSet (Geometry.cpp:245-274): returns null when
     * no face group produced (unlike solid sets). */
   private def convertSurfaceSet(className: String, boundaries: JsonNode, fd: PerFaceData): String = {
-    val fgroups = mutable.ArrayBuffer[FaceGroup]()
+    val fgroups = mutable.LinkedHashMap[FaceGroupKey, FaceGroup]()
     fd.indexPath += 0
     m.elems(boundaries).foreach { jface =>
       addFaceToGroups(fgroups, jface, fd)
@@ -187,7 +235,7 @@ private[cj] final class CjGeometry(m: CjModel) {
     }
     fd.indexPath.remove(fd.indexPath.length - 1)
 
-    val items = fgroups.map(createFaceGroup)
+    val items = fgroups.valuesIterator.map(createFaceGroup).toVector
     if (items.isEmpty) return null
 
     val cls = m.getOrCreateClass(className, addPrefix = true, "City.GeometryBody")
@@ -197,14 +245,13 @@ private[cj] final class CjGeometry(m: CjModel) {
   }
 
   /** Geometry::AddFaceToGroups (Geometry.cpp:278-299). */
-  private def addFaceToGroups(fgroups: mutable.ArrayBuffer[FaceGroup], jface: JsonNode, fd: PerFaceData): Unit = {
+  private def addFaceToGroups(fgroups: mutable.LinkedHashMap[FaceGroupKey, FaceGroup], jface: JsonNode,
+      fd: PerFaceData): Unit = {
     val app = m.appearance.getSurfaceAppearance(fd.material, fd.texture, fd.indexPath.toSeq)
     val key = FaceGroupKey(fd.semantics.getSurfaceSemantic(fd.indexPath.toSeq), app.materials, app.textures)
 
-    // first-seen group order; linear scan like the reference list walk
-    val group = fgroups.find(_.key == key).getOrElse {
-      val g = new FaceGroup(key); fgroups += g; g
-    }
+    // first-seen group order, like the reference's list walk
+    val group = fgroups.getOrElseUpdate(key, new FaceGroup(key, currentTexts()))
 
     val texVertIndices = m.appearance.getTextureIndices(group.key.textures, app.textureIndices)
     addFaceToGroup(group, jface, texVertIndices)
@@ -220,7 +267,7 @@ private[cj] final class CjGeometry(m: CjModel) {
         m.logError("Texture indecies loops size mismatch number of loops in boundary")
     }
     val texIt = texIndices.map(_.iterator)
-    var end = -1L
+    var end = -1
     m.elems(jboundaries).foreach { jloop =>
       addPoints(jloop, group)
       group.indices += end
@@ -233,7 +280,7 @@ private[cj] final class CjGeometry(m: CjModel) {
         }
       }
       group.texIndices += end
-      end = -2L
+      end = -2
     }
   }
 
@@ -250,16 +297,14 @@ private[cj] final class CjGeometry(m: CjModel) {
 
   /** Geometry::GetAddVertex + AddVertex (Geometry.cpp:393-420): per-group
     * first-seen dedup of city-vertex → coordinate slot. */
-  private def getAddVertex(jpoint: JsonNode, group: FaceGroup): Long = {
+  private def getAddVertex(jpoint: JsonNode, group: FaceGroup): Int = {
     val cityIdx = m.jInt(jpoint)
     group.cityVert2Coord.get(cityIdx) match {
       case Some(slot) => slot
       case None =>
-        val coord = getVertex(cityIdx)
-        group.coordinates += coord(0)
-        group.coordinates += coord(1)
-        group.coordinates += coord(2)
-        val slot = group.coordinates.size / 3 - 1L
+        group.texts.take(cityIdx)
+        group.vertices += cityIdx
+        val slot = group.vertices.length - 1
         group.cityVert2Coord(cityIdx) = slot
         slot
     }
@@ -290,29 +335,38 @@ private[cj] final class CjGeometry(m: CjModel) {
 
   /** Geometry::GetAddTextureVertex + AddTextureVertex (Geometry.cpp:441-474):
     * first-seen UV dedup; invalid UV index memoizes sentinel -3. */
-  private def getAddTextureVertex(jind: Int, group: FaceGroup): Long =
+  private def getAddTextureVertex(jind: Int, group: FaceGroup): Int =
     group.texVert2Coord.getOrElseUpdate(jind, {
       try {
-        val jpoint = m.jIdx(m.appearance.textureVertices, jind)
-        val u = m.jDouble(m.jIdx(jpoint, 0))
-        val v = m.jDouble(m.jIdx(jpoint, 1))
-        group.texCoordinates += u
-        group.texCoordinates += v
-        group.texCoordinates.size / 2 - 1L
+        if (uvTexts == null) uvTexts = new PointTexts(m.appearance.textureVertices, getTextureVertex)
+        uvTexts.take(jind)
+        group.uvs += jind
+        group.uvs.length - 1
       } catch {
         case _: CjException =>
           m.logError("Invalid texture verex index or coordinates")
-          -3L
+          -3
       }
     })
+
+  /** The `(u, v)` of texture vertex `jind`. */
+  private def getTextureVertex(jind: Int): Array[Double] = {
+    val jpoint = m.jIdx(m.appearance.textureVertices, jind)
+    Array(m.jDouble(m.jIdx(jpoint, 0)), m.jDouble(m.jIdx(jpoint, 1)))
+  }
 
   /** Geometry::CreateFaceGroup (Geometry.cpp:478-517). */
   private def createFaceGroup(group: FaceGroup): String = {
     val cls = m.getOrCreateClass("City.Surface", addPrefix = false, "BoundaryRepresentation")
     val face = m.createInstance(cls, m.nameOfInstance(group.key.semantic))
 
-    m.emit(face, "geom:vertices", null, m.lexDoubles(group.coordinates), V.XsdDoubleArray)
-    m.emit(face, "geom:indices", null, m.lexLongs(group.indices), V.XsdLongArray)
+    val lit = m.lit
+    lit.clear()
+    group.texts.appendList(group.vertices, lit)
+    m.emitLit(face, "geom:vertices", V.XsdDoubleArray)
+    lit.clear()
+    group.indices.appendTo(lit)
+    m.emitLit(face, "geom:indices", V.XsdLongArray)
 
     val rdfMat = m.appearance.getRdfMaterial(group.key.materials, group.key.textures, group.key.semantic)
     if (rdfMat != null) m.setObjectProp(face, "geom:material", rdfMat)
@@ -322,14 +376,18 @@ private[cj] final class CjGeometry(m: CjModel) {
       m.setObjectArray(face, prop, Seq(group.key.semantic))
     }
 
-    var texIdx = group.texIndices
-    if (texIdx.nonEmpty && texIdx.size != group.indices.size) {
+    val texIdx = group.texIndices
+    if (texIdx.length > 0 && texIdx.length != group.indices.length) {
       m.logError("Number of texture indecies mismatches number of indecies")
-      texIdx = mutable.ArrayBuffer[Long]()
+      texIdx.clear()
     }
     if (texIdx.exists(_ >= 0)) {
-      m.emit(face, "geom:textureCoordinates", null, m.lexDoubles(group.texCoordinates), V.XsdDoubleArray)
-      m.emit(face, "geom:textureIndices", null, m.lexLongs(texIdx), V.XsdLongArray)
+      lit.clear()
+      uvTexts.appendList(group.uvs, lit)
+      m.emitLit(face, "geom:textureCoordinates", V.XsdDoubleArray)
+      lit.clear()
+      texIdx.appendTo(lit)
+      m.emitLit(face, "geom:textureIndices", V.XsdLongArray)
     }
     face
   }
@@ -374,5 +432,30 @@ private[cj] final class CjGeometry(m: CjModel) {
     m.setObjectProp(trans, "geom:object", tpl.item)
     m.setObjectProp(trans, "geom:matrix", matrix)
     trans
+  }
+}
+
+/** A growable `Int` array: a face group's slot and index lists. */
+private[cj] final class IntBuf {
+  private var a = new Array[Int](16)
+  var length: Int = 0
+  def apply(i: Int): Int = a(i)
+  def +=(v: Int): Unit = {
+    if (length == a.length) a = java.util.Arrays.copyOf(a, length * 2)
+    a(length) = v
+    length += 1
+  }
+  def clear(): Unit = length = 0
+  def exists(p: Int => Boolean): Boolean = {
+    var i = 0
+    while (i < length) { if (p(a(i))) return true; i += 1 }
+    false
+  }
+  /** Appends `[v0,v1,…]` to `out`. */
+  def appendTo(out: AsciiBuf): Unit = {
+    out.append('[')
+    var i = 0
+    while (i < length) { if (i > 0) out.append(','); out.appendInt(a(i)); i += 1 }
+    out.append(']')
   }
 }

@@ -27,19 +27,23 @@ object CjSpark {
     docs.mapPartitions(_.flatMap(d => CjConvert.convert(d.doc_iri, d.json).triples))
   }
 
+  /** The conversion logs; the triples are dropped as they are emitted. */
   def convertLogs(docs: Dataset[CjDoc]): Dataset[LogRow] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.mapPartitions(_.flatMap(d => CjConvert.convert(d.doc_iri, d.json).logs))
+    docs.mapPartitions(_.flatMap(d => CjConvert.convertTo(CjSink.Discard, d.doc_iri, d.json).logs))
   }
 
-  /** per-document conversion summary (progress/metrics sink analog, S5) */
+  /** per-document conversion summary (progress/metrics sink analog, S5);
+    * the triples are counted as they are emitted, never kept. */
   def convertStats(docs: Dataset[CjDoc]): Dataset[DocResult] = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.mapPartitions(_.map { d =>
-      val r = CjConvert.convert(d.doc_iri, d.json)
-      DocResult(d.doc_iri, r.triples.size.toLong, r.logs.count(_.level == "Error").toLong, r.docFailed)
+      val count = new CjSink.Count
+      val r = CjConvert.convertTo(count, d.doc_iri, d.json)
+      DocResult(d.doc_iri, if (r.docFailed) 0L else count.n,
+        r.logs.count(_.level == "Error").toLong, r.docFailed)
     })
   }
 

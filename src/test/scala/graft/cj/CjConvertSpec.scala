@@ -296,4 +296,14 @@ class CjConvertSpec extends AnyFunSuite {
     val on = CjConvert.convert("t:d", json)
     assert(on.triples.exists(t => t.pred == "rdf:name" && t.obj_lit == "m0"))
   }
+
+  test("instance lookups accept only IRIs this document minted") {
+    val m = new CjModel("t:d", CjSettings.default, CjSink.Discard)
+    val a = m.createInstance("city:Building", "A")
+    assert(m.classOfInstance(a) == "city:Building" && m.nameOfInstance(a) == "A")
+    assert(m.nameOfInstance("t:d/i2") == null)
+    val e = intercept[NoSuchElementException](m.setInstanceName("t:d/i2", "B"))
+    assert(e.getMessage.contains("t:d/i2"))
+    intercept[NoSuchElementException](m.classOfInstance("t:other/i1"))
+  }
 }

@@ -33,6 +33,17 @@ class CjPropertySpec extends AnyFunSuite {
     (faces, values)
   }
 
+  test("double-array literal text is Double.toString text, element by element") {
+    val rnd = new Random(11)
+    val buf = new AsciiBuf(4)
+    val doubles = Seq(0.0, -0.0, 1.0, 1e7, 1e-3, 85012.345, Double.MinPositiveValue, Double.MaxValue) ++
+      Seq.fill(500)(rnd.nextDouble() * 1e6 - 5e5) ++ Seq.fill(500)(java.lang.Double.longBitsToDouble(rnd.nextLong()))
+    buf.appendDoubles(doubles)
+    val sb = new java.lang.StringBuilder("[")
+    doubles.zipWithIndex.foreach { case (d, i) => if (i > 0) sb.append(','); sb.append(d) }
+    assert(buf.toString == sb.append(']').toString)
+  }
+
   test("mesh invariants hold for 200 random ragged boundary documents") {
     val rnd = new Random(42)
     (1 to 200).foreach { _ =>

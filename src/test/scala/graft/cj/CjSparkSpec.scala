@@ -53,8 +53,8 @@ class CjSparkSpec extends SparkTestBase {
       def rows(q: String) = run(q).map(_.toString).sorted.toSeq
       val stats = run("cj_doc_stats")
         .map(r => r.getAs[String]("doc_iri") -> r.getAs[Boolean]("failed")).toMap
-      assert(stats.keySet == Set("cj:empty", "cj:failing_object", "cj:material_color",
-        "cj:semantic_faces", "cj:template_insert", "cj:texture_uv"), stats)
+      assert(stats.keySet == Set("cj:cube", "cj:empty", "cj:failing_object", "cj:material_color",
+        "cj:semantic_faces", "cj:template_insert", "cj:tetra", "cj:texture_uv"), stats)
       assert(stats.filter(_._2).keySet == Set("cj:empty"))
       // the mapPartitions and DSv2 paths share one oracle
       assert(rows("cj_triples_by_pred") == rows("cj_triples_by_pred_dsv2"))
