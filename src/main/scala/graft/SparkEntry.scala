@@ -25,6 +25,15 @@ object SparkEntry {
   private def t(dir: String, name: String)(implicit spark: SparkSession): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
+  /** The `cj_*` queries' corpus (`spark.graft.cj.corpus`) through the
+    * `cityjson` source, as its `output` rows: triples, logs or docs. */
+  private def cj(spark: SparkSession, output: String): DataFrame =
+    spark.read.format("cityjson").option("output", output)
+      .load(graft.cj.CityJsonSource.corpusDir(spark))
+
+  private def cjTriplesByPred(spark: SparkSession): DataFrame =
+    cj(spark, "triples").groupBy("pred").agg(count(lit(1)).as("n_triples"))
+
   /** Fixed scratch path under /tmp, cleared before reuse: contract queries
     * that materialize a table write to ONE deterministic location per
     * scale — repeated Verify runs replace it instead of accumulating a
@@ -1675,26 +1684,16 @@ object SparkEntry {
     }),
 
     // ============ CityJSON reference semantics, distributed =================
-    "cj_triples_by_pred" -> ((s, dir) => {
-      graft.cj.CjSpark.convert(graft.cj.CjSpark.referenceCorpus(s))
-        .groupBy("pred").agg(count(lit(1)).as("n_triples"))
-    }),
-    "cj_triples_by_pred_dsv2" -> ((s, dir) => {
-      // the DataSource V2 connector path (spark.read.format("cityjson")):
-      // same conversion semantics as cj_triples_by_pred, so the two share
-      // one golden oracle — regression-locks connector == mapPartitions
-      s.read.format("cityjson").load(graft.cj.CjSpark.corpusDir(s))
-        .groupBy("pred").agg(count(lit(1)).as("n_triples"))
-    }),
-    "cj_doc_stats" -> ((s, dir) => {
-      graft.cj.CjSpark.convertStats(graft.cj.CjSpark.referenceCorpus(s)).toDF()
-    }),
+    "cj_triples_by_pred" -> ((s, dir) => cjTriplesByPred(s)),
+    // the same read, kept as its own contract query with the same oracle
+    "cj_triples_by_pred_dsv2" -> ((s, dir) => cjTriplesByPred(s)),
+    "cj_doc_stats" -> ((s, dir) => cj(s, "docs")),
     "cj_log_categories" -> ((s, dir) => {
       // the CLI's per-category log dedup (Main.cpp:63-65) as a relational op
       // dedup on (level, category) — matches the oracle's DISTINCT exactly;
       // a category-only dedup would keep a nondeterministic level if a
       // category string ever appeared at two levels
-      graft.cj.CjSpark.convertLogs(graft.cj.CjSpark.referenceCorpus(s))
+      cj(s, "logs")
         .dropDuplicates("level", "category")
         .groupBy("level").agg(count(lit(1)).as("n_categories"))
     }),
@@ -2347,7 +2346,7 @@ SELECT seed, dist, COUNT(*) AS n_entities FROM v$rounds GROUP BY 1, 2"""
     // log-star contraction computes the identical component labeling, so it
     // shares the recursive-CTE closure oracle
     ("doc_dup_components_logstar" -> baseOracleSql("doc_dup_components")) +
-    // the DSv2 connector emits the same triples as the mapPartitions path
+    // the two names run the same read of the CityJSON corpus
     ("cj_triples_by_pred_dsv2" -> baseOracleSql("cj_triples_by_pred")) +
     // VariantType access is a faster PATH to the same values as
     // get_json_object — identical output, one oracle

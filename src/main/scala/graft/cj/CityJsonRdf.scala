@@ -35,10 +35,14 @@ object CityJsonRdf {
             log.message("Error", "Failed to open file '%s'", s"Failed to open file '$cityFilePath'", "")
           return None
       }
-    val docIri = "cj:" + Paths.get(cityFilePath).getFileName.toString.stripSuffix(".city.json")
-    if (progress != null) progress.start(1)
-    val res = CjConvert.convert(docIri, json, settings)
-    if (progress != null) { (1 to res.cityObjectCount).foreach(_ => progress.step()); progress.finish() }
+    val res = CjConvert.convert(CityJsonSource.docIriFor(cityFilePath), json, settings)
+    // the steps are reported once the document has converted, so the range
+    // is known: one step per city object, like the reference's Start(range)
+    if (progress != null) {
+      progress.start(res.cityObjectCount)
+      (1 to res.cityObjectCount).foreach(_ => progress.step())
+      progress.finish()
+    }
     if (log != null) res.logs.foreach(l => log.message(l.level, l.category, l.msg, l.path))
     if (res.docFailed) None else Some(res.triples)
   }

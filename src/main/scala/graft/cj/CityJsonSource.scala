@@ -2,6 +2,7 @@ package graft.cj
 
 import java.util.{Map => JMap}
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -9,20 +10,30 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader,
   PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 batch source for CityJSON corpora — the Spark-native form
-  * of the reference's JSON file source (SURVEY §2.1 S1):
+  * of the reference's JSON file source (SURVEY §2.1 S1), and the only way
+  * the engine reads a corpus:
   *
   * {{{ spark.read.format("cityjson").load("/data/cities") }}}
   *
-  * yields one row per emitted triple, `(doc_iri, subj, pred, obj_iri,
-  * obj_lit, obj_type)`, converted on EXECUTORS. Column pruning is pushed
-  * into the reader (`SupportsPushDownRequiredColumns`): a `select(pred)`
-  * materializes only the pruned columns per row.
+  * converts each document on EXECUTORS. The `output` option picks the rows:
+  *  - `triples` (the default): one row per emitted triple, `(doc_iri, subj,
+  *    pred, obj_iri, obj_lit, obj_type)`;
+  *  - `logs`: one row per converter log message, `(doc_iri, level,
+  *    category, msg, path)` — the reference's ILog stream (Main.cpp:63-65
+  *    dedups it by category);
+  *  - `docs`: one row per document, `(doc_iri, n_triples, n_errors,
+  *    failed)`, failed documents included with `n_triples = 0` — the
+  *    progress/metrics analog (S5).
+  * Any other value fails when the table is resolved, naming the three.
+  * Column pruning is pushed into the reader
+  * (`SupportsPushDownRequiredColumns`): a `select(pred)` materializes only
+  * the pruned columns per row.
   *
   * Deployability contract (the parts a laptop test never exercises):
   *  - the session's Hadoop configuration is captured ONCE at scan build
@@ -46,38 +57,81 @@ import org.apache.spark.util.SerializableConfiguration
   *    file, so a corpus fills every core instead of queueing its largest
   *    documents behind one task;
   *  - column ordinals are resolved once per reader (an unknown pruned
-  *    column fails at reader creation). Each document converts into its own
-  *    [[ArenaRows]]: the converter's triples stream into a byte arena that
-  *    holds only the required columns as UTF-8, each distinct IRI,
-  *    predicate, type tag and short literal once per document, and the rows
-  *    are [[UTF8String]] slices of it. No `Triple` and no whole-document
-  *    triple vector is built; a document's rows are held until it has
-  *    converted, so a document-level failure still yields none.
+  *    column fails at reader creation). For `triples`, each document
+  *    converts into its own [[ArenaRows]]: the converter's triples stream
+  *    into a byte arena that holds only the required columns as UTF-8,
+  *    each distinct IRI, predicate, type tag and short literal once per
+  *    document, and the rows are [[UTF8String]] slices of it. No `Triple`
+  *    and no whole-document triple vector is built; a document's rows are
+  *    held until it has converted, so a document-level failure still yields
+  *    none. `logs` drops the triples as they are emitted, `docs` counts them.
   *
   * Conversion semantics are [[CjConvert]] — identical to every other entry
-  * point (spec-locked against `CjSpark.convert` and `CjConvert.convert`);
-  * doc-level failures follow the reference's NULL-model contract and emit
-  * zero rows.
+  * point (spec-locked against `CjConvert.convert`); doc-level failures
+  * follow the reference's NULL-model contract and emit zero triples.
   */
 class CityJsonSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "cityjson"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = CityJsonSource.schema
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    CityJsonSource.output(options).schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: JMap[String, String]): Table =
     new CityJsonTable(Option(properties.get("path")).getOrElse(
-      throw new IllegalArgumentException("cityjson source needs a path: .load(<dir>)")))
+      throw new IllegalArgumentException("cityjson source needs a path: .load(<dir>)")),
+      CityJsonSource.output(properties))
 }
 
 object CityJsonSource {
-  val schema: StructType = StructType(Seq(
+
+  /** What a read serves: the values of the `output` option. */
+  sealed abstract class Output(val name: String, val schema: StructType)
+
+  case object Triples extends Output("triples", StructType(Seq(
     StructField("doc_iri", StringType, nullable = false),
     StructField("subj", StringType, nullable = false),
     StructField("pred", StringType, nullable = false),
     StructField("obj_iri", StringType, nullable = true),
     StructField("obj_lit", StringType, nullable = true),
-    StructField("obj_type", StringType, nullable = true)))
+    StructField("obj_type", StringType, nullable = true))))
 
-  private[cj] def docIriFor(path: String): String = {
+  case object Logs extends Output("logs", StructType(Seq(
+    StructField("doc_iri", StringType, nullable = false),
+    StructField("level", StringType, nullable = true),
+    StructField("category", StringType, nullable = true),
+    StructField("msg", StringType, nullable = true),
+    StructField("path", StringType, nullable = true))))
+
+  case object Docs extends Output("docs", StructType(Seq(
+    StructField("doc_iri", StringType, nullable = false),
+    StructField("n_triples", LongType, nullable = false),
+    StructField("n_errors", LongType, nullable = false),
+    StructField("failed", BooleanType, nullable = false))))
+
+  private val outputs: Seq[Output] = Seq(Triples, Logs, Docs)
+
+  /** The default output's schema. */
+  val schema: StructType = Triples.schema
+
+  /** The `output` option of a read; an unknown value fails, naming the valid ones. */
+  def output(options: JMap[String, String]): Output = {
+    val name = new CaseInsensitiveStringMap(options).getOrDefault("output", Triples.name)
+    outputs.find(_.name == name).getOrElse(throw new IllegalArgumentException(
+      s"cityjson option output = '$name': must be one of ${outputs.map(_.name).mkString(", ")}"))
+  }
+
+  /** Session conf key naming the CityJSON corpus directory that the `cj_*`
+    * contract queries read. Like any `spark.*` key it can also be passed as
+    * a `-D` JVM system property, which is how session-less tools read it. */
+  val CorpusKey = "spark.graft.cj.corpus"
+  /** Where the corpus is read from when [[CorpusKey]] is unset: the
+    * reference converter's example corpus (FIXTURES.md §1). */
+  val DefaultCorpus = "/root/reference/examples"
+
+  def corpusDir(spark: SparkSession): String = spark.conf.get(CorpusKey, DefaultCorpus)
+
+  /** A document's IRI, from its file name: `cj:<name>` less `.city.json`
+    * or `.json`. */
+  private[graft] def docIriFor(path: String): String = {
     val name = path.substring(path.lastIndexOf('/') + 1)
     s"cj:${name.stripSuffix(".city.json").stripSuffix(".json")}"
   }
@@ -130,32 +184,32 @@ object CityJsonSource {
   }
 }
 
-final class CityJsonTable(path: String) extends Table with SupportsRead {
+final class CityJsonTable(path: String, output: CityJsonSource.Output) extends Table with SupportsRead {
   override def name(): String = s"cityjson:$path"
-  override def schema(): StructType = CityJsonSource.schema
+  override def schema(): StructType = output.schema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new CityJsonScanBuilder(path)
+    new CityJsonScanBuilder(path, output)
 }
 
-final class CityJsonScanBuilder(path: String)
+final class CityJsonScanBuilder(path: String, output: CityJsonSource.Output)
     extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = CityJsonSource.schema
+  private var required: StructType = output.schema
   override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
   override def build(): Scan = {
     // capture session state at plan time: Hadoop conf (incl. spark.hadoop.*)
     // for the executors, file-packing knobs from the SQL conf
-    val spark = org.apache.spark.sql.SparkSession.active
+    val spark = SparkSession.active
     val confSer = new SerializableConfiguration(spark.sessionState.newHadoopConf())
     val sqlConf = spark.sessionState.conf
-    new CityJsonScan(path, required, confSer,
+    new CityJsonScan(path, output, required, confSer,
       sqlConf.filesMaxPartitionBytes, sqlConf.filesOpenCostInBytes,
       spark.sparkContext.defaultParallelism)
   }
 }
 
-final class CityJsonScan(path: String, required: StructType,
+final class CityJsonScan(path: String, output: CityJsonSource.Output, required: StructType,
     confSer: SerializableConfiguration, maxPartitionBytes: Long,
     openCostInBytes: Long, minPartitionNum: Int) extends Scan with Batch {
   override def readSchema(): StructType = required
@@ -175,18 +229,18 @@ final class CityJsonScan(path: String, required: StructType,
   override def planInputPartitions(): Array[InputPartition] = partitions
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new CityJsonReaderFactory(required.fieldNames, confSer)
+    new CityJsonReaderFactory(output, required.fieldNames, confSer)
 }
 
 final case class CityJsonFilePartition(filePaths: Array[String]) extends InputPartition
 
-final class CityJsonReaderFactory(fields: Array[String], confSer: SerializableConfiguration)
-    extends PartitionReaderFactory {
+final class CityJsonReaderFactory(output: CityJsonSource.Output, fields: Array[String],
+    confSer: SerializableConfiguration) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val filePaths = partition.asInstanceOf[CityJsonFilePartition].filePaths
-    // column ordinals in the full schema, resolved once per reader
+    // column ordinals in the output's full schema, resolved once per reader
     val ordinals = fields.map { f =>
-      val i = CityJsonSource.schema.fieldNames.indexOf(f)
+      val i = output.schema.fieldNames.indexOf(f)
       if (i < 0) throw new IllegalArgumentException(s"unknown column $f")
       i
     }
@@ -195,8 +249,11 @@ final class CityJsonReaderFactory(fields: Array[String], confSer: SerializableCo
       private var rows: Iterator[InternalRow] = Iterator.empty
       private var current: InternalRow = _
 
+      /** The required columns of a row whose full-schema values are `values`. */
+      private def row(values: Any*): InternalRow = new GenericInternalRow(ordinals.map(values(_)))
+
       /** One document's rows, converted once the previous document's rows
-        * are spent; none for a failed document (NULL model). */
+        * are spent; no triples for a failed document (NULL model). */
       private def convert(filePath: String): Iterator[InternalRow] = {
         val p = new Path(filePath)
         // the SESSION's Hadoop conf, not a blank new Configuration(): an
@@ -206,8 +263,22 @@ final class CityJsonReaderFactory(fields: Array[String], confSer: SerializableCo
         val json = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
           finally in.close()
         val docIri = CityJsonSource.docIriFor(filePath)
-        val arena = new ArenaRows(ordinals, UTF8String.fromString(docIri))
-        if (CjConvert.convertTo(arena, docIri, json).docFailed) Iterator.empty else arena.rows
+        val doc = UTF8String.fromString(docIri)
+        output match {
+          case CityJsonSource.Triples =>
+            val arena = new ArenaRows(ordinals, doc)
+            if (CjConvert.convertTo(arena, docIri, json).docFailed) Iterator.empty else arena.rows
+          case CityJsonSource.Logs =>
+            CjConvert.convertTo(CjSink.Discard, docIri, json).logs.iterator.map { l =>
+              row(doc, UTF8String.fromString(l.level), UTF8String.fromString(l.category),
+                UTF8String.fromString(l.msg), UTF8String.fromString(l.path))
+            }
+          case CityJsonSource.Docs =>
+            val count = new CjSink.Count
+            val o = CjConvert.convertTo(count, docIri, json)
+            Iterator.single(row(doc, if (o.docFailed) 0L else count.n,
+              o.logs.count(_.level == "Error").toLong, o.docFailed))
+        }
       }
 
       override def next(): Boolean = {

@@ -2,15 +2,15 @@ package graft.tools
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
-import graft.cj.{CjConvert, CjSpark}
+import graft.cj.{CityJsonSource, CjConvert}
 import graft.model.Triple
 
 /** Generates the golden triple fixtures (FIXTURES.md §2): runs the frozen
   * reference-semantics emitter over every reference example document and
   * writes `golden/<stem>.triples.ndjson` + a `golden/SUMMARY.tsv`.
   * Usage: `GenGolden [corpusDir [outDir]]`; the corpus defaults to the
-  * `-Dspark.graft.cj.corpus` setting ([[graft.cj.CjSpark.CorpusKey]]), else
-  * [[graft.cj.CjSpark.DefaultCorpus]], and the output to `golden`.
+  * `-Dspark.graft.cj.corpus` setting ([[graft.cj.CityJsonSource.CorpusKey]]), else
+  * [[graft.cj.CityJsonSource.DefaultCorpus]], and the output to `golden`.
   *
   * The golden files are checked in; `CjGoldenSpec` locks the emitter against
   * them, so any semantic drift in the converter is caught as a diff.
@@ -58,7 +58,7 @@ object GenGolden {
 
   def main(args: Array[String]): Unit = {
     val examplesDir = Paths.get(if (args.nonEmpty) args(0)
-      else sys.props.getOrElse(CjSpark.CorpusKey, CjSpark.DefaultCorpus))
+      else sys.props.getOrElse(CityJsonSource.CorpusKey, CityJsonSource.DefaultCorpus))
     val outDir = Paths.get(if (args.length > 1) args(1) else "golden")
     Files.createDirectories(outDir)
 
@@ -70,7 +70,7 @@ object GenGolden {
       val stem = f.getFileName.toString.stripSuffix(".city.json")
       val json = Files.readString(f)
       val t0 = System.nanoTime()
-      val res = CjConvert.convert(s"cj:$stem", json)
+      val res = CjConvert.convert(CityJsonSource.docIriFor(f.toString), json)
       val secs = (System.nanoTime() - t0) / 1e9
       val out = outDir.resolve(s"$stem.triples.ndjson")
       val w = Files.newBufferedWriter(out)

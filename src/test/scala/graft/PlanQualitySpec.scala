@@ -284,9 +284,10 @@ class PlanQualitySpec extends SparkTestBase {
     // ALL queries; emb_pairs_cosine's bounded-head brute force is the
     // documented exception (nested-loop on 120 rows by design)
     val exceptions = Set("emb_pairs_cosine")
-    // the cj_* plans (a file scan, then mapPartitions) do not depend on what
-    // the documents contain, so they are planned over the in-repo fixtures
-    spark.conf.set(graft.cj.CjSpark.CorpusKey, graft.cj.CjFixtures.dir)
+    // the cj_* plans (a cityjson source scan, then aggregates) do not depend
+    // on what the documents contain, so they are planned over the in-repo
+    // fixtures
+    spark.conf.set(graft.cj.CityJsonSource.CorpusKey, graft.cj.CjFixtures.dir)
     try SparkEntry.queries.keys
       .filterNot(exceptions)
       .foreach { name =>
@@ -295,6 +296,27 @@ class PlanQualitySpec extends SparkTestBase {
         assert(!plan.contains("BroadcastNestedLoopJoin"),
           s"$name plans a broadcast nested-loop join (non-equi join leaked in)")
       }
-    finally spark.conf.unset(graft.cj.CjSpark.CorpusKey)
+    finally spark.conf.unset(graft.cj.CityJsonSource.CorpusKey)
+  }
+
+  test("cj_doc_stats and cj_log_categories scan the source with no exchange before the first aggregate") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    spark.conf.set(graft.cj.CityJsonSource.CorpusKey, graft.cj.CjFixtures.dir)
+    try Seq("cj_doc_stats", "cj_log_categories").foreach { name =>
+      val plan = planOf(name) match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      val scans = plan.collect { case b: BatchScanExec => b }
+      assert(scans.map(_.scan.getClass) == Seq(classOf[graft.cj.CityJsonScan]), s"$name:\n$plan")
+      // the lowest aggregate over the scan, or the whole plan where there is none
+      val firstAgg = plan.collect { case a: BaseAggregateExec => a }.lastOption.getOrElse(plan)
+      assert(firstAgg.collect { case b: BatchScanExec => b }.nonEmpty, s"$name:\n$plan")
+      assert(firstAgg.collect { case e: Exchange => e }.isEmpty,
+        s"$name shuffles the corpus before its first aggregate:\n$plan")
+    } finally spark.conf.unset(graft.cj.CityJsonSource.CorpusKey)
   }
 }

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 import graft.SparkTestBase
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, LongType, StringType}
 import org.apache.spark.util.SerializableConfiguration
 
 /** Stand-in for a filesystem needing session configuration (S3 credentials,
@@ -64,24 +65,43 @@ class CityJsonSourceSpec extends SparkTestBase {
 
   private val examples = "/root/reference/examples"
 
-  test("DSv2 source emits exactly the triples of the mapPartitions path, per doc") {
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toString).sorted.toSeq
+  private def read(output: String, dir: String) =
+    spark.read.format("cityjson").option("output", output).load(dir)
+
+  /** Every `.json` file under `dir`, as the source lists it. */
+  private def documents(dir: String): Seq[java.nio.file.Path] =
+    Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
+      .filter(f => Files.isRegularFile(f) && f.getFileName.toString.endsWith(".json")).toVector
+
+  test("docs n_triples count the triples rows; logs equal CjConvert's logs") {
     CjFixtures.corpora.foreach { dir =>
-      val viaSource = spark.read.format("cityjson").load(dir)
-      assert(viaSource.columns.toSeq ==
+      // triples is the default output
+      assert(spark.read.format("cityjson").load(dir).columns.toSeq ==
         Seq("doc_iri", "subj", "pred", "obj_iri", "obj_lit", "obj_type"))
-      val expected = CjSpark.convertStats(CjSpark.referenceCorpus(spark, dir)).collect()
-        .map(d => d.doc_iri -> d.n_triples).toMap
-      // per-document triple counts match the established distributed path
-      val got = viaSource.groupBy("doc_iri").count().collect()
+      val docs = read("docs", dir)
+      assert(docs.schema.map(f => f.name -> f.dataType) == Seq("doc_iri" -> StringType,
+        "n_triples" -> LongType, "n_errors" -> LongType, "failed" -> BooleanType))
+      val nTriples = docs.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val counted = read("triples", dir).groupBy("doc_iri").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(got == expected.filter(_._2 > 0), s"$dir: $got vs $expected")
-      // and the full triple multiset matches exactly
-      val a = canon(viaSource.select("subj", "pred", "obj_iri", "obj_lit", "obj_type"))
-      val b = canon(CjSpark.convert(CjSpark.referenceCorpus(spark, dir)).toDF())
-      assert(a == b, s"$dir: DSv2 triple multiset diverged from CjSpark.convert")
+      assert(nTriples.keySet == documents(dir).map(f => CityJsonSource.docIriFor(f.toString)).toSet)
+      assert(nTriples.filter(_._2 > 0) == counted, dir)
+
+      val logs = read("logs", dir)
+      assert(logs.columns.toSeq == Seq("doc_iri", "level", "category", "msg", "path"))
+      val want = documents(dir).flatMap { f =>
+        val docIri = CityJsonSource.docIriFor(f.toString)
+        CjConvert.convert(docIri, Files.readString(f)).logs
+          .map(l => Seq(docIri, l.level, l.category, l.msg, l.path).mkString("|"))
+      }.sorted
+      assert(want.nonEmpty)
+      assert(logs.collect().map(_.toSeq.mkString("|")).sorted.toSeq == want, dir)
     }
+  }
+
+  test("an unknown output value fails and names the valid values") {
+    val e = intercept[IllegalArgumentException](read("quads", CjFixtures.dir).collect())
+    Seq("quads", "triples", "logs", "docs").foreach(v => assert(e.getMessage.contains(v), e.getMessage))
   }
 
   /** The in-repo fixtures, one `.json` file each. */
@@ -136,7 +156,7 @@ class CityJsonSourceSpec extends SparkTestBase {
       s"""{"type":"CityJSON","version":"1.1","vertices":[],"CityObjects":{$objects}}""".getBytes("UTF-8"))
     fixtureFiles.foreach(f => Files.copy(f, dir.resolve(f.getFileName)))
     val files = Files.list(dir).iterator().asScala.map(_.toString).toArray.sorted
-    val reader = new CityJsonReaderFactory(CityJsonSource.schema.fieldNames,
+    val reader = new CityJsonReaderFactory(CityJsonSource.Triples, CityJsonSource.schema.fieldNames,
       new SerializableConfiguration(spark.sessionState.newHadoopConf()))
       .createReader(CityJsonFilePartition(files))
     // keep every row object the reader hands out, uncopied
@@ -159,6 +179,14 @@ class CityJsonSourceSpec extends SparkTestBase {
     assert(readSchema.fieldNames.toSeq == Seq("pred"),
       s"reader must materialize only the pruned columns, got $readSchema")
     assert(df.distinct().count() > 10) // predicates across the corpus
+    // the logs and docs rows are pruned the same way
+    val levels = read("logs", CjFixtures.dir).select("level")
+    assert(levels.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan.readSchema().fieldNames.toSeq
+    } == Seq(Seq("level")))
+    assert(levels.distinct().collect().map(_.getString(0)).toSet.contains("Error"))
+    val failed = read("docs", CjFixtures.dir).select("failed", "doc_iri").where("failed")
+    assert(failed.collect().map(r => (r.getBoolean(0), r.getString(1))).toSeq == Seq((true, "cj:empty")))
   }
 
   test("size-binned packing: every file exactly once, oversized files seed their own bins") {
@@ -194,7 +222,7 @@ class CityJsonSourceSpec extends SparkTestBase {
     } finally spark.conf.unset("spark.sql.files.openCostInBytes")
     // direct scan probe: all 1000 files listed recursively, each exactly once
     val conf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
-    val scan = new CityJsonScan(dir.toString, CityJsonSource.schema, conf,
+    val scan = new CityJsonScan(dir.toString, CityJsonSource.Triples, CityJsonSource.schema, conf,
       maxPartitionBytes = 128L << 20, openCostInBytes = 512L * 1024, minPartitionNum = cores)
     val files = scan.planInputPartitions()
       .flatMap(_.asInstanceOf[CityJsonFilePartition].filePaths)
@@ -212,7 +240,7 @@ class CityJsonSourceSpec extends SparkTestBase {
       // the fs uri) — otherwise the reader-side resolution is not exercised
       val conf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
       val scan = new CityJsonScan(s"graftfs:$examples/tetra.city.json",
-        CityJsonSource.schema, conf, 128L << 20, 4L << 20, 2)
+        CityJsonSource.Triples, CityJsonSource.schema, conf, 128L << 20, 4L << 20, 2)
       val partPaths = scan.planInputPartitions()
         .flatMap(_.asInstanceOf[CityJsonFilePartition].filePaths)
       assert(partPaths.nonEmpty && partPaths.forall(_.startsWith("graftfs:")), partPaths.toSeq)
@@ -305,7 +333,7 @@ class CityJsonSourceSpec extends SparkTestBase {
       Files.write(dir.resolve(f), "{}".getBytes("UTF-8"))
     }
     Files.createDirectories(dir.resolve("empty/deeper"))
-    val scan = new CityJsonScan(dir.toString, CityJsonSource.schema,
+    val scan = new CityJsonScan(dir.toString, CityJsonSource.Triples, CityJsonSource.schema,
       new SerializableConfiguration(spark.sessionState.newHadoopConf()),
       maxPartitionBytes = 128L << 20, openCostInBytes = 4L << 20, minPartitionNum = 4)
     val files = scan.planInputPartitions().flatMap(_.asInstanceOf[CityJsonFilePartition].filePaths)
@@ -315,7 +343,7 @@ class CityJsonSourceSpec extends SparkTestBase {
   }
 
   test("an unknown pruned column fails at reader creation") {
-    val factory = new CityJsonReaderFactory(Array("subj", "no_such_column"),
+    val factory = new CityJsonReaderFactory(CityJsonSource.Triples, Array("subj", "no_such_column"),
       new SerializableConfiguration(spark.sessionState.newHadoopConf()))
     val e = intercept[IllegalArgumentException](factory.createReader(CityJsonFilePartition(Array.empty)))
     assert(e.getMessage.contains("no_such_column"))

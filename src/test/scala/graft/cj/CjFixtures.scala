@@ -15,5 +15,5 @@ object CjFixtures {
 
   /** The fixture directory, then the reference corpus where it exists. */
   def corpora: Seq[String] =
-    dir +: Seq(CjSpark.DefaultCorpus).filter(d => Files.isDirectory(Paths.get(d)))
+    dir +: Seq(CityJsonSource.DefaultCorpus).filter(d => Files.isDirectory(Paths.get(d)))
 }

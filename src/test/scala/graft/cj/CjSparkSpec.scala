@@ -6,9 +6,10 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import graft.SparkTestBase
 import graft.model.Triple
 
-/** Distributed conversion must equal the golden fixtures as a SET at
-  * P/R = 1.0 under any partitioning (the north-star correctness gate,
-  * exercised through the Spark surface rather than the pure function). */
+/** Corpus-scale conversion through Spark (`spark.read.format("cityjson")`)
+  * must equal the golden fixtures as a SET at P/R = 1.0 under any
+  * partitioning (the north-star correctness gate, exercised through the
+  * Spark surface rather than the pure function). */
 class CjSparkSpec extends SparkTestBase {
 
   private val mapper = new ObjectMapper()
@@ -25,9 +26,12 @@ class CjSparkSpec extends SparkTestBase {
       }.toSet
   }
 
+  private def triples(dir: String) =
+    spark.read.format("cityjson").load(dir).select("subj", "pred", "obj_iri", "obj_lit", "obj_type")
+
   test("distributed conversion of the reference corpus matches golden at P/R = 1.0") {
-    val corpus = CjSpark.referenceCorpus(spark)
-    val ours = CjSpark.convert(corpus).collect().toSet
+    val sps = spark; import sps.implicits._
+    val ours = triples(CityJsonSource.corpusDir(spark)).as[Triple].collect().toSet
     val golden = goldenSet()
     // ontology triples repeat across documents with identical IRIs; the
     // golden union also contains them once per doc -> set view aligns
@@ -37,17 +41,23 @@ class CjSparkSpec extends SparkTestBase {
   }
 
   test("conversion is partition-invariant through the Spark surface") {
+    def rows(dir: String) = {
+      val df = triples(dir)
+      (df.rdd.getNumPartitions, df.collect().map(_.toString).sorted.toSeq)
+    }
     CjFixtures.corpora.foreach { dir =>
-      val corpus = CjSpark.referenceCorpus(spark, dir)
-      val a = CjSpark.convert(corpus.repartition(1)).collect().toSet
-      val b = CjSpark.convert(corpus.repartition(7)).collect().toSet
+      val (packed, a) = rows(dir)
+      // every file its own input partition
+      spark.conf.set("spark.sql.files.maxPartitionBytes", "1")
+      val (single, b) = try rows(dir) finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+      assert(packed < single, s"$dir: $packed vs $single partitions")
       assert(a == b, dir)
     }
   }
 
   test("the cj_* contract queries read the corpus setting") {
-    assert(CjSpark.corpusDir(spark) == CjSpark.DefaultCorpus)
-    spark.conf.set(CjSpark.CorpusKey, CjFixtures.dir)
+    assert(CityJsonSource.corpusDir(spark) == CityJsonSource.DefaultCorpus)
+    spark.conf.set(CityJsonSource.CorpusKey, CjFixtures.dir)
     try {
       def run(q: String) = graft.SparkEntry.queries(q)(spark, "unused").collect()
       def rows(q: String) = run(q).map(_.toString).sorted.toSeq
@@ -56,21 +66,24 @@ class CjSparkSpec extends SparkTestBase {
       assert(stats.keySet == Set("cj:cube", "cj:empty", "cj:failing_object", "cj:material_color",
         "cj:semantic_faces", "cj:template_insert", "cj:tetra", "cj:texture_uv"), stats)
       assert(stats.filter(_._2).keySet == Set("cj:empty"))
-      // the mapPartitions and DSv2 paths share one oracle
+      // the two names share one oracle
       assert(rows("cj_triples_by_pred") == rows("cj_triples_by_pred_dsv2"))
       assert(rows("cj_log_categories").nonEmpty)
-    } finally spark.conf.unset(CjSpark.CorpusKey)
-    assert(CjSpark.corpusDir(spark) == CjSpark.DefaultCorpus)
+    } finally spark.conf.unset(CityJsonSource.CorpusKey)
+    assert(CityJsonSource.corpusDir(spark) == CityJsonSource.DefaultCorpus)
   }
 
   test("per-document stats isolate failures without failing the task") {
-    import org.apache.spark.sql.{Dataset}
-    val sps = spark; import sps.implicits._
-    val docs: Dataset[CjSpark.CjDoc] = spark.createDataset(Seq(
-      CjSpark.CjDoc("t:bad", "{not json"),
-      CjSpark.CjDoc("t:ok", """{"type":"CityJSON","version":"1.1","vertices":[],"CityObjects":{}}""")))
-    val stats = CjSpark.convertStats(docs).collect().map(r => r.doc_iri -> r).toMap
-    assert(stats("t:bad").failed && stats("t:bad").n_triples == 0)
-    assert(!stats("t:ok").failed && stats("t:ok").n_triples > 0)
+    val dir = Files.createTempDirectory("cjfail")
+    Files.write(dir.resolve("bad.json"), "{not json".getBytes("UTF-8"))
+    Files.write(dir.resolve("ok.json"),
+      """{"type":"CityJSON","version":"1.1","vertices":[],"CityObjects":{}}""".getBytes("UTF-8"))
+    val stats = spark.read.format("cityjson").option("output", "docs").load(dir.toString).collect()
+      .map(r => r.getAs[String]("doc_iri") -> (r.getAs[Long]("n_triples"), r.getAs[Boolean]("failed"))).toMap
+    assert(stats("cj:bad") == ((0L, true)))
+    val (nOk, okFailed) = stats("cj:ok")
+    assert(!okFailed && nOk > 0)
+    val docs = spark.read.format("cityjson").load(dir.toString).select("doc_iri").collect().map(_.getString(0))
+    assert(docs.toSeq == Seq.fill(nOk.toInt)("cj:ok"))
   }
 }

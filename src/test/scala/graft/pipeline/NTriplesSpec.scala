@@ -96,8 +96,8 @@ class NTriplesSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("nt_cj").toString + "/g"
     val sps = spark
     import sps.implicits._
-    val cj = graft.cj.CjSpark.convert(graft.cj.CjSpark.referenceCorpus(spark))
-      .map(t => Triple(t.subj, t.pred, t.obj_iri, t.obj_lit, t.obj_type))
+    val cj = spark.read.format("cityjson").load(graft.cj.CityJsonSource.corpusDir(spark))
+      .select("subj", "pred", "obj_iri", "obj_lit", "obj_type").as[Triple]
     val sink = new NTriples.Files(parts = 4)
     sink.write(cj, dir)
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
