@@ -27,15 +27,15 @@ object CityJsonRdf {
     * reference returns a NULL model, CityJsonRDF.cpp:29-41). */
   def open(cityFilePath: String, progress: Progress = null, log: Log = null,
       settings: CjSettings = CjSettings.default): Option[Vector[Triple]] = {
-    val json =
-      try Files.readString(Paths.get(cityFilePath))
+    val bytes =
+      try Files.readAllBytes(Paths.get(cityFilePath))
       catch {
         case _: Exception =>
           if (log != null)
             log.message("Error", "Failed to open file '%s'", s"Failed to open file '$cityFilePath'", "")
           return None
       }
-    val res = CjConvert.convert(CityJsonSource.docIriFor(cityFilePath), json, settings)
+    val res = CjConvert.convert(CityJsonSource.docIriFor(cityFilePath), bytes, settings)
     // the steps are reported once the document has converted, so the range
     // is known: one step per city object, like the reference's Start(range)
     if (progress != null) {

@@ -21,7 +21,8 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * {{{ spark.read.format("cityjson").load("/data/cities") }}}
   *
-  * converts each document on EXECUTORS. The `output` option picks the rows:
+  * converts each document on EXECUTORS, from its bytes. The `output`
+  * option picks the rows:
   *  - `triples` (the default): one row per emitted triple, `(doc_iri, subj,
   *    pred, obj_iri, obj_lit, obj_type)`;
   *  - `logs`: one row per converter log message, `(doc_iri, level,
@@ -260,8 +261,7 @@ final class CityJsonReaderFactory(output: CityJsonSource.Output, fields: Array[S
         // object store the driver could list must be one the reader can open
         val fs = p.getFileSystem(confSer.value)
         val in = fs.open(p)
-        val json = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-          finally in.close()
+        val json = try CjJson.parse(in.readAllBytes()) finally in.close()
         val docIri = CityJsonSource.docIriFor(filePath)
         val doc = UTF8String.fromString(docIri)
         output match {

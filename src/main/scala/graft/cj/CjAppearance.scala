@@ -1,6 +1,5 @@
 package graft.cj
 
-import com.fasterxml.jackson.databind.JsonNode
 import scala.collection.immutable.TreeMap
 import scala.collection.mutable
 import graft.model.{Vocab => V}
@@ -18,6 +17,8 @@ import graft.model.{Vocab => V}
   */
 private[cj] final class CjAppearance(m: CjModel) {
 
+  private val json = m.json
+
   final case class SurfaceAppearance(
       materials: TreeMap[String, Int],
       textures: TreeMap[String, Int],
@@ -32,27 +33,30 @@ private[cj] final class CjAppearance(m: CjModel) {
     var shininess = 0.0
     var transparency = 0.0
     var isSmooth = false
-    var rdfColor: String = null
+    var rdfColor: Int = -1
   }
   private final class Tex {
     var typ: String = null
     var image: String = null
-    var rdfTexture: String = null
+    var rdfTexture: Int = -1
   }
 
   private val materials = mutable.ArrayBuffer[Mat]()
   private val textures = mutable.ArrayBuffer[Tex]()
-  var textureVertices: JsonNode = null
+  var textureVertices: Int = CjJson.Absent
   private var defaultThemeTexture: String = null
   private var defaultThemeMaterial: String = null
   // memo (iMat, iTex, semantic) -> Material instance (Appearance.h:62-64)
-  private val matTex2Rdf = mutable.HashMap[(Int, Int, String), String]()
+  private val matTex2Rdf = mutable.HashMap[(Int, Int, Int), Int]()
   // per-config-entry memoized semantic color (Settings.cpp:142-156)
-  private val semanticColorInst = mutable.HashMap[String, String]()
+  private val semanticColorInst = mutable.HashMap[String, Int]()
 
   /** Appearance::SetCityAppearance (Appearance.cpp:18-51). */
-  def setCityAppearance(appearance: JsonNode): Unit =
-    m.members(appearance).foreach { case (name, value) =>
+  def setCityAppearance(appearance: Int): Unit = {
+    val ms = m.members(appearance)
+    while (ms.next()) {
+      val name = ms.name
+      val value = ms.value
       m.pushMember(name)
       name match {
         case "materials" => setCityMaterials(value)
@@ -64,15 +68,20 @@ private[cj] final class CjAppearance(m: CjModel) {
       }
       m.popState()
     }
+  }
 
   /** Appearance::SetCityMaterials (Appearance.cpp:62-104). */
-  private def setCityMaterials(jmaterials: JsonNode): Unit =
-    m.elems(jmaterials).foreach { jmaterial =>
+  private def setCityMaterials(jmaterials: Int): Unit = {
+    val es = m.elems(jmaterials)
+    while (es.hasNext) {
+      val jmaterial = es.next()
       m.pushIndex(materials.size)
       val mat = new Mat
       materials += mat
-      m.members(jmaterial).foreach { case (name, value) =>
-        name match {
+      val ms = m.members(jmaterial)
+      while (ms.next()) {
+        val value = ms.value
+        ms.name match {
           case "name" => mat.name = m.jStr(value)
           case "ambientIntensity" => mat.ambientIntensity = m.jDouble(value)
           case "diffuseColor" => (0 until 3).foreach(i => mat.diffuseColor(i) = m.jDouble(m.jIdx(value, i)))
@@ -86,53 +95,59 @@ private[cj] final class CjAppearance(m: CjModel) {
       }
       m.popState()
     }
+  }
 
   /** Appearance::SetCityTextures (Appearance.cpp:108-117). */
-  private def setCityTextures(jtextures: JsonNode): Unit =
-    m.elems(jtextures).foreach { jtexture =>
+  private def setCityTextures(jtextures: Int): Unit = {
+    val es = m.elems(jtextures)
+    while (es.hasNext) {
+      val jtexture = es.next()
       val t = new Tex
       t.typ = m.jStr(jObjMember(jtexture, "type"))
       t.image = m.jStr(jObjMember(jtexture, "image"))
       textures += t
     }
+  }
 
-  private def jObjMember(n: JsonNode, name: String): JsonNode = {
-    m.jObj(n)
-    val v = n.get(name)
-    m.jsonAssert(v != null, "HasMember()")
+  private def jObjMember(n: Int, name: String): Int = {
+    val v = json.member(m.jObj(n), name)
+    m.jsonAssert(v >= 0, "HasMember()")
     v
   }
 
   /** Appearance::GetSurfaceAppearance (Appearance.cpp:131-192). */
-  def getSurfaceAppearance(jmaterial: JsonNode, jtexture: JsonNode, faceIndexPath: Seq[Int]): SurfaceAppearance = {
+  def getSurfaceAppearance(jmaterial: Int, jtexture: Int, faceIndexPath: IntBuf): SurfaceAppearance = {
     var mats = TreeMap.empty[String, Int]
     var texs = TreeMap.empty[String, Int]
     val texIdx = mutable.HashMap[String, List[List[Int]]]()
 
-    if (jmaterial != null && jmaterial.isObject) {
-      m.members(jmaterial).foreach { case (theme, jval) =>
-        val pmat = findValueByIndexPath(jval, faceIndexPath)
-        if (pmat != null && pmat.isIntegralNumber && pmat.canConvertToInt)
-          mats += theme -> pmat.intValue
+    if (json.isObject(jmaterial)) {
+      val ms = m.members(jmaterial)
+      while (ms.next()) {
+        val pmat = findValueByIndexPath(ms.value, faceIndexPath)
+        if (json.isInt(pmat)) mats += ms.name -> json.int(pmat)
       }
     }
 
-    if (jtexture != null && jtexture.isObject) {
-      m.members(jtexture).foreach { case (theme, jval) =>
-        val ptex = findValueByIndexPath(jval, faceIndexPath)
-        if (ptex != null && ptex.isArray) {
+    if (json.isObject(jtexture)) {
+      val ms = m.members(jtexture)
+      while (ms.next()) {
+        val theme = ms.name
+        val ptex = findValueByIndexPath(ms.value, faceIndexPath)
+        if (json.isArray(ptex)) {
           var hasNull = false
           var texInd = -1
           val uv2 = mutable.ListBuffer[List[Int]]()
-          val riIt = ptex.elements()
+          val riIt = json.elems(ptex)
           while (riIt.hasNext && !hasNull) {
             val ri = riIt.next()
             val uv = mutable.ListBuffer[Int]()
-            if (ri.isArray) {
+            if (json.isArray(ri)) {
+              val n = json.size(ri)
               var i = 0
-              while (i < ri.size && !hasNull) {
-                val e = ri.get(i)
-                if (e.isNull) hasNull = true
+              while (i < n && !hasNull) {
+                val e = json.elem(ri, i)
+                if (json.isNull(e)) hasNull = true
                 else if (i == 0) {
                   if (texInd < 0) texInd = m.jInt(e)
                   else if (texInd != m.jInt(e))
@@ -156,18 +171,19 @@ private[cj] final class CjAppearance(m: CjModel) {
   /** Appearance::FindValueByIndexPath (Appearance.cpp:282-302): a scalar
     * `value` member wins; otherwise a STRICT walk of `values` by the face
     * index path (out-of-shape access is a rapidjson assert → item failure). */
-  private def findValueByIndexPath(jnode: JsonNode, faceIndexPath: Seq[Int]): JsonNode = {
+  private def findValueByIndexPath(jnode: Int, faceIndexPath: IntBuf): Int = {
     m.jObj(jnode)
-    val v = jnode.get("value")
-    if (v != null) return v
-    val vs = jnode.get("values")
-    if (vs != null) {
+    val v = json.member(jnode, "value")
+    if (v >= 0) return v
+    val vs = json.member(jnode, "values")
+    if (vs >= 0) {
       var cur = vs
-      faceIndexPath.foreach { i => cur = m.jIdx(cur, i) }
+      var k = 0
+      while (k < faceIndexPath.length) { cur = m.jIdx(cur, faceIndexPath(k)); k += 1 }
       return cur
     }
     m.logError("Missed appearance value or values")
-    null
+    CjJson.Absent
   }
 
   /** Appearance::GetActiveTheme (Appearance.cpp:196-210): declared default
@@ -195,15 +211,15 @@ private[cj] final class CjAppearance(m: CjModel) {
 
   /** Appearance::GetRdfMaterial (Appearance.cpp:237-258): every face group
     * gets a (memoized) Material instance, possibly empty. */
-  def getRdfMaterial(mats: TreeMap[String, Int], texs: TreeMap[String, Int], semantic: String): String = {
+  def getRdfMaterial(mats: TreeMap[String, Int], texs: TreeMap[String, Int], semantic: Int): Int = {
     val iMat = getThemeIndex(mats, defaultThemeMaterial, materials.size)
     val iTex = getThemeIndex(texs, defaultThemeTexture, textures.size)
     matTex2Rdf.getOrElseUpdate((iMat, iTex, semantic), {
       val color = getRdfColor(iMat, semantic)
       val tex = getRdfTexture(iTex)
       val rdfMat = m.createInstance("Material")
-      if (color != null) m.setObjectProp(rdfMat, "geom:color", color)
-      if (tex != null) m.setObjectArray(rdfMat, "geom:textures", Seq(tex))
+      if (color >= 0) m.setObjectProp(rdfMat, "geom:color", color)
+      if (tex >= 0) m.setObjectItem(rdfMat, "geom:textures", tex, 0)
       rdfMat
     })
   }
@@ -225,7 +241,7 @@ private[cj] final class CjAppearance(m: CjModel) {
 
   /** Appearance::CreateColorComponent (Appearance.cpp:306-317): scale
     * outside [0,1] (including the -1 "no scale" default) clamps to 1. */
-  private def createColorComponent(rgb: Array[Double], scale: Double = -1): String = {
+  private def createColorComponent(rgb: Array[Double], scale: Double = -1): Int = {
     val s = if (scale < 0 || scale > 1) 1.0 else scale
     val clr = m.createInstance("ColorComponent")
     m.setDatatype(clr, "geom:R", m.fmtD(rgb(0) * s), V.XsdDouble)
@@ -238,10 +254,10 @@ private[cj] final class CjAppearance(m: CjModel) {
     * materials are on and the index is valid, else the config semantic
     * color. Ambient component = diffuse color scaled by ambientIntensity;
     * engine transparency = 1 - CityJSON transparency. */
-  private def getRdfColor(iMat: Int, semantic: String): String = {
+  private def getRdfColor(iMat: Int, semantic: Int): Int = {
     if (m.settings.useMaterials && iMat >= 0 && iMat < materials.size) {
       val mat = materials(iMat)
-      if (mat.rdfColor == null) {
+      if (mat.rdfColor < 0) {
         val color = m.createInstance("Color", mat.name)
         m.setObjectProp(color, "geom:ambient", createColorComponent(mat.diffuseColor, mat.ambientIntensity))
         m.setObjectProp(color, "geom:diffuse", createColorComponent(mat.diffuseColor))
@@ -257,11 +273,11 @@ private[cj] final class CjAppearance(m: CjModel) {
   /** Settings::GetSemanticColor (Settings.cpp:130-159): config-table color
     * keyed by the semantic instance's name, one shared ColorComponent with
     * W=1 across all four slots plus ambientReflectance=1. */
-  private def getSemanticColor(semantic: String): String = {
+  private def getSemanticColor(semantic: Int): Int = {
     val semanticName = m.nameOfInstance(semantic)
-    if (semanticName == null) return null
+    if (semanticName == null) return -1
     m.settings.semanticColors.get(semanticName) match {
-      case None => null
+      case None => -1
       case Some((r, g, b)) =>
         semanticColorInst.getOrElseUpdate(semanticName, {
           val c = m.createInstance("ColorComponent")
@@ -281,16 +297,16 @@ private[cj] final class CjAppearance(m: CjModel) {
   }
 
   /** Appearance::GetRdfTexture (Appearance.cpp:352-369). */
-  private def getRdfTexture(iTex: Int): String = {
+  private def getRdfTexture(iTex: Int): Int = {
     if (m.settings.useTextures && iTex >= 0 && iTex < textures.size) {
       val t = textures(iTex)
-      if (t.rdfTexture == null) {
+      if (t.rdfTexture < 0) {
         val tex = m.createInstance("Texture")
         m.setDatatype(tex, "geom:type", if (t.typ == "JPG") "1" else "2", V.XsdLong)
         m.setDatatype(tex, "geom:name", t.image, V.XsdString)
         t.rdfTexture = tex
       }
       t.rdfTexture
-    } else null
+    } else -1
   }
 }

@@ -1,7 +1,5 @@
 package graft.cj
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import scala.collection.immutable.TreeMap
 import scala.collection.mutable
 import graft.model.{LogRow, Triple, Vocab => V}
 
@@ -65,40 +63,43 @@ object CjConvert {
     * empty; the logs and the per-object progress count are still reported. */
   final case class Result(triples: Vector[Triple], logs: Vector[LogRow], cityObjectCount: Int, docFailed: Boolean)
 
-  private val mapper = new ObjectMapper()
-
   /** What converting one document reports besides its triples, which went
     * to a [[CjSink]]. */
   private[cj] final case class Outcome(logs: Vector[LogRow], cityObjectCount: Int, docFailed: Boolean)
 
-  /** Convert one CityJSON document. Never throws on malformed content within
-    * the document: per-object and per-geometry-item failures are isolated
-    * exactly like the reference (CityModel.cpp:182-188, Geometry.cpp:33-41).
-    * A top-level failure (unparseable JSON, missing CityObjects) yields no
-    * triples plus an Error log — the analog of CityJsonRDF.cpp:34-37
-    * "Failed to read model".
+  /** Convert one CityJSON document from its bytes. Never throws on malformed
+    * content within the document: per-object and per-geometry-item failures
+    * are isolated exactly like the reference (CityModel.cpp:182-188,
+    * Geometry.cpp:33-41). A top-level failure (unparseable JSON, missing
+    * CityObjects) yields no triples plus an Error log — the analog of
+    * CityJsonRDF.cpp:34-37 "Failed to read model".
     */
-  def convert(docIri: String, jsonText: String, settings: CjSettings = CjSettings.default): Result = {
+  def convert(docIri: String, bytes: Array[Byte], settings: CjSettings): Result =
+    collect(docIri, CjJson.parse(bytes), settings)
+
+  /** [[convert]] of the document whose text is `jsonText`. */
+  def convert(docIri: String, jsonText: String, settings: CjSettings = CjSettings.default): Result =
+    collect(docIri, CjJson.parse(jsonText), settings)
+
+  private def collect(docIri: String, json: CjJson, settings: CjSettings): Result = {
     val out = new CjSink.Collect
-    val o = convertTo(out, docIri, jsonText, settings)
+    val o = convertTo(out, docIri, json, settings)
     Result(if (o.docFailed) Vector.empty else out.triples.result(), o.logs, o.cityObjectCount, o.docFailed)
   }
 
-  /** [[convert]] with every triple handed to `sink` as it is emitted. On a
-    * document-level failure the sink has already seen the triples emitted
-    * before it; the caller drops them. */
-  private[cj] def convertTo(sink: CjSink, docIri: String, jsonText: String,
+  /** [[convert]] of the parsed document `json` (null when its text is not
+    * JSON, see [[CjJson.parse]]), with every triple handed to `sink` as it
+    * is emitted. On a document-level failure the sink has already seen the
+    * triples emitted before it; the caller drops them. */
+  private[cj] def convertTo(sink: CjSink, docIri: String, json: CjJson,
       settings: CjSettings = CjSettings.default): Outcome = {
-    val m = new CjModel(docIri, settings, sink)
-    val root: JsonNode =
-      try mapper.readTree(jsonText)
-      catch { case _: Exception => null }
+    val m = new CjModel(docIri, settings, sink, json)
     var failed = false
-    if (root == null || root.isNull) {
+    if (json == null || json.isNull(0)) {
       m.logError("Invalid or empty JSON file '%s'", docIri)
       failed = true
     } else {
-      try m.convertCityJSONObject(root)
+      try m.convertCityJSONObject(0)
       catch { case _: CjException => m.logError("Failed to read model"); failed = true }
     }
     Outcome(m.logsOut, m.cityObjectCount, failed)
@@ -116,7 +117,10 @@ private[cj] object P {
   val DOUBLE = 5
 }
 
-private[cj] final class CjModel(docIri: String, val settings: CjSettings, sink: CjSink) {
+/** The converter's state for one document. JSON values are positions in
+  * `json` ([[CjJson.Absent]] for none) and instances are their creation
+  * indices (-1 for none); only [[emit]] sees IRIs. */
+private[cj] final class CjModel(docIri: String, val settings: CjSettings, sink: CjSink, val json: CjJson) {
 
   // ------------------------------------------------------------------ output
   private val logs = Vector.newBuilder[LogRow]
@@ -128,9 +132,9 @@ private[cj] final class CjModel(docIri: String, val settings: CjSettings, sink: 
   def emit(s: String, p: String, oIri: String, oLit: String, oType: String): Unit =
     sink.triple(s, p, oIri, oLit, oType)
 
-  /** The literal triple `(s, p, lit)` whose ASCII text is in [[lit]]. */
-  def emitLit(s: String, p: String, oType: String): Unit =
-    sink.asciiLiteral(s, p, lit, oType)
+  /** The literal triple `(inst, p, lit)` whose ASCII text is in [[lit]]. */
+  def emitLit(inst: Int, p: String, oType: String): Unit =
+    sink.asciiLiteral(iri(inst), p, lit, oType)
 
   /** Scratch buffer for array literals, reused by every [[emitLit]]. */
   val lit = new AsciiBuf(1 << 12)
@@ -170,31 +174,19 @@ private[cj] final class CjModel(docIri: String, val settings: CjSettings, sink: 
     if (!cond) throwError("error in JSON data: '%s'", what)
 
   // --------------------------------------------------------------- JSON shape
-  def jStr(n: JsonNode): String = { jsonAssert(n != null && n.isTextual, "IsString()"); n.asText }
-  def jInt(n: JsonNode): Int = { jsonAssert(n != null && n.isIntegralNumber && n.canConvertToInt, "IsInt()"); n.intValue }
-  def jDouble(n: JsonNode): Double = { jsonAssert(n != null && n.isNumber, "IsNumber()"); n.doubleValue }
-  def jBool(n: JsonNode): Boolean = { jsonAssert(n != null && n.isBoolean, "IsBool()"); n.booleanValue }
-  def jArr(n: JsonNode): JsonNode = { jsonAssert(n != null && n.isArray, "IsArray()"); n }
-  def jObj(n: JsonNode): JsonNode = { jsonAssert(n != null && n.isObject, "IsObject()"); n }
+  def jStr(n: Int): String = { jsonAssert(json.isString(n), "IsString()"); json.str(n) }
+  def jInt(n: Int): Int = { jsonAssert(json.isInt(n), "IsInt()"); json.int(n) }
+  def jDouble(n: Int): Double = { jsonAssert(json.isNumber(n), "IsNumber()"); json.double(n) }
+  def jBool(n: Int): Boolean = { jsonAssert(json.isBool(n), "IsBool()"); json.bool(n) }
+  def jArr(n: Int): Int = { jsonAssert(json.isArray(n), "IsArray()"); n }
+  def jObj(n: Int): Int = { jsonAssert(json.isObject(n), "IsObject()"); n }
   /** strict operator[] on arrays (rapidjson asserts on non-array / OOB). */
-  def jIdx(n: JsonNode, i: Int): JsonNode = {
-    jsonAssert(n != null && n.isArray && i >= 0 && i < n.size, "index < Size()")
-    n.get(i)
+  def jIdx(n: Int, i: Int): Int = {
+    jsonAssert(json.isArray(n) && i >= 0 && i < json.size(n), "index < Size()")
+    json.elem(n, i)
   }
-  def members(n: JsonNode): Iterator[(String, JsonNode)] = {
-    jObj(n)
-    val it = n.fields()
-    new Iterator[(String, JsonNode)] {
-      def hasNext: Boolean = it.hasNext
-      def next(): (String, JsonNode) = { val e = it.next(); (e.getKey, e.getValue) }
-    }
-  }
-  def elems(n: JsonNode): Iterator[JsonNode] = {
-    jArr(n)
-    val it = n.elements()
-    new Iterator[JsonNode] { def hasNext = it.hasNext; def next() = it.next() }
-  }
-  private def isMissing(n: JsonNode): Boolean = n == null || n.isNull
+  def members(n: Int): json.Members = json.members(jObj(n))
+  def elems(n: Int): json.Elems = json.elems(jArr(n))
 
   // --------------------------------------------------------------- ontology
   // Engine built-in classes referenced by the converter (geom.h wrappers);
@@ -204,19 +196,30 @@ private[cj] final class CjModel(docIri: String, val settings: CjSettings, sink: 
     "Collection", "BoundaryRepresentation", "Transformation", "Matrix",
     "Material", "Color", "ColorComponent", "Texture", "GeometricItem")
 
-  private val classes = mutable.HashSet[String]()
-  private val classParents = mutable.HashMap[String, List[String]]()
+  /** A class's parents (in the order they were added) and the cardinality
+    * restrictions declared on it, by property. */
+  private final class Cls {
+    var parents: List[Cls] = Nil // newest first
+    val card = new java.util.HashMap[String, (Long, Long)]()
+  }
+  // the classes this document created, and entries for built-ins as used
+  private val classes = new java.util.HashMap[String, Cls]()
   private val props = mutable.HashMap[String, Int]()
-  private val cardinality = mutable.HashMap[(String, String), (Long, Long)]()
 
   private def classExists(name: String): Boolean =
-    classes.contains(name) || builtinClasses.contains(name)
+    classes.containsKey(name) || builtinClasses.contains(name)
+
+  private def cls(name: String): Cls = {
+    var c = classes.get(name)
+    if (c == null) { c = new Cls; classes.put(name, c) }
+    c
+  }
 
   /** CityModel::GetOrCreateClass (CityModel.cpp:382-400). */
   def getOrCreateClass(name: String, addPrefix: Boolean, parent1: String = null, parent2: String = null): String = {
     val full = if (addPrefix) "City." + name else name
     if (!classExists(full)) {
-      classes += full
+      cls(full)
       emit(full, V.RdfType, V.OwlClass, null, null)
       addClassParent(full, parent1)
       addClassParent(full, parent2)
@@ -224,12 +227,14 @@ private[cj] final class CjModel(docIri: String, val settings: CjSettings, sink: 
     full
   }
 
-  /** CityModel::AddClassParent (CityModel.cpp:405-416). */
-  def addClassParent(cls: String, parentName: String): Unit = {
+  /** CityModel::AddClassParent (CityModel.cpp:405-416). A class links only
+    * to classes that already exist, so the class graph has no cycles. */
+  def addClassParent(name: String, parentName: String): Unit = {
     if (parentName != null) {
       if (classExists(parentName)) {
-        emit(cls, V.RdfsSubClassOf, parentName, null, null)
-        classParents(cls) = parentName :: classParents.getOrElse(cls, Nil)
+        emit(name, V.RdfsSubClassOf, parentName, null, null)
+        val c = cls(name)
+        c.parents = cls(parentName) :: c.parents
       } else {
         // reference logs with a malformed format string — category kept verbatim
         logError("Class '%' does not exist")
@@ -239,17 +244,21 @@ private[cj] final class CjModel(docIri: String, val settings: CjSettings, sink: 
 
   /** Aggregated cardinality: the engine's per-class restriction lookup walks
     * the inheritance chain (GetClassPropertyAggregatedCardinalityRestriction,
-    * engine/include/engine.h); we search self-then-ancestors, first hit wins. */
-  private def aggregatedCard(cls: String, prop: String): Option[(Long, Long)] = {
-    val seen = mutable.HashSet[String]()
-    def walk(c: String): Option[(Long, Long)] =
-      if (!seen.add(c)) None
-      else cardinality.get((c, prop)) match {
-        case s @ Some(_) => s
-        case None => classParents.getOrElse(c, Nil).reverseIterator.map(walk).collectFirst { case Some(x) => x }
-      }
-    walk(cls)
+    * engine/include/engine.h); we search self, then each parent in the order
+    * it was added, depth first; the first hit wins, null if none. */
+  private def aggregatedCard(c: Cls, prop: String, depth: Int = 0): (Long, Long) = {
+    val own = c.card.get(prop)
+    if (own != null || depth >= CjModel.MaxClassDepth) own
+    else firstCard(c.parents, prop, depth + 1)
   }
+
+  /** The first hit among `parents`, oldest first (the list is newest first). */
+  private def firstCard(parents: List[Cls], prop: String, depth: Int): (Long, Long) =
+    if (parents.isEmpty) null
+    else {
+      val older = firstCard(parents.tail, prop, depth)
+      if (older != null) older else aggregatedCard(parents.head, prop, depth)
+    }
 
   /** CityModel::GetOrCreateProperty (CityModel.cpp:420-474), including the
     * reference quirks: name-collision on type or cardinality mismatch creates
@@ -257,24 +266,26 @@ private[cj] final class CjModel(docIri: String, val settings: CjSettings, sink: 
     * call passes NULL prefix, CityModel.cpp:443,454), and defaults are
     * minCard=0, maxCard=1 (CityModel.h:29).
     */
-  def getOrCreateProperty(cls: String, propName: String, prefix: String, ptype: Int,
+  def getOrCreateProperty(clsName: String, propName: String, prefix: String, ptype: Int,
       refCls: String = null, minCard: Long = 0, maxCard: Long = 1, attempt: Int = 0): String = {
     var full = (if (prefix != null) prefix else "") + propName
     if (attempt > 0) full += "_" + attempt
+    val c = cls(clsName)
     props.get(full) match {
       case Some(existingType) =>
         if (existingType != ptype) {
           logWarning("Porperty '%s' exists but type mismatches", full)
-          getOrCreateProperty(cls, propName, null, ptype, refCls, minCard, maxCard, attempt + 1)
-        } else aggregatedCard(cls, full) match {
-          case None =>
-            cardinality((cls, full)) = (minCard, maxCard)
-            emit(cls, V.GraftRestriction, full, s"$minCard..$maxCard", null)
+          getOrCreateProperty(clsName, propName, null, ptype, refCls, minCard, maxCard, attempt + 1)
+        } else {
+          val card = aggregatedCard(c, full)
+          if (card == null) {
+            c.card.put(full, (minCard, maxCard))
+            emit(clsName, V.GraftRestriction, full, s"$minCard..$maxCard", null)
             full
-          case Some((mn, mx)) if mn != minCard || mx != maxCard =>
+          } else if (card._1 != minCard || card._2 != maxCard) {
             logWarning("Porperty '%s' exists but cardinality mismatches", full)
-            getOrCreateProperty(cls, propName, null, ptype, refCls, minCard, maxCard, attempt + 1)
-          case Some(_) => full
+            getOrCreateProperty(clsName, propName, null, ptype, refCls, minCard, maxCard, attempt + 1)
+          } else full
         }
       case None =>
         props(full) = ptype
@@ -290,57 +301,69 @@ private[cj] final class CjModel(docIri: String, val settings: CjSettings, sink: 
           }
           emit(full, V.GraftRange, xsd, null, null)
         }
-        cardinality((cls, full)) = (minCard, maxCard)
-        emit(cls, V.GraftRestriction, full, s"$minCard..$maxCard", null)
+        c.card.put(full, (minCard, maxCard))
+        emit(clsName, V.GraftRestriction, full, s"$minCard..$maxCard", null)
         full
     }
   }
 
   // --------------------------------------------------------------- instances
-  // the creation index of each minted instance; its class and name by index
+  // the IRI, class and name of each minted instance, by creation index
   private val instPrefix = docIri + "/i"
-  private val instIndex = mutable.HashMap[String, Int]()
-  private val instClass = mutable.ArrayBuffer[String]()
-  private val instName = mutable.ArrayBuffer[String]()
+  private var instIri = new Array[String](64)
+  private var instClass = new Array[String](64)
+  private var instName = new Array[String](64)
+  private var nInst = 0
 
   /** engine CreateInstance: mints a deterministic per-document IRI (no blank
-    * nodes — SURVEY.md §7.4). */
-  def createInstance(cls: String, name: String = null): String = {
-    val iri = instPrefix + (instClass.length + 1)
-    instIndex(iri) = instClass.length
-    instClass += cls
-    instName += null
-    emit(iri, V.RdfType, cls, null, null)
-    if (name != null) setInstanceName(iri, name)
-    iri
+    * nodes — SURVEY.md §7.4) and returns the instance's creation index. */
+  def createInstance(cls: String, name: String = null): Int = {
+    if (nInst == instIri.length) {
+      instIri = java.util.Arrays.copyOf(instIri, nInst * 2)
+      instClass = java.util.Arrays.copyOf(instClass, nInst * 2)
+      instName = java.util.Arrays.copyOf(instName, nInst * 2)
+    }
+    val i = nInst
+    nInst += 1
+    instIri(i) = instPrefix + nInst
+    instClass(i) = cls
+    emit(instIri(i), V.RdfType, cls, null, null)
+    if (name != null) setInstanceName(i, name)
+    i
   }
 
-  private def indexOf(inst: String): Int = instIndex.getOrElse(inst,
-    throw new NoSuchElementException(s"not an instance of this document: $inst"))
+  private def check(inst: Int): Int =
+    if (inst >= 0 && inst < nInst) inst
+    else throw new NoSuchElementException(s"not an instance of this document: $inst")
 
-  def setInstanceName(inst: String, name: String): Unit = {
-    instName(indexOf(inst)) = name
-    emit(inst, V.RdfName, null, name, V.XsdString)
+  def iri(inst: Int): String = instIri(check(inst))
+  def setInstanceName(inst: Int, name: String): Unit = {
+    instName(check(inst)) = name
+    emit(instIri(inst), V.RdfName, null, name, V.XsdString)
   }
-  def nameOfInstance(inst: String): String =
-    if (inst == null) null else { val i = instIndex.getOrElse(inst, -1); if (i < 0) null else instName(i) }
-  def classOfInstance(inst: String): String = instClass(indexOf(inst))
+  def nameOfInstance(inst: Int): String = if (inst < 0) null else instName(check(inst))
+  def classOfInstance(inst: Int): String = instClass(check(inst))
 
   def fmtD(d: Double): String = java.lang.Double.toString(d)
 
-  def setDatatype(inst: String, prop: String, lit: String, xsd: String): Unit =
-    emit(inst, prop, null, lit, xsd)
-  def setDatatypeDoubles(inst: String, prop: String, values: Seq[Double]): Unit = {
+  def setDatatype(inst: Int, prop: String, lit: String, xsd: String): Unit =
+    emit(iri(inst), prop, null, lit, xsd)
+  def setDatatypeDoubles(inst: Int, prop: String, values: Seq[Double]): Unit = {
     lit.clear()
     lit.appendDoubles(values)
     emitLit(inst, prop, V.XsdDoubleArray)
   }
-  def setObjectProp(inst: String, prop: String, target: String): Unit =
-    emit(inst, prop, target, null, null)
+  def setObjectProp(inst: Int, prop: String, target: Int): Unit =
+    emit(iri(inst), prop, iri(target), null, null)
   /** engine SetObjectTypeProperty / GEOM set_objects: array-valued object
     * property; ordinal kept in obj_lit so member order survives. */
-  def setObjectArray(inst: String, prop: String, targets: Seq[String]): Unit =
-    targets.zipWithIndex.foreach { case (t, i) => emit(inst, prop, t, i.toString, null) }
+  def setObjectArray(inst: Int, prop: String, targets: IntBuf): Unit = {
+    var k = 0
+    while (k < targets.length) { setObjectItem(inst, prop, targets(k), k); k += 1 }
+  }
+  /** Member `k` of an array-valued object property. */
+  def setObjectItem(inst: Int, prop: String, target: Int, k: Int): Unit =
+    emit(iri(inst), prop, iri(target), Integer.toString(k), null)
 
   // ------------------------------------------------------------ sub-modules
   val geometry = new CjGeometry(this)
@@ -349,19 +372,21 @@ private[cj] final class CjModel(docIri: String, val settings: CjSettings, sink: 
   // =================================================================== driver
 
   /** CityModel::ConvertCityJSONObject (CityModel.cpp:115-218). */
-  def convertCityJSONObject(root: JsonNode): Unit = {
+  def convertCityJSONObject(root: Int): Unit = {
     var typ: String = null
     var version: String = null
-    var cityObjects: JsonNode = null
-    var metadata: JsonNode = null
+    var cityObjects = CjJson.Absent
+    var metadata = CjJson.Absent
 
-    members(root).foreach { case (name, value) =>
-      name match {
+    val ms = members(root)
+    while (ms.next()) {
+      val value = ms.value
+      ms.name match {
         case "type" => typ = jStr(value)
         case "version" => version = jStr(value)
         case "vertices" => geometry.cityVertices = value
         case "appearance" =>
-          pushMember(name); appearance.setCityAppearance(value); popState()
+          pushMember(ms.name); appearance.setCityAppearance(value); popState()
         case "transform" => geometry.setCityTransform(value)
         case "geometry-templates" => geometry.setGeometryTemplates(value)
         case "CityObjects" => cityObjects = value
@@ -383,23 +408,25 @@ private[cj] final class CjModel(docIri: String, val settings: CjSettings, sink: 
     val objects = mutable.TreeMap[String, CObj]()
 
     pushMember("CityObjects")
-    members(cityObjects).foreach { case (id, jobject) =>
+    val cos = members(cityObjects)
+    while (cos.next()) {
+      val id = cos.name
       pushMember(id)
       val obj = objects.getOrElseUpdate(id, new CObj)
-      try convertCityObject(obj, id, jobject)
+      try convertCityObject(obj, id, cos.value)
       catch { case _: CjException => logError("Failed to convert city object") }
       popState()
       cityObjectCount += 1
     }
     popState()
 
-    val topLevel = mutable.ArrayBuffer[String]()
+    val topLevel = new IntBuf
     setupChildren(objects, topLevel)
 
     val safeTyp = if (typ == null) "" else typ // reference UB on missing type; we degrade gracefully
     val cls = getOrCreateClass(safeTyp, addPrefix = true, "City.Object")
     val city = createInstance(cls, safeTyp)
-    setObjectArray(city, "children", topLevel.toSeq)
+    setObjectArray(city, "children", topLevel)
     createAttribute(city, "metadata", "city.prop.", metadata)
   }
 
@@ -422,29 +449,33 @@ private[cj] final class CjModel(docIri: String, val settings: CjSettings, sink: 
   }
 
   final class CObj {
-    var owl: String = null
+    var owl: Int = -1
     val parents = mutable.TreeSet[String]()
     val children = mutable.TreeSet[String]()
   }
 
   /** CityModel::ConvertCityObject (CityModel.cpp:313-378). */
-  private def convertCityObject(obj: CObj, id: String, jobject: JsonNode): Unit = {
-    var jtype: JsonNode = null
-    var jgeometry: JsonNode = null
-    var attributes: JsonNode = null
+  private def convertCityObject(obj: CObj, id: String, jobject: Int): Unit = {
+    var jtype = CjJson.Absent
+    var jgeometry = CjJson.Absent
+    var attributes = CjJson.Absent
 
-    members(jobject).foreach { case (name, value) =>
-      name match {
+    val ms = members(jobject)
+    while (ms.next()) {
+      val value = ms.value
+      ms.name match {
         case "type" => jtype = value
         case "geometry" => jgeometry = value
         case "attributes" => attributes = value
         case "parents" =>
-          pushMember(name)
-          elems(value).foreach(p => obj.parents += jStr(p))
+          pushMember(ms.name)
+          val es = elems(value)
+          while (es.hasNext) obj.parents += jStr(es.next())
           popState()
         case "children" =>
-          pushMember(name)
-          elems(value).foreach(c => obj.children += jStr(c))
+          pushMember(ms.name)
+          val es = elems(value)
+          while (es.hasNext) obj.children += jStr(es.next())
           popState()
         case other => logInfo("Unsupported city object member '%s'", other)
       }
@@ -452,8 +483,8 @@ private[cj] final class CjModel(docIri: String, val settings: CjSettings, sink: 
 
     val typ = jStr(jtype)
 
-    val geomItems = mutable.ArrayBuffer[String]()
-    if (jgeometry != null && jgeometry.isArray) {
+    val geomItems = new IntBuf
+    if (json.isArray(jgeometry)) {
       pushMember("geometry")
       geometry.convert(jgeometry, geomItems)
       popState()
@@ -463,13 +494,14 @@ private[cj] final class CjModel(docIri: String, val settings: CjSettings, sink: 
     val instance = createInstance(cls, id)
     obj.owl = instance
 
-    setObjectArray(instance, "representation", geomItems.toSeq)
+    setObjectArray(instance, "representation", geomItems)
 
-    if (!isMissing(attributes)) {
+    if (attributes >= 0 && !json.isNull(attributes)) {
       pushMember("attributes")
-      members(attributes).foreach { case (name, value) =>
-        pushMember(name)
-        createAttribute(instance, name, "city.prop.attr.", value)
+      val as = members(attributes)
+      while (as.next()) {
+        pushMember(as.name)
+        createAttribute(instance, as.name, "city.prop.attr.", as.value)
         popState()
       }
       popState()
@@ -487,29 +519,33 @@ private[cj] final class CjModel(docIri: String, val settings: CjSettings, sink: 
     * default-materializing referenced-but-undefined ids (empty, owl-less
     * slots). We reproduce that observable behavior, not the mechanics.
     */
-  private def setupChildren(objects: mutable.TreeMap[String, CObj], topLevel: mutable.ArrayBuffer[String]): Unit = {
+  private def setupChildren(objects: mutable.TreeMap[String, CObj], topLevel: IntBuf): Unit = {
     val referenced = objects.valuesIterator.flatMap(o => o.parents.iterator ++ o.children.iterator).toVector
     referenced.foreach(id => objects.getOrElseUpdate(id, new CObj))
 
     // snapshot: the reference iterates the live std::map while operator[]
     // inserts empty slots; those slots are owl-less and emit nothing, so a
     // snapshot yields identical output without iterator-invalidation hazards
+    val owlChildren = new IntBuf
     objects.toVector.foreach { case (_, obj) =>
-      if (obj.owl != null) {
-        val owlChildren = obj.children.toSeq.flatMap { childId =>
-          Option(objects.getOrElseUpdate(childId, new CObj).owl)
+      if (obj.owl >= 0) {
+        owlChildren.clear()
+        obj.children.foreach { childId =>
+          val owl = objects.getOrElseUpdate(childId, new CObj).owl
+          if (owl >= 0) owlChildren += owl
         }
-        if (owlChildren.nonEmpty) setObjectArray(obj.owl, "children", owlChildren)
+        if (owlChildren.length > 0) setObjectArray(obj.owl, "children", owlChildren)
         if (obj.parents.isEmpty) topLevel += obj.owl
       }
     }
   }
 
   /** CityModel::ConvertAttributeObject (CityModel.cpp:477-488). */
-  private def convertAttributeObject(name: String, value: JsonNode): String = {
+  private def convertAttributeObject(name: String, value: Int): Int = {
     val cls = getOrCreateClass(name, addPrefix = true, "City.Attributes")
     val inst = createInstance(cls)
-    members(value).foreach { case (n, v) => createAttribute(inst, n, "city.prop.attr.", v) }
+    val ms = members(value)
+    while (ms.next()) createAttribute(inst, ms.name, "city.prop.attr.", ms.value)
     inst
   }
 
@@ -517,28 +553,30 @@ private[cj] final class CjModel(docIri: String, val settings: CjSettings, sink: 
     * lattice {bool, double, string, double[], object}; nulls dropped, arrays
     * of size<=1 dropped silently, non-number arrays logged + dropped.
     */
-  def createAttribute(instance: String, name: String, prefix: String, value: JsonNode): Unit = {
+  def createAttribute(instance: Int, name: String, prefix: String, value: Int): Unit = {
     val cls = classOfInstance(instance)
-    if (value == null || value.isNull) return
-    if (value.isTextual) {
+    if (value < 0 || json.isNull(value)) return
+    if (json.isString(value)) {
       val prop = getOrCreateProperty(cls, name, prefix, P.CHAR)
-      setDatatype(instance, prop, value.asText, V.XsdString)
-    } else if (value.isNumber) {
+      setDatatype(instance, prop, json.str(value), V.XsdString)
+    } else if (json.isNumber(value)) {
       val prop = getOrCreateProperty(cls, name, prefix, P.DOUBLE)
-      setDatatype(instance, prop, fmtD(value.doubleValue), V.XsdDouble)
-    } else if (value.isBoolean) {
+      setDatatype(instance, prop, fmtD(json.double(value)), V.XsdDouble)
+    } else if (json.isBool(value)) {
       val prop = getOrCreateProperty(cls, name, prefix, P.BOOL)
-      setDatatype(instance, prop, value.booleanValue.toString, V.XsdBoolean)
-    } else if (value.isObject) {
+      setDatatype(instance, prop, json.bool(value).toString, V.XsdBoolean)
+    } else if (json.isObject(value)) {
       val target = convertAttributeObject(name, value)
       val prop = getOrCreateProperty(cls, name, prefix, P.OBJ, classOfInstance(target))
       setObjectProp(instance, prop, target)
-    } else if (value.isArray) {
-      if (value.size > 1) {
-        if (value.get(0).isNumber) {
-          val vals = elems(value).map(jDouble).toVector
+    } else if (json.isArray(value)) {
+      if (json.size(value) > 1) {
+        if (json.isNumber(json.elem(value, 0))) {
+          val vals = Vector.newBuilder[Double]
+          val es = elems(value)
+          while (es.hasNext) vals += jDouble(es.next())
           val prop = getOrCreateProperty(cls, name, prefix, P.DOUBLE, null, 0, -1)
-          setDatatypeDoubles(instance, prop, vals)
+          setDatatypeDoubles(instance, prop, vals.result())
         } else {
           logInfo("Attribte '%s' array type is not implemented", name)
         }
@@ -547,4 +585,9 @@ private[cj] final class CjModel(docIri: String, val settings: CjSettings, sink: 
       logInfo("Attribte '%s' type is not implemented", name)
     }
   }
+}
+
+private[cj] object CjModel {
+  /** A class chain deeper than this is not searched for restrictions. */
+  val MaxClassDepth = 64
 }

@@ -1,6 +1,5 @@
 package graft.cj
 
-import com.fasterxml.jackson.databind.JsonNode
 import scala.collection.immutable.TreeMap
 import scala.collection.mutable
 import graft.model.{Vocab => V}
@@ -16,28 +15,29 @@ import graft.model.{Vocab => V}
   */
 private[cj] final class CjGeometry(m: CjModel) {
 
-  var cityVertices: JsonNode = null
+  private val json = m.json
+  var cityVertices: Int = CjJson.Absent
   private val cityScale = Array(1.0, 1.0, 1.0)
   private val cityTranslate = Array(0.0, 0.0, 0.0)
-  private var templateVertices: JsonNode = null
+  private var templateVertices: Int = CjJson.Absent
   private var useTemplateVertices = false
 
-  private final class Template(val json: JsonNode) {
+  private final class Template(val jitem: Int) {
     var converted = false
-    var item: String = null
+    var item: Int = -1
   }
   private val templates = mutable.ArrayBuffer[Template]()
 
   /** Per-geometry-item parse state (Geometry.h:28-36). */
   private final class PerFaceData {
-    var material: JsonNode = null
-    var texture: JsonNode = null
+    var material: Int = CjJson.Absent
+    var texture: Int = CjJson.Absent
     val semantics = new CjSemantics(m)
-    val indexPath = mutable.ArrayBuffer[Int]()
+    val indexPath = new IntBuf
   }
 
   private final case class FaceGroupKey(
-      semantic: String, // semantic-surface instance IRI or null
+      semantic: Int, // semantic-surface instance, -1 for none
       materials: TreeMap[String, Int],
       textures: TreeMap[String, Int])
 
@@ -58,8 +58,8 @@ private[cj] final class CjGeometry(m: CjModel) {
     * time a face group takes the point, and appended from here for every
     * face group after that. A point `read` rejects (by throwing) is never
     * stored, so every later use fails through `read` again. */
-  private final class PointTexts(pool: JsonNode, read: Int => Array[Double]) {
-    private val size = if (pool != null && pool.isArray) pool.size else 0
+  private final class PointTexts(pool: Int, read: Int => Array[Double]) {
+    private val size = if (json.isArray(pool)) json.size(pool) else 0
     private val text = new AsciiBuf(math.max(64, size * 24))
     private val start = new Array[Int](size)
     private val end = new Array[Int](size) // 0 until formatted
@@ -101,34 +101,43 @@ private[cj] final class CjGeometry(m: CjModel) {
   // ------------------------------------------------------------- top entries
 
   /** Geometry::SetCityTransform (Geometry.cpp:560-579). */
-  def setCityTransform(jtransform: JsonNode): Unit =
-    m.members(jtransform).foreach { case (name, value) =>
-      name match {
+  def setCityTransform(jtransform: Int): Unit = {
+    val ms = m.members(jtransform)
+    while (ms.next()) {
+      val value = ms.value
+      ms.name match {
         case "scale" => (0 until 3).foreach(i => cityScale(i) = m.jDouble(m.jIdx(value, i)))
         case "translate" => (0 until 3).foreach(i => cityTranslate(i) = m.jDouble(m.jIdx(value, i)))
         case other => m.logInfo("Unsupported transform member '%s'", other)
       }
     }
+  }
 
   /** Geometry::SetGeometryTemplates (Geometry.cpp:591-605). */
-  def setGeometryTemplates(jtemplates: JsonNode): Unit =
-    m.members(jtemplates).foreach { case (name, value) =>
-      name match {
-        case "templates" => m.elems(value).foreach(t => templates += new Template(t))
-        case "vertices-templates" => templateVertices = value
+  def setGeometryTemplates(jtemplates: Int): Unit = {
+    val ms = m.members(jtemplates)
+    while (ms.next()) {
+      ms.name match {
+        case "templates" =>
+          val es = m.elems(ms.value)
+          while (es.hasNext) templates += new Template(es.next())
+        case "vertices-templates" => templateVertices = ms.value
         case _ => ()
       }
     }
+  }
 
   /** Geometry::Convert (Geometry.cpp:24-58): per-item error isolation. */
-  def convert(jgeometry: JsonNode, items: mutable.ArrayBuffer[String]): Unit = {
+  def convert(jgeometry: Int, items: IntBuf): Unit = {
     var nitem = 0
-    m.elems(jgeometry).foreach { jitem =>
+    val es = m.elems(jgeometry)
+    while (es.hasNext) {
+      val jitem = es.next()
       m.pushIndex(nitem)
       nitem += 1
       try {
         val item = convertItem(jitem, nitem, isTemplate = false)
-        if (item != null) items += item
+        if (item >= 0) items += item
       } catch {
         case _: CjException => m.logError("Failed to convert geometry item")
       }
@@ -142,16 +151,18 @@ private[cj] final class CjGeometry(m: CjModel) {
     * lod value (numeric lod collides with the bootstrap CHAR property and
     * becomes the suffixed `city.prop.LoD_1`, CityModel.cpp:432-443).
     */
-  private def convertItem(jitem: JsonNode, nItem: Int, isTemplate: Boolean): String = {
+  private def convertItem(jitem: Int, nItem: Int, isTemplate: Boolean): Int = {
     var typ: String = null
-    var lod: JsonNode = null
-    var boundaries: JsonNode = null
-    var jtemplate: JsonNode = null
-    var jtransformation: JsonNode = null
+    var lod = CjJson.Absent
+    var boundaries = CjJson.Absent
+    var jtemplate = CjJson.Absent
+    var jtransformation = CjJson.Absent
     val fd = new PerFaceData
 
-    m.members(jitem).foreach { case (name, value) =>
-      name match {
+    val ms = m.members(jitem)
+    while (ms.next()) {
+      val value = ms.value
+      ms.name match {
         case "type" => typ = m.jStr(value)
         case "lod" => lod = value
         case "boundaries" => boundaries = value
@@ -165,11 +176,11 @@ private[cj] final class CjGeometry(m: CjModel) {
     }
 
     if (typ == null) m.throwError("Geometry item type is missed")
-    if (boundaries == null || boundaries.isNull) m.throwError("Geometry item boundaries are missed")
+    if (boundaries < 0 || json.isNull(boundaries)) m.throwError("Geometry item boundaries are missed")
 
-    val item: String = typ match {
+    val item: Int = typ match {
       case "MultiPoint" | "MultiLineString" =>
-        m.logInfo("Unsupported geometry type '%s'", typ); null
+        m.logInfo("Unsupported geometry type '%s'", typ); -1
       case "MultiSurface" => convertSurfaceSet("MultiSurface", boundaries, fd)
       case "CompositeSurface" => convertSurfaceSet("CompositeSurface", boundaries, fd)
       case "Solid" => convertSolid(boundaries, fd)
@@ -177,78 +188,82 @@ private[cj] final class CjGeometry(m: CjModel) {
       case "CompositeSolid" => convertSolidSet("CompositeSolid", boundaries, fd)
       case "GeometryInstance" => convertGeometryInstance(boundaries, jtemplate, jtransformation)
       case other =>
-        m.logInfo("Unsupported geometry type '%s'", other); null
+        m.logInfo("Unsupported geometry type '%s'", other); -1
     }
 
-    if (item != null) {
+    if (item >= 0) {
       var name = (if (isTemplate) "Template" else "Item") + " " + nItem
-      if (lod != null && lod.isTextual) name += " LoD " + lod.asText
+      if (json.isString(lod)) name += " LoD " + json.str(lod)
       m.setInstanceName(item, name)
-      if (lod != null && !lod.isNull) m.createAttribute(item, "city.prop.LoD", null, lod)
+      if (lod >= 0 && !json.isNull(lod)) m.createAttribute(item, "city.prop.LoD", null, lod)
     }
     item
   }
 
   /** Geometry::ConvertSolidSet (Geometry.cpp:186-204): the collection is
     * created even when all member solids are empty. */
-  private def convertSolidSet(className: String, boundaries: JsonNode, fd: PerFaceData): String = {
-    val solids = mutable.ArrayBuffer[String]()
+  private def convertSolidSet(className: String, boundaries: Int, fd: PerFaceData): Int = {
+    val solids = new IntBuf
     fd.indexPath += 0
-    m.elems(boundaries).foreach { jsolid =>
-      val solid = convertSolid(jsolid, fd)
-      if (solid != null) solids += solid
-      fd.indexPath(fd.indexPath.length - 1) += 1
+    val es = m.elems(boundaries)
+    while (es.hasNext) {
+      val solid = convertSolid(es.next(), fd)
+      if (solid >= 0) solids += solid
+      fd.indexPath.incrementLast()
     }
-    fd.indexPath.remove(fd.indexPath.length - 1)
+    fd.indexPath.removeLast()
 
     val cls = m.getOrCreateClass(className, addPrefix = true, "City.GeometryBody")
     val inst = m.createInstance(cls)
-    m.setObjectArray(inst, "geom:objects", solids.toSeq)
+    m.setObjectArray(inst, "geom:objects", solids)
     inst
   }
 
   /** Geometry::ConvertSolid (Geometry.cpp:208-227). */
-  private def convertSolid(boundaries: JsonNode, fd: PerFaceData): String = {
-    val shells = mutable.ArrayBuffer[String]()
+  private def convertSolid(boundaries: Int, fd: PerFaceData): Int = {
+    val shells = new IntBuf
     fd.indexPath += 0
-    m.elems(boundaries).foreach { jshell =>
-      val shell = convertSurfaceSet("MultiSurface", jshell, fd)
-      if (shell != null) shells += shell
-      fd.indexPath(fd.indexPath.length - 1) += 1
+    val es = m.elems(boundaries)
+    while (es.hasNext) {
+      val shell = convertSurfaceSet("MultiSurface", es.next(), fd)
+      if (shell >= 0) shells += shell
+      fd.indexPath.incrementLast()
     }
-    fd.indexPath.remove(fd.indexPath.length - 1)
+    fd.indexPath.removeLast()
 
     val cls = m.getOrCreateClass("Solid", addPrefix = true, "City.GeometryBody")
     val inst = m.createInstance(cls)
-    m.setObjectArray(inst, "geom:objects", shells.toSeq)
+    m.setObjectArray(inst, "geom:objects", shells)
     inst
   }
 
-  /** Geometry::ConvertSurfaceSet (Geometry.cpp:245-274): returns null when
+  /** Geometry::ConvertSurfaceSet (Geometry.cpp:245-274): returns -1 when
     * no face group produced (unlike solid sets). */
-  private def convertSurfaceSet(className: String, boundaries: JsonNode, fd: PerFaceData): String = {
+  private def convertSurfaceSet(className: String, boundaries: Int, fd: PerFaceData): Int = {
     val fgroups = mutable.LinkedHashMap[FaceGroupKey, FaceGroup]()
     fd.indexPath += 0
-    m.elems(boundaries).foreach { jface =>
-      addFaceToGroups(fgroups, jface, fd)
-      fd.indexPath(fd.indexPath.length - 1) += 1
+    val es = m.elems(boundaries)
+    while (es.hasNext) {
+      addFaceToGroups(fgroups, es.next(), fd)
+      fd.indexPath.incrementLast()
     }
-    fd.indexPath.remove(fd.indexPath.length - 1)
+    fd.indexPath.removeLast()
 
-    val items = fgroups.valuesIterator.map(createFaceGroup).toVector
-    if (items.isEmpty) return null
+    val items = new IntBuf
+    fgroups.valuesIterator.foreach(g => items += createFaceGroup(g))
+    if (items.length == 0) return -1
 
     val cls = m.getOrCreateClass(className, addPrefix = true, "City.GeometryBody")
     val inst = m.createInstance(cls)
-    m.setObjectArray(inst, "geom:objects", items.toSeq)
+    m.setObjectArray(inst, "geom:objects", items)
     inst
   }
 
   /** Geometry::AddFaceToGroups (Geometry.cpp:278-299). */
-  private def addFaceToGroups(fgroups: mutable.LinkedHashMap[FaceGroupKey, FaceGroup], jface: JsonNode,
+  private def addFaceToGroups(fgroups: mutable.LinkedHashMap[FaceGroupKey, FaceGroup], jface: Int,
       fd: PerFaceData): Unit = {
-    val app = m.appearance.getSurfaceAppearance(fd.material, fd.texture, fd.indexPath.toSeq)
-    val key = FaceGroupKey(fd.semantics.getSurfaceSemantic(fd.indexPath.toSeq), app.materials, app.textures)
+    val app = m.appearance.getSurfaceAppearance(fd.material, fd.texture, fd.indexPath)
+    val key = FaceGroupKey(fd.semantics.getSurfaceSemantic(fd.indexPath), app.materials, app.textures)
 
     // first-seen group order, like the reference's list walk
     val group = fgroups.getOrElseUpdate(key, new FaceGroup(key, currentTexts()))
@@ -260,21 +275,23 @@ private[cj] final class CjGeometry(m: CjModel) {
   /** Geometry::AddFaceToGroup (Geometry.cpp:339-372): terminator -1 after the
     * first (outer) loop, -2 after each hole loop; texIndices get terminators
     * even when the face has no texture. */
-  private def addFaceToGroup(group: FaceGroup, jboundaries: JsonNode, texIndices: Option[List[List[Int]]]): Unit = {
+  private def addFaceToGroup(group: FaceGroup, jboundaries: Int, texIndices: Option[List[List[Int]]]): Unit = {
     m.jArr(jboundaries)
     texIndices.foreach { ti =>
-      if (ti.size != jboundaries.size)
+      if (ti.size != json.size(jboundaries))
         m.logError("Texture indecies loops size mismatch number of loops in boundary")
     }
     val texIt = texIndices.map(_.iterator)
     var end = -1
-    m.elems(jboundaries).foreach { jloop =>
+    val es = m.elems(jboundaries)
+    while (es.hasNext) {
+      val jloop = es.next()
       addPoints(jloop, group)
       group.indices += end
       texIt.foreach { it =>
         if (it.hasNext) {
           val texLoop = it.next()
-          if (texLoop.size != jloop.size)
+          if (texLoop.size != json.size(jloop))
             m.logError("Texture indecies size mismatch number of points in loop")
           addTexturePoints(texLoop, group)
         }
@@ -286,18 +303,18 @@ private[cj] final class CjGeometry(m: CjModel) {
 
   /** Geometry::AddPoints (Geometry.cpp:376-389): loops are REVERSED
     * (winding flip) — iterate indices back-to-front. */
-  private def addPoints(jloop: JsonNode, group: FaceGroup): Unit = {
+  private def addPoints(jloop: Int, group: FaceGroup): Unit = {
     m.jArr(jloop)
-    var k = jloop.size
+    var k = json.size(jloop)
     while (k > 0) {
-      group.indices += getAddVertex(jloop.get(k - 1), group)
+      group.indices += getAddVertex(json.elem(jloop, k - 1), group)
       k -= 1
     }
   }
 
   /** Geometry::GetAddVertex + AddVertex (Geometry.cpp:393-420): per-group
     * first-seen dedup of city-vertex → coordinate slot. */
-  private def getAddVertex(jpoint: JsonNode, group: FaceGroup): Int = {
+  private def getAddVertex(jpoint: Int, group: FaceGroup): Int = {
     val cityIdx = m.jInt(jpoint)
     group.cityVert2Coord.get(cityIdx) match {
       case Some(slot) => slot
@@ -356,7 +373,7 @@ private[cj] final class CjGeometry(m: CjModel) {
   }
 
   /** Geometry::CreateFaceGroup (Geometry.cpp:478-517). */
-  private def createFaceGroup(group: FaceGroup): String = {
+  private def createFaceGroup(group: FaceGroup): Int = {
     val cls = m.getOrCreateClass("City.Surface", addPrefix = false, "BoundaryRepresentation")
     val face = m.createInstance(cls, m.nameOfInstance(group.key.semantic))
 
@@ -369,11 +386,11 @@ private[cj] final class CjGeometry(m: CjModel) {
     m.emitLit(face, "geom:indices", V.XsdLongArray)
 
     val rdfMat = m.appearance.getRdfMaterial(group.key.materials, group.key.textures, group.key.semantic)
-    if (rdfMat != null) m.setObjectProp(face, "geom:material", rdfMat)
+    m.setObjectProp(face, "geom:material", rdfMat)
 
-    if (group.key.semantic != null) {
+    if (group.key.semantic >= 0) {
       val prop = m.getOrCreateProperty(cls, "city.prop.semantic", null, P.OBJ, "City.SurfaceSemantic")
-      m.setObjectArray(face, prop, Seq(group.key.semantic))
+      m.setObjectItem(face, prop, group.key.semantic, 0)
     }
 
     val texIdx = group.texIndices
@@ -398,7 +415,7 @@ private[cj] final class CjGeometry(m: CjModel) {
     * elements with the dequantized insert-point vertex ADDED to the
     * translation column, engine column-major `_RC` element naming.
     */
-  private def convertGeometryInstance(boundaries: JsonNode, jtemplate: JsonNode, jtransformation: JsonNode): String = {
+  private def convertGeometryInstance(boundaries: Int, jtemplate: Int, jtransformation: Int): Int = {
     val nTemplate = m.jInt(jtemplate)
     if (nTemplate < 0 || nTemplate >= templates.size)
       m.throwError("Geometry template index %d is out of range", nTemplate)
@@ -406,11 +423,11 @@ private[cj] final class CjGeometry(m: CjModel) {
     val tpl = templates(nTemplate)
     if (!tpl.converted) {
       useTemplateVertices = true
-      try tpl.item = convertItem(tpl.json, nTemplate, isTemplate = true)
+      try tpl.item = convertItem(tpl.jitem, nTemplate, isTemplate = true)
       finally useTemplateVertices = false
       tpl.converted = true
     }
-    if (tpl.item == null) return null
+    if (tpl.item < 0) return -1
 
     val t = new Array[Double](12)
     for (i <- 0 until 3; j <- 0 until 4)
@@ -446,6 +463,8 @@ private[cj] final class IntBuf {
     length += 1
   }
   def clear(): Unit = length = 0
+  def incrementLast(): Unit = a(length - 1) += 1
+  def removeLast(): Unit = length -= 1
   def exists(p: Int => Boolean): Boolean = {
     var i = 0
     while (i < length) { if (p(a(i))) return true; i += 1 }

@@ -1,6 +1,5 @@
 package graft.cj
 
-import com.fasterxml.jackson.databind.JsonNode
 import scala.collection.mutable
 import graft.model.{Vocab => V}
 
@@ -16,24 +15,29 @@ import graft.model.{Vocab => V}
   */
 private[cj] final class CjSemantics(m: CjModel) {
 
+  private val json = m.json
+
   private final class Surf {
-    var typNode: JsonNode = null
+    var typNode: Int = CjJson.Absent
     var parent: Int = -1
     val children = mutable.ArrayBuffer[Int]()
-    val attributes = mutable.ArrayBuffer[(String, JsonNode)]()
-    var owlInstance: String = null
+    val attributes = mutable.ArrayBuffer[(String, Int)]()
+    var owlInstance: Int = -1
     var visiting = false
   }
 
   private val surfaces = mutable.ArrayBuffer[Surf]()
-  private var values: JsonNode = null
+  private var values: Int = CjJson.Absent
 
   /** Semantics::Init (Semantics.cpp:45-79). */
-  def init(semantics: JsonNode): Unit = {
-    m.members(semantics).foreach { case (name, value) =>
-      name match {
-        case "surfaces" => m.elems(value).foreach(j => surfaces += initSurface(j))
-        case "values" => values = value
+  def init(semantics: Int): Unit = {
+    val ms = m.members(semantics)
+    while (ms.next()) {
+      ms.name match {
+        case "surfaces" =>
+          val es = m.elems(ms.value)
+          while (es.hasNext) surfaces += initSurface(es.next())
+        case "values" => values = ms.value
         case other => m.logInfo("Unsupported semantics member '%s'", other)
       }
     }
@@ -54,13 +58,17 @@ private[cj] final class CjSemantics(m: CjModel) {
 
   /** Semantics::Surface::Init (Semantics.cpp:18-39): unknown members are
     * captured as attributes. */
-  private def initSurface(jsurf: JsonNode): Surf = {
+  private def initSurface(jsurf: Int): Surf = {
     val s = new Surf
-    m.members(jsurf).foreach { case (name, value) =>
-      name match {
+    val ms = m.members(jsurf)
+    while (ms.next()) {
+      val value = ms.value
+      ms.name match {
         case "type" => s.typNode = value
         case "parent" => s.parent = m.jInt(value)
-        case "children" => m.elems(value).foreach(c => s.children += m.jInt(c))
+        case "children" =>
+          val es = m.elems(value)
+          while (es.hasNext) s.children += m.jInt(es.next())
         case other => s.attributes += ((other, value))
       }
     }
@@ -70,24 +78,27 @@ private[cj] final class CjSemantics(m: CjModel) {
   /** Semantics::GetSurfaceSemantic (Semantics.cpp:84-105): tolerant walk —
     * descend only while the node is an array long enough; a non-int leaf or
     * out-of-range surface index yields no semantic. Returns the surface
-    * instance IRI or null. */
-  def getSurfaceSemantic(faceIndexPath: Seq[Int]): String = {
+    * instance, or -1. */
+  def getSurfaceSemantic(faceIndexPath: IntBuf): Int = {
     var node = values
-    faceIndexPath.foreach { i =>
-      if (node != null && node.isArray && node.size > i) node = node.get(i)
+    var k = 0
+    while (k < faceIndexPath.length) {
+      val i = faceIndexPath(k)
+      if (json.isArray(node) && json.size(node) > i) node = json.elem(node, i)
+      k += 1
     }
-    if (node == null || !node.isIntegralNumber || !node.canConvertToInt) return null
-    val i = node.intValue
+    if (!json.isInt(node)) return -1
+    val i = json.int(node)
     if (i < 0 || i >= surfaces.size) {
       m.logError("Semantic surface index %d is out of range", i)
-      return null
+      return -1
     }
     getOwlInstance(surfaces(i))
   }
 
   /** Semantics::GetOwlInstance (Semantics.cpp:109-145). */
-  private def getOwlInstance(surf: Surf): String = {
-    if (surf.typNode != null && !surf.typNode.isNull && !surf.visiting) {
+  private def getOwlInstance(surf: Surf): Int = {
+    if (surf.typNode >= 0 && !json.isNull(surf.typNode) && !surf.visiting) {
       surf.visiting = true
       val typ = m.jStr(surf.typNode)
       val cls = m.getOrCreateClass("City.SurfaceSemantic", addPrefix = false)
@@ -98,7 +109,7 @@ private[cj] final class CjSemantics(m: CjModel) {
 
       if (surf.parent >= 0 && surf.parent < surfaces.size) {
         val owlParent = getOwlInstance(surfaces(surf.parent))
-        if (owlParent != null) {
+        if (owlParent >= 0) {
           val parentProp = m.getOrCreateProperty(cls, "parent", "city.prop.", P.OBJ, "City.SurfaceSemantic")
           m.setObjectProp(surf.owlInstance, parentProp, owlParent)
         }
@@ -108,7 +119,7 @@ private[cj] final class CjSemantics(m: CjModel) {
         m.createAttribute(surf.owlInstance, name, "city.prop.attr.", value)
       }
       surf.attributes.clear()
-      surf.typNode = null
+      surf.typNode = CjJson.Absent
       surf.visiting = false
     }
     surf.owlInstance

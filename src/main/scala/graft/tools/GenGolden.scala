@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
-import graft.cj.{CityJsonSource, CjConvert}
+import graft.cj.{CityJsonSource, CjConvert, CjSettings}
 import graft.model.Triple
 
 /** Generates the golden triple fixtures (FIXTURES.md §2): runs the frozen
@@ -68,9 +68,9 @@ object GenGolden {
     val summary = new StringBuilder("fixture\ttriples\tcity_objects\tlogs\terror_logs\n")
     files.foreach { f =>
       val stem = f.getFileName.toString.stripSuffix(".city.json")
-      val json = Files.readString(f)
+      val bytes = Files.readAllBytes(f)
       val t0 = System.nanoTime()
-      val res = CjConvert.convert(CityJsonSource.docIriFor(f.toString), json)
+      val res = CjConvert.convert(CityJsonSource.docIriFor(f.toString), bytes, CjSettings.default)
       val secs = (System.nanoTime() - t0) / 1e9
       val out = outDir.resolve(s"$stem.triples.ndjson")
       val w = Files.newBufferedWriter(out)

@@ -297,13 +297,32 @@ class CjConvertSpec extends AnyFunSuite {
     assert(on.triples.exists(t => t.pred == "rdf:name" && t.obj_lit == "m0"))
   }
 
-  test("instance lookups accept only IRIs this document minted") {
-    val m = new CjModel("t:d", CjSettings.default, CjSink.Discard)
+  test("restriction lookup walks the parents oldest first; the first hit decides") {
+    val out = new CjSink.Collect
+    val m = new CjModel("t:d", CjSettings.default, out, CjJson.parse("{}"))
+    m.getOrCreateClass("A", addPrefix = false)
+    m.getOrCreateClass("B", addPrefix = false)
+    m.getOrCreateClass("C", addPrefix = false, "A", "B")
+    m.getOrCreateClass("D", addPrefix = false, "C")
+    assert(m.getOrCreateProperty("A", "p", null, P.CHAR, null, 0, 1) == "p")
+    assert(m.getOrCreateProperty("B", "p", null, P.CHAR, null, 0, 5) == "p")
+    // D -> C -> A (0..1) is found before C -> B (0..5)
+    assert(m.getOrCreateProperty("D", "p", null, P.CHAR, null, 0, 1) == "p")
+    assert(m.getOrCreateProperty("D", "p", null, P.CHAR, null, 0, 5) == "p_1")
+    val restrictions = out.triples.result().filter(_.pred == "graft:restriction").map(t => (t.subj, t.obj_iri, t.obj_lit))
+    assert(restrictions == Vector(("A", "p", "0..1"), ("B", "p", "0..5"), ("D", "p_1", "0..5")))
+    assert(m.logsOut.map(_.msg) == Vector("Porperty 'p' exists but cardinality mismatches"))
+  }
+
+  test("instance lookups accept only creation indices this document minted") {
+    val m = new CjModel("t:d", CjSettings.default, CjSink.Discard, CjJson.parse("{}"))
     val a = m.createInstance("city:Building", "A")
+    assert(m.iri(a) == "t:d/i1")
     assert(m.classOfInstance(a) == "city:Building" && m.nameOfInstance(a) == "A")
-    assert(m.nameOfInstance("t:d/i2") == null)
-    val e = intercept[NoSuchElementException](m.setInstanceName("t:d/i2", "B"))
-    assert(e.getMessage.contains("t:d/i2"))
-    intercept[NoSuchElementException](m.classOfInstance("t:other/i1"))
+    assert(m.nameOfInstance(-1) == null)
+    val e = intercept[NoSuchElementException](m.setInstanceName(a + 1, "B"))
+    assert(e.getMessage.contains(s"${a + 1}"))
+    intercept[NoSuchElementException](m.classOfInstance(a + 1))
+    intercept[NoSuchElementException](m.iri(-1))
   }
 }

@@ -21,5 +21,7 @@ done < <(grep -oE '"(-D[^"$]+|-XX:[^"$]+)"' "$ROOT/build.sbt" | tr -d '"')
 # memory in whole gigabytes, at least 1g, at most 24g)
 HEAP="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 1 ? 1 : g > 24 ? 24 : g) "g"}' \
   /proc/meminfo 2>/dev/null || echo 24g)}"
+# src/main/resources on the class path too: `sbt compile` does not copy it
+# into the classes directory, and it registers the `cityjson` source
 exec java "${OPTS[@]}" "-Xmx$HEAP" \
-  -cp "$ROOT/target/scala-2.13/classes:${SPARK_HOME:?SPARK_HOME must point at the Spark distribution}/jars/*" "$@"
+  -cp "$ROOT/target/scala-2.13/classes:$ROOT/src/main/resources:${SPARK_HOME:?SPARK_HOME must point at the Spark distribution}/jars/*" "$@"
