@@ -291,7 +291,7 @@ object SparkEntry {
       val n = PagesSynth.pageCount(dir)
       val table = s"graft_stored_graph_$n"
       graft.util.Warehouse.dropTable(s, table)
-      KgPipeline.writeBucketedGraph(KgPipeline.triples(s, n), table, buckets = 32)
+      new graft.pipeline.GraphSink.BucketedTable(buckets = 32).write(KgPipeline.triples(s, n), table)
       val g = s.table(table)
       val edges = g.filter(col("pred") === "web:mentions")
         .select(col("subj").as("page"), col("obj_iri").as("ent")).distinct()

@@ -1,6 +1,8 @@
 package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import graft.text.TextOps
 import graft.util.Checkpoints
@@ -46,10 +48,21 @@ object Dedup {
     * signatures are pure per-row functions, so results are partition-
     * invariant. At corpus scale the scan already yields >= cores
     * partitions (row groups abound) and this is a no-op — the data
-    * never re-shuffles just for placement. */
+    * never re-shuffles just for placement. The partition count is read
+    * only from a plan with no exchange: under AQE, asking an exchange-
+    * bearing plan for its RDD runs every shuffle stage, which the query
+    * built on top would then run again. Such a plan's width is set by
+    * its shuffle, not by the scan, so it passes through unchanged. */
   private def fanOut(df: DataFrame, key: String): DataFrame = {
+    val plan = df.queryExecution.executedPlan
+    val shuffled = plan.exists {
+      case _: AdaptiveSparkPlanExec | _: Exchange => true
+      case _ => false
+    }
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target, col(key)) else df
+    if (!shuffled && df.queryExecution.toRdd.getNumPartitions < target)
+      df.repartition(target, col(key))
+    else df
   }
 
   /** Per-doc OPH MinHash signature — THE single derivation every consumer
@@ -670,19 +683,5 @@ object Dedup {
         array_join(
           expr("transform(filter(array_sort(collect_list(struct(i, keep, tok))), x -> x.keep), x -> x.tok)"),
           " ").as("text_cut"))
-  }
-
-  /** Brute-force pairwise n-gram Jaccard (test oracle / tiny inputs only). */
-  def bruteJaccardPairs(docs: DataFrame, threshold: Double): Vector[(Long, Long, Double)] = {
-    val rows = docs.select(col("doc_id").cast("long"), col("text")).collect()
-      .map(r => (r.getLong(0), TextOps.shingleHashes(r.getString(1))))
-    val out = Vector.newBuilder[(Long, Long, Double)]
-    for (i <- rows.indices; j <- (i + 1) until rows.length) {
-      val (ia, sa) = rows(i); val (ib, sb) = rows(j)
-      val (x, y) = if (ia < ib) (ia, ib) else (ib, ia)
-      val jac = TextOps.jaccardL(sa, sb)
-      if (jac >= threshold) out += ((x, y, jac))
-    }
-    out.result()
   }
 }

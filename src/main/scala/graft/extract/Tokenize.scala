@@ -22,12 +22,6 @@ object Tokenize {
     out.result()
   }
 
-  /** whitespace token count (the cheap `doc_token_count` metric) */
-  def wsTokenCount(text: String): Int = {
-    val t = text.trim
-    if (t.isEmpty) 0 else t.split("\\s+").length
-  }
-
   /** BPE-style pre-tokenizer pattern (GPT-2-like, lookahead-free so the
     * SAME pattern runs under java.util.regex, RE2 (DuckDB) and Spark's
     * regexp_extract_all): an optional leading space glued to a letter run,

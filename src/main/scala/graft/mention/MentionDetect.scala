@@ -24,7 +24,6 @@ import graft.text.TextOps
   * equality on randomized unicode corpora).
   */
 object MentionDetect {
-  val maxGram = 3
 
   /** candidate alias entry: token sequence + its normalized joined form */
   final class Entry(val tokens: Array[String], val norm: String) extends Serializable

@@ -361,9 +361,6 @@ object Multimodal {
     Some(MediaMeta(-1, kind, bb.getInt(), bb.getInt(), bb.getInt(), 0, 0, bytes.length.toLong))
   }
 
-  /** Backwards-compatible alias (pre-ImageIO name). */
-  def decodeStub(bytes: Array[Byte]): Option[MediaMeta] = decode(bytes)
-
   /** deterministic synthetic media table: (media_id, kind, blob). Image rows
     * are REAL PNGs, audio rows REAL PCM WAVs, video rows real minimal AVIs
     * (deterministic pixels/samples/payloads). */

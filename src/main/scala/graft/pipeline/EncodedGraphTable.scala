@@ -115,15 +115,6 @@ object EncodedGraphTable {
   def readEntityDict(spark: SparkSession, target: String): DataFrame =
     spark.read.parquet(s"$target/dict_entities")
 
-  def nPages(spark: SparkSession, target: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$target/_meta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val s = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    "\"n_pages\":(\\d+)".r.findFirstMatchIn(s).map(_.group(1).toLong)
-      .getOrElse(throw new IllegalStateException(s"malformed _meta at $target: $s"))
-  }
-
   /** Decoded read: strings materialize HERE, by joining the fact table to
     * the stored page and entity dictionary tables (the scale-safe decode —
     * no dictionary ever touches the driver), then decoding the closed

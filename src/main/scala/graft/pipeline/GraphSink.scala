@@ -45,10 +45,22 @@ object GraphSink {
   final class Salted(parts: Int = 32, saltFanout: Int = 16) extends GraphSink {
     val name = "salted"
     def write(triples: Dataset[Triple], target: String): Unit =
-      KgPipeline.saltedForWrite(triples, parts, saltFanout)
+      Salted.repartition(triples, parts, saltFanout)
         .write.mode(SaveMode.Overwrite).parquet(target)
     def read(spark: SparkSession, target: String): DataFrame =
       spark.read.parquet(target).select(tripleCols: _*)
+  }
+
+  object Salted {
+    /** The salted layout's repartition: partition key is (subj, salt) where
+      * the salt fans a HOT subject out over up to `saltFanout` buckets using
+      * the rest of the row — subject locality is mostly kept for downstream
+      * reads, but no single hot host/entity can pin a partition. The subject
+      * distribution is Zipf by construction. */
+    def repartition(triples: Dataset[Triple], parts: Int, saltFanout: Int = 16): Dataset[Triple] =
+      triples.repartition(parts, col("subj"),
+        pmod(xxhash64(col("pred"), coalesce(col("obj_iri"), lit("")), coalesce(col("obj_lit"), lit(""))),
+          lit(saltFanout)))
   }
 
   /** Subject-bucketed catalog table: co-locates triples by subject so

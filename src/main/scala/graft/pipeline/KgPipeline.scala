@@ -126,9 +126,9 @@ object KgPipeline {
     * Why: the string pipeline is memory-bandwidth-bound at high core counts
     * (flat per-core throughput 4→16, sublinear 8→32 on one socket) — every
     * triple allocates and copies a subject url + predicate + object string
-    * through the encoder. Encoding drops the bytes/triple ~3× (measured by
-    * `graft.tools.EncodingBench`), which is exactly the bandwidth headroom
-    * a shuffle, a write, or more cores would otherwise fight over. At
+    * through the encoder. Encoding drops the bytes/triple ~3× (116.9 → 40.0
+    * Tungsten row bytes, BENCH.md round 4), which is exactly the bandwidth
+    * headroom a shuffle, a write, or more cores would otherwise fight over. At
     * 100 TB this is also the right GRAPH TABLE shape: fixed-width columns +
     * tiny dictionary sidecars, strings only at the consumer edge. */
   def encodedTriples(spark: SparkSession, n: Long): Dataset[EncTriple] = {
@@ -286,36 +286,6 @@ object KgPipeline {
         col("pred_id"), col("ent_id"), col("lit")).as[EncTriple]
   }
 
-  /** Salted repartition for the graph write (north rule): partition key is
-    * (subj, salt) where the salt fans a HOT subject out over up to
-    * `saltFanout` buckets using the rest of the row — subject locality is
-    * mostly kept for downstream reads, but no single hot host/entity can pin
-    * a partition. The subject distribution is Zipf by construction. */
-  def saltedForWrite(triples: Dataset[Triple], parts: Int, saltFanout: Int = 16): Dataset[Triple] =
-    triples.repartition(parts, col("subj"),
-      pmod(xxhash64(col("pred"), coalesce(col("obj_iri"), lit("")), coalesce(col("obj_lit"), lit(""))),
-        lit(saltFanout)))
-
-  /** Bucketed graph table: co-locates triples by subject so downstream
-    * subject-keyed self-joins (path queries, star expansion) run shuffle-free
-    * — the cluster-scale complement to [[saltedForWrite]] when the dominant
-    * read pattern is join-by-subject rather than balanced scan. Delegates to
-    * [[GraphSink.BucketedTable]] (the one interface all storage layouts sit
-    * behind — swap to Iceberg there without touching callers). */
-  def writeBucketedGraph(triples: Dataset[Triple], table: String, buckets: Int = 32): Unit =
-    new GraphSink.BucketedTable(buckets).write(triples, table)
-
-  /** Graph table partitioned by predicate namespace (the prefix before ':'):
-    * the third storage layout beside [[saltedForWrite]] (balanced scans) and
-    * [[writeBucketedGraph]] (co-located subject joins). Predicate families
-    * are few and heavily skewed toward `web:` — reads that filter on a
-    * family (ontology-only, mention-edges-only) prune whole directories at
-    * planning time (`PartitionFilters` at the scan), which at a 100 TB graph
-    * is the difference between a metadata lookup and a full scan. Delegates
-    * to [[GraphSink.PredicatePartitioned]]. */
-  def writePartitionedGraph(triples: Dataset[Triple], path: String, parts: Int = 32): Unit =
-    new GraphSink.PredicatePartitioned(parts).write(triples, path)
-
   /** Checkpoint-resumable stage materialization (SURVEY.md §2.7): each stage
     * writes parquet + a manifest carrying the stage fingerprint and
     * per-partition row counts (the lineage record). A later run with the
@@ -378,9 +348,9 @@ object KgPipeline {
     import spark.implicits._
     val fp = s"v${TextExtract.version}-n$n"
     val ext = runStage(spark, "extracted", outDir, fp) { extracted(PagesSynth.pages(spark, n)) }
-    val tr = runStage(spark, "triples", outDir, fp) {
-      saltedForWrite(pageTriples(ext, PagesSynth.aliasMap).unionAll(ontologyTriples(spark)), writeParts)
+    runStage(spark, "triples", outDir, fp) {
+      GraphSink.Salted.repartition(
+        pageTriples(ext, PagesSynth.aliasMap).unionAll(ontologyTriples(spark)), writeParts)
     }
-    tr
   }
 }

@@ -174,16 +174,6 @@ object Bpe {
     merges.result().toDF("round", "left", "right", "freq")
   }
 
-  /** Reference encode semantics, kept for the parity spec: every merge
-    * replayed in learned order over the whole symbol sequence. O(M·L) per
-    * pre-token — correct at any merge count, ruinous at a real 32k-100k
-    * vocabulary. [[encodeSymbols]] is the production equivalent. */
-  private[graft] def encodeReplay(w: String, merges: Array[(String, String)]): Array[String] = {
-    var syms = splitSymbols(w)
-    merges.foreach { case (l, r) => syms = applyMerge(syms, l, r) }
-    syms
-  }
-
   /** The standard rank-map encode: O(L log L) per pre-token, INDEPENDENT of
     * merge-table size. A doubly-linked symbol list plus a (rank, position)
     * min-heap of adjacent-pair candidates with lazy invalidation — each pop
@@ -192,7 +182,7 @@ object Bpe {
     * time no longer match the list) and pop as no-ops.
     *
     * BIT-IDENTICAL to replaying the merges in learned order
-    * ([[encodeReplay]], spec-locked) for ANY table, not just unambiguous
+    * (the specs' reference encode) for ANY table, not just unambiguous
     * ones: pops come off a min-heap and a merge only creates pairs
     * containing its new symbol, so ranks are processed in nondecreasing
     * order — when rank i is reached, the list is exactly the replay's

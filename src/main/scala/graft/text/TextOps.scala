@@ -34,10 +34,6 @@ object TextOps {
     "es" -> Set("el", "la", "los", "las", "y", "es", "un", "una", "de", "en", "por", "para", "con"),
     "nl" -> Set("de", "het", "een", "en", "van", "is", "dat", "op", "te", "met", "voor", "niet"))
 
-  /** character-trigram profiles as a weak second signal */
-  private def trigrams(s: String): Iterator[String] =
-    if (s.length < 3) Iterator.empty else (0 to s.length - 3).iterator.map(i => s.substring(i, i + 3))
-
   /** Heuristic language ID: stopword hit-rate per language, deterministic
     * tie-break by language code; "und" (undetermined) when nothing hits. */
   def langId(text: String): String = {
@@ -128,16 +124,9 @@ object TextOps {
     winnow(text).foldLeft(0xcbf29ce484222325L)((acc, h) => mix64(acc ^ h))
 
   // ------------------------------------------------------------- shingles
-  /** word k-shingles (normalized) */
-  def shingles(text: String, k: Int = 3): Set[String] = {
-    val toks = Tokenize.tokens(text).map(_.norm)
-    if (toks.size < k) toks.toSet
-    else toks.sliding(k).map(_.mkString(" ")).toSet
-  }
-
-  /** hashed word k-shingles — allocation-free equivalent of [[shingles]]
-    * for the hot dedup path (64-bit collisions are negligible vs the
-    * jaccard thresholds in play) */
+  /** hashed word k-shingles for the hot dedup path: each k-gram of token
+    * norm hashes folds into one 64-bit key, so no shingle string is built
+    * (64-bit collisions are negligible vs the jaccard thresholds in play) */
   def shingleHashes(text: String, k: Int = 3): Set[Long] = {
     val toks = Tokenize.tokens(text)
     val n = toks.size
@@ -244,7 +233,7 @@ object TextOps {
   }
 
   /** exact Jaccard over sorted-distinct hash arrays — merge-intersect,
-    * equals [[jaccardL]] on the corresponding sets (spec-locked) */
+    * equals set Jaccard on the corresponding sets (spec-locked) */
   def jaccardSorted(a: Array[Long], b: Array[Long]): Double = {
     if (a.length == 0 && b.length == 0) return 1.0
     var i = 0
@@ -258,39 +247,10 @@ object TextOps {
     inter.toDouble / (a.length + b.length - inter)
   }
 
-  def jaccard(a: Set[String], b: Set[String]): Double = {
-    if (a.isEmpty && b.isEmpty) return 1.0
-    val inter = a.count(b.contains)
-    inter.toDouble / (a.size + b.size - inter)
-  }
-
-  def jaccardL(a: Set[Long], b: Set[Long]): Double = {
-    if (a.isEmpty && b.isEmpty) return 1.0
-    val inter = a.count(b.contains)
-    inter.toDouble / (a.size + b.size - inter)
-  }
-
   // -------------------------------------------------------------- minhash
   val MinhashPerms = 64
   val MinhashBands = 16 // 16 bands x 4 rows
   val MinhashRows: Int = MinhashPerms / MinhashBands
-
-  /** MinHash signature via 64 fixed affine permutations of the shingle hash. */
-  def minhashSignature(sh: Set[String]): Array[Long] =
-    minhashSignatureL(sh.map(hash64))
-
-  def minhashSignatureL(hashes: Iterable[Long]): Array[Long] = {
-    val sig = Array.fill(MinhashPerms)(Long.MaxValue)
-    hashes.foreach { h =>
-      var p = 0
-      while (p < MinhashPerms) {
-        val hp = mix64(h ^ (0x9e3779b97f4a7c15L * (p + 1)))
-        if (hp < sig(p)) sig(p) = hp
-        p += 1
-      }
-    }
-    sig
-  }
 
   /** One-permutation MinHash with rotation densification (Li–Owen–Zhang
     * OPH; Shrivastava's densification): ONE mixed hash per shingle — its
@@ -300,8 +260,8 @@ object TextOps {
     * independent for banding. Estimator quality matches 64 independent
     * permutations while hashing 64× less — the signature pass dominates
     * MinHash dedup cost at corpus scale, so this is the 100 TB path
-    * ([[minhashSignatureL]] stays as the classic reference; a spec pins
-    * both to the same Jaccard-estimation contract). Deterministic:
+    * (the classic 64-permutation signature is the specs' reference; they
+    * pin both to the same Jaccard-estimation contract). Deterministic:
     * output depends only on the input hash SET. */
   def minhashSignatureOph(hashes: Iterable[Long]): Array[Long] = {
     val sig = Array.fill(MinhashPerms)(Long.MaxValue)

@@ -7,6 +7,6 @@ object ContractCounts {
   def main(args: Array[String]): Unit = {
     val queries = graft.SparkEntry.queries.size
     val oracles = graft.SparkEntry.oracleSql.size
-    println(s"""{"contract_counts":true,"queries":$queries,"oracles":$oracles,"aux_dumps":${queries - oracles}}""")
+    println(s"""{"contract_counts":true,"queries":$queries,"oracles":$oracles,"aux_dumps":${graft.SparkEntry.auxDumps.size}}""")
   }
 }

@@ -6,6 +6,7 @@ import scala.util.control.NonFatal
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.graftshim.GraftSqlShim
 import graft.SparkEntry
 import graft.pipeline.KgPipeline
 import graft.synth.PagesSynth
@@ -65,9 +66,9 @@ object Probe {
     try {
       println(s"PLAN $name")
       println(query(spark, sfDir, name).queryExecution.explainString(ExplainMode.fromString("formatted")))
-      // the listener bus delivers stage completions asynchronously: settle
-      // after each action so a pass's lines hold only its own stages
-      def settle(): Unit = Thread.sleep(150)
+      // the listener bus delivers stage completions asynchronously: drain
+      // it after each action so a pass's lines hold only its own stages
+      def settle(): Unit = GraftSqlShim.waitUntilEmpty(spark)
       if (reps > 0) { query(spark, sfDir, name).count(); settle() } // warm: JIT + codegen
       (0 until reps).foreach { pass =>
         System.gc() // fence: the previous pass's garbage stays out of this timing

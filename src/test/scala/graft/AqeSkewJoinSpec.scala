@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** The runtime half of the skew story (the static half — salted writes —
-  * is SkewBench/`KgPipeline.run`): a planted hot key must be SPLIT by
+  * is `GraphSink.Salted`, locked by `KgPipelineSpec`): a planted hot key must be SPLIT by
   * AQE's skew-join optimization at execution time, with no code change in
   * the query. Locks that the engine's default session shape (AQE on)
   * actually re-plans skew instead of leaving one straggler task — the

@@ -1,7 +1,10 @@
 package graft.dedup
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graftshim.GraftSqlShim
 import graft.SparkTestBase
-import graft.text.TextOps
+import graft.text.{Reference, TextOps}
 import graft.util.Rng
 import org.apache.spark.sql.functions.{col, lit, max}
 
@@ -36,7 +39,7 @@ class DedupSpec extends SparkTestBase {
 
   test("minhash LSH recovers near-dup pairs that brute-force jaccard finds") {
     val df = corpus()
-    val brute = Dedup.bruteJaccardPairs(df, 0.6).map(p => (p._1, p._2)).toSet
+    val brute = Reference.bruteJaccardPairs(df, 0.6).map(p => (p._1, p._2)).toSet
     val lsh = Dedup.minhashPairs(df, 0.6).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(brute.nonEmpty, "test corpus must contain near-dups")
@@ -44,6 +47,27 @@ class DedupSpec extends SparkTestBase {
     assert(lsh.subsetOf(brute))
     val recall = lsh.intersect(brute).size.toDouble / brute.size
     assert(recall >= 0.9, s"recall $recall (${lsh.size}/${brute.size})")
+  }
+
+  test("building signatures over a shuffled input runs no job") {
+    // an aggregation puts an exchange under the signature pass: asking that
+    // plan for its partition count would run the shuffle stage, and the
+    // pairs query would then run it again
+    val agg = corpus().groupBy("doc_id").agg(max(col("text")).as("text"))
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    GraftSqlShim.waitUntilEmpty(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Dedup.minhashSigs(agg)
+      GraftSqlShim.waitUntilEmpty(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 0)
+    val pairs = Dedup.minhashPairs(agg, 0.6).collect().toSet
+    assert(pairs.nonEmpty)
+    assert(pairs == Dedup.minhashPairs(agg.localCheckpoint(), 0.6).collect().toSet)
   }
 
   test("minhash pairs are partition-invariant") {

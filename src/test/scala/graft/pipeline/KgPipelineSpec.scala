@@ -345,7 +345,7 @@ class KgPipelineSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   test("salted write spreads skewed subjects across partitions") {
     val sps = spark; import sps.implicits._
     val tr = KgPipeline.triples(spark, N)
-    val parts = KgPipeline.saltedForWrite(tr, 8)
+    val parts = GraphSink.Salted.repartition(tr, 8)
       .mapPartitions(it => Iterator(it.size)).collect()
     assert(parts.length == 8)
     val total = parts.sum.toDouble
@@ -362,7 +362,7 @@ class KgPipelineSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   test("bucketed graph table makes subject self-joins shuffle-free") {
     val tr = KgPipeline.triples(spark, 200)
-    KgPipeline.writeBucketedGraph(tr, "graph_bucketed", buckets = 4)
+    new GraphSink.BucketedTable(buckets = 4).write(tr, "graph_bucketed")
     val g = spark.table("graph_bucketed")
     // force the non-broadcast path so the assertion proves bucket co-location
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -382,7 +382,7 @@ class KgPipelineSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   test("predicate-partitioned graph prunes partitions at planning time") {
     val dir = java.nio.file.Files.createTempDirectory("graph_by_pred").toString
     val tr = KgPipeline.triples(spark, 200)
-    KgPipeline.writePartitionedGraph(tr, dir, parts = 4)
+    new GraphSink.PredicatePartitioned(parts = 4).write(tr, dir)
     val g = spark.read.parquet(dir)
     val q = g.filter(col("pred_ns") === "web")
     val plan = q.queryExecution.executedPlan.toString

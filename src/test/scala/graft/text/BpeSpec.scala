@@ -138,7 +138,7 @@ class BpeSpec extends SparkTestBase {
         while (m.find()) {
           val w = m.group()
           assert(Bpe.encodeSymbols(Bpe.splitSymbols(w), ranks).toSeq ==
-            Bpe.encodeReplay(w, merges).toSeq, s"diverged on '$w' at $rounds merges")
+            Reference.encodeReplay(w, merges).toSeq, s"diverged on '$w' at $rounds merges")
         }
       }
     }
@@ -151,7 +151,7 @@ class BpeSpec extends SparkTestBase {
     val merges = Array(("bc", "a"), ("b", "c"))
     val ranks = merges.iterator.zipWithIndex.map { case (p, i) => p -> i }.toMap
     assert(Bpe.encodeSymbols(Bpe.splitSymbols("bca"), ranks).toSeq == Seq("bc", "a"))
-    assert(Bpe.encodeReplay("bca", merges).toSeq == Seq("bc", "a"))
+    assert(Reference.encodeReplay("bca", merges).toSeq == Seq("bc", "a"))
   }
 
   test("rank-map encode parity on a 1.5k-merge synthetic table, randomized words") {
@@ -173,7 +173,7 @@ class BpeSpec extends SparkTestBase {
     (0 until 200).foreach { _ =>
       val w = (0 until (5 + rng.nextInt(40))).map(_ => base(rng.nextInt(base.size))).mkString
       assert(Bpe.encodeSymbols(Bpe.splitSymbols(w), ranks).toSeq ==
-        Bpe.encodeReplay(w, table).toSeq, s"diverged on '$w'")
+        Reference.encodeReplay(w, table).toSeq, s"diverged on '$w'")
     }
   }
 

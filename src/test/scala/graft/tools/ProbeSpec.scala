@@ -31,6 +31,26 @@ class ProbeSpec extends SparkTestBase {
     assert(!out.exists(_.startsWith("FAILED")))
   }
 
+  test("each timed pass is followed by its own stages, drained from the listener bus") {
+    // kg_top_entities aggregates: every pass runs a shuffle map stage and
+    // the stage that reads it
+    val (status, out) = probe(3, "kg_top_entities")
+    assert(status == 0)
+    val Stage = """  stage=(\d+)\s+tasks=(\d+)\s.*""".r
+    val passes = out.dropWhile(!_.startsWith("TIME ")).foldLeft(Vector.empty[Vector[(Int, Int)]]) {
+      case (acc, l) if l.startsWith("TIME ") => acc :+ Vector.empty
+      case (acc, Stage(id, tasks)) => acc.init :+ (acc.last :+ ((id.toInt, tasks.toInt)))
+      case (acc, _) => acc
+    }
+    assert(passes.size == 3)
+    passes.foreach(p => assert(p.size >= 2, s"a shuffle pass lists both its stages: $passes"))
+    // a pass holds only its own stages: ids never repeat or run backwards
+    passes.zip(passes.tail).foreach { case (a, b) =>
+      assert(a.map(_._1).max < b.map(_._1).min, passes.toString)
+    }
+    assert(passes.forall(_.exists(_._2 > 1)), s"a stage runs more than one task: $passes")
+  }
+
   test("reps = 0 prints the plan only") {
     val (status, out) = probe(0, "kg_top_entities")
     assert(status == 0)
