@@ -380,7 +380,7 @@ object SparkEntry {
       val n = PagesSynth.pageCount(dir)
       val tmp = freshTmpDir(s"graft_enc_$n") + "/g"
       pipeline.EncodedGraphTable.write(KgPipeline.encodedTriples(s, n),
-        PagesSynth.pageDict(s, n), PagesSynth.entityDict(s), n, tmp)
+        PagesSynth.pageDict(s, n), PagesSynth.entityDict(s), tmp)
       pipeline.EncodedGraphTable.readEncoded(s, tmp)
         .filter(col("pred_id") === KgPipeline.PredMentions)
         .groupBy("ent_id").agg(count(lit(1)).as("n_mentions"))
@@ -397,7 +397,7 @@ object SparkEntry {
       val n = PagesSynth.pageCount(dir)
       val tmp = freshTmpDir(s"graft_clus_$n") + "/g"
       pipeline.EncodedGraphTable.writeClustered(KgPipeline.encodedTriples(s, n),
-        PagesSynth.pageDict(s, n), PagesSynth.entityDict(s), n, tmp)
+        PagesSynth.pageDict(s, n), PagesSynth.entityDict(s), tmp)
       val maxPage = n - 1
       pipeline.EncodedGraphTable.readEncoded(s, tmp)
         .filter(col("pred_id") === KgPipeline.PredMentions &&

@@ -22,11 +22,12 @@ package graft.extract
   *     consecutive newline survives
   *
   * Implementation notes (perf only — output is locked by the frozen-hash
-  * spec): the whitespace normalization is fused into the scan as a
-  * pending-space/newline state machine, so no intermediate full-page string
-  * is built; tag names are classified by in-place ASCII case-fold region
-  * compare (also removes the JVM-default-locale hazard of toLowerCase),
-  * never allocated. One output builder per page is the only garbage.
+  * spec and `TextExtractParitySpec`): whitespace normalization is one
+  * pending-separator `Int` (0 none, 1 space, 2 newline, newline wins),
+  * written only before a later visible char; each run of plain chars (not
+  * `<` `&` space TAB CR LF) is one bulk append; a dropped element is skipped
+  * to its next `<`; an entity's `;` is sought only in the 8 chars the rule
+  * allows. Tag names are compared in place under ASCII case fold.
   */
 object TextExtract {
   val version = "1"
@@ -62,28 +63,11 @@ object TextExtract {
   }
 
   def extract(html: String): String = {
-    val out = new java.lang.StringBuilder(html.length / 2)
+    val out = new java.lang.StringBuilder(html.length) // output never outgrows the input
     val n = html.length
     var i = 0
     var dropUntil: String = null // inside a drop-with-content element
-    // fused whitespace-normalization state
-    var pendingSpace = false
-    var pendingNewline = false
-    var started = false
-
-    def emit(c: Char): Unit = {
-      if (c == '\n' || c == '\r') pendingNewline = true
-      else if (c == ' ') pendingSpace = true
-      else {
-        if (started) {
-          if (pendingNewline) out.append('\n')
-          else if (pendingSpace) out.append(' ')
-        }
-        pendingSpace = false; pendingNewline = false
-        started = true
-        out.append(c)
-      }
-    }
+    var pend = 0 // pending separator: 0 none, 1 space, 2 newline
 
     while (i < n) {
       val c = html.charAt(i)
@@ -97,73 +81,82 @@ object TextExtract {
           var close = false
           if (j < n && html.charAt(j) == '/') { close = true; j += 1 }
           val nameStart = j
-          while (j < n && html.charAt(j).isLetterOrDigit) j += 1
+          while (j < n && Character.isLetterOrDigit(html.charAt(j))) j += 1
           val nameEnd = j
-          while (j < n && html.charAt(j) != '>') j += 1
-          val after = math.min(j + 1, n)
+          i = html.indexOf('>', j) + 1
+          if (i == 0) i = n
 
           if (dropUntil != null) {
             if (close && eqFold(html, nameStart, nameEnd, dropUntil)) dropUntil = null
-            i = after
           } else {
-            var dropIdx = -1
-            if (!close) {
-              var d = 0
-              while (d < dropNames.length && dropIdx < 0) {
-                if (eqFold(html, nameStart, nameEnd, dropNames(d))) dropIdx = d
-                d += 1
-              }
+            var d = 0
+            while (!close && d < dropNames.length && dropUntil == null) {
+              if (eqFold(html, nameStart, nameEnd, dropNames(d))) dropUntil = dropNames(d)
+              d += 1
             }
-            if (dropIdx >= 0) {
-              dropUntil = dropNames(dropIdx)
-            } else {
+            if (dropUntil == null) {
               var isBlock = false
               var b = 0
               while (b < blockNames.length && !isBlock) {
                 if (eqFold(html, nameStart, nameEnd, blockNames(b))) isBlock = true
                 b += 1
               }
-              if (close && isBlock) emit('\n')
-              if (!close && eqFold(html, nameStart, nameEnd, "br")) emit('\n')
+              if (close && isBlock || !close && eqFold(html, nameStart, nameEnd, "br")) pend = 2
             }
-            i = after
           }
         }
       } else if (dropUntil != null) {
-        i += 1
-      } else if (c == '&') {
-        val semi = html.indexOf(';', i + 1)
-        if (semi > 0 && semi - i <= 8) {
-          val s = i + 1
-          var decoded = -1 // char code, or -1 = not an entity
-          if (eqAt(html, s, semi, "amp")) decoded = '&'
-          else if (eqAt(html, s, semi, "lt")) decoded = '<'
-          else if (eqAt(html, s, semi, "gt")) decoded = '>'
-          else if (eqAt(html, s, semi, "quot")) decoded = '"'
-          else if (eqAt(html, s, semi, "nbsp")) decoded = ' '
-          else if (semi - s > 1 && html.charAt(s) == '#') {
-            // numeric entity; Unicode digits accepted (Character.digit),
-            // value truncated to a char — matches toInt.toChar semantics
-            var v = 0
-            var k = s + 1
-            var ok = true
-            while (k < semi && ok) {
-              val ch = html.charAt(k)
-              if (!Character.isDigit(ch)) ok = false
-              else v = v * 10 + Character.digit(ch, 10)
-              k += 1
-            }
-            if (ok) decoded = v.toChar
-          }
-          if (decoded >= 0) { emit(decoded.toChar); i = semi + 1 }
-          else { emit(c); i += 1 }
-        } else { emit(c); i += 1 }
+        i = html.indexOf('<', i)
+        if (i < 0) i = n
+      } else if (c == ' ' || c == '\t') { if (pend == 0) pend = 1; i += 1 }
+      else if (c == '\n' || c == '\r') { pend = 2; i += 1 }
+      else if (c == '&') {
+        val d = entityAt(html, i) // -1: not an entity, the '&' is literal
+        if (d == '\n' || d == '\r') pend = 2
+        else if (d == ' ') { if (pend == 0) pend = 1 }
+        else { flush(out, pend); pend = 0; out.append(if (d < 0) '&' else d.toChar) }
+        i = if (d < 0) i + 1 else html.indexOf(';', i) + 1
       } else {
-        emit(if (c == '\t') ' ' else c)
-        i += 1
+        // a run of plain chars: anything but < & space \t \n \r
+        var j = i + 1
+        while (j < n && {
+          val d = html.charAt(j)
+          d > '<' || d != '<' && d != '&' && d != ' ' && d != '\t' && d != '\n' && d != '\r'
+        }) j += 1
+        flush(out, pend); pend = 0
+        out.append(html, i, j)
+        i = j
       }
     }
 
     out.toString
+  }
+
+  /** the pending separator, written only once output has started */
+  private def flush(out: java.lang.StringBuilder, pend: Int): Unit =
+    if (pend != 0 && out.length > 0) out.append(if (pend == 2) '\n' else ' ')
+
+  /** char code of the entity at `html(i) == '&'`, or -1; numeric entities take
+    * Unicode digits (Character.digit) and truncate to a char like toInt.toChar */
+  private def entityAt(html: String, i: Int): Int = {
+    val s = i + 1
+    val lim = math.min(html.length, i + 9)
+    var semi = s
+    while (semi < lim && html.charAt(semi) != ';') semi += 1
+    if (semi == lim) -1
+    else if (eqAt(html, s, semi, "amp")) '&'
+    else if (eqAt(html, s, semi, "lt")) '<'
+    else if (eqAt(html, s, semi, "gt")) '>'
+    else if (eqAt(html, s, semi, "quot")) '"'
+    else if (eqAt(html, s, semi, "nbsp")) ' '
+    else if (semi - s > 1 && html.charAt(s) == '#') {
+      var v = 0
+      var k = s + 1
+      while (k < semi && Character.isDigit(html.charAt(k))) {
+        v = v * 10 + Character.digit(html.charAt(k), 10)
+        k += 1
+      }
+      if (k == semi) v.toChar else -1
+    } else -1
   }
 }

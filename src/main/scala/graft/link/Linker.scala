@@ -26,10 +26,13 @@ import graft.model.{Link, Mention}
 object Linker {
 
   def resolve(mention: Mention, aliasMap: Map[String, Vector[(String, Double)]]): Option[Link] =
-    aliasMap.get(mention.alias_norm).map { candidates =>
-      val (iri, prior) = candidates.head
+    Option(best(mention.alias_norm, aliasMap)).map { case (iri, prior) =>
       Link(mention.url, mention.span_start, mention.span_end, mention.surface, iri, prior)
     }
+
+  /** the top-1 (entity_iri, prior) for an alias key, or null if it has none */
+  def best(aliasNorm: String, aliasMap: Map[String, Vector[(String, Double)]]): (String, Double) =
+    aliasMap.getOrElse(aliasNorm, null) match { case null => null; case c => c.head }
 
   def linkRelational(mentions: Dataset[Mention], aliases: DataFrame): DataFrame = {
     // Score is mention-independent (prior), so top-1 per mention == top-1 per

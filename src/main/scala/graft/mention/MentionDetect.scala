@@ -8,11 +8,12 @@ import graft.text.TextOps
   * mapPartitions, never shuffles (SURVEY.md §2.3 J1 analog: the dictionary
   * rides as a broadcast, the scan is narrow).
   *
-  * r7 shape: the scan is fully STREAMING — tokens are (start, end) spans
-  * plus a lowercase hash folded in place (no Token objects, no norm-string
-  * allocation per token; the page's only garbage is four small arrays and
-  * the emitted Mentions). The dictionary is indexed by the FIRST token's
-  * 64-bit norm hash (primitive-key map, zero-allocation lookup), with
+  * Scan shape: [[scan]] is the one greedy longest-match loop and hands each
+  * match to a [[Hits]] sink, so a caller emitting triples builds no Mention,
+  * surface substring or per-page Vector; [[detect]] is its Mention view.
+  * Tokens are (start, end) spans plus a lowercase hash folded in place. The
+  * dictionary is indexed by the FIRST token's 64-bit norm hash (primitive-key
+  * map, behind a 4096-bit filter that spares most tokens the probe), with
   * per-slot candidates sorted longest-first so the first verified match is
   * the greedy longest match. Hash collisions are harmless: every candidate
   * verifies token-by-token against the text region (including token 0).
@@ -25,35 +26,53 @@ import graft.text.TextOps
   */
 object MentionDetect {
 
-  /** candidate alias entry: token sequence + its normalized joined form */
-  final class Entry(val tokens: Array[String], val norm: String) extends Serializable
+  /** candidate alias entry: token sequence, normalized joined form, index in `norms` */
+  final class Entry(val tokens: Array[String], val norm: String, val id: Int) extends Serializable
 
   /** first-token-hash-indexed alias dictionary (broadcast side) */
-  final class Dictionary(val byFirstHash: scala.collection.mutable.LongMap[Array[Entry]])
-    extends Serializable
+  final class Dictionary(val byFirstHash: scala.collection.mutable.LongMap[Array[Entry]],
+    val norms: Array[String], val firstBits: Array[Long]) extends Serializable
 
   def buildDictionary(aliasNorms: Iterable[String]): Dictionary = {
+    val norms = aliasNorms.toArray
     val tmp = new java.util.HashMap[java.lang.Long, java.util.ArrayList[Entry]]()
-    aliasNorms.foreach { norm =>
-      val toks = norm.split(' ')
-      val e = new Entry(toks, norm)
+    norms.indices.foreach { id =>
+      val toks = norms(id).split(' ')
+      val e = new Entry(toks, norms(id), id)
       tmp.computeIfAbsent(TextOps.hash64(toks(0)), _ => new java.util.ArrayList[Entry]()).add(e)
     }
     val out = new scala.collection.mutable.LongMap[Array[Entry]](tmp.size * 2)
+    val bits = new Array[Long](64) // 12 bits of each first-token hash; a clear bit skips the probe
     tmp.forEach { (k, v) =>
+      bits((k >>> 58).toInt) |= 1L << k
       val arr = v.toArray(new Array[Entry](v.size))
       // longest-first => first match is the greedy longest match (stable
       // sort keeps insertion order within a length class)
       java.util.Arrays.sort(arr, (a: Entry, b: Entry) => b.tokens.length - a.tokens.length)
       out.put(k, arr)
     }
-    new Dictionary(out)
+    new Dictionary(out, norms, bits)
   }
 
+  /** lowercase of a letter or digit, else -1 (from a table below 128) */
+  private def fold(c: Char): Int =
+    if (c < 128) asciiFold(c) else if (Character.isLetterOrDigit(c)) Character.toLowerCase(c) else -1
+  private val asciiFold = Array.tabulate(128)(c => if (Character.isLetterOrDigit(c)) Character.toLowerCase(c) else -1)
+
+  /** receives each match of [[scan]]: text span [start, end) and its entry */
+  trait Hits { def hit(start: Int, end: Int, entry: Entry): Unit }
+
   def detect(url: String, text: String, dict: Dictionary): Vector[Mention] = {
+    val out = Vector.newBuilder[Mention]
+    scan(text, dict, (s, e, entry) => out += Mention(url, s, e, text.substring(s, e), entry.norm))
+    out.result()
+  }
+
+  /** greedy non-overlapping longest-match scan: matches go to `hits` in order */
+  def scan(text: String, dict: Dictionary, hits: Hits): Unit = {
     val n = text.length
     // ---- streaming tokenization into span/hash arrays (one pass) ----
-    var cap = 16
+    var cap = 16 + n / 6 // about one token per 6 chars of prose
     var starts = new Array[Int](cap)
     var ends = new Array[Int](cap)
     var hashes = new Array[Long](cap)
@@ -61,14 +80,15 @@ object MentionDetect {
     var m = 0
     var i = 0
     while (i < n) {
-      if (Character.isLetterOrDigit(text.charAt(i))) {
+      if (fold(text.charAt(i)) >= 0) {
         val s = i
         var h = 0xcbf29ce484222325L
         var sp = false
-        while (i < n && Character.isLetterOrDigit(text.charAt(i))) {
+        var f = 0
+        while (i < n && { f = fold(text.charAt(i)); f >= 0 }) {
           val c = text.charAt(i)
           if (c == 'İ' || c == 'Σ') sp = true
-          h ^= Character.toLowerCase(c)
+          h ^= f
           h *= 0x100000001b3L
           i += 1
         }
@@ -89,12 +109,14 @@ object MentionDetect {
       } else i += 1
     }
 
-    // region [starts(ti), ends(ti)) equals norm string w under lowercase
+    // final arrays, so tokEquals captures no boxed `var`
+    val st = starts; val en = ends; val spc = special
+    // region [st(ti), en(ti)) equals norm string w under lowercase
     def tokEquals(ti: Int, w: String): Boolean = {
-      if (special(ti))
-        return text.substring(starts(ti), ends(ti)).toLowerCase(java.util.Locale.ROOT) == w
-      val s = starts(ti)
-      if (ends(ti) - s != w.length) return false
+      if (spc(ti))
+        return text.substring(st(ti), en(ti)).toLowerCase(java.util.Locale.ROOT) == w
+      val s = st(ti)
+      if (en(ti) - s != w.length) return false
       var k = 0
       while (k < w.length) {
         if (Character.toLowerCase(text.charAt(s + k)) != w.charAt(k)) return false
@@ -104,11 +126,11 @@ object MentionDetect {
     }
 
     // ---- greedy longest-match scan over the token spans ----
-    val out = Vector.newBuilder[Mention]
     var ti = 0
     while (ti < m) {
       var advance = 1
-      val cands = dict.byFirstHash.getOrNull(hashes(ti))
+      val h = hashes(ti)
+      val cands = if ((dict.firstBits((h >>> 58).toInt) & 1L << h) == 0) null else dict.byFirstHash.getOrNull(h)
       if (cands != null) {
         var c = 0
         var done = false
@@ -119,9 +141,7 @@ object MentionDetect {
             var j = 0
             while (j < len && tokEquals(ti + j, e.tokens(j))) j += 1
             if (j == len) {
-              val start = starts(ti)
-              val end = ends(ti + len - 1)
-              out += Mention(url, start, end, text.substring(start, end), e.norm)
+              hits.hit(st(ti), en(ti + len - 1), e)
               advance = len // greedy non-overlapping
               done = true
             }
@@ -131,6 +151,5 @@ object MentionDetect {
       }
       ti += advance
     }
-    out.result()
   }
 }

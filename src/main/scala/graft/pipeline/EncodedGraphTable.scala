@@ -19,7 +19,6 @@ import graft.pipeline.KgPipeline.EncTriple
   *                          at a web-scale KG
   *   target/dict_preds/     (pred_id, iri)  — closed vocabulary, tiny
   *   target/dict_langs/     (lang_id, lang) — closed vocabulary, tiny
-  *   target/_meta           corpus row metadata (n_pages)
   *
   * `read` decodes at the consumer edge FROM THE STORED SIDECARS by JOINING
   * the fact table to the page and entity dictionaries (AQE picks broadcast
@@ -43,10 +42,10 @@ object EncodedGraphTable {
     * their own partitioning (they scale with the corpus), the closed
     * pred/lang vocabularies coalesce to single tiny files. */
   def write(enc: Dataset[EncTriple], pageDict: DataFrame, entityDict: DataFrame,
-            n: Long, target: String, parts: Int = 32): Unit = {
+            target: String, parts: Int = 32): Unit = {
     enc.repartition(parts, col("page_id"))
       .write.mode(SaveMode.Overwrite).parquet(s"$target/triples")
-    writeSidecars(enc.sparkSession, pageDict, entityDict, n, target, parts)
+    writeSidecars(enc.sparkSession, pageDict, entityDict, target, parts)
   }
 
   /** Z-order clustered variant of the fact-table write: rows are
@@ -58,12 +57,12 @@ object EncodedGraphTable {
     * where the plain `write` layout (hash on page_id) serves only the
     * first. The z column is a write-time ordering key only; the stored
     * schema is identical to `write`'s, so every reader works unchanged.
-    * Dictionary sidecars and `_meta` ride along exactly as in `write`.
+    * Dictionary sidecars ride along exactly as in `write`.
     * Row-group pruning is measured, not assumed — `ClusteredLayoutSpec`
     * counts overlapping row groups from the parquet footers of both
     * layouts. */
   def writeClustered(enc: Dataset[EncTriple], pageDict: DataFrame, entityDict: DataFrame,
-            n: Long, target: String, parts: Int = 32): Unit = {
+            target: String, parts: Int = 32): Unit = {
     val spark = enc.sparkSession
     graft.functions.ZorderExpr.register(spark)
     // page_id stays a long into the interleave: ZorderExpr narrows it with a
@@ -75,12 +74,12 @@ object EncodedGraphTable {
       .sortWithinPartitions("_z")
       .drop("_z")
       .write.mode(SaveMode.Overwrite).parquet(s"$target/triples")
-    writeSidecars(spark, pageDict, entityDict, n, target, parts)
+    writeSidecars(spark, pageDict, entityDict, target, parts)
   }
 
-  /** Dictionary sidecars + `_meta`, shared by both fact-table layouts. */
+  /** Dictionary sidecars, shared by both fact-table layouts. */
   private def writeSidecars(spark: SparkSession, pageDict: DataFrame,
-      entityDict: DataFrame, n: Long, target: String, parts: Int): Unit = {
+      entityDict: DataFrame, target: String, parts: Int): Unit = {
     import spark.implicits._
     pageDict.select(col("page_id").cast("long"), col("url"))
       .repartition(math.max(1, parts / 4), col("page_id"))
@@ -94,10 +93,6 @@ object EncodedGraphTable {
     KgPipeline.Langs.zipWithIndex.map { case (l, id) => (id, l) }
       .toDF("lang_id", "lang").coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(s"$target/dict_langs")
-    val fs = new org.apache.hadoop.fs.Path(target)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$target/_meta"), true)
-    try out.write(s"""{"n_pages":$n}""".getBytes("UTF-8")) finally out.close()
   }
 
   /** The raw encoded relation (for consumers that stay in id space —

@@ -1,11 +1,12 @@
 package graft.pipeline
 
+import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.extract.TextExtract
 import graft.link.Linker
 import graft.mention.MentionDetect
-import graft.model.{Link, Mention, Page, Triple, Vocab => V}
+import graft.model.{Link, Page, Triple, Vocab => V}
 import graft.synth.PagesSynth
 
 /** The web-text KG-construction pipeline (north rule): pages → deterministic
@@ -42,33 +43,42 @@ object KgPipeline {
     val bcast = spark.sparkContext.broadcast(aliasMap)
     val bdict = spark.sparkContext.broadcast(MentionDetect.buildDictionary(aliasMap.keys))
     extracted.mapPartitions { it =>
-      val am = bcast.value
       val dict = bdict.value
+      val best = dict.norms.map(Linker.best(_, bcast.value)) // by entry id
       it.flatMap { p =>
-        MentionDetect.detect(p.url, p.text, dict)
-          .flatMap(mn => Linker.resolve(mn, am))
+        val out = new ArrayBuffer[Link]()
+        MentionDetect.scan(p.text, dict, (s, e, entry) => {
+          val top = best(entry.id)
+          if (top != null) out += Link(p.url, s, e, p.text.substring(s, e), top._1, top._2)
+        })
+        out
       }
     }
   }
 
-  /** Stage 4 — triple emission: page node triples + mention edges. */
+  /** Stage 4 — triple emission: page node triples + mention edges, each
+    * edge written straight from its scan hit (no Mention or Link rows). */
   def pageTriples(extracted: Dataset[ExtractedPage], aliasMap: Map[String, Vector[(String, Double)]]): Dataset[Triple] = {
     val spark = extracted.sparkSession
     import spark.implicits._
     val bcast = spark.sparkContext.broadcast(aliasMap)
     val bdict = spark.sparkContext.broadcast(MentionDetect.buildDictionary(aliasMap.keys))
     extracted.mapPartitions { it =>
-      val am = bcast.value
       val dict = bdict.value
+      val best = dict.norms.map(Linker.best(_, bcast.value)) // by entry id
       it.flatMap { p =>
-        val base = Iterator(
-          Triple(p.url, V.RdfType, V.WebPage, null, null),
-          Triple(p.url, V.WebLang, null, p.lang, V.XsdString),
-          Triple(p.url, V.WebWarcTs, null, p.warc_ms.toString, V.XsdLong),
-          Triple(p.url, V.WebNChars, null, p.text.length.toString, V.XsdLong))
-        val mentions = MentionDetect.detect(p.url, p.text, dict).flatMap(mn => Linker.resolve(mn, am))
-          .iterator.map(l => Triple(p.url, V.WebMentions, l.entity_iri, s"${l.span_start}:${l.span_end}", null))
-        base ++ mentions
+        val out = new ArrayBuffer[Triple](8)
+        out += Triple(p.url, V.RdfType, V.WebPage, null, null)
+        out += Triple(p.url, V.WebLang, null, p.lang, V.XsdString)
+        out += Triple(p.url, V.WebWarcTs, null, p.warc_ms.toString, V.XsdLong)
+        out += Triple(p.url, V.WebNChars, null, p.text.length.toString, V.XsdLong)
+        MentionDetect.scan(p.text, dict, (s, e, entry) => {
+          val top = best(entry.id)
+          // "start:end"; s"$s:$e" would start its builder at capacity 1 and regrow it
+          if (top != null) out += Triple(p.url, V.WebMentions, top._1,
+            new java.lang.StringBuilder(24).append(s).append(':').append(e).toString, null)
+        })
+        out
       }
     }
   }

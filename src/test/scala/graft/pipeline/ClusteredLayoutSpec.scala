@@ -45,9 +45,9 @@ class ClusteredLayoutSpec extends SparkTestBase {
     val plainDir = s"$base/plain"
     val clusDir = s"$base/clustered"
     EncodedGraphTable.write(enc, PagesSynth.pageDict(spark, N),
-      PagesSynth.entityDict(spark), N, plainDir, parts = Parts)
+      PagesSynth.entityDict(spark), plainDir, parts = Parts)
     EncodedGraphTable.writeClustered(enc, PagesSynth.pageDict(spark, N),
-      PagesSynth.entityDict(spark), N, clusDir, parts = Parts)
+      PagesSynth.entityDict(spark), clusDir, parts = Parts)
 
     // 1) the stored schema and content are layout-invariant: every reader
     //    (encoded and decoded) sees the same multiset

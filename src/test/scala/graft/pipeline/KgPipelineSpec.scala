@@ -154,7 +154,7 @@ class KgPipelineSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     val n = 300L
     val dir = Files.createTempDirectory("encg").toString + "/g"
     EncodedGraphTable.write(KgPipeline.encodedTriples(spark, n),
-      PagesSynth.pageDict(spark, n), PagesSynth.entityDict(spark), n, dir, parts = 4)
+      PagesSynth.pageDict(spark, n), PagesSynth.entityDict(spark), dir, parts = 4)
     // the fact table carries NO string columns — fixed-width only
     val schema = spark.read.parquet(s"$dir/triples").schema
     assert(schema.fields.forall(f =>
@@ -186,7 +186,7 @@ class KgPipelineSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     val n = 120L
     val dir = Files.createTempDirectory("encj").toString + "/g"
     EncodedGraphTable.write(KgPipeline.encodedTriples(spark, n),
-      PagesSynth.pageDict(spark, n), PagesSynth.entityDict(spark), n, dir, parts = 2)
+      PagesSynth.pageDict(spark, n), PagesSynth.entityDict(spark), dir, parts = 2)
     val decoded = EncodedGraphTable.read(spark, dir)
     // the decode PLAN joins both open-vocabulary dictionaries (2 joins);
     // pred/lang stay in-plan literal chains (closed vocab)

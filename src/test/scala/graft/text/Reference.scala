@@ -69,4 +69,143 @@ object Reference {
     val t = text.trim
     if (t.isEmpty) 0 else t.split("\\s+").length
   }
+
+  // ---- text extractor v1, the pre-rewrite scan (frozen copy) ----
+  // `TextExtractParitySpec` holds `graft.extract.TextExtract.extract` to it
+  // byte for byte. Its `indexOf(';')` scans to the end of the page on every
+  // `&` with no `;` after it, so it is quadratic on such pages.
+
+  private val dropNames = Array("script", "style", "nav", "header", "footer", "aside")
+  private val blockNames = Array("p", "div", "h1", "h2", "h3", "h4", "h5", "h6",
+    "li", "br", "tr", "section", "article", "title")
+
+  /** region [s,e) equals `lit` under ASCII A-Z case fold (tag names) */
+  private def eqFold(html: String, s: Int, e: Int, lit: String): Boolean = {
+    if (e - s != lit.length) return false
+    var k = 0
+    while (k < lit.length) {
+      val c = html.charAt(s + k)
+      val f = if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
+      if (f != lit.charAt(k)) return false
+      k += 1
+    }
+    true
+  }
+
+  /** region [s,e) equals `lit` exactly (entity names are case-sensitive) */
+  private def eqAt(html: String, s: Int, e: Int, lit: String): Boolean = {
+    if (e - s != lit.length) return false
+    var k = 0
+    while (k < lit.length) {
+      if (html.charAt(s + k) != lit.charAt(k)) return false
+      k += 1
+    }
+    true
+  }
+
+  def extractV1(html: String): String = {
+    val out = new java.lang.StringBuilder(html.length / 2)
+    val n = html.length
+    var i = 0
+    var dropUntil: String = null // inside a drop-with-content element
+    // fused whitespace-normalization state
+    var pendingSpace = false
+    var pendingNewline = false
+    var started = false
+
+    def emit(c: Char): Unit = {
+      if (c == '\n' || c == '\r') pendingNewline = true
+      else if (c == ' ') pendingSpace = true
+      else {
+        if (started) {
+          if (pendingNewline) out.append('\n')
+          else if (pendingSpace) out.append(' ')
+        }
+        pendingSpace = false; pendingNewline = false
+        started = true
+        out.append(c)
+      }
+    }
+
+    while (i < n) {
+      val c = html.charAt(i)
+      if (c == '<') {
+        if (html.startsWith("<!--", i)) {
+          val e = html.indexOf("-->", i + 4)
+          i = if (e < 0) n else e + 3
+        } else {
+          // parse tag in place: name span [nameStart, nameEnd), close flag
+          var j = i + 1
+          var close = false
+          if (j < n && html.charAt(j) == '/') { close = true; j += 1 }
+          val nameStart = j
+          while (j < n && html.charAt(j).isLetterOrDigit) j += 1
+          val nameEnd = j
+          while (j < n && html.charAt(j) != '>') j += 1
+          val after = math.min(j + 1, n)
+
+          if (dropUntil != null) {
+            if (close && eqFold(html, nameStart, nameEnd, dropUntil)) dropUntil = null
+            i = after
+          } else {
+            var dropIdx = -1
+            if (!close) {
+              var d = 0
+              while (d < dropNames.length && dropIdx < 0) {
+                if (eqFold(html, nameStart, nameEnd, dropNames(d))) dropIdx = d
+                d += 1
+              }
+            }
+            if (dropIdx >= 0) {
+              dropUntil = dropNames(dropIdx)
+            } else {
+              var isBlock = false
+              var b = 0
+              while (b < blockNames.length && !isBlock) {
+                if (eqFold(html, nameStart, nameEnd, blockNames(b))) isBlock = true
+                b += 1
+              }
+              if (close && isBlock) emit('\n')
+              if (!close && eqFold(html, nameStart, nameEnd, "br")) emit('\n')
+            }
+            i = after
+          }
+        }
+      } else if (dropUntil != null) {
+        i += 1
+      } else if (c == '&') {
+        val semi = html.indexOf(';', i + 1)
+        if (semi > 0 && semi - i <= 8) {
+          val s = i + 1
+          var decoded = -1 // char code, or -1 = not an entity
+          if (eqAt(html, s, semi, "amp")) decoded = '&'
+          else if (eqAt(html, s, semi, "lt")) decoded = '<'
+          else if (eqAt(html, s, semi, "gt")) decoded = '>'
+          else if (eqAt(html, s, semi, "quot")) decoded = '"'
+          else if (eqAt(html, s, semi, "nbsp")) decoded = ' '
+          else if (semi - s > 1 && html.charAt(s) == '#') {
+            // numeric entity; Unicode digits accepted (Character.digit),
+            // value truncated to a char — matches toInt.toChar semantics
+            var v = 0
+            var k = s + 1
+            var ok = true
+            while (k < semi && ok) {
+              val ch = html.charAt(k)
+              if (!Character.isDigit(ch)) ok = false
+              else v = v * 10 + Character.digit(ch, 10)
+              k += 1
+            }
+            if (ok) decoded = v.toChar
+          }
+          if (decoded >= 0) { emit(decoded.toChar); i = semi + 1 }
+          else { emit(c); i += 1 }
+        } else { emit(c); i += 1 }
+      } else {
+        emit(if (c == '\t') ' ' else c)
+        i += 1
+      }
+    }
+
+    out.toString
+  }
 }
