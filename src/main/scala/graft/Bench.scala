@@ -31,6 +31,14 @@ object Bench {
     "kg_link_relational", "cj_doc_stats")
 
   def main(args: Array[String]): Unit = {
+    // resolve every benched name before any work: a misspelt or renamed
+    // query must stop the run, not drop out of the timings unnoticed
+    val unknown = benchQueries.filterNot(SparkEntry.queries.contains)
+    if (unknown.nonEmpty) {
+      System.err.println(s"Bench: unknown queries: ${unknown.mkString(", ")}")
+      sys.exit(2)
+    }
+    val timedQueries = benchQueries.map(name => name -> SparkEntry.queries(name))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.defaultCores
     val spark = GraftSession.local(cpus)
@@ -62,10 +70,8 @@ object Bench {
     }
     val sustainedTps = sustained.max
 
-    benchQueries.foreach { name =>
-      SparkEntry.queries.get(name).foreach { fn =>
-        try fn(spark, sfDir).count() catch { case NonFatal(_) => () } // the timed passes record it
-      }
+    timedQueries.foreach { case (_, fn) =>
+      try fn(spark, sfDir).count() catch { case NonFatal(_) => () } // the timed passes record it
     }
 
     // drain warm-up garbage so collections triggered by it do not land
@@ -115,21 +121,19 @@ object Bench {
       nTriples = t
       if (sec < pipeSec * 0.98) improved = true
       if (sec < pipeSec) pipeSec = sec
-      benchQueries.foreach { name =>
-        SparkEntry.queries.get(name).foreach { fn =>
-          System.gc() // fence: previous query's garbage stays out of this timing
-          val (ok, qsec) = timed {
-            try { fn(spark, sfDir).count(); true }
-            catch { case NonFatal(e) =>
-              failed.getOrElseUpdate(name, s"${e.getClass.getName}: ${e.getMessage}")
-              false
-            }
+      timedQueries.foreach { case (name, fn) =>
+        System.gc() // fence: previous query's garbage stays out of this timing
+        val (ok, qsec) = timed {
+          try { fn(spark, sfDir).count(); true }
+          catch { case NonFatal(e) =>
+            failed.getOrElseUpdate(name, s"${e.getClass.getName}: ${e.getMessage}")
+            false
           }
-          if (ok) {
-            val old = results.getOrElse(name, Double.MaxValue)
-            if (qsec < old * 0.98) improved = true
-            if (qsec < old) results(name) = qsec
-          }
+        }
+        if (ok) {
+          val old = results.getOrElse(name, Double.MaxValue)
+          if (qsec < old * 0.98) improved = true
+          if (qsec < old) results(name) = qsec
         }
       }
       stalePasses = if (improved) 0 else stalePasses + 1

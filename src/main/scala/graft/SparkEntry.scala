@@ -1,3464 +1,40 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import graft.ann.Ann
-import graft.dedup.Dedup
-import graft.link.Linker
-import graft.mention.MentionDetect
-import graft.model.{Mention, Vocab => V}
-import graft.multimodal.Multimodal
-import graft.operators.Triangles
+import graft.contract._
 import graft.pipeline.KgPipeline
 import graft.synth.PagesSynth
-import graft.text.{Bpe, TextOps, Tfidf}
 
-/** Driver contract: one `queries` entry per implemented operator
-  * (SURVEY.md §2 + the training-data ops), with DuckDB-runnable `oracleSql`
-  * wherever the semantics are ANSI-SQL-expressible. Column names and types
-  * are aligned on both sides (the driver hash-compares values after sorting
-  * columns by name); money sums go through exact cents (bigint).
-  */
+/** Driver contract index: one [[graft.contract.Contract]] per implemented
+  * operator (SURVEY.md §2 + the training-data ops), each a Spark build
+  * beside the DuckDB SQL that re-derives it, kept in one file per query
+  * family (`graft.contract.*Contracts`). The maps below are derived from
+  * the families, keyed by query and dump name, for Verify, Bench, Probe
+  * and the specs. */
 object SparkEntry {
 
-  private def t(dir: String, name: String)(implicit spark: SparkSession): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  val families: Seq[Family] = Seq(
+    KgContracts, DocContracts, EvContracts, QContracts, EmbContracts, MmContracts, CjContracts)
 
-  /** The `cj_*` queries' corpus (`spark.graft.cj.corpus`) through the
-    * `cityjson` source, as its `output` rows: triples, logs or docs. */
-  private def cj(spark: SparkSession, output: String): DataFrame =
-    spark.read.format("cityjson").option("output", output)
-      .load(graft.cj.CityJsonSource.corpusDir(spark))
+  val contracts: Seq[Contract] = families.flatMap(_.contracts)
+  val auxes: Seq[Aux] = families.flatMap(_.aux)
 
-  private def cjTriplesByPred(spark: SparkSession): DataFrame =
-    cj(spark, "triples").groupBy("pred").agg(count(lit(1)).as("n_triples"))
+  private def run(build: Inputs => DataFrame): (SparkSession, String) => DataFrame =
+    (spark, dir) => build(Inputs(spark, dir))
 
-  /** Fixed scratch path under /tmp, cleared before reuse: contract queries
-    * that materialize a table write to ONE deterministic location per
-    * scale — repeated Verify runs replace it instead of accumulating a
-    * fresh createTempDirectory copy per invocation. */
-  private def freshTmpDir(name: String): String = {
-    val loc = new java.io.File("/tmp", name)
-    if (loc.exists()) org.apache.commons.io.FileUtils.deleteDirectory(loc)
-    loc.toString
-  }
+  /** query name -> build over (session, scale directory) */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    contracts.map(c => c.name -> run(c.build)).toMap
 
-  /** Per-page entity cap before co-mention pair expansion (mirrored as the
-    * literal 64 in the kg_comention_triangles oracle). Far above the honest
-    * per-page entity counts of the corpus — it exists to bound the damage a
-    * link-farm page can do, not to sample. */
-  val CoMentionHubCap = 64
+  /** query name -> DuckDB oracle SQL (`{OUT}` and `{SF}` are substituted
+    * by Verify) */
+  val oracleSql: Map[String, String] = contracts.map(c => c.name -> c.oracle).toMap
 
-  /** GPT-style sequence packing via a HIERARCHICAL two-phase prefix sum.
-    *
-    * A flat `Window.partitionBy(lang).orderBy(doc_id)` running sum puts an
-    * entire language in ONE task's external sort — at 10¹²-document scale
-    * with an 80%-English corpus that is a single-task stage. Instead:
-    *
-    *  1. blocks: `blk = doc_id DIV blockSize` segments each language's
-    *     id-ordered stream into bounded ranges (≤ blockSize docs each);
-    *  2. per-(lang, blk) token subtotals — one partial/final aggregation,
-    *     corpus/blockSize output rows (10⁶ at a trillion docs for the
-    *     default 2²⁰ block, trivially broadcastable);
-    *  3. exclusive running offset per lang over BLOCKS — the only
-    *     lang-partitioned window, over subtotal rows, never documents;
-    *  4. broadcast-join offsets back, local prefix sum within (lang, blk) —
-    *     every window partition bounded by blockSize rows.
-    *
-    * Bit-identical to the flat formulation (integer token counts, exact
-    * arithmetic); the `PackShardsSpec` equivalence test locks that across
-    * block sizes, `PlanQualitySpec` locks that no document-stream exchange
-    * is keyed on lang alone. */
-  private[graft] def packShards(documents: DataFrame, cap: Long,
-      blockSize: Long = 1L << 20): DataFrame = {
-    // the tokenized projection feeds BOTH the subtotal agg and the join
-    // branch; without a cut Spark would re-run the corpus scan +
-    // tokenization once per branch. The materialized row is 4 numeric
-    // columns (no text) — tiny relative to the scan it saves.
-    val base = documents.select(
-        col("doc_id"), col("lang"),
-        when(length(trim(col("text"))) === 0, 0L)
-          .otherwise(size(split(trim(col("text")), "\\s+")).cast("long")).as("n_tokens"))
-      .withColumn("blk", expr(s"doc_id DIV $blockSize"))
-      .localCheckpoint()
-    val subtotals = base.groupBy("lang", "blk").agg(sum("n_tokens").as("blk_tokens"))
-    val wBlk = Window.partitionBy("lang").orderBy("blk")
-    val offsets = subtotals
-      .withColumn("blk_offset",
-        coalesce(sum("blk_tokens").over(wBlk.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("lang", "blk", "blk_offset")
-    val wLoc = Window.partitionBy("lang", "blk").orderBy("doc_id")
-    base.join(broadcast(offsets), Seq("lang", "blk"))
-      .withColumn("cum_before", col("blk_offset") +
-        coalesce(sum("n_tokens").over(wLoc.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("doc_id"), col("lang"), col("n_tokens"),
-        expr(s"cum_before DIV $cap").as("shard_id"),
-        (col("cum_before") % cap).as("shard_offset"))
-  }
-
-  /** Word-bigram Jaccard pairs over a bounded head sample, fully relational
-    * (shingle explode + self-equi-join on shingle — never a cross product);
-    * the corpus-scale path is Dedup.minhashPairs. The threshold test is
-    * integer arithmetic: engine-exact vs the DuckDB oracle. */
-  private def bigramJaccardPairs(documents: DataFrame): DataFrame = {
-    val docs = documents.filter(col("doc_id") < 100)
-      .withColumn("ws", split(col("text"), " "))
-      .filter(size(col("ws")) >= 2)
-    val sh = docs.select(col("doc_id"),
-      explode(array_distinct(expr(
-        "transform(sequence(1, size(ws) - 1), i -> concat(element_at(ws, i), ' ', element_at(ws, i + 1)))"))).as("sh"))
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    sh.as("a").join(sh.as("b"), col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("n_inter"))
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
-      .withColumn("n_union", col("na") + col("nb") - col("n_inter"))
-      .filter(col("n_inter") * 100 >= col("n_union") * 8)
-      .select(col("doc_a"), col("doc_b"), col("n_inter"), col("n_union"))
-  }
-
-  /** Shared (subj, pred, obj) view for the BGP contract queries,
-    * localCheckpointed: Bgp compiles one scan per pattern, and without
-    * the cut the whole encode→decode lineage would re-run once per
-    * pattern (the kg_comention_lift discipline applied to the pattern
-    * family). Always the dictionary-encoded decode path — the cheap one;
-    * `withOntology` unions in the once-per-corpus ontology triples (the
-    * rdf:name chain target) rather than switching to the slower
-    * string-world pipeline (the two are spec-locked multiset-identical). */
-  private def bgpTriples(s: SparkSession, dir: String,
-      withOntology: Boolean = false): DataFrame = {
-    val n = PagesSynth.pageCount(dir)
-    val decoded = KgPipeline.decodeTriples(KgPipeline.encodedTriples(s, n), n).toDF()
-    val base =
-      if (withOntology) decoded.unionAll(KgPipeline.ontologyTriples(s).toDF())
-      else decoded
-    base.select(col("subj"), col("pred"),
-      coalesce(col("obj_iri"), col("obj_lit")).as("obj")).localCheckpoint()
-  }
-
-  /** Distinct (url, entity_iri) links of the synthesized corpus: the shared
-    * front end of the co-mention graph queries. localCheckpointed once per
-    * query, never across queries: the per-url pair self-join references the
-    * links twice, and without the cut the synth+extract+link chain runs once
-    * per side. */
-  private def comentionLinks(s: SparkSession, dir: String): DataFrame =
-    KgPipeline.links(
-      KgPipeline.extracted(PagesSynth.pages(s, PagesSynth.pageCount(dir))),
-      PagesSynth.aliasMap).toDF().select("url", "entity_iri").distinct()
-      .localCheckpoint()
-
-  /** Deterministic global training-order shuffle: every doc gets its
-    * 1-based position in the (md5(text), doc_id) total order — rerun-stable
-    * at any parallelism (never rand()); a different epoch salt would just
-    * prepend to the digest. Scale shape: hierarchical two-phase rank (the
-    * doc_pack_shards discipline, corpus-wide): docs rank WITHIN their
-    * 16^prefixLen digest-prefix blocks (bounded partitions); the only
-    * unpartitioned window runs over the block-subtotal aggregate — no
-    * single task ever sorts the corpus (plan-locked). The OUTPUT is
-    * prefix-length-invariant (spec-locked): prefix blocks are contiguous
-    * ranges of the digest total order, so block-local rank + exclusive
-    * block offset reproduces the same global position at any fan. */
-  private[graft] def shuffleGlobalPos(docs: DataFrame, prefixLen: Int): DataFrame = {
-    require(prefixLen >= 1 && prefixLen <= 8, s"prefixLen out of range: $prefixLen")
-    val d = docs
-      .select(col("doc_id"), md5(col("text")).as("dg"))
-      .withColumn("blk", substring(col("dg"), 1, prefixLen))
-    val offsets = d.groupBy("blk").agg(count(lit(1)).as("n"))
-      .withColumn("offset", coalesce(
-        sum("n").over(Window.orderBy("blk")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("blk", "offset")
-    d.withColumn("rk", row_number().over(
-        Window.partitionBy("blk").orderBy(col("dg"), col("doc_id"))))
-      .join(offsets, "blk")
-      .select(col("doc_id"), (col("offset") + col("rk")).as("pos"))
-  }
-
-  /** Hex-prefix length for a corpus of `n` docs (r7): the smallest p with
-    * n / 16^p at or under `maxBlockRows`, so no block's window sort
-    * exceeds a task-sized row count; capped at 8 (16^8 ≈ 4.3e9 blocks —
-    * past any real corpus). The subtotal window then sees 16^p rows,
-    * still metadata-sized (65k at p=4 for a 10^11-doc corpus). */
-  private[graft] def shufflePrefixLen(n: Long, maxBlockRows: Long = 1L << 22): Int = {
-    var p = 1
-    var perBlock = n / 16
-    while (perBlock > maxBlockRows && p < 8) { p += 1; perBlock = perBlock / 16 }
-    p
-  }
+  /** aux dump name -> build: the inputs the oracles re-derive from */
+  val auxDumps: Map[String, (SparkSession, String) => DataFrame] =
+    auxes.map(a => a.name -> run(a.build)).toMap
 
   /** Flagship: the full web-text KG pipeline on the sf0.001-scaled corpus. */
   def entry(spark: SparkSession): DataFrame =
     KgPipeline.triples(spark, PagesSynth.pageCount("sf0.001")).toDF()
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ============ web-text KG pipeline (north rule; no SQL equivalent) ======
-    "kg_triples_by_pred" -> ((s, dir) => {
-      KgPipeline.triples(s, PagesSynth.pageCount(dir))
-        .groupBy("pred").agg(count(lit(1)).as("n_triples"))
-    }),
-    "kg_top_entities" -> ((s, dir) => {
-      import s.implicits._
-      val ext = KgPipeline.extracted(PagesSynth.pages(s, PagesSynth.pageCount(dir)))
-      KgPipeline.links(ext, PagesSynth.aliasMap)
-        .groupBy("entity_iri").agg(count(lit(1)).as("n_mentions"))
-    }),
-    "kg_extract_identity" -> ((s, dir) => {
-      KgPipeline.extracted(PagesSynth.pages(s, PagesSynth.pageCount(dir)))
-        .agg(count(lit(1)).as("n_pages"),
-          sum(when(col("extract_ok"), 1L).otherwise(0L)).as("n_byte_identical"))
-    }),
-    "kg_link_relational" -> ((s, dir) => {
-      import s.implicits._
-      val ext = KgPipeline.extracted(PagesSynth.pages(s, PagesSynth.pageCount(dir)))
-      val bc = s.sparkContext.broadcast(MentionDetect.buildDictionary(PagesSynth.aliasMap.keys))
-      val mentions = ext.mapPartitions(_.flatMap(p => MentionDetect.detect(p.url, p.text, bc.value)))
-      // coalesce(1): the alias index HERE is a driver-local 444-row
-      // constant, but LocalTableScan parallelizes it to defaultParallelism
-      // — 32 tasks of 14 rows each feeding the min_by aggregation (r7,
-      // measured 0.5s of task time for 444 rows). Right-size the input to
-      // the data; linkRelational itself is unchanged and scales when the
-      // aliases are a real table.
-      Linker.linkRelational(mentions, PagesSynth.aliases(s).toDF().coalesce(1))
-        .groupBy("entity_iri").agg(count(lit(1)).as("n_links"))
-    }),
-    "kg_comention_triangles" -> ((s, dir) => {
-      // entity co-mention graph (edge = two entities linked on the same
-      // page) -> exact triangle count via degree-ordered orientation
-      // (Triangles.count: hub-proof wedge generation, no cross products)
-      val links = comentionLinks(s, dir)
-      // hub cap BEFORE pair expansion (same discipline as the dedup MaxBucket
-      // fix) — Triangles.groupedPairs bounds a page's C(k,2) fan-out at
-      // C(CoMentionHubCap,2); the oracle mirrors the cap
-      Triangles.count(
-        Triangles.groupedPairs(links, "url", "entity_iri", CoMentionHubCap))
-    }),
-    "kg_degree_hist" -> ((s, dir) => {
-      // degree distribution of the co-mention graph (the first thing anyone
-      // plots over a new KG): canonical edges → per-node degree → histogram
-      val links = comentionLinks(s, dir)
-      val edges = Triangles.canonical(
-        Triangles.groupedPairs(links, "url", "entity_iri", CoMentionHubCap))
-      edges.select(col("src").as("node"))
-        .unionAll(edges.select(col("dst").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("degree"))
-        .groupBy("degree").agg(count(lit(1)).as("n_nodes"))
-    }),
-    "kg_pagerank" -> ((s, dir) => {
-      // entity importance over the co-mention graph: fixed-iteration
-      // PageRank in exact integer (micro-rank) arithmetic — deterministic
-      // across partitionings AND engines, so the oracle can re-derive all
-      // five rounds from the aux_links dump in plain SQL (unrolled CTEs).
-      // Same capped edge derivation as kg_comention_triangles.
-      val links = comentionLinks(s, dir)
-      graft.operators.PageRank.ranks(
-          Triangles.groupedPairs(links, "url", "entity_iri", CoMentionHubCap), iters = 5)
-        .withColumnRenamed("node", "entity_iri")
-    }),
-    "kg_two_hop" -> ((s, dir) => {
-      // 2-hop neighborhood over the co-mention graph from each of the 5
-      // lexicographically-first entities: the KG traversal staple, two
-      // equi-join expansions + distinct (no cross products; at 100 TB the
-      // bucketed-by-subject layout makes these joins shuffle-free —
-      // KgPipelineSpec locks that property)
-      val links = comentionLinks(s, dir)
-      val e0 = Triangles.groupedPairs(links, "url", "entity_iri", CoMentionHubCap)
-      val edges = Triangles.canonical(e0).localCheckpoint()
-      val sym = edges.unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
-      val seeds = edges.select(col("src").as("seed"))
-        .unionAll(edges.select(col("dst").as("seed")))
-        .distinct().orderBy("seed").limit(5)
-      val hop1 = seeds.join(sym, col("seed") === col("src")).select(col("seed"), col("dst").as("n1"))
-      val hop2 = hop1.join(sym.withColumnRenamed("src", "n1").withColumnRenamed("dst", "n2"), "n1")
-      hop1.select(col("seed"), col("n1").as("entity"))
-        .unionAll(hop2.select(col("seed"), col("n2").as("entity")))
-        .filter(col("entity") =!= col("seed"))
-        .distinct()
-        .groupBy("seed").agg(count(lit(1)).as("n_within_2_hops"))
-    }),
-    "kg_stored_neighbors" -> ((s, dir) => {
-      // co-mention neighborhoods computed OVER THE STORED GRAPH TABLE: the
-      // pipeline's triples land in the subject-BUCKETED layout first, and
-      // the traversal then self-joins the stored table on subj (= page)
-      // with the mention-predicate filter pushed into the parquet scan —
-      // the end-to-end proof the bucketed layout pays off (the page-keyed
-      // join and the page-level dedup both run WITHOUT an exchange;
-      // PlanQualitySpec locks it). Output: for each of the 3
-      // lexicographically-first entities, its co-mention neighbors with
-      // shared-page counts.
-      val n = PagesSynth.pageCount(dir)
-      val table = s"graft_stored_graph_$n"
-      graft.util.Warehouse.dropTable(s, table)
-      new graft.pipeline.GraphSink.BucketedTable(buckets = 32).write(KgPipeline.triples(s, n), table)
-      val g = s.table(table)
-      val edges = g.filter(col("pred") === "web:mentions")
-        .select(col("subj").as("page"), col("obj_iri").as("ent")).distinct()
-      val seeds = edges.select(col("ent").as("seed")).distinct().orderBy("seed").limit(3)
-      edges.join(seeds, col("ent") === col("seed"))
-        .select(col("page"), col("seed"))
-        .join(edges.withColumnRenamed("ent", "neighbor"), "page")
-        .filter(col("neighbor") =!= col("seed"))
-        .groupBy("seed", "neighbor").agg(countDistinct(col("page")).as("n_pages"))
-    }),
-    "kg_cdc_changes" -> ((s, dir) => {
-      import s.implicits._
-      // CDC over the snapshot sink, end-to-end: snapshot 1 is the corpus
-      // with every mention of entities whose IRI ends in '3' withheld (a
-      // partially-ingested crawl), snapshot 2 the full corpus; readChanges
-      // must surface EXACTLY the withheld mention triples as inserts with
-      // multiset-exact counts (an entity mentioned twice on a page carries
-      // _n = 2). The oracle re-derives the withheld set independently from
-      // the aux_links dump. This upgrades the sink's CDC path from
-      // spec-locked to oracled.
-      val n = PagesSynth.pageCount(dir)
-      // a commit writes one file per input task, and the synthesized pages
-      // come in up to 4 × cores small ranges: fold them to one task per core
-      // first (a narrow coalesce, still no exchange)
-      val full = KgPipeline.triples(s, n).coalesce(s.sparkContext.defaultParallelism)
-      val prev = full.filter(!(col("pred") === "web:mentions" &&
-        col("obj_iri").endsWith("3")))
-      val target = freshTmpDir(s"graft_cdc_$n")
-      val sink = new graft.pipeline.GraphSink.Snapshotted
-      sink.write(prev, target)
-      sink.write(full, target)
-      val ids = sink.snapshots(s, target)
-      // mention triples are span-distinct (obj_lit carries the span), so a
-      // page re-mentioning an entity surfaces as two changed triples; roll
-      // the delta up per (page, entity) edge — counts stay multiset-exact
-      sink.readChanges(s, target, ids.head, ids.last)
-        .groupBy(col("subj"), col("pred"), col("obj_iri"), col("_change_type"))
-        .agg(sum(col("_n")).as("_n"))
-    }),
-    "kg_warc_roundtrip" -> ((s, dir) => {
-      // the Common-Crawl interchange on-ramp, end-to-end: the page corpus
-      // serialized as member-per-record gzipped WARC files, read back
-      // through the lenient per-file-task parser, and fingerprinted. The
-      // oracle compares against aux_pages — dumped straight from the
-      // synthesized corpus, never touching the Warc code — so url,
-      // capture timestamp (µs-exact), and body bytes (md5) must all
-      // survive the container round trip.
-      val n = PagesSynth.pageCount(dir)
-      val target = freshTmpDir(s"graft_warc_$n")
-      graft.sources.Warc.write(PagesSynth.pages(s, n), target)
-      graft.sources.Warc.read(s, target)
-        .select(col("url"), unix_micros(col("warc_ts")).as("ts_us"),
-          md5(col("html")).as("html_md5"))
-    }),
-    "kg_validate_range" -> ((s, dir) => {
-      import s.implicits._
-      // ontology range-conformance gate over the emitted graph (the
-      // publish-time integrity check), with DETERMINISTIC planted
-      // violations — mention edges rewritten onto unregistered entity
-      // IRIs — proving the gate fires: the conforming corpus contributes
-      // ZERO violations (every linked entity carries rdf:type web:Entity),
-      // so the output is exactly the planted set, which the oracle
-      // re-derives independently from the aux_links dump. The range
-      // declarations come from the graph's own graft:range triples.
-      val n = PagesSynth.pageCount(dir)
-      val base = KgPipeline.triples(s, n)
-      val links = KgPipeline.links(
-        KgPipeline.extracted(PagesSynth.pages(s, n)), PagesSynth.aliasMap)
-      val planted = links.toDF().filter(col("entity_iri").endsWith("7"))
-        .select(col("url").as("subj"), lit("web:mentions").as("pred"),
-          concat(lit("bogus:"), col("entity_iri")).as("obj_iri"),
-          lit(null).cast("string").as("obj_lit"),
-          lit(null).cast("string").as("obj_type"))
-        .as[graft.model.Triple]
-      graft.operators.Validate.rangeViolations(base.unionAll(planted))
-        .select("subj", "pred", "obj_iri").distinct()
-    }),
-    "kg_encoded_degree" -> ((s, dir) => {
-      // mention-degree per entity computed ENTIRELY in id space over the
-      // dictionary-encoded STORED table: the integer pred_id filter pushes
-      // into the parquet scan (min/max stats + dictionary pages — the cheap
-      // scan string tables cannot match at 100 TB, plan-locked), the
-      // aggregation groups fixed-width ints, and no string is ever decoded.
-      // The table is written first with its dictionary sidecars riding
-      // along (page/entity dicts AS DATA).
-      val n = PagesSynth.pageCount(dir)
-      val tmp = freshTmpDir(s"graft_enc_$n") + "/g"
-      pipeline.EncodedGraphTable.write(KgPipeline.encodedTriples(s, n),
-        PagesSynth.pageDict(s, n), PagesSynth.entityDict(s), tmp)
-      pipeline.EncodedGraphTable.readEncoded(s, tmp)
-        .filter(col("pred_id") === KgPipeline.PredMentions)
-        .groupBy("ent_id").agg(count(lit(1)).as("n_mentions"))
-    }),
-    "kg_clustered_rect" -> ((s, dir) => {
-      // rectangle query over the Z-ORDER CLUSTERED stored table — the
-      // access pattern the layout exists for: a range predicate on BOTH
-      // dimensions (a page shard x an entity band) pushes into the scan and
-      // skips most row groups on footer min/max stats, because the Morton
-      // sort gives every row group a small rectangle in (page, entity)
-      // space (measured in ClusteredLayoutSpec: >= 2x fewer row groups
-      // scanned on either dimension alone). Results are layout-invariant;
-      // the oracle re-aggregates the same rectangle from the encoded dump.
-      val n = PagesSynth.pageCount(dir)
-      val tmp = freshTmpDir(s"graft_clus_$n") + "/g"
-      pipeline.EncodedGraphTable.writeClustered(KgPipeline.encodedTriples(s, n),
-        PagesSynth.pageDict(s, n), PagesSynth.entityDict(s), tmp)
-      val maxPage = n - 1
-      pipeline.EncodedGraphTable.readEncoded(s, tmp)
-        .filter(col("pred_id") === KgPipeline.PredMentions &&
-          col("page_id").between(maxPage / 4, maxPage / 2) &&
-          col("ent_id").between(100, 300))
-        .groupBy("ent_id").agg(count(lit(1)).as("n_mentions"))
-    }),
-    "kg_kcore" -> ((s, dir) => {
-      // 3-core of the co-mention graph (iterative peel until every node
-      // keeps >= 3 in-core neighbors): the KG-denoising staple — fringe
-      // entities and single-link noise peel away. The fixpoint is confluent
-      // (unique whatever the peel schedule), which is what lets the oracle
-      // re-derive it as a FIXED 12-round SQL unrolling while the engine
-      // converges adaptively. Same capped edge derivation as kg_pagerank.
-      val links = comentionLinks(s, dir)
-      graft.operators.KCore.nodes(
-          Triangles.groupedPairs(links, "url", "entity_iri", CoMentionHubCap), k = 3)
-        .withColumnRenamed("node", "entity_iri")
-    }),
-    "kg_label_prop" -> ((s, dir) => {
-      // community detection over the co-mention graph: fixed-horizon
-      // SYNCHRONOUS label propagation with min-label tie-break — the
-      // entity-clustering step of KG canonicalization. Synchronous update +
-      // total-order tie-break make round `iters` a pure function of the
-      // edge set, so the oracle re-derives all 4 rounds in unrolled
-      // MATERIALIZED CTEs. Same capped edge derivation as kg_pagerank.
-      val links = comentionLinks(s, dir)
-      graft.operators.LabelProp.communities(
-          Triangles.groupedPairs(links, "url", "entity_iri", CoMentionHubCap), iters = 4)
-        .withColumnRenamed("node", "entity_iri")
-    }),
-    "kg_shortest_paths" -> ((s, dir) => {
-      // multi-source BFS hop distances to a FIXED 6-hop horizon over the
-      // co-mention graph (the general form of kg_two_hop): per seed, how
-      // many entities sit at each hop distance. Fixed rounds = no
-      // convergence clause, so the oracle unrolls the same 6 expansions
-      // as MATERIALIZED CTEs and matches at any graph diameter.
-      val links = comentionLinks(s, dir)
-      val canonEdges = Triangles.canonical(
-        Triangles.groupedPairs(links, "url", "entity_iri", CoMentionHubCap)).localCheckpoint()
-      val seeds = canonEdges.select(col("src").as("seed"))
-        .unionAll(canonEdges.select(col("dst").as("seed")))
-        .distinct().orderBy("seed").limit(3)
-      graft.operators.ShortestPaths.distances(canonEdges, seeds, maxDist = 6)
-        .groupBy("seed", "dist").agg(count(lit(1)).as("n_entities"))
-    }),
-    "kg_entity_assoc" -> ((s, dir) => {
-      // entity-association strength inputs (the PMI numerator and both
-      // denominators as EXACT integers — the log ratio itself is a
-      // consumer-side float): co-mention page count per entity pair plus
-      // each side's page count, all over the same capped link set so the
-      // counts are mutually consistent. The cap is the ONE shared
-      // Triangles.cappedMembers derivation every co-mention query uses
-      // (map-side WindowGroupLimit, plan-locked); denominator joins carry
-      // no hint — AQE broadcasts them while the entity vocabulary is small
-      // and falls back to shuffle when it is not (a web-scale KG has
-      // 10^7-10^9 entities; a forced broadcast would OOM the driver there).
-      val links = comentionLinks(s, dir)
-      val capped = Triangles.cappedMembers(links, "url", "entity_iri", CoMentionHubCap)
-      val pairs = capped.as("a")
-        .join(capped.as("b"), col("a.url") === col("b.url") &&
-          col("a.entity_iri") < col("b.entity_iri"))
-        .groupBy(col("a.entity_iri").as("e1"), col("b.entity_iri").as("e2"))
-        .agg(count(lit(1)).as("n_both"))
-      val pageCounts = capped.groupBy("entity_iri").agg(count(lit(1)).as("n"))
-      pairs
-        .join(pageCounts.select(col("entity_iri").as("e1"), col("n").as("n_e1")), "e1")
-        .join(pageCounts.select(col("entity_iri").as("e2"), col("n").as("n_e2")), "e2")
-        .select("e1", "e2", "n_both", "n_e1", "n_e2")
-    }),
-    "kg_url_canonical" -> ((s, dir) => {
-      // URL canonicalization before IRI minting (graft.functions.UrlCanon:
-      // scheme/host case, default ports, fragments, utm params, trailing
-      // slashes), proven by DETERMINISTIC round-trip: each page's clean URL
-      // is mapped through one of six planted messifications (keyed on the
-      // page ordinal, so the oracle replays it), canonicalized back, and
-      // compared — per mess-case totals make any rule regression visible as
-      // a dropped n_roundtrip. All built-ins, whole-stage-codegen'd,
-      // map-side until the 6-group aggregate.
-      val n = PagesSynth.pageCount(dir)
-      val urls = PagesSynth.pages(s, n).toDF().select("url")
-      val ord = regexp_extract(col("url"), "/p/([0-9]+)$", 1).cast("long")
-      val c = pmod(ord, lit(6L))
-      val scheme = regexp_extract(col("url"), "^([A-Za-z][A-Za-z0-9+.-]*)://", 1)
-      val host = regexp_extract(col("url"), "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)", 1)
-      val rest = regexp_extract(col("url"), "^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*(.*)$", 1)
-      val messy = when(c === 1, concat(upper(scheme), lit("://"), upper(host), rest))
-        .when(c === 2, concat(scheme, lit("://"), host, lit(":443"), rest))
-        .when(c === 3, concat(col("url"), lit("#sec-2")))
-        .when(c === 4, concat(col("url"), lit("?utm_source=feed&utm_medium=cpc")))
-        .when(c === 5, concat(col("url"), lit("/")))
-        .otherwise(col("url"))
-      urls.select(c.as("mess_case"),
-          (graft.functions.UrlCanon.canonical(messy) === col("url")).as("rt"))
-        .groupBy("mess_case").agg(count(lit(1)).as("n_pages"),
-          sum(when(col("rt"), 1L).otherwise(0L)).as("n_roundtrip"))
-    }),
-    "kg_neg_samples" -> ((s, dir) => {
-      // deterministic FILTERED negative sampling for KG-embedding training
-      // (the TransE-family corrupted-triple generator), ENTIRELY IN ID
-      // SPACE over the dictionary-encoded mention stream: canonical
-      // co-mention edges (same hub-capped derivation family as the other
-      // graph queries, here keyed on integer ids), then 3 tail-corruption
-      // candidates per positive from a mixed-congruential function of
-      // (src, dst, k) mod vocab — map-side only — with the filtered
-      // protocol's anti-join against the true edge set. Reproducible
-      // across engines, so the oracle re-derives every candidate and the
-      // filter in plain SQL from the encoded dump.
-      val n = PagesSynth.pageCount(dir)
-      val mentions = KgPipeline.encodedTriples(s, n).toDF()
-        .filter(col("pred_id") === KgPipeline.PredMentions)
-        .select(col("page_id"), col("ent_id"))
-      val edges = Triangles.canonical(
-        Triangles.groupedPairs(mentions, "page_id", "ent_id", CoMentionHubCap))
-      graft.operators.NegativeSampling.tailCorrupt(edges, negsPerEdge = 3)
-    }),
-    "kg_random_walks" -> ((s, dir) => {
-      import s.implicits._
-      // deterministic DeepWalk-style walk corpus over the co-mention
-      // entity graph (id space; same hub-capped edge derivation as
-      // kg_neg_samples): 4 steps, one walk per node — the graph-embedding
-      // training sentences, exactly re-derivable in SQL (an RNG walker
-      // never could be)
-      val n = PagesSynth.pageCount(dir)
-      val mentions = KgPipeline.encodedTriples(s, n).toDF()
-        .filter(col("pred_id") === KgPipeline.PredMentions)
-        .select(col("page_id"), col("ent_id"))
-      val edges = Triangles.canonical(
-        Triangles.groupedPairs(mentions, "page_id", "ent_id", CoMentionHubCap))
-      graft.operators.RandomWalks.walks(edges, steps = 4)
-    }),
-    "kg_node2vec_walks" -> ((s, dir) => {
-      import s.implicits._
-      // node2vec-biased walk corpus (Grover & Leskovec: p=0.5 favors
-      // returns, q=2 favors staying near prev) over the SAME hub-capped
-      // co-mention graph as kg_random_walks — the standard DeepWalk→
-      // node2vec upgrade for KG embeddings; the oracle re-derives the
-      // 3-case bias in unrolled SQL, and p=q=1 reproduces kg_random_walks
-      // exactly (spec-locked)
-      val n = PagesSynth.pageCount(dir)
-      val mentions = KgPipeline.encodedTriples(s, n).toDF()
-        .filter(col("pred_id") === KgPipeline.PredMentions)
-        .select(col("page_id"), col("ent_id"))
-      val edges = Triangles.canonical(
-        Triangles.groupedPairs(mentions, "page_id", "ent_id", CoMentionHubCap))
-      graft.operators.RandomWalks.node2vecWalks(edges, steps = 4, p = 0.5, q = 2.0)
-    }),
-    "kg_node2vec_skipgrams" -> ((s, dir) => {
-      import s.implicits._
-      // the node2vec training corpus end-to-end: biased walks -> (center,
-      // context) pair counts in a ±2 window — what actually feeds the
-      // embedder; shares skipGrams with the DeepWalk path, the oracle
-      // re-derives the biased walks then the window self-join
-      val n = PagesSynth.pageCount(dir)
-      val mentions = KgPipeline.encodedTriples(s, n).toDF()
-        .filter(col("pred_id") === KgPipeline.PredMentions)
-        .select(col("page_id"), col("ent_id"))
-      val edges = Triangles.canonical(
-        Triangles.groupedPairs(mentions, "page_id", "ent_id", CoMentionHubCap))
-      graft.operators.RandomWalks.skipGrams(
-        graft.operators.RandomWalks.node2vecWalks(edges, steps = 4, p = 0.5, q = 2.0),
-        window = 2)
-    }),
-    "kg_fuzzy_link_indexed" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // the SAME resolution as kg_fuzzy_link, run against the STORED
-      // deletion-key alias index (expansion paid once per dictionary,
-      // candidate join consumes the bucketing exchange-free — spec-locked);
-      // identical output, so the two queries share one oracle
-      val aliases = PagesSynth.aliases(s).toDF()
-      val corrupted = aliases.select(col("alias_norm")).distinct()
-        .filter(length(col("alias_norm")) >= 4)
-        .select(expr(
-          "concat(substr(alias_norm, 1, length(alias_norm) DIV 2 - 1), " +
-            "substr(alias_norm, length(alias_norm) DIV 2 + 1))").as("surface"))
-        .distinct()
-      val table = "graft_fuzzy_alias_index"
-      graft.util.Warehouse.dropTable(s, table)
-      graft.link.FuzzyLink.writeAliasIndex(aliases, table)
-      graft.link.FuzzyLink.resolveIndexed(corrupted, aliases, table)
-    }),
-    "kg_fuzzy_link" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // typo-robust entity linking: every alias (len >= 4) corrupted by
-      // deleting its middle character, then resolved back through SymSpell
-      // deletion-neighborhood blocking + exact levenshtein verification
-      // (equi-join blocking with recall 1.0 at distance 1 — property-locked
-      // by FuzzyLinkSpec); top-1 per corrupted surface on the
-      // (lev, prior DESC, iri, alias) total order
-      val aliases = PagesSynth.aliases(s).toDF()
-      val corrupted = aliases.select(col("alias_norm")).distinct()
-        .filter(length(col("alias_norm")) >= 4)
-        .select(expr(
-          "concat(substr(alias_norm, 1, length(alias_norm) DIV 2 - 1), " +
-            "substr(alias_norm, length(alias_norm) DIV 2 + 1))").as("surface"))
-        .distinct()
-      graft.link.FuzzyLink.resolve(corrupted, aliases)
-    }),
-    "kg_link_prediction" -> ((s, dir) => {
-      import s.implicits._
-      // missing-link candidates over the co-mention graph: top 50 non-edge
-      // pairs by common-neighbor count (the KG-completion baseline) — the
-      // wedge expansion reuses the hub-capped groupedPairs discipline, the
-      // top-k plans as TakeOrderedAndProject
-      val n = PagesSynth.pageCount(dir)
-      val mentions = KgPipeline.encodedTriples(s, n).toDF()
-        .filter(col("pred_id") === KgPipeline.PredMentions)
-        .select(col("page_id"), col("ent_id"))
-      // no call-site canonical: LinkPredict owns canonicalization (the
-      // Triangles.count convention) — a second distinct() here would just
-      // double the shuffle
-      val edges = Triangles.groupedPairs(mentions, "page_id", "ent_id", CoMentionHubCap)
-        .select(col("src").cast("long"), col("dst").cast("long"))
-      graft.operators.LinkPredict.commonNeighbors(edges, CoMentionHubCap, k = 50)
-    }),
-    "kg_sameas_canonical" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // entity canonicalization (the north rule's IRI-canonicalization
-      // stage, cluster form): entities sharing a surface alias are
-      // owl:sameAs candidates; the transitive closure (Dedup.components —
-      // the shared min-label machinery) collapses each cluster onto its
-      // lexicographically-least IRI. Only entities with at least one
-      // sameAs peer appear (singletons already ARE canonical). Pair
-      // expansion rides the hub-capped groupedPairs discipline, so one
-      // pathological alias shared by 10^4 entities cannot quadratic-blow
-      val pairs = Triangles.groupedPairs(
-        PagesSynth.aliases(s).toDF().select(col("alias_norm"), col("entity_iri")),
-        "alias_norm", "entity_iri", CoMentionHubCap)
-      graft.dedup.Dedup.components(pairs, "src", "dst")
-        .select(col("id").as("entity_iri"), col("component").as("canonical"))
-    }),
-    "kg_link_prediction_ra" -> ((s, dir) => {
-      import s.implicits._
-      // resource-allocation variant (Zhou et al.): common neighbors
-      // weighted 1/deg as the integer micro-weight 10^12 DIV deg —
-      // low-degree bridges outrank hubs, arithmetic engine-exact
-      val n = PagesSynth.pageCount(dir)
-      val mentions = KgPipeline.encodedTriples(s, n).toDF()
-        .filter(col("pred_id") === KgPipeline.PredMentions)
-        .select(col("page_id"), col("ent_id"))
-      val edges = Triangles.groupedPairs(mentions, "page_id", "ent_id", CoMentionHubCap)
-        .select(col("src").cast("long"), col("dst").cast("long"))
-      graft.operators.LinkPredict.resourceAllocation(edges, CoMentionHubCap, k = 50)
-    }),
-    "kg_triple_split" -> ((s, dir) => {
-      import s.implicits._
-      // KG-embedding eval protocol (the TransE-family standard): edges
-      // split 80/10/10 by content digest, then valid/test edges with an
-      // endpoint UNSEEN in train are dropped — a model cannot rank an
-      // entity it never trained on, and leaving them in corrupts the metric
-      val n = PagesSynth.pageCount(dir)
-      val mentions = KgPipeline.encodedTriples(s, n).toDF()
-        .filter(col("pred_id") === KgPipeline.PredMentions)
-        .select(col("page_id"), col("ent_id"))
-      val edges = Triangles.canonical(
-        Triangles.groupedPairs(mentions, "page_id", "ent_id", CoMentionHubCap))
-        .select(col("src").cast("long"), col("dst").cast("long"))
-      val dg = md5(concat(col("src").cast("string"), lit(":"), col("dst").cast("string")))
-      val withSplit = edges
-        .withColumn("bkt",
-          (ascii(substring(dg, 1, 1)) * 256 + ascii(substring(dg, 2, 1))) % 100)
-        .withColumn("split",
-          when(col("bkt") < 80, "train").when(col("bkt") < 90, "valid").otherwise("test"))
-        .select("src", "dst", "split")
-        .localCheckpoint() // referenced three times below
-      val trainEnts = withSplit.filter(col("split") === "train")
-        .select(explode(array(col("src"), col("dst"))).as("ent")).distinct()
-      withSplit.filter(col("split") === "train").unionAll(
-        withSplit.filter(col("split") =!= "train")
-          .join(trainEnts.withColumnRenamed("ent", "src"), Seq("src"), "left_semi")
-          .join(trainEnts.withColumnRenamed("ent", "dst"), Seq("dst"), "left_semi")
-          .select("src", "dst", "split"))
-    }),
-    "kg_mention_contexts" -> ((s, dir) => {
-      import s.implicits._
-      // NER/entity-linking training-data extraction: a ±20-char context
-      // window around every detected mention, emitted INLINE in the same
-      // narrow detection pass (the text is already in hand — no join, no
-      // shuffle ships the corpus); the oracle re-derives the windows by
-      // joining the mention and text dumps
-      val ext = KgPipeline.extracted(PagesSynth.pages(s, PagesSynth.pageCount(dir)))
-      val bc = s.sparkContext.broadcast(MentionDetect.buildDictionary(PagesSynth.aliasMap.keys))
-      ext.mapPartitions { it =>
-        val dict = bc.value
-        it.flatMap { p =>
-          // window arithmetic in CODE POINTS (the oracle's substr units) —
-          // UTF-16 charAt windows would desync on any supplementary-plane
-          // character, the exact bug class the BPE pair query fixed
-          val total = p.text.codePointCount(0, p.text.length)
-          MentionDetect.detect(p.url, p.text, dict).iterator.map { mn =>
-            val cpS = p.text.codePointCount(0, mn.span_start)
-            val cpE = cpS + p.text.codePointCount(mn.span_start, mn.span_end)
-            val from = math.max(0, cpS - 20)
-            val to = math.min(total, cpE + 20)
-            (p.url, mn.span_start, p.text.substring(
-              p.text.offsetByCodePoints(0, from), p.text.offsetByCodePoints(0, to)))
-          }
-        }
-      }.toDF("url", "span_start", "context")
-    }),
-    "doc_trigram_topk" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // corpus-wide token trigram counts with min-count pruning (the KenLM
-      // n-gram-table prep, one order up from doc_bigram_freq_stats): one
-      // explode + one count agg + TakeOrderedAndProject under the
-      // (freq DESC, trigram) total order
-      t(dir, "documents")
-        .select(split(col("text"), " ").as("ws"))
-        .filter(size(col("ws")) >= 3) // sequence() must never see a negative bound
-        .select(explode(expr(
-          "transform(sequence(0, size(ws) - 3), i -> concat(ws[i], ' ', ws[i+1], ' ', ws[i+2]))"))
-          .as("trigram"))
-        .groupBy("trigram").agg(count(lit(1)).as("freq"))
-        .filter(col("freq") >= 2) // count pruning: singleton tails stay out of the table
-        .orderBy(desc("freq"), asc("trigram")).limit(100)
-    }),
-    "kg_walk_skipgrams" -> ((s, dir) => {
-      import s.implicits._
-      // the embedder's input: (center, context) pair counts within a
-      // ±2-step window over the kg_random_walks corpus — one walk-keyed
-      // self-join (≤ 5 rows per key) + one pair aggregation
-      val n = PagesSynth.pageCount(dir)
-      val mentions = KgPipeline.encodedTriples(s, n).toDF()
-        .filter(col("pred_id") === KgPipeline.PredMentions)
-        .select(col("page_id"), col("ent_id"))
-      val edges = Triangles.canonical(
-        Triangles.groupedPairs(mentions, "page_id", "ent_id", CoMentionHubCap))
-      graft.operators.RandomWalks.skipGrams(
-        graft.operators.RandomWalks.walks(edges, steps = 4), window = 2)
-    }),
-    "kg_heavy_entities" -> ((s, dir) => {
-      // heavy entities per language: entities owning > 1/32 of their
-      // language's mention stream. Sketch-prune + exact-verify: a
-      // per-group Misra-Gries sketch (graft_heavy_hitters, k=64 — a
-      // native TypedImperativeAggregate with bounded O(k) mergeable state,
-      // partial-aggregated map-side) nominates candidates; its guarantee
-      // (nothing above n/(k+1) = n/65 is ever dropped) makes the candidate
-      // set a superset of the n/32 threshold, and one exact count over the
-      // candidate-pruned stream makes the OUTPUT exact and
-      // partition-invariant even though the sketch itself is neither. At
-      // 100 TB the sketch pass replaces an exact full aggregation whose
-      // per-group state is O(vocabulary).
-      val n = PagesSynth.pageCount(dir)
-      val ext = KgPipeline.extracted(PagesSynth.pages(s, n)).toDF().select("url", "lang")
-      val links = KgPipeline.links(
-        KgPipeline.extracted(PagesSynth.pages(s, n)), PagesSynth.aliasMap)
-        .toDF().select("url", "entity_iri")
-      val stream = links.join(ext, "url").select("lang", "entity_iri").localCheckpoint()
-      graft.functions.MisraGriesAgg.register(s)
-      val cands = stream.groupBy("lang")
-        .agg(graft.functions.MisraGriesAgg.graft_heavy_hitters(col("entity_iri"), 64).as("sketch"))
-        .select(col("lang"), explode(map_keys(col("sketch"))).as("entity_iri"))
-      val totals = stream.groupBy("lang").agg(count(lit(1)).as("n_lang"))
-      stream.join(cands, Seq("lang", "entity_iri"))
-        .groupBy("lang", "entity_iri").agg(count(lit(1)).as("n_mentions"))
-        .join(totals, "lang")
-        .filter(col("n_mentions") * 32 > col("n_lang"))
-        .select("lang", "entity_iri", "n_mentions")
-    }),
-    "doc_token_hist" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // sequence-length histogram (64-token buckets) for packing/bucketing
-      // planners: one narrow projection + one tiny aggregation — the
-      // O(buckets) result a curriculum or shard planner reads instead of
-      // scanning the corpus
-      t(dir, "documents").select(
-          when(length(trim(col("text"))) === 0, 0L)
-            .otherwise(size(split(trim(col("text")), "\\s+")).cast("long")).as("n_tokens"))
-        .select(expr("n_tokens DIV 64").as("bucket"))
-        .groupBy("bucket").agg(count(lit(1)).as("n_docs"))
-    }),
-    "kg_link_precision_recall" -> ((s, dir) => {
-      import s.implicits._
-      val n = PagesSynth.pageCount(dir)
-      val ext = KgPipeline.extracted(PagesSynth.pages(s, n))
-      val produced = KgPipeline.links(ext, PagesSynth.aliasMap)
-        .select(col("url"), col("surface"), col("entity_iri")).distinct()
-      val gold = PagesSynth.golds(s, n)
-        .select(col("url"), col("surface"), col("entity_iri")).distinct()
-      val tp = produced.intersect(gold).count().toDouble
-      val p = if (produced.count() == 0) 1.0 else tp / produced.count()
-      val r = if (gold.count() == 0) 1.0 else tp / gold.count()
-      Seq((p, r)).toDF("precision", "recall")
-    }),
-
-    // ============ relational operators over the TPC-H-ish tables ============
-    "q1_pricing" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      t(dir, "lineitem")
-        .filter(col("l_shipdate") <= lit("1998-09-01"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          sum(col("l_quantity")).cast("bigint").as("sum_qty"),
-          sum(round(col("l_extendedprice") * 100)).cast("bigint").as("sum_base_cents"),
-          sum(round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100)).cast("bigint").as("sum_disc_cents"),
-          count(lit(1)).as("count_order"))
-    }),
-    "q3_priority_revenue" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val c = t(dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-      val o = t(dir, "orders")
-      val l = t(dir, "lineitem")
-      // r7 (guide §3.1): without stats the planner estimated the filtered
-      // customer⋈orders side LARGER than lineitem and broadcast the FACT
-      // table (600k-row hash relation built serially on the driver, plan-
-      // captured in plans/r07/q3_priority_revenue_before.txt). The
-      // mktsegment filter keeps c⋈o at ~1/5 of orders — broadcast that
-      // side explicitly and stream lineitem, the only shape that survives
-      // a fact table too big to broadcast. Results unchanged (same inner
-      // equi-join).
-      broadcast(c.join(o, c("c_custkey") === o("o_custkey")))
-        .join(l, o("o_orderkey") === l("l_orderkey"))
-        .groupBy("o_orderpriority")
-        .agg(
-          sum(round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100)).cast("bigint").as("revenue_cents"),
-          countDistinct(col("o_orderkey")).as("n_orders"))
-    }),
-    "q_join_broadcast" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val c = t(dir, "customer"); val n = t(dir, "nation"); val r = t(dir, "region")
-      c.join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-        .groupBy(col("r_name"))
-        .agg(count(lit(1)).as("n_customers"),
-          sum(round(col("c_acctbal") * 100)).cast("bigint").as("acctbal_cents"))
-    }),
-    "q_window_topk" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val w = Window.partitionBy("o_custkey").orderBy(desc("o_totalprice"), asc("o_orderkey"))
-      t(dir, "orders")
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 3)
-        .select(col("o_custkey"), col("o_orderkey"), col("rnk"))
-    }),
-    "q_anti_join" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val c = t(dir, "customer")
-      val o = t(dir, "orders").filter(col("o_orderdate") < lit("1995-07-01"))
-      c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
-        .groupBy("c_nationkey").agg(count(lit(1)).as("n_customers_no_orders"))
-    }),
-    "q_semi_join" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val sup = t(dir, "supplier"); val l = t(dir, "lineitem")
-      sup.join(l, sup("s_suppkey") === l("l_suppkey"), "left_semi")
-        .groupBy("s_nationkey").agg(count(lit(1)).as("n_suppliers_with_lineitems"))
-    }),
-    "q_setops" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val l = t(dir, "lineitem")
-      val early = l.filter(col("l_shipdate") < lit("1996-01-01")).select("l_orderkey").distinct()
-      val late = l.filter(col("l_shipdate") >= lit("1996-01-01")).select("l_orderkey").distinct()
-      early.except(late).withColumnRenamed("l_orderkey", "early_only_orderkey")
-    }),
-    "q_cube" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      t(dir, "lineitem")
-        .cube("l_returnflag", "l_linestatus")
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("l_quantity")).cast("bigint").as("sum_qty"))
-        .select(
-          coalesce(col("l_returnflag"), lit("ALL")).as("returnflag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("linestatus"),
-          col("n_rows"), col("sum_qty"))
-    }),
-    "q_top_orders" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // global sort + limit: plans as TakeOrderedAndProject (no full sort)
-      t(dir, "orders")
-        .orderBy(desc("o_totalprice"), asc("o_orderkey"))
-        .limit(100)
-        .select(col("o_orderkey"),
-          round(col("o_totalprice") * 100).cast("bigint").as("totalprice_cents"))
-    }),
-    "q_pivot" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      t(dir, "lineitem")
-        .groupBy("l_linestatus")
-        .pivot("l_returnflag", Seq("A", "N", "R"))
-        .agg(sum(col("l_quantity")).cast("bigint"))
-        .select(col("l_linestatus"), col("A").as("qty_a"), col("N").as("qty_n"), col("R").as("qty_r"))
-    }),
-    "q_grouping_sets" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // explicit grouping sets (not derivable from rollup/cube): by flag,
-      // by status, and grand total — via SQL on a temp view
-      t(dir, "lineitem").createOrReplaceTempView("lineitem_gs")
-      s.sql(
-        """SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
-                  COALESCE(l_linestatus, 'ALL') AS linestatus,
-                  COUNT(*) AS n_rows
-           FROM lineitem_gs
-           GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""")
-    }),
-    "q_rollup" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      t(dir, "lineitem")
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(count(lit(1)).as("n_rows"))
-        .select(
-          coalesce(col("l_returnflag"), lit("ALL")).as("returnflag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("linestatus"),
-          col("n_rows"))
-    }),
-    "q_cheapest_lineitem" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // correlated scalar subquery: Catalyst decorrelates it into an
-      // aggregate + equi left-outer join (never a per-row re-scan), which
-      // the global no-cartesian plan lock verifies; orders with no
-      // lineitems surface NULL, mirrored by the oracle
-      t(dir, "lineitem").createOrReplaceTempView("li_csq")
-      t(dir, "orders").createOrReplaceTempView("o_csq")
-      s.sql(
-        """SELECT o_orderkey,
-                  CAST((SELECT MIN(ROUND(l_extendedprice * 100)) FROM li_csq
-                        WHERE l_orderkey = o_orderkey) AS BIGINT) AS min_price_cents
-           FROM o_csq
-           WHERE o_totalprice > 400000""")
-    }),
-    "ev_hourly" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      t(dir, "events")
-        .groupBy(col("event_type"), unix_timestamp(date_trunc("hour", col("ts"))).as("hour_epoch"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(round(col("value") * 100)).cast("bigint").as("value_cents"))
-    }),
-    "ev_asof_join" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // each purchase aligned to the user's most recent preceding view
-      val ev = t(dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-      val views = ev.filter(col("event_type") === "view")
-      graft.operators.AsofJoin.backward(purchases, views, "user_id", "ts", "ts", Seq("event_id"))
-        .select(col("event_id"), col("asof_event_id").as("view_event_id"))
-    }),
-    "ev_asof_join_native" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // same query through the native sort-merge AsofJoinExec (custom
-      // LogicalPlan + Strategy + SparkPlan, graft/plans/AsofJoinPlan.scala):
-      // per-side sorts + a streaming one-candidate merge instead of the
-      // composed union+window. Shares ev_asof_join's oracle — the two paths
-      // must be row-identical.
-      val ev = t(dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-      val views = ev.filter(col("event_type") === "view")
-      graft.plans.AsofJoinNative.backward(purchases, views, "user_id", "ts", "ts", Seq("event_id"))
-        .select(col("event_id"), col("asof_event_id").as("view_event_id"))
-    }),
-    "ev_asof_join_tol" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // tolerance-bounded variant, microsecond-exact (oracled against DuckDB
-      // ASOF + epoch_us predicate). 203 s is chosen so the sf0.01 corpus
-      // contains a match 0.45 s PAST the cutoff — second-truncated tolerance
-      // arithmetic would wrongly keep it, so the oracle locks the us path.
-      val ev = t(dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-      val views = ev.filter(col("event_type") === "view")
-      graft.operators.AsofJoin.backward(purchases, views, "user_id", "ts", "ts",
-          Seq("event_id"), toleranceSec = Some(203))
-        .select(col("event_id"), col("asof_event_id").as("view_event_id"))
-    }),
-    "ev_asof_join_native_tol" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // the native operator's tolerance path (merge-side µs cutoff,
-      // AsofJoinExec) against the same DuckDB epoch_us oracle as
-      // ev_asof_join_tol — including its 0.45-s-past-cutoff trap row
-      val ev = t(dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-      val views = ev.filter(col("event_type") === "view")
-      graft.plans.AsofJoinNative.backward(purchases, views, "user_id", "ts", "ts",
-          Seq("event_id"), toleranceSec = Some(203))
-        .select(col("event_id"), col("asof_event_id").as("view_event_id"))
-    }),
-    "ev_asof_join_fwd" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // forward (next-event) direction: for each purchase, the EARLIEST view
-      // at-or-after it — ts sorts DESCENDING into the same streaming merge
-      // (plans/AsofJoinPlan.scala); oracled against DuckDB's native forward
-      // ASOF (ON p.ts <= v.ts). The corpus has no (user_id, ts) ties among
-      // views at any sf, so the pick is deterministic.
-      val ev = t(dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-      val views = ev.filter(col("event_type") === "view")
-      graft.plans.AsofJoinNative.forward(purchases, views, "user_id", "ts", "ts", Seq("event_id"))
-        .select(col("event_id"), col("asof_event_id").as("view_event_id"))
-    }),
-    "ev_value_1h_running" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // RANGE-frame window: per user, the running 1-hour sum of event value
-      // — a time-range frame over µs epochs (rowsBetween cannot express
-      // this; the frame is value-based). Cents-exact like every money agg.
-      val w = Window.partitionBy("user_id")
-        .orderBy(unix_micros(col("ts").cast("timestamp")))
-        .rangeBetween(-3600L * 1000000L, 0L)
-      t(dir, "events")
-        .withColumn("cents", round(col("value") * 100).cast("bigint"))
-        .select(col("event_id"),
-          sum("cents").over(w).as("value_1h_cents"))
-    }),
-    "q_rank_stats" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // analytic rank family over customers per nation: ntile quartiles,
-      // percent_rank, cume_dist — exact rational doubles from identical
-      // integer ranks on both engines
-      val w = Window.partitionBy("c_nationkey").orderBy(col("c_acctbal"), col("c_custkey"))
-      t(dir, "customer").select(
-        col("c_custkey"),
-        ntile(4).over(w).as("quartile"),
-        percent_rank().over(w).as("pct_rank"),
-        cume_dist().over(w).as("cume"))
-    }),
-    "ev_funnel" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // ordered-stage funnel (signup → view → purchase by FIRST occurrence
-      // per user): one conditional-min aggregation per user + a global
-      // rollup — one shuffle, no self-joins; NULL stage times fall out of
-      // the strict < comparisons identically on both engines
-      t(dir, "events").groupBy("user_id").agg(
-          min(when(col("event_type") === "signup", col("ts"))).as("t_signup"),
-          min(when(col("event_type") === "view", col("ts"))).as("t_view"),
-          min(when(col("event_type") === "purchase", col("ts"))).as("t_purchase"))
-        .agg(count(lit(1)).as("n_users"),
-          sum(when(col("t_signup").isNotNull, 1L).otherwise(0L)).as("n_signup"),
-          sum(when(col("t_signup") < col("t_view"), 1L).otherwise(0L)).as("n_signup_then_view"),
-          sum(when(col("t_signup") < col("t_view") && col("t_view") < col("t_purchase"), 1L)
-            .otherwise(0L)).as("n_full_funnel"))
-    }),
-    "ev_sessions" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val w = Window.partitionBy("user_id").orderBy(asc("ts"), asc("event_id"))
-      t(dir, "events")
-        .withColumn("prev_ts", lag(col("ts"), 1).over(w))
-        .withColumn("new_session",
-          // exact interval compare — ts carries microseconds, so truncated
-          // unix_timestamp arithmetic would be boundary-unsafe vs the oracle
-          when(col("prev_ts").isNull ||
-            col("ts") > col("prev_ts") + expr("INTERVAL 1800 SECONDS"), 1L).otherwise(0L))
-        .groupBy("user_id").agg(sum(col("new_session")).as("n_sessions"),
-          count(lit(1)).as("n_events"))
-    }),
-    "ev_session_window" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // native session_window aggregation (the streamable sessionizer —
-      // EventStreamSpec proves streaming/batch parity); the oracle is the
-      // independent lag-based definition, equivalent because the corpus has
-      // no exact-gap boundaries (asserted by the oracle's guard CTE)
-      graft.streaming.EventStream.sessionCounts(t(dir, "events"), "30 minutes")
-    }),
-    "ev_range_join" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // views within the hour before each purchase, banded range join
-      val ev = t(dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-      val views = ev.filter(col("event_type") === "view")
-      graft.operators.RangeJoin.band(purchases, views, "user_id", "ts", "ts",
-          beforeSec = 3600, afterSec = 0, rightPayload = Seq("event_id"))
-        .groupBy("event_id").agg(count(lit(1)).as("n_views_1h"))
-    }),
-
-    // ============ training-data ops: documents ==============================
-    "doc_dedup_exact" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      Dedup.exactGroups(t(dir, "documents"))
-    }),
-    "doc_dedup_keep" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      Dedup.exactKeep(t(dir, "documents"))
-    }),
-    "doc_dup_spans" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // span-level exact dedup (Lee et al.): maximal token runs duplicated
-      // ANYWHERE in the corpus — the unit a training pipeline cuts, where
-      // doc-level dedup can only drop whole documents. Integer-exact;
-      // see Dedup.dupSpans for the gram/semi-join/islands shape.
-      Dedup.dupSpans(t(dir, "documents"), k = 5)
-    }),
-    "doc_dup_cut" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // the APPLY side of span dedup: rewrite every document with its
-      // non-canonical duplicated runs removed (first corpus occurrence
-      // keeps its text — deterministic canonical = min (doc_id, pos)).
-      // String-exact vs the oracle; see Dedup.cutSpans.
-      Dedup.cutSpans(t(dir, "documents"), k = 5)
-    }),
-    "q_approx_distinct" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // approx_count_distinct (HLL++) beside the exact count; the oracle
-      // covers the exact column, the approx column is bounded in tests
-      t(dir, "lineitem").agg(
-        countDistinct(col("l_partkey")).as("exact_parts"),
-        approx_count_distinct(col("l_partkey")).as("approx_parts"))
-        .select(col("exact_parts"),
-          (abs(col("approx_parts") - col("exact_parts")) / col("exact_parts") <= 0.1).as("approx_within_10pct"))
-    }),
-    "doc_token_count" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      t(dir, "documents").select(
-        col("doc_id"),
-        when(length(trim(col("text"))) === 0, 0)
-          .otherwise(size(split(trim(col("text")), "\\s+"))).as("n_ws_tokens"))
-    }),
-    "doc_bpe_pair_counts" -> ((s, dir) => {
-      import s.implicits._
-      implicit val sp: SparkSession = s
-      // BPE training round 1, fully SQL-checkable: corpus-weighted adjacent
-      // character-pair counts over the pre-token frequency table (the ONE
-      // corpus-scale pass of tokenizer training), top 50 under the total
-      // (freq DESC, l, r) order the trainer's argmax uses
-      Bpe.wordFreqs(t(dir, "documents")).as[(String, Long)]
-        .flatMap { case (w, f) =>
-          // CODE-POINT symbols (Bpe.splitSymbols — the trainer's own split),
-          // not UTF-16 charAt: a supplementary-plane character would desync
-          // this query from both the trainer and the oracle's substr
-          val syms = Bpe.splitSymbols(w)
-          (0 until syms.length - 1).iterator.map(i => (syms(i), syms(i + 1), f)) }
-        .toDF("l", "r", "f")
-        .groupBy("l", "r").agg(sum("f").as("freq"))
-        .orderBy(desc("freq"), asc("l"), asc("r")).limit(50)
-    }),
-    "doc_bpe_merges" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // distributed BPE tokenizer TRAINING (12 merges): corpus touched once
-      // (word-freq agg), every round then O(vocab) — the map-reduce BPE
-      // shape. Deterministic total argmax order, so the merge table is a
-      // pure function of the corpus; oracle = sf-keyed frozen parquet
-      // (drift lock), independence comes from BpeSpec's reference-impl
-      // parity and the SQL-exact round-1 query above
-      Bpe.learnMerges(t(dir, "documents"), rounds = 12)
-    }),
-    "doc_bpe_encode" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // the tokenizer's inference side over its own learned table: train 12
-      // merges (bounded local loop), replay them across the corpus, count
-      // tokens per doc — the end-to-end train→encode contract. Frozen
-      // oracle (drift lock); independence comes from BpeSpec's reference
-      // parity on both the trainer and the encoder
-      val docs = t(dir, "documents")
-      val merges = Bpe.learnMergesLocal(docs, rounds = 12).collect()
-        .sortBy(_.getInt(0)).map(r => (r.getString(1), r.getString(2)))
-      Bpe.encode(docs, merges)
-    }),
-    "doc_token_count_bpe" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // BPE-style pre-tokenizer count; fully declarative (codegen regex) —
-      // the frozen scanner equivalent lives in Tokenize.bpeTokenCount
-      t(dir, "documents").select(
-        col("doc_id"),
-        size(regexp_extract_all(col("text"),
-          lit(graft.extract.Tokenize.BpePattern), lit(0))).as("n_bpe_tokens"))
-    }),
-    "doc_quality_sql" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      t(dir, "documents").select(
-        col("doc_id"),
-        length(col("text")).as("n_chars"),
-        (length(col("text")) - length(regexp_replace(col("text"), "[.,!?;:]", ""))).as("n_punct"),
-        (length(col("text")) - length(regexp_replace(col("text"), "[0-9]", ""))).as("n_digits"))
-    }),
-    "doc_tfidf_topterms" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // log-free idf (tf * N/df — engine-exact doubles); bounded doc set
-      // keeps the dump small, the operator itself is corpus-wide
-      Tfidf.topTerms(t(dir, "documents").filter(col("doc_id") < 100)
-        .select("doc_id", "text"), k = 3)
-    }),
-    "doc_length_quantiles" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // exact discrete per-group quantiles, pure integer rank arithmetic
-      // (ceil(p*n) as (p*n + 99) DIV 100 — no float index math to drift
-      // cross-engine). Per-lang sort is the exact path for bounded group
-      // counts; unbounded groups take approx_percentile instead.
-      val w = Window.partitionBy("lang").orderBy(col("n_chars"))
-      t(dir, "documents").select("lang", "n_chars")
-        .withColumn("rn", row_number().over(w))
-        .withColumn("n", count(lit(1)).over(Window.partitionBy("lang")))
-        .groupBy("lang").agg(
-          max(when(col("rn") === expr("(50*n + 99) DIV 100"), col("n_chars"))).as("p50"),
-          max(when(col("rn") === expr("(90*n + 99) DIV 100"), col("n_chars"))).as("p90"),
-          max(when(col("rn") === expr("(99*n + 99) DIV 100"), col("n_chars"))).as("p99"))
-    }),
-    "doc_pack_shards" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // GPT-style sequence packing: per language, documents are concatenated
-      // in doc_id order into one token stream chopped into fixed-capacity
-      // shards (docs may straddle a boundary; shard_id/shard_offset locate
-      // the start). Hierarchical two-phase prefix sum (see packShards) — a
-      // flat Window.partitionBy(lang) would hand ONE task the running sum
-      // over an entire language (80% of a web corpus is English).
-      packShards(t(dir, "documents"), cap = 4096L)
-    }),
-    "doc_chunk_sliding" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // sliding-window chunking for context-length-bounded training
-      // (size 128, stride 64, token = whitespace word): chunk index set is
-      // computed arithmetically and exploded — a narrow rowwise op, no
-      // shuffle; every doc yields >= 1 chunk (empty docs a zero-length one)
-      val chunk = 128; val stride = 64
-      t(dir, "documents").select(col("doc_id"),
-          when(length(trim(col("text"))) === 0, 0)
-            .otherwise(size(split(trim(col("text")), "\\s+"))).as("n_tokens"))
-        .withColumn("n_chunks",
-          when(col("n_tokens") <= chunk, lit(1L))
-            .otherwise(expr(s"(n_tokens - $chunk + $stride - 1) DIV $stride + 1")))
-        .select(col("doc_id"), col("n_tokens"),
-          explode(expr("sequence(0L, n_chunks - 1)")).as("chunk_id"))
-        .select(col("doc_id"), col("chunk_id"),
-          (col("chunk_id") * stride).as("tok_start"),
-          least(lit(chunk), col("n_tokens") - col("chunk_id") * stride).as("tok_len"))
-    }),
-    "doc_redact" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // regex redaction pass (blocklist terms + a PII email pattern),
-      // fully codegen'd — per-category match counts plus the digest of the
-      // redacted text. Patterns stay in the Java∩RE2 common dialect so the
-      // oracle replays them exactly; the blocklist alternation is the
-      // scale shape for term lists small enough to inline (bigger lists
-      // compile to one automaton the same way). The email pattern matches
-      // nothing on this synthetic corpus (no '@') — kept as the
-      // negative-case column.
-      val blockRe = "\\b(customer|secret|password)\\b"
-      val emailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-      t(dir, "documents").select(col("doc_id"),
-        size(regexp_extract_all(col("text"), lit(blockRe), lit(0))).as("n_blocked"),
-        size(regexp_extract_all(col("text"), lit(emailRe), lit(0))).as("n_emails"),
-        md5(regexp_replace(regexp_replace(col("text"), emailRe, "<EMAIL>"),
-          blockRe, "<TERM>")).as("redacted_md5"))
-    }),
-    "doc_repetition" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // Gopher/RefinedWeb repetition-filter inputs (integer counts; the
-      // ratio thresholds live with the consumer)
-      graft.text.Repetition.stats(t(dir, "documents").select("doc_id", "text"))
-    }),
-    "doc_bigram_freq_stats" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // bigram LM-frequency quality signal (the integer-exact core of a
-      // KenLM-style filter): per doc, its bigram count plus the min and sum
-      // of the CORPUS frequency of its bigrams — a low min/avg marks text
-      // unlike the corpus (garbled or boilerplate-chopped). Two shuffles,
-      // both keyed on the bigram (the count agg, then the join back);
-      // integer outputs only, no float log-probs, so the result is
-      // engine-exact vs the oracle. Docs with < 2 tokens have no bigrams
-      // and emit no row (inner-join semantics, mirrored in the oracle).
-      val bg = t(dir, "documents")
-        .select(col("doc_id"), split(col("text"), " ").as("ws"))
-        .filter(size(col("ws")) >= 2)
-        .select(col("doc_id"), explode(
-          expr("transform(sequence(0, size(ws) - 2), i -> concat(ws[i], ' ', ws[i+1]))"))
-          .as("bigram"))
-      val freq = bg.groupBy("bigram").agg(count(lit(1)).as("freq"))
-      bg.join(freq, "bigram")
-        .groupBy("doc_id").agg(
-          count(lit(1)).as("n_bigrams"),
-          min("freq").as("min_freq"),
-          sum("freq").as("sum_freq"))
-    }),
-    "doc_quality_score" -> ((s, dir) => {
-      import s.implicits._
-      implicit val sp: SparkSession = s
-      t(dir, "documents").select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
-        .mapPartitions(_.map { case (id, txt) =>
-          val q = TextOps.quality(txt)
-          (id, q.n_tokens, q.stopword_hits, math.round(q.score * 1000))
-        })
-        .toDF("doc_id", "n_tokens", "stopword_hits", "score_milli")
-    }),
-    "doc_curation" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // canonical curation flow: exact-dedup keep + length + punct-ratio
-      // gates, with a reject reason per document. The text-derived features
-      // are projected in a narrow pass BEFORE the dedup window so only the
-      // 32-byte digest and two ints cross the exchange — windowing the raw
-      // rows would multiply shuffle bytes by the document size at 100 TB.
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("text_md5")
-      t(dir, "documents")
-        .select(col("doc_id"), md5(col("text")).as("text_md5"),
-          length(col("text")).as("n_chars"),
-          (length(col("text")) - length(regexp_replace(col("text"), "[.,!?;:]", ""))).as("n_punct"))
-        .withColumn("canonical", col("doc_id") === min("doc_id").over(w))
-        .select(
-          col("doc_id"),
-          when(!col("canonical"), "duplicate")
-            .when(col("n_chars") < 100, "too_short")
-            .when(col("n_punct") * 10 > col("n_chars"), "punct_heavy")
-            .otherwise("keep").as("verdict"))
-    }),
-    "doc_split_md5" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // content-addressed train/val/test assignment, DuckDB-replicable:
-      // first md5 hex nibble -> 16 stable buckets -> 12/2/2 split
-      t(dir, "documents").select(
-        col("doc_id"),
-        when(substring(md5(col("text")), 1, 1).isin("0", "1"), "val")
-          .when(substring(md5(col("text")), 1, 1).isin("2", "3"), "test")
-          .otherwise("train").as("split"))
-    }),
-    "doc_split_hash64" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // same op through the native codegen expression (frozen engine hash)
-      graft.functions.Hash64Expr.register(s)
-      t(dir, "documents").select(
-        col("doc_id"),
-        pmod(graft.functions.Hash64Expr.graft_hash64(col("text")), lit(10)).as("bucket"))
-    }),
-    "doc_langid" -> ((s, dir) => {
-      import s.implicits._
-      implicit val sp: SparkSession = s
-      t(dir, "documents").select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
-        .mapPartitions(_.map { case (id, text) => (id, TextOps.langId(text)) })
-        .toDF("doc_id", "lang_pred")
-    }),
-    "doc_simhash" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      Dedup.simhashes(t(dir, "documents"))
-    }),
-    "doc_fingerprint" -> ((s, dir) => {
-      import s.implicits._
-      implicit val sp: SparkSession = s
-      t(dir, "documents").select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
-        .mapPartitions(_.map { case (id, txt) => (id, TextOps.fingerprint64(txt)) })
-        .toDF("doc_id", "fingerprint64")
-    }),
-    "doc_ngram_jaccard" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      bigramJaccardPairs(t(dir, "documents"))
-    }),
-    "doc_decontaminate" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // benchmark decontamination: flag train docs (doc_id >= 50) sharing any
-      // word 4-gram with the eval set (doc_id < 50). Relational shingle
-      // equi-join; at corpus scale the eval shingle set broadcasts (eval sets
-      // are small) and shingles ride as hash64 keys instead of strings.
-      val docs = t(dir, "documents")
-      val sh = docs.withColumn("ws", split(col("text"), " "))
-        .filter(size(col("ws")) >= 4)
-        .select(col("doc_id"), explode(array_distinct(expr(
-          "transform(sequence(1, size(ws) - 3), i -> array_join(slice(ws, i, 4), ' '))"))).as("sh"))
-      val ev = sh.filter(col("doc_id") < 50).select("sh").distinct()
-      val hits = sh.filter(col("doc_id") >= 50).join(broadcast(ev), "sh")
-        .select("doc_id").distinct()
-      docs.filter(col("doc_id") >= 50).select(col("doc_id"))
-        .join(hits.withColumn("hit", lit(true)), Seq("doc_id"), "left_outer")
-        .select(col("doc_id"), coalesce(col("hit"), lit(false)).as("contaminated"))
-    }),
-    "doc_dup_components" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // near-dup pairs -> transitive closure -> cluster label per document:
-      // the keep-one-per-cluster primitive (Dedup.components, iterative
-      // min-label propagation). Oracled end-to-end: the pair stage is the
-      // SQL-replicable bigram-Jaccard and the closure a recursive CTE.
-      graft.dedup.Dedup.components(
-          bigramJaccardPairs(t(dir, "documents")).select("doc_a", "doc_b"))
-        .select(col("id").as("doc_id"), col("component"))
-    }),
-    "doc_dup_components_logstar" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // same function as doc_dup_components through the O(log n)
-      // large-star/small-star contraction (the adversarial-diameter path);
-      // shares the recursive-CTE oracle because the outputs must be equal
-      graft.dedup.Dedup.componentsLogStar(
-          bigramJaccardPairs(t(dir, "documents")).select("doc_a", "doc_b"))
-        .select(col("id").as("doc_id"), col("component"))
-    }),
-    "doc_minhash_pairs" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      Dedup.minhashPairs(t(dir, "documents"), threshold = 0.3)
-        .select(col("doc_a"), col("doc_b")) // drop float jaccard from compare
-    }),
-    "doc_dedup_telemetry" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // no silent caps: per-run LSH bucket stats + exact dropped-pair count
-      Dedup.capTelemetry(Dedup.minhashBands(t(dir, "documents")))
-    }),
-    "doc_minhash_calibration" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // estimator-vs-truth calibration inside the LSH candidate region:
-      // integer-exact (matching signature slots, exact shingle inter/union)
-      // so the curve reproduces bit-for-bit; the oracle re-derives pairs,
-      // slot matches, and exact Jaccard from the aux dumps in DuckDB
-      Dedup.minhashCalibration(t(dir, "documents"))
-    }),
-    "doc_dedup_incremental" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // per-ingest-batch catch-up dedup: every 4th doc plays the NEW batch,
-      // the rest the existing corpus; only cross (new, old) pairs are banded,
-      // joined, and exact-verified — the old corpus is never re-paired with
-      // itself (the per-batch cost a 100 TB crawl pipeline pays per ingest)
-      val docs = t(dir, "documents")
-      Dedup.incrementalPairs(
-          docs.filter(col("doc_id") % 4 === 0),
-          docs.filter(col("doc_id") % 4 =!= 0), threshold = 0.3)
-        .select(col("doc_new"), col("doc_old")) // drop float jaccard from compare
-    }),
-    "doc_dedup_index" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // the STORED-INDEX form of doc_dedup_incremental (the actual per-
-      // ingest shape at 100 TB): the existing corpus's band rows are
-      // materialized ONCE as a (band, band_hash)-bucketed table, and the
-      // new batch's candidate join consumes that bucketing exchange-free
-      // (DedupIndexSpec locks the plan). Same split, same threshold, same
-      // oracle — the stored path must reproduce the recompute path exactly.
-      val docs = t(dir, "documents")
-      val table = "graft_band_index_" + new java.io.File(dir).getName.replace('.', '_')
-      graft.util.Warehouse.dropTable(s, table)
-      val oldSide = docs.filter(col("doc_id") % 4 =!= 0)
-      Dedup.writeBandIndex(oldSide, table)
-      Dedup.incrementalPairsIndexed(
-          docs.filter(col("doc_id") % 4 === 0), oldSide, table, threshold = 0.3)
-        .select(col("doc_new"), col("doc_old"))
-    }),
-    "doc_simhash_pairs" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      Dedup.simhashPairs(t(dir, "documents"), maxHamming = 10)
-        .select(col("doc_a"), col("doc_b"), col("hamming"))
-    }),
-    "doc_bloom_decontaminate" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      import s.implicits._
-      // decontamination through a broadcast Bloom prefilter: the eval
-      // shingle set compresses to ~1.2 bytes/item at 1% fpp, so at corpus
-      // scale the train side drops to ~fpp of its shingles MAP-SIDE before
-      // any join; the exact verify join then removes false positives, so
-      // the output equals doc_decontaminate exactly (same oracle). This is
-      // the 100 TB shape when the eval set outgrows a broadcast hash join
-      // but its bloom still fits (10^9 shingles ≈ 1.2 GB).
-      val docs = t(dir, "documents")
-      val sh = docs.withColumn("ws", split(col("text"), " "))
-        .filter(size(col("ws")) >= 4)
-        .select(col("doc_id"), explode(array_distinct(expr(
-          "transform(sequence(1, size(ws) - 3), i -> array_join(slice(ws, i, 4), ' '))"))).as("sh"))
-      val ev = sh.filter(col("doc_id") < 50).select("sh").distinct()
-      val bloom = ev.stat.bloomFilter("sh", math.max(ev.count(), 100L), 0.01)
-      val bBloom = s.sparkContext.broadcast(bloom)
-      val candidates = sh.filter(col("doc_id") >= 50)
-        .as[(Long, String)]
-        .filter(r => bBloom.value.mightContainString(r._2))
-        .toDF("doc_id", "sh")
-      val hits = candidates.join(broadcast(ev), "sh").select("doc_id").distinct()
-      docs.filter(col("doc_id") >= 50).select(col("doc_id"))
-        .join(hits.withColumn("hit", lit(true)), Seq("doc_id"), "left_outer")
-        .select(col("doc_id"), coalesce(col("hit"), lit(false)).as("contaminated"))
-    }),
-    "doc_sample_stratified" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // deterministic stratified sampling: per-language keep rates applied
-      // via a content-derived bucket (two md5 hex chars → 0..99), so the
-      // sample is reproducible, join-free (broadcast rate map) and
-      // rerun-stable at any parallelism — never rand()
-      val rates = Seq(("en", 60L), ("de", 35L), ("fr", 35L), ("es", 25L))
-      val rateCol = rates.foldLeft(lit(10L)) { case (acc, (l, r)) =>
-        when(col("lang") === l, lit(r)).otherwise(acc)
-      }
-      t(dir, "documents").select(
-        col("doc_id"), col("lang"),
-        ((ascii(substring(md5(col("text")), 1, 1)) * 256 +
-          ascii(substring(md5(col("text")), 2, 1))) % 100 < rateCol).as("sampled"))
-    }),
-    "doc_mixture_sample" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // temperature-weighted source mixing (the mT5/Pile alpha-sampling
-      // staple, alpha = 0.5): per-language quotas proportional to
-      // n_docs^alpha, flattening the head languages. Arithmetic is
-      // ENGINE-EXACT by construction: the only float op is one
-      // floor(sqrt(n)*1e6) per language (IEEE-identical everywhere);
-      // weights, the denominator, and the quota split are then pure
-      // integers — no cross-row float sums to diverge between engines.
-      // Selection inside each language is by content digest (md5), so the
-      // sample is deterministic at any parallelism. Scale shape: the
-      // constant rank cap (quota <= total budget) filters BEFORE the
-      // dynamic quota join, so the per-lang window plans as a map-side
-      // WindowGroupLimit — each task ships at most 200 rows per language,
-      // and the 5-partition lang shuffle carries tasks*200 rows, never the
-      // corpus.
-      val budget = 200L
-      val docs = t(dir, "documents").select("doc_id", "lang", "text")
-      val weights = docs.groupBy("lang").agg(count(lit(1)).as("n_docs"))
-        .withColumn("w", floor(sqrt(col("n_docs").cast("double")) * 1e6).cast("long"))
-      // denominator via a global window over the PER-LANGUAGE aggregate
-      // (O(languages) rows on one partition — never the corpus), keeping the
-      // contract-wide no-cross-join plan guard intact
-      val quotas = weights
-        .withColumn("w_tot", sum("w").over(Window.partitionBy()))
-        .select(col("lang"), expr(s"($budget * w) DIV w_tot").as("quota"))
-      docs
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("lang").orderBy(md5(col("text")), col("doc_id"))))
-        .filter(col("rk") <= budget) // static cap -> map-side WindowGroupLimit
-        .join(quotas, "lang")
-        .filter(col("rk") <= col("quota"))
-        .select("doc_id", "lang", "quota")
-    }),
-    "doc_shuffle_global" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // deterministic global training-order shuffle — see
-      // [[shuffleGlobalPos]]; the block fan is DERIVED from the corpus row
-      // count (r7): the former fixed 2-hex prefix meant corpus/256 rows in
-      // one task's window sort (~400 GB/task at 100 TB)
-      val docs = t(dir, "documents")
-      shuffleGlobalPos(docs, shufflePrefixLen(docs.count()))
-    }),
-    "doc_mixture_upsample" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // the other half of mT5 alpha-sampling: with the target budget ABOVE
-      // the corpus size (here 2x), low-resource languages' quotas EXCEED
-      // their doc counts and the sampler must repeat documents — each doc
-      // at rank rk (digest order, same as doc_mixture_sample) appears in
-      // full epochs 0..n_full-1 plus epoch n_full iff rk <= quota mod
-      // n_docs, so every language emits exactly `quota` rows and repeats
-      // are digest-deterministic at any parallelism. The ranking exchange
-      // carries (doc_id, lang, digest) — never text (curation discipline);
-      // quotas stay integer-exact (one IEEE sqrt per language).
-      val docs = t(dir, "documents")
-        .select(col("doc_id"), col("lang"), md5(col("text")).as("d"))
-      val quotas = docs.groupBy("lang").agg(count(lit(1)).as("n_docs"))
-        .withColumn("w", floor(sqrt(col("n_docs").cast("double")) * 1e6).cast("long"))
-        .withColumn("w_tot", sum("w").over(Window.partitionBy()))
-        .withColumn("n_tot", sum("n_docs").over(Window.partitionBy()))
-        .select(col("lang"),
-          expr("((2 * n_tot * w) DIV w_tot) DIV n_docs").as("n_full"),
-          expr("((2 * n_tot * w) DIV w_tot) % n_docs").as("rem"))
-      docs
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("lang").orderBy(col("d"), col("doc_id"))))
-        .join(quotas, "lang")
-        .withColumn("e_max",
-          expr("n_full + (CASE WHEN rk <= rem THEN 1 ELSE 0 END) - 1"))
-        .filter(col("e_max") >= 0) // sequence() must never see a negative bound
-        .select(col("doc_id"), col("lang"),
-          explode(expr("sequence(CAST(0 AS BIGINT), e_max)")).as("epoch"))
-    }),
-    "doc_source_quota" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // per-source quota capping (boilerplate-farm control): keep the 20
-      // lowest-doc_id documents per source; plans as a map-side
-      // WindowGroupLimit — each task truncates its own source runs before
-      // the exchange, so a source with 10^8 docs ships 20 rows per task,
-      // not 10^8
-      val w = Window.partitionBy("source").orderBy("doc_id")
-      t(dir, "documents").select("doc_id", "source")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 20)
-        .select(col("doc_id"), col("source"), col("rn"))
-    }),
-    "kg_merge_incremental" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // SCD-1 snapshot merge (the Iceberg MERGE INTO shape on the session-
-      // catalog substitute): base snapshot + deterministic delta (every
-      // 7th doc re-crawled with updated text) → latest version per key via
-      // one shuffle on the key + a row_number window. The output contract
-      // is the content DIGEST, so it is computed in the narrow pass BEFORE
-      // the merge shuffle — only (key, digest, version) cross the exchange
-      // (a merge whose consumers need the payload necessarily ships it;
-      // this one doesn't, so it must not). At 100 TB the same plan
-      // merge-on-reads against the base's bucketed layout.
-      val docs = t(dir, "documents")
-      val base = docs.select(col("doc_id"), md5(col("text")).as("text_md5"), lit(1L).as("version"))
-      val delta = docs.filter(col("doc_id") % 7 === 0)
-        .select(col("doc_id"), md5(concat(col("text"), lit(" v2"))).as("text_md5"), lit(2L).as("version"))
-      val w = Window.partitionBy("doc_id").orderBy(desc("version"))
-      base.unionByName(delta)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("doc_id"), col("text_md5"), col("version"))
-    }),
-    "ev_props_json" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // semi-structured extraction: JSON props column → typed field →
-      // decile rollup (get_json_object is codegen'd; no UDF)
-      t(dir, "events")
-        .select(get_json_object(col("props"), "$.k").cast("int").as("k"))
-        .groupBy(expr("k DIV 10").as("k_decile"))
-        .agg(count(lit(1)).as("n_events"), sum(col("k")).cast("bigint").as("sum_k"))
-    }),
-    "ev_props_variant" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // the same extraction through Spark 4's VariantType: parse_json
-      // shreds the JSON once into a binary variant and variant_get does
-      // typed path access without re-tokenizing text per field — the
-      // open-schema path for semi-structured columns at scale (N field
-      // reads = one parse, vs N parses with get_json_object). The try_
-      // variants yield NULL on malformed JSON / non-coercible values,
-      // matching get_json_object+cast's behavior exactly — which is what
-      // makes sharing ev_props_json's oracle legitimate beyond this
-      // closed corpus.
-      t(dir, "events")
-        .select(expr("try_variant_get(try_parse_json(props), '$.k', 'int')").as("k"))
-        .groupBy(expr("k DIV 10").as("k_decile"))
-        .agg(count(lit(1)).as("n_events"), sum(col("k")).cast("bigint").as("sum_k"))
-    }),
-    "doc_langid_eval" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      import s.implicits._
-      // model-eval pattern: confusion matrix of the frozen langid heuristic
-      // against the corpus's labeled lang column
-      val pred = t(dir, "documents").select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
-        .mapPartitions(_.map { case (id, text) => (id, TextOps.langId(text)) })
-        .toDF("doc_id", "lang_pred")
-      t(dir, "documents").select("doc_id", "lang").join(pred, "doc_id")
-        .groupBy("lang", "lang_pred").agg(count(lit(1)).as("n_docs"))
-    }),
-
-    // ============ training-data ops: embeddings =============================
-    "emb_knn_brute" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val emb = t(dir, "embeddings")
-      Ann.bruteTopK(emb, Ann.headQueries(emb, 20), k = 5)
-        .select(col("query_id"), col("vec_id"), col("rank"))
-    }),
-    "emb_hard_negatives" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // contrastive-training hard negatives: for each labeled head query,
-      // the 5 most-similar DIFFERENT-label vectors (filter BEFORE ranking —
-      // post-filtering a plain top-k would under-fill); exact single scan
-      val emb = t(dir, "embeddings")
-      Ann.hardNegatives(emb, Ann.headLabeledQueries(emb, 20), k = 5)
-        .select(col("query_id"), col("vec_id"), col("rank"))
-    }),
-    "emb_hard_negatives_indexed" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // the same mining protocol run OFF THE STORED IVF INDEX: labels ride
-      // the index rows (written at build), probes prune list=<i>
-      // directories at the file index — the shape where the corpus is
-      // indexed once and mined per training epoch. Oracle re-derives the
-      // probed-candidate join from aux_ivf_lists/aux_ivf_probes + the
-      // different-label test.
-      val emb = t(dir, "embeddings")
-      val idx = freshTmpDir(s"graft_ivf_hn_${new java.io.File(dir).getName}")
-      Ann.buildIvfIndex(emb, idx)
-      Ann.hardNegativesIndexed(s, idx, Ann.headLabeledQueries(emb, 20), k = 5)
-        .select(col("query_id"), col("vec_id"), col("rank"))
-    }),
-    "emb_knn_lsh" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val emb = t(dir, "embeddings")
-      Ann.lshTopK(emb, Ann.headQueries(emb, 20), k = 5)
-        .select(col("query_id"), col("vec_id"), col("rank"))
-    }),
-    "emb_knn_ivf" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val emb = t(dir, "embeddings")
-      Ann.ivfTopK(emb, Ann.headQueries(emb, 20), k = 5)
-        .select(col("query_id"), col("vec_id"), col("rank"))
-    }),
-    "emb_pairs_cosine" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // brute cosine pairs over a bounded head sample through the NATIVE
-      // graft_cosine expression (CosineExpr): Spark's higher-order
-      // functions (aggregate/zip_with) evaluate interpreted lambdas outside
-      // whole-stage codegen and allocate an intermediate array per row —
-      // the native expression is one static call fused into the join's
-      // codegen span, with the SAME index-order double accumulation
-      // (CosineExprSpec pins bit-equality to the HOF formulation).
-      // Threshold 0.357 sits in a 3e-3-wide gap of the sf0.01 cosine
-      // distribution, so engine float-accumulation differences cannot flip
-      // a pair. Scale path: Dedup.embeddingPairs.
-      graft.functions.CosineExpr.register(s)
-      val e = t(dir, "embeddings").filter(col("vec_id") < 120)
-      val a = e.select(col("vec_id").as("vec_a"), col("embedding").as("ea"))
-      val b = e.select(col("vec_id").as("vec_b"), col("embedding").as("eb"))
-      a.join(b, col("vec_a") < col("vec_b"))
-        .filter(graft.functions.CosineExpr.graft_cosine(col("ea"), col("eb")) >= 0.357)
-        .select(col("vec_a"), col("vec_b"))
-    }),
-    "emb_dedup_cosine" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // threshold sweep summary (the raw pair list is usually empty on
-      // non-duplicated corpora; the sweep always yields rows)
-      val pairs = Dedup.embeddingPairs(t(dir, "embeddings"), threshold = 0.0)
-      pairs.agg(
-        count(lit(1)).as("bucket_pairs"),
-        sum(when(col("cosine") >= 0.5, 1L).otherwise(0L)).as("ge_050"),
-        sum(when(col("cosine") >= 0.8, 1L).otherwise(0L)).as("ge_080"),
-        sum(when(col("cosine") >= 0.95, 1L).otherwise(0L)).as("ge_095"))
-    }),
-    "emb_label_knn_purity" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val emb = t(dir, "embeddings")
-      val top1 = Ann.bruteTopK(emb, Ann.headQueries(emb, 50), k = 1)
-      val labels = emb.select(col("vec_id"), col("label"))
-      top1.join(labels.withColumnRenamed("vec_id", "query_id").withColumnRenamed("label", "q_label"), "query_id")
-        .join(labels.withColumnRenamed("label", "n_label"), "vec_id")
-        .agg(count(lit(1)).as("n_queries"),
-          sum(when(col("q_label") === col("n_label"), 1L).otherwise(0L)).as("n_same_label"))
-    }),
-
-    // ============ CityJSON reference semantics, distributed =================
-    "cj_triples_by_pred" -> ((s, dir) => cjTriplesByPred(s)),
-    // the same read, kept as its own contract query with the same oracle
-    "cj_triples_by_pred_dsv2" -> ((s, dir) => cjTriplesByPred(s)),
-    "cj_doc_stats" -> ((s, dir) => cj(s, "docs")),
-    "cj_log_categories" -> ((s, dir) => {
-      // the CLI's per-category log dedup (Main.cpp:63-65) as a relational op
-      // dedup on (level, category) — matches the oracle's DISTINCT exactly;
-      // a category-only dedup would keep a nondeterministic level if a
-      // category string ever appeared at two levels
-      cj(s, "logs")
-        .dropDuplicates("level", "category")
-        .groupBy("level").agg(count(lit(1)).as("n_categories"))
-    }),
-
-    // ============ multimodal plumbing (stubbed codecs) ======================
-    "mm_decode_meta" -> ((s, dir) => {
-      Multimodal.decodeMeta(Multimodal.syntheticMedia(s, 500))
-    }),
-    "mm_frame_sample" -> ((s, dir) => {
-      Multimodal.sampleFrames(Multimodal.syntheticMedia(s, 500))
-        .groupBy("media_id").agg(count(lit(1)).as("n_frames_sampled"))
-    }),
-    "mm_resize" -> ((s, dir) => {
-      // resize plumbing: re-decode after resize must yield the target dims
-      Multimodal.decodeMeta(Multimodal.resize(Multimodal.syntheticMedia(s, 500), 32, 32))
-        .groupBy("kind").agg(count(lit(1)).as("n_media"),
-          sum(when(col("width") === 32 && col("height") === 32, 1L).otherwise(0L)).as("n_at_target"))
-    }),
-    "mm_features" -> ((s, dir) => {
-      // feature extraction over the real image codec (pixel luminance) and
-      // the stub containers (byte histogram); per-kind vector stats
-      val media = Multimodal.syntheticMedia(s, 500)
-      Multimodal.features(media)
-        .join(media.select("media_id", "kind"), "media_id")
-        .select(col("kind"), element_at(col("feature"), 16).as("top_bucket"))
-        .groupBy("kind").agg(count(lit(1)).as("n_media"),
-          round(avg(col("top_bucket")), 4).as("avg_top_bucket_mass"))
-    }),
-
-    // ============ graph-table physical design + dataset statistics ==========
-    "kg_property_table" -> ((s, dir) => {
-      // the classic RDF PROPERTY-TABLE materialization (Abadi's SW-Store /
-      // Sempala-on-Spark shape): pivot the vertical (subj, pred, obj) layout
-      // into one wide row per subject — single-valued predicates as columns,
-      // the multi-valued web:mentions as a count. A star query that would
-      // need one self-join per predicate on the triple table becomes a
-      // single scan here; the pivot itself is ONE hash aggregation
-      // (map-side partials, conditional aggregates — no join, no explode),
-      // which is the property-table build you'd actually run at 10^12
-      // triples before serving entity-centric queries
-      val n = PagesSynth.pageCount(dir)
-      KgPipeline.encodedTriples(s, n).toDF()
-        .groupBy("page_id")
-        .agg(
-          max(when(col("pred_id") === KgPipeline.PredLang, col("lit"))).as("lang_id"),
-          max(when(col("pred_id") === KgPipeline.PredWarcTs, col("lit"))).as("warc_ts_ms"),
-          max(when(col("pred_id") === KgPipeline.PredNChars, col("lit"))).as("n_chars"),
-          sum(when(col("pred_id") === KgPipeline.PredMentions, 1L).otherwise(0L)).as("n_mentions"))
-    }),
-    "kg_void_stats" -> ((s, dir) => {
-      // VoID dataset statistics (the W3C dataset-descriptor vocabulary):
-      // per predicate, triple count + distinct subjects + distinct objects —
-      // exactly the cardinalities a SPARQL/join optimizer feeds its cost
-      // model. One pass, one aggregation; the two COUNT(DISTINCT)s share a
-      // single Expand-based aggregate rather than two self-joins. The
-      // object key is predicate-dependent (mentions → entity id, literal
-      // predicates → the literal), mirroring decodeColumns' object rule
-      val n = PagesSynth.pageCount(dir)
-      KgPipeline.encodedTriples(s, n).toDF()
-        .withColumn("obj_key",
-          when(col("pred_id") === KgPipeline.PredMentions, col("ent_id").cast("long"))
-            .otherwise(col("lit")))
-        .groupBy("pred_id")
-        .agg(count(lit(1)).as("n_triples"),
-          countDistinct(col("page_id")).as("n_subjects"),
-          countDistinct(col("obj_key")).as("n_objects"))
-    }),
-    "kg_comention_lift" -> ((s, dir) => {
-      // association strength between co-mentioned entities: integer-micro
-      // LIFT (= PMI without the log, rank-equivalent per fixed corpus):
-      // lift = P(a,b) / (P(a) P(b)) over pages, computed as
-      // ((n_pair * 10^6) DIV deg_a) * n_pages DIV deg_b — integer DIV only,
-      // so the engine and the oracle agree bit-for-bit (at real corpus
-      // scale you'd compute the log-space double; the integer form exists
-      // for exact cross-engine comparison and keeps the same ranking).
-      // All three statistics derive from ONE shared hub-capped mention
-      // list (Triangles.cappedMembers — the same cap every co-mention
-      // operator uses), localCheckpointed because it feeds three branches
-      import s.implicits._
-      val n = PagesSynth.pageCount(dir)
-      val mentions = KgPipeline.encodedTriples(s, n).toDF()
-        .filter(col("pred_id") === KgPipeline.PredMentions)
-        .select(col("page_id"), col("ent_id"))
-      val l = Triangles.cappedMembers(mentions, "page_id", "ent_id", CoMentionHubCap)
-        .localCheckpoint()
-      val pairs = l.as("a").join(l.as("b"),
-          col("a.page_id") === col("b.page_id") && col("a.ent_id") < col("b.ent_id"))
-        .groupBy(col("a.ent_id").as("src"), col("b.ent_id").as("dst"))
-        .agg(count(lit(1)).as("n_pair"))
-      val deg = l.groupBy("ent_id").agg(count(lit(1)).as("deg"))
-      // the 1-row page total joins on a constant key: an EQUI join, so it
-      // plans as a BroadcastHashJoin and the contract-wide no-cross-join
-      // plan guard stays intact (a bare crossJoin — or a foldable lit(1)
-      // key, which Catalyst constant-folds out of the condition — would
-      // plan BroadcastNestedLoopJoin even for one row, and non-nullable
-      // arithmetic like n*0 folds too; pmod(n, 1) has no folding rule)
-      val total = l.agg(countDistinct(col("page_id")).as("n_pages"))
-        .withColumn("__one", pmod(col("n_pages"), lit(1L)).cast("int"))
-      pairs
-        .join(deg.select(col("ent_id").as("src"), col("deg").as("sdeg")), "src")
-        .join(deg.select(col("ent_id").as("dst"), col("deg").as("ddeg")), "dst")
-        .withColumn("__one", pmod(col("n_pair"), lit(1L)).cast("int"))
-        .join(broadcast(total), "__one")
-        .withColumn("lift_micro", expr("((n_pair * 1000000) DIV sdeg) * n_pages DIV ddeg"))
-        .orderBy(desc("lift_micro"), asc("src"), asc("dst"))
-        .limit(50)
-        .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"),
-          col("n_pair"), col("lift_micro"))
-    }),
-    "doc_oov_rate" -> ((s, dir) => {
-      // out-of-vocabulary rate against the corpus head vocabulary (a
-      // quality/domain-shift signal CCNet-style pipelines compute before
-      // LM scoring): pass 1 builds the top-K vocabulary (freq DESC, token —
-      // a total order, so the K boundary is reproducible cross-engine),
-      // pass 2 scores every document against it. The vocabulary is
-      // driver-free and BROADCAST into the scoring join — at 100 TB the
-      // corpus streams twice but never shuffles on token
-      implicit val sp: SparkSession = s
-      val toks = t(dir, "documents")
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-      val vocab = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
-        .orderBy(desc("cnt"), asc("tok")).limit(16).select("tok")
-      toks.join(broadcast(vocab.withColumn("iv", lit(1))), Seq("tok"), "left")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_tokens"),
-          sum(when(col("iv").isNull, 1L).otherwise(0L)).as("n_oov"))
-    }),
-    "kg_bgp_star" -> ((s, dir) => {
-      // SPARQL basic graph pattern, star shape with a constant-object
-      // filter: ?page web:lang "en" . ?page web:mentions ?ent — compiled
-      // by Bgp.solve into one filtered scan per pattern + one equi-join
-      // on the shared ?page variable (strategy left to AQE). The BGP is
-      // THE RDF query primitive; this is the declarative corpus-scale
-      // form of the reference engine's per-document lookups
-      val tr = bgpTriples(s, dir)
-      graft.operators.Bgp.solve(tr, Seq(
-          graft.operators.Bgp.Pattern("?page", V.WebLang, "en"),
-          graft.operators.Bgp.Pattern("?page", V.WebMentions, "?ent")))
-        .groupBy("ent").agg(countDistinct(col("page")).as("n_pages"))
-    }),
-    "kg_bgp_chain" -> ((s, dir) => {
-      // BGP chain across two triple sources: ?page web:mentions ?ent .
-      // ?ent rdf:name ?name — the object of one pattern joins the SUBJECT
-      // of the next (page triples chain into ontology triples), bag
-      // semantics preserved (a page mentioning an entity twice contributes
-      // two bindings, SPARQL's default)
-      val tr = bgpTriples(s, dir, withOntology = true)
-      graft.operators.Bgp.solve(tr, Seq(
-          graft.operators.Bgp.Pattern("?page", V.WebMentions, "?ent"),
-          graft.operators.Bgp.Pattern("?ent", V.RdfName, "?name")))
-        .groupBy("name").agg(count(lit(1)).as("n_mentions"))
-    }),
-    "kg_bgp_optional" -> ((s, dir) => {
-      // SPARQL OPTIONAL: ?page web:lang ?l . OPTIONAL { ?page web:mentions
-      // ?ent } — pages with no mentions survive with a null ?ent (a plain
-      // BGP would drop them); rolled up per language into total pages and
-      // mention-less pages. The optional group compiles to ONE left
-      // equi-join on the shared ?page variable
-      val tr = bgpTriples(s, dir)
-      graft.operators.Bgp.solveOptional(tr,
-          Seq(graft.operators.Bgp.Pattern("?page", V.WebLang, "?l")),
-          Seq(Seq(graft.operators.Bgp.Pattern("?page", V.WebMentions, "?ent"))))
-        .groupBy(col("l").as("lang"))
-        .agg(countDistinct(col("page")).as("n_pages"),
-          countDistinct(when(col("ent").isNull, col("page"))).as("n_no_mentions"))
-    }),
-    "kg_bgp_construct" -> ((s, dir) => {
-      // SPARQL CONSTRUCT as a rule engine: CONSTRUCT { ?a web:coMentioned
-      // ?b } WHERE { ?p web:mentions ?a . ?p web:mentions ?b, ?a < ?b } —
-      // premise bindings from the BGP, conclusion triples from the
-      // template, distinct at materialization (the rule's closure). The
-      // synthetic corpus's per-page mention lists are bounded (~4), so the
-      // page-keyed self-join is safe uncapped here; a corpus with
-      // link-farm pages routes through the hub-capped co-mention
-      // derivations instead (CoMentionHubCap)
-      val tr = bgpTriples(s, dir)
-      val premise = graft.operators.Bgp.solve(tr, Seq(
-          graft.operators.Bgp.Pattern("?p", V.WebMentions, "?a"),
-          graft.operators.Bgp.Pattern("?p", V.WebMentions, "?b")))
-        .filter(col("a") < col("b"))
-      graft.operators.Bgp.construct(premise, Seq(
-          graft.operators.Bgp.Pattern("?a", "web:coMentioned", "?b")))
-        .distinct()
-    }),
-    "kg_bgp_minus" -> ((s, dir) => {
-      // SPARQL MINUS: ?page web:mentions ?ent MINUS { ?page web:lang "en" }
-      // — mention bindings on non-English pages only, via one left-anti
-      // join on the shared ?page variable; rolled up per entity
-      val tr = bgpTriples(s, dir)
-      graft.operators.Bgp.solveMinus(tr,
-          Seq(graft.operators.Bgp.Pattern("?page", V.WebMentions, "?ent")),
-          Seq(graft.operators.Bgp.Pattern("?page", V.WebLang, "en")))
-        .groupBy("ent").agg(countDistinct(col("page")).as("n_pages"))
-    }),
-    "kg_forget_subjects" -> ((s, dir) => {
-      import s.implicits._
-      // right-to-be-forgotten propagation: materialize the graph as a
-      // snapshotted table, FORGET every 10th page's url (a takedown batch,
-      // shipped as a Dataset — never a driver list), read the new current
-      // snapshot back. The delete is a versioned commit: older snapshots
-      // still hold the rows until retention expires them (erasure =
-      // forget + expire); the read applies the takedown as one left-anti
-      // join on the subject key
-      val n = PagesSynth.pageCount(dir)
-      val sink = new graft.pipeline.GraphSink.Snapshotted
-      val out = freshTmpDir(s"graft_forget_${new java.io.File(dir).getName}")
-      // one file per core, not per synthesized page range (see kg_cdc_changes)
-      sink.write(KgPipeline.decodeTriples(KgPipeline.encodedTriples(s, n), n)
-        .coalesce(s.sparkContext.defaultParallelism), out)
-      val takedown = s.range(0, n).filter(col("id") % 10 === 0)
-        .map(i => PagesSynth.urlAt(i, n))
-      sink.forget(s, out, takedown)
-      sink.read(s, out).groupBy("pred").agg(count(lit(1)).as("n_triples"))
-    }),
-    "kg_nquads_roundtrip" -> ((s, dir) => {
-      import s.implicits._
-      // N-Quads interchange with provenance named graphs: every decoded
-      // triple labeled with its crawl segment (graft:seg_<page_id DIV
-      // 1000>), serialized to N-Quads text, read BACK through the lenient
-      // parser, counted per graph — the sink must be lossless including
-      // the graph term, and the per-graph counts must equal the encoded
-      // table's per-segment counts. The named graph is the lineage unit:
-      // any triple traces to exactly one ingest segment, so one bad crawl
-      // segment can be dropped/reprocessed without touching the rest
-      val n = PagesSynth.pageCount(dir)
-      val quads = KgPipeline.decodeQuads(KgPipeline.encodedTriples(s, n), n)
-      val out = freshTmpDir(s"graft_nquads_${new java.io.File(dir).getName}")
-      graft.pipeline.NTriples.Quads.write(quads, out)
-      graft.pipeline.NTriples.Quads.read(s, out)
-        .groupBy("graph").agg(count(lit(1)).as("n_triples"))
-    }),
-    "kg_mention_reified" -> ((s, dir) => {
-      import s.implicits._
-      // RDF reification of mention provenance (the standard rdf:Statement
-      // vocabulary): each web:mentions triple becomes a statement node
-      // carrying subject/predicate/object plus the span literals — the
-      // per-triple lineage record, with DETERMINISTIC statement IRIs
-      // (page_id + span), never blank nodes, so re-runs mint identical
-      // statements (the reference's blank-node-free discipline,
-      // RDF.cityJSON's stable-IRI rule applied to provenance). Narrow
-      // 6-way flatMap in the same pass that reads the encoded row — no
-      // join, no shuffle
-      val n = PagesSynth.pageCount(dir)
-      KgPipeline.encodedTriples(s, n)
-        .filter(_.pred_id == KgPipeline.PredMentions)
-        .mapPartitions(_.flatMap { t =>
-          val url = PagesSynth.urlAt(t.page_id, n)
-          val s0 = t.lit >>> 32; val s1 = t.lit & 0xffffffffL
-          val stmt = s"graft:stmt_${t.page_id}_${s0}_${s1}"
-          Iterator(
-            (stmt, "rdf:type", "rdf:Statement"),
-            (stmt, "rdf:subject", url),
-            (stmt, "rdf:predicate", "web:mentions"),
-            (stmt, "rdf:object", s"ent:e${t.ent_id}"),
-            (stmt, "web:spanStart", s0.toString),
-            (stmt, "web:spanEnd", s1.toString))
-        }).toDF("stmt", "pred", "obj")
-    }),
-    "ev_hourly_gapfill" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // dense hourly series with zero-filled gaps (the time-series rollup
-      // consumers chart directly): the hour spine generates from the
-      // corpus min/max — two scalar aggregates and one sequence explode,
-      // O(hours) rows, never a driver loop — and left-joins the sparse
-      // counts; AQE broadcasts whichever side is small
-      val ev = t(dir, "events")
-      val spine = ev.agg(date_trunc("hour", min(col("ts"))).as("h0"),
-          date_trunc("hour", max(col("ts"))).as("h1"))
-        .select(explode(expr("sequence(h0, h1, interval 1 hour)")).as("hr"))
-      val counts = ev.groupBy(date_trunc("hour", col("ts")).as("hr"))
-        .agg(count(lit(1)).as("n"))
-      spine.join(counts, Seq("hr"), "left")
-        .select(unix_timestamp(col("hr")).as("hour_epoch"),
-          coalesce(col("n"), lit(0L)).as("n_events"))
-    }),
-    "ev_cohort_retention" -> ((s, dir) => {
-      // cohort retention (the standard product-analytics rollup): users
-      // cohorted by first-seen day, activity bucketed by day offset from
-      // that cohort day, distinct users per (cohort, offset) cell. Two
-      // aggregations and one join keyed on user_id — the firsts table is
-      // |users| rows, AQE broadcasts it at this scale and shuffle-joins
-      // co-partitioned on user_id when it is not
-      implicit val sp: SparkSession = s
-      val ev = t(dir, "events").select(col("user_id"), col("ts"))
-      val firsts = ev.groupBy("user_id").agg(min(col("ts")).as("first_ts"))
-      ev.join(firsts, "user_id")
-        .select(col("user_id"), to_date(col("first_ts")).as("cohort"),
-          datediff(to_date(col("ts")), to_date(col("first_ts"))).cast("long").as("day_offset"))
-        .groupBy("cohort", "day_offset")
-        .agg(countDistinct(col("user_id")).as("n_users"))
-    })
-  )
-
-  /** Auxiliary input dumps written by Verify beside the query results so
-    * oracles can RECOMPUTE a distributed op in DuckDB from its inputs —
-    * the `{OUT}` placeholder in [[oracleSql]] is substituted with the Verify
-    * outDir at dump time. The dumped values themselves are frozen-function
-    * outputs already locked by specs (TextOps/MentionDetect); the oracle
-    * independently re-derives the JOIN/AGGREGATION/THRESHOLD logic on top. */
-  def auxDumps: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // link-join inputs: mention stream + alias index (kg_* oracles)
-    "aux_mentions" -> ((s, dir) => {
-      import s.implicits._
-      val ext = KgPipeline.extracted(PagesSynth.pages(s, PagesSynth.pageCount(dir)))
-      val bc = s.sparkContext.broadcast(MentionDetect.buildDictionary(PagesSynth.aliasMap.keys))
-      // span_start/span_end are UTF-16 offsets (the detector's native
-      // units); cp_start/cp_end are the same spans in CODE POINTS, computed
-      // here while the text is in hand — the units DuckDB's substr speaks,
-      // so context-window oracles stay exact on supplementary-plane text
-      ext.mapPartitions(_.flatMap { p =>
-        MentionDetect.detect(p.url, p.text, bc.value).iterator.map { mn =>
-          val cpS = p.text.codePointCount(0, mn.span_start)
-          val cpE = cpS + p.text.codePointCount(mn.span_start, mn.span_end)
-          (mn.url, mn.span_start, mn.span_end, mn.surface, mn.alias_norm, cpS, cpE)
-        }
-      }).toDF("url", "span_start", "span_end", "surface", "alias_norm", "cp_start", "cp_end")
-    }),
-    "aux_aliases" -> ((s, dir) => PagesSynth.aliases(s).toDF()),
-    // page fingerprints straight from the synthesized corpus (the
-    // kg_warc_roundtrip oracle's independent side — no Warc code involved)
-    "aux_pages" -> ((s, dir) =>
-      PagesSynth.pages(s, PagesSynth.pageCount(dir)).toDF()
-        .select(col("url"), unix_micros(col("warc_ts")).as("ts_us"),
-          md5(col("html")).as("html_md5"))),
-    // the dictionary-encoded triple stream (kg_encoded_degree's oracle
-    // re-aggregates it in DuckDB — integer columns end to end)
-    "aux_enc_triples" -> ((s, dir) =>
-      KgPipeline.encodedTriples(s, PagesSynth.pageCount(dir)).toDF()),
-    // entity dictionary with canonical names (the rdf:name ontology
-    // literals) for the BGP-chain oracle
-    "aux_entities" -> ((s, dir) => {
-      import s.implicits._
-      s.range(0, PagesSynth.NumEntities.toLong)
-        .mapPartitions(_.map(i =>
-          (i.toInt, PagesSynth.entityIri(i.toInt), PagesSynth.canonicalAlias(i.toInt))))
-        .toDF("ent_id", "iri", "name")
-    }),
-    // page dictionary (page_id -> url): lets oracles re-derive any
-    // page_id-keyed result in terms of the string-world subjects (the ONE
-    // definition the encoded table's sidecar also writes)
-    "aux_page_ids" -> ((s, dir) =>
-      PagesSynth.pageDict(s, PagesSynth.pageCount(dir))),
-    // per-stage outputs whose CARDINALITIES the kg_triples_by_pred oracle
-    // recomputes against the emission contract
-    "aux_extracted" -> ((s, dir) =>
-      KgPipeline.extracted(PagesSynth.pages(s, PagesSynth.pageCount(dir)))
-        .toDF().select(col("url"), col("lang"), col("extract_ok"), col("text"))),
-    "aux_links" -> ((s, dir) =>
-      KgPipeline.links(
-        KgPipeline.extracted(PagesSynth.pages(s, PagesSynth.pageCount(dir))),
-        PagesSynth.aliasMap).toDF().select(col("url"), col("surface"), col("entity_iri"))),
-    // synthetic ground-truth links (kg_link_precision_recall oracle re-derives
-    // P/R from this dump + aux_links entirely inside DuckDB)
-    "aux_golds" -> ((s, dir) =>
-      PagesSynth.golds(s, PagesSynth.pageCount(dir))
-        .toDF().select(col("url"), col("surface"), col("entity_iri"))),
-    // dedup signature stages (doc_minhash_pairs / doc_simhash_pairs /
-    // doc_dedup_telemetry oracles re-derive banding+verification from these)
-    "aux_minhash_bands" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      Dedup.minhashBands(t(dir, "documents"))
-    }),
-    "aux_shingles" -> ((s, dir) => {
-      import s.implicits._
-      implicit val sp: SparkSession = s
-      t(dir, "documents").select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
-        .mapPartitions(_.flatMap { case (id, txt) =>
-          TextOps.shingleHashes(txt).iterator.map(h => (id, h)) })
-        .toDF("doc_id", "shingle_hash")
-    }),
-    "aux_minhash_sigs" -> ((s, dir) => {
-      import s.implicits._
-      implicit val sp: SparkSession = s
-      // full per-slot OPH signatures (64 rows/doc) so the oracle can count
-      // matching slots per candidate pair entirely inside DuckDB; derives
-      // from Dedup.minhashSigs — the ONE signature code path
-      Dedup.minhashSigs(t(dir, "documents"))
-        .flatMap { case (id, sig) =>
-          sig.iterator.zipWithIndex.map { case (v, slot) => (id, slot, v) } }
-        .toDF("doc_id", "slot", "sig")
-    }),
-    "aux_simhashes" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      Dedup.simhashes(t(dir, "documents"))
-    }),
-    // LSH bucket assignment (frozen hyperplane hash, spec-locked) + the
-    // multi-probe set of the head queries: the emb_knn_lsh oracle re-derives
-    // candidate join, scoring, and ranking from these in DuckDB
-    "aux_emb_buckets" -> ((s, dir) => {
-      import s.implicits._
-      implicit val sp: SparkSession = s
-      t(dir, "embeddings").select(col("vec_id").cast("long"), col("embedding"))
-        .as[(Long, Array[Float])]
-        .mapPartitions(_.map { case (id, v) => (id, TextOps.hyperplaneBucket(v, 10)) })
-        .toDF("vec_id", "bucket")
-    }),
-    "aux_emb_probes" -> ((s, dir) => {
-      import s.implicits._
-      implicit val sp: SparkSession = s
-      val probes = Ann.headQueries(t(dir, "embeddings"), 20).toSeq.flatMap { case (qid, qv) =>
-        val b = TextOps.hyperplaneBucket(qv, 10)
-        (b +: (0 until 10).map(i => b ^ (1 << i))).distinct.map(pb => (qid, pb))
-      }
-      probes.toDF("query_id", "probe_bucket")
-    }),
-    // IVF analog of the LSH dumps (same frozen-assignment + re-derived-join
-    // oracle pattern; centroids deterministic, parameters = emb_knn_ivf's)
-    "aux_ivf_lists" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      Ann.listAssignments(t(dir, "embeddings"))
-    }),
-    "aux_ivf_probes" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val emb = t(dir, "embeddings")
-      Ann.queryProbes(emb, Ann.headQueries(emb, 20))
-    })
-  )
-
-  /** DuckDB oracle SQL per query (omitted => rows-only check).
-    *
-    * Three oracle families beyond plain ANSI rewrites:
-    *  - `{OUT}/aux_*` parquet (written by Verify, see [[auxDumps]]): the
-    *    oracle re-derives a distributed join/agg from its dumped inputs.
-    *  - `/root/repo/golden/...`: checked-in golden fixtures (emitter
-    *    regression locks, loaded into DuckDB).
-    *  - `/root/repo/golden/frozen/...`: frozen expected outputs of
-    *    non-SQL-expressible pure functions at sf0.01 (generated once by
-    *    `graft.tools.GenFrozen`, reviewed, committed — a drift lock).
-    */
-  /** kg_pagerank oracle: the integer-arithmetic update is engine-exact, so
-    * all `iters` rounds unroll into plain CTEs over the aux_links dump —
-    * the full iterative computation is independently re-derived in DuckDB
-    * (edges use the same hub-cap derivation as kg_comention_triangles). */
-  private def pagerankOracleSql(iters: Int): String = {
-    val head =
-      """WITH l0 AS (SELECT DISTINCT url, entity_iri
-                     FROM read_parquet('{OUT}/aux_links/*.parquet')),
-              l AS (SELECT url, entity_iri FROM (
-                      SELECT url, entity_iri,
-                             ROW_NUMBER() OVER (PARTITION BY url ORDER BY entity_iri) AS rn
-                      FROM l0) WHERE rn <= 64),
-              e AS (SELECT DISTINCT a.entity_iri AS src, b.entity_iri AS dst
-                    FROM l a JOIN l b ON a.url = b.url AND a.entity_iri < b.entity_iri),
-              sym AS (SELECT src, dst FROM e UNION ALL SELECT dst, src FROM e),
-              deg AS (SELECT src AS node, COUNT(*) AS deg FROM sym GROUP BY src),
-              r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS rank_micro FROM deg)"""
-    val rounds = (1 to iters).map { k =>
-      s"""r$k AS (SELECT d.node,
-               CAST(150000 + (85 * COALESCE(s.c, 0)) // 100 AS BIGINT) AS rank_micro
-             FROM deg d LEFT JOIN (
-               SELECT sym.dst AS node, SUM(p.rank_micro // dg.deg) AS c
-               FROM sym JOIN r${k - 1} p ON p.node = sym.src
-                        JOIN deg dg ON dg.node = sym.src
-               GROUP BY sym.dst) s ON s.node = d.node)"""
-    }.mkString(",\n")
-    s"$head,\n$rounds\nSELECT node AS entity_iri, rank_micro FROM r$iters"
-  }
-
-  /** kg_kcore oracle: k-core peeling is CONFLUENT (unique fixpoint), so a
-    * fixed `rounds`-deep unrolling reaches the same subgraph the engine's
-    * converge-when-stable loop does — provided rounds ≥ the peel depth,
-    * which `KCoreSpec` pins for this corpus family. Each round keeps edges
-    * whose both endpoints have symmetric degree ≥ k.
-    *
-    * Every per-round CTE is `AS MATERIALIZED`: each round references its
-    * predecessor three times, and DuckDB's default CTE INLINING would make
-    * the evaluation tree 3^rounds (measured: unusable past ~4 rounds, then
-    * fd exhaustion on the re-opened parquet glob). Materialization makes
-    * the unrolling linear — the SQL analog of the engine's per-round
-    * lineage cut. */
-  private def kcoreOracleSql(k: Int, rounds: Int): String = {
-    val head =
-      """WITH l0 AS MATERIALIZED (SELECT DISTINCT url, entity_iri
-                     FROM read_parquet('{OUT}/aux_links/*.parquet')),
-              l AS (SELECT url, entity_iri FROM (
-                      SELECT url, entity_iri,
-                             ROW_NUMBER() OVER (PARTITION BY url ORDER BY entity_iri) AS rn
-                      FROM l0) WHERE rn <= 64),
-              e0 AS MATERIALIZED (SELECT DISTINCT a.entity_iri AS src, b.entity_iri AS dst
-                     FROM l a JOIN l b ON a.url = b.url AND a.entity_iri < b.entity_iri)"""
-    val peels = (1 to rounds).map { r =>
-      s"""d$r AS MATERIALIZED (SELECT src AS n FROM (SELECT src, dst FROM e${r - 1}
-                                 UNION ALL SELECT dst, src FROM e${r - 1})
-               GROUP BY 1 HAVING COUNT(*) >= $k),
-          e$r AS MATERIALIZED (SELECT e.src, e.dst FROM e${r - 1} e
-               JOIN d$r a ON e.src = a.n
-               JOIN d$r b ON e.dst = b.n)"""
-    }.mkString(",\n")
-    s"""$head,
-$peels
-SELECT src AS entity_iri, COUNT(*) AS core_deg
-FROM (SELECT src, dst FROM e$rounds UNION ALL SELECT dst, src FROM e$rounds)
-GROUP BY 1"""
-  }
-
-  /** kg_label_prop oracle: synchronous LPA is a pure function of the edge
-    * set and the horizon (min-label tie-break), so each round unrolls to a
-    * neighbor-label count + a windowed argmax. MATERIALIZED per round (see
-    * kcoreOracleSql — inlining re-evaluates predecessors exponentially). */
-  private def labelPropOracleSql(iters: Int): String = {
-    val head =
-      """WITH l0 AS MATERIALIZED (SELECT DISTINCT url, entity_iri
-                     FROM read_parquet('{OUT}/aux_links/*.parquet')),
-              l AS (SELECT url, entity_iri FROM (
-                      SELECT url, entity_iri,
-                             ROW_NUMBER() OVER (PARTITION BY url ORDER BY entity_iri) AS rn
-                      FROM l0) WHERE rn <= 64),
-              e AS MATERIALIZED (SELECT DISTINCT a.entity_iri AS src, b.entity_iri AS dst
-                     FROM l a JOIN l b ON a.url = b.url AND a.entity_iri < b.entity_iri),
-              sym AS MATERIALIZED (SELECT src, dst FROM e UNION ALL SELECT dst, src FROM e),
-              r0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS label FROM sym)"""
-    val rounds = (1 to iters).map { k =>
-      s"""c$k AS MATERIALIZED (SELECT sym.dst AS node, p.label AS label, COUNT(*) AS cnt
-               FROM sym JOIN r${k - 1} p ON p.node = sym.src GROUP BY 1, 2),
-          r$k AS MATERIALIZED (SELECT node, MIN(label) AS label FROM (
-               SELECT node, label, cnt, MAX(cnt) OVER (PARTITION BY node) AS mx
-               FROM c$k) WHERE cnt = mx GROUP BY node)"""
-    }.mkString(",\n")
-    s"$head,\n$rounds\nSELECT node AS entity_iri, label AS community FROM r$iters"
-  }
-
-  /** kg_shortest_paths oracle: the same fixed `rounds` BFS expansions,
-    * unrolled. MATERIALIZED per round (see kcoreOracleSql — inlining would
-    * re-evaluate predecessors exponentially); the anti join against the
-    * visited set is DuckDB's native ANTI JOIN. */
-  private def bfsOracleSql(rounds: Int, nSeeds: Int): String = {
-    val head =
-      s"""WITH l0 AS MATERIALIZED (SELECT DISTINCT url, entity_iri
-                     FROM read_parquet('{OUT}/aux_links/*.parquet')),
-              l AS (SELECT url, entity_iri FROM (
-                      SELECT url, entity_iri,
-                             ROW_NUMBER() OVER (PARTITION BY url ORDER BY entity_iri) AS rn
-                      FROM l0) WHERE rn <= 64),
-              e0 AS MATERIALIZED (SELECT DISTINCT a.entity_iri AS src, b.entity_iri AS dst
-                     FROM l a JOIN l b ON a.url = b.url AND a.entity_iri < b.entity_iri),
-              sym AS MATERIALIZED (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
-              seeds AS (SELECT DISTINCT src AS seed FROM sym ORDER BY seed LIMIT $nSeeds),
-              f0 AS MATERIALIZED (SELECT seed, seed AS node, 0 AS dist FROM seeds),
-              v0 AS MATERIALIZED (SELECT * FROM f0)"""
-    val expansions = (1 to rounds).map { d =>
-      s"""f$d AS MATERIALIZED (
-             SELECT c.seed, c.node, $d AS dist FROM (
-               SELECT DISTINCT f.seed, s.dst AS node
-               FROM f${d - 1} f JOIN sym s ON f.node = s.src) c
-             ANTI JOIN v${d - 1} v ON v.seed = c.seed AND v.node = c.node),
-          v$d AS MATERIALIZED (SELECT * FROM v${d - 1} UNION ALL SELECT * FROM f$d)"""
-    }.mkString(",\n")
-    s"""$head,
-$expansions
-SELECT seed, dist, COUNT(*) AS n_entities FROM v$rounds GROUP BY 1, 2"""
-  }
-
-  /** Shared by doc_dedup_incremental and doc_dedup_index: re-derives the
-    * cross (new, old) banded candidates and the exact shingle-Jaccard
-    * threshold from the aux dumps — threshold 0.3 as `ni*10 >= union*3`. */
-  private val incrementalDedupSql =
-    """WITH b AS (SELECT doc_id, band, band_hash FROM read_parquet('{OUT}/aux_minhash_bands/*.parquet')),
-       cand AS (SELECT DISTINCT a.doc_id AS doc_new, c.doc_id AS doc_old
-                FROM b a JOIN b c ON a.band = c.band AND a.band_hash = c.band_hash
-                WHERE a.doc_id % 4 = 0 AND c.doc_id % 4 <> 0),
-       s AS (SELECT doc_id, shingle_hash FROM read_parquet('{OUT}/aux_shingles/*.parquet')),
-       n AS (SELECT doc_id, COUNT(*) AS n FROM s GROUP BY doc_id),
-       i AS (SELECT doc_new, doc_old, COUNT(*) AS ni
-             FROM cand JOIN s sa ON sa.doc_id = doc_new
-                       JOIN s sb ON sb.doc_id = doc_old AND sb.shingle_hash = sa.shingle_hash
-             GROUP BY doc_new, doc_old)
-       SELECT c.doc_new, c.doc_old
-       FROM cand c
-       LEFT JOIN i ON i.doc_new = c.doc_new AND i.doc_old = c.doc_old
-       LEFT JOIN n na ON na.doc_id = c.doc_new
-       LEFT JOIN n nb ON nb.doc_id = c.doc_old
-       WHERE (COALESCE(na.n, 0) = 0 AND COALESCE(nb.n, 0) = 0)
-          OR COALESCE(i.ni, 0) * 10 >=
-             (COALESCE(na.n, 0) + COALESCE(nb.n, 0) - COALESCE(i.ni, 0)) * 3"""
-
-  /** kg_random_walks oracle: the same capped co-mention edges as
-    * kg_neg_samples, symmetrized, then every walk step unrolled — step t
-    * picks the neighbor minimizing ((seed·40503 + t·69069 + v·97561) mod
-    * 1000003, v), exactly [[graft.operators.RandomWalks]]' rule. */
-  // shared graph head of the walk oracles: co-mention edges (hub-capped),
-  // symmetrized, one walk seed per node
-  private val walkGraphHead =
-    """WITH m AS (SELECT DISTINCT page_id, ent_id
-                  FROM read_parquet('{OUT}/aux_enc_triples/*.parquet')
-                  WHERE pred_id = 4),
-            l AS (SELECT page_id, ent_id FROM (
-                    SELECT page_id, ent_id,
-                           ROW_NUMBER() OVER (PARTITION BY page_id ORDER BY ent_id) AS rn
-                    FROM m) WHERE rn <= 64),
-            e AS MATERIALIZED (
-                  SELECT DISTINCT a.ent_id AS src, b.ent_id AS dst
-                  FROM l a JOIN l b ON a.page_id = b.page_id AND a.ent_id < b.ent_id),
-            sym AS MATERIALIZED (
-                  SELECT src, dst FROM e UNION ALL SELECT dst AS src, src AS dst FROM e),
-            w0 AS MATERIALIZED (SELECT DISTINCT src AS seed, src AS node FROM sym)"""
-
-  private def walkOracleSql(steps: Int): String = {
-    val head = walkGraphHead
-    val stepsSql = (1 to steps).map { t =>
-      s"""w$t AS MATERIALIZED (SELECT seed, node FROM (
-            SELECT w.seed, s.dst AS node,
-                   ROW_NUMBER() OVER (PARTITION BY w.seed ORDER BY
-                     (CAST(w.seed AS BIGINT) * 40503 + $t * 69069
-                      + CAST(s.dst AS BIGINT) * 97561) % 1000003, s.dst) AS rn
-            FROM w${t - 1} w JOIN sym s ON w.node = s.src) WHERE rn = 1)"""
-    }.mkString(",\n")
-    val union = (0 to steps).map(t =>
-      s"SELECT CAST(seed AS BIGINT) AS seed, $t AS step, CAST(node AS BIGINT) AS node FROM w$t")
-      .mkString("\nUNION ALL ")
-    s"$head,\n$stepsSql,\nwalks AS ($union)\n"
-  }
-
-  /** The node2vec walk oracle: same graph head, the 3-case second-order
-    * bias re-derived per unrolled step — hash · (p·10⁶ | 10⁶ | q·10⁶) for
-    * return / prev-neighbor (LEFT JOIN flag) / distance-2 candidates. */
-  private def node2vecOracleSql(steps: Int, pM: Long, qM: Long): String = {
-    val step1 =
-      """w1 AS MATERIALIZED (SELECT seed, prev, node FROM (
-            SELECT w.seed, w.node AS prev, s.dst AS node,
-                   ROW_NUMBER() OVER (PARTITION BY w.seed ORDER BY
-                     (CAST(w.seed AS BIGINT) * 40503 + 1 * 69069
-                      + CAST(s.dst AS BIGINT) * 97561) % 1000003, s.dst) AS rn
-            FROM w0 w JOIN sym s ON w.node = s.src) WHERE rn = 1)"""
-    val rest = (2 to steps).map { t =>
-      s"""w$t AS MATERIALIZED (SELECT seed, prev, node FROM (
-            SELECT c.seed, c.node AS prev, c.dst AS node,
-                   ROW_NUMBER() OVER (PARTITION BY c.seed ORDER BY c.hw, c.dst) AS rn
-            FROM (
-              SELECT w.seed, w.node, s.dst,
-                     ((CAST(w.seed AS BIGINT) * 40503 + $t * 69069
-                       + CAST(s.dst AS BIGINT) * 97561) % 1000003)
-                     * (CASE WHEN s.dst = w.prev THEN $pM
-                             WHEN d.src IS NOT NULL THEN 1000000
-                             ELSE $qM END) AS hw
-              FROM w${t - 1} w JOIN sym s ON w.node = s.src
-              LEFT JOIN sym d ON d.src = w.prev AND d.dst = s.dst
-            ) c) WHERE rn = 1)"""
-    }.mkString(",\n")
-    val union = (0 to steps).map(t =>
-      s"SELECT CAST(seed AS BIGINT) AS seed, $t AS step, CAST(node AS BIGINT) AS node FROM w$t")
-      .mkString("\nUNION ALL ")
-    s"$walkGraphHead,\n$step1,\n$rest,\nwalks AS ($union)\n"
-  }
-
-  def oracleSql: Map[String, String] = baseOracleSql +
-    // the bloom prefilter is an optimization, not a semantics change: its
-    // exact-verify join makes the output identical to doc_decontaminate,
-    // so the two queries share one oracle
-    ("doc_bloom_decontaminate" -> baseOracleSql("doc_decontaminate")) +
-    // log-star contraction computes the identical component labeling, so it
-    // shares the recursive-CTE closure oracle
-    ("doc_dup_components_logstar" -> baseOracleSql("doc_dup_components")) +
-    // the two names run the same read of the CityJSON corpus
-    ("cj_triples_by_pred_dsv2" -> baseOracleSql("cj_triples_by_pred")) +
-    // VariantType access is a faster PATH to the same values as
-    // get_json_object — identical output, one oracle
-    ("ev_props_variant" -> baseOracleSql("ev_props_json")) +
-    // the stored deletion-key index is a faster PATH to the same fuzzy
-    // resolution (spec-locked identical) — one oracle for both
-    ("kg_fuzzy_link_indexed" -> baseOracleSql("kg_fuzzy_link"))
-
-  private lazy val baseOracleSql: Map[String, String] = Map(
-    "kg_pagerank" -> pagerankOracleSql(5),
-    "kg_kcore" -> kcoreOracleSql(3, 12),
-    "kg_label_prop" -> labelPropOracleSql(4),
-    "kg_shortest_paths" -> bfsOracleSql(6, 3),
-    "kg_entity_assoc" ->
-      """WITH l0 AS (SELECT DISTINCT url, entity_iri
-                     FROM read_parquet('{OUT}/aux_links/*.parquet')),
-              l AS (SELECT url, entity_iri FROM (
-                      SELECT url, entity_iri,
-                             ROW_NUMBER() OVER (PARTITION BY url ORDER BY entity_iri) AS rn
-                      FROM l0) WHERE rn <= 64),
-              p AS (SELECT a.entity_iri AS e1, b.entity_iri AS e2, COUNT(*) AS n_both
-                    FROM l a JOIN l b ON a.url = b.url AND a.entity_iri < b.entity_iri
-                    GROUP BY 1, 2),
-              c AS (SELECT entity_iri, COUNT(*) AS n FROM l GROUP BY 1)
-         SELECT p.e1, p.e2, p.n_both, c1.n AS n_e1, c2.n AS n_e2
-         FROM p JOIN c c1 ON c1.entity_iri = p.e1
-                JOIN c c2 ON c2.entity_iri = p.e2""",
-    "doc_token_hist" ->
-      """WITH t AS (SELECT CASE WHEN trim(text)='' THEN 0
-                               ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_tokens
-                   FROM documents)
-         SELECT CAST(n_tokens AS BIGINT) // 64 AS bucket, COUNT(*) AS n_docs
-         FROM t GROUP BY 1""",
-    "kg_two_hop" ->
-      """WITH l0 AS (SELECT DISTINCT url, entity_iri
-                     FROM read_parquet('{OUT}/aux_links/*.parquet')),
-              l AS (SELECT url, entity_iri FROM (
-                      SELECT url, entity_iri,
-                             ROW_NUMBER() OVER (PARTITION BY url ORDER BY entity_iri) AS rn
-                      FROM l0) WHERE rn <= 64),
-              e AS (SELECT DISTINCT a.entity_iri AS src, b.entity_iri AS dst
-                    FROM l a JOIN l b ON a.url = b.url AND a.entity_iri < b.entity_iri),
-              sym AS (SELECT src, dst FROM e UNION ALL SELECT dst, src FROM e),
-              seeds AS (SELECT DISTINCT src AS seed FROM sym ORDER BY seed LIMIT 5),
-              h1 AS (SELECT seed, dst AS n1 FROM seeds JOIN sym ON sym.src = seed),
-              h2 AS (SELECT h1.seed, sym.dst AS n2 FROM h1 JOIN sym ON sym.src = h1.n1),
-              reach AS (SELECT seed, n1 AS entity FROM h1
-                        UNION SELECT seed, n2 FROM h2)
-         SELECT seed, COUNT(*) AS n_within_2_hops
-         FROM reach WHERE entity <> seed GROUP BY seed""",
-    "kg_heavy_entities" ->
-      """WITH s AS (SELECT e.lang, l.entity_iri
-                    FROM read_parquet('{OUT}/aux_links/*.parquet') l
-                    JOIN read_parquet('{OUT}/aux_extracted/*.parquet') e USING (url)),
-              tot AS (SELECT lang, COUNT(*) AS n FROM s GROUP BY lang)
-         SELECT s.lang, s.entity_iri, CAST(COUNT(*) AS BIGINT) AS n_mentions
-         FROM s JOIN tot USING (lang)
-         GROUP BY s.lang, s.entity_iri, tot.n
-         HAVING COUNT(*) * 32 > tot.n""",
-    "kg_cdc_changes" ->
-      """SELECT url AS subj, 'web:mentions' AS pred, entity_iri AS obj_iri,
-                'insert' AS _change_type, COUNT(*) AS _n
-         FROM read_parquet('{OUT}/aux_links/*.parquet')
-         WHERE entity_iri LIKE '%3'
-         GROUP BY 1, 2, 3""",
-    "kg_warc_roundtrip" ->
-      """SELECT url, ts_us, html_md5
-         FROM read_parquet('{OUT}/aux_pages/*.parquet')""",
-    "kg_validate_range" ->
-      """SELECT DISTINCT url AS subj, 'web:mentions' AS pred,
-                'bogus:' || entity_iri AS obj_iri
-         FROM read_parquet('{OUT}/aux_links/*.parquet')
-         WHERE entity_iri LIKE '%7'""",
-    "kg_encoded_degree" ->
-      """SELECT ent_id, COUNT(*) AS n_mentions
-         FROM read_parquet('{OUT}/aux_enc_triples/*.parquet')
-         WHERE pred_id = 4 GROUP BY 1""",
-    // kg_url_canonical: messifier and canonicalizer both re-derived in
-    // DuckDB over the aux_extracted url dump — the oracle replays the
-    // planted mess (keyed on the page ordinal in the url) and the RFC 3986
-    // normalization rules independently
-    "kg_url_canonical" ->
-      """WITH p AS (SELECT url,
-                  CAST(regexp_extract(url, '/p/([0-9]+)$', 1) AS BIGINT) % 6 AS mess_case,
-                  regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1) AS scheme,
-                  regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1) AS host,
-                  regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*(.*)$', 1) AS rest
-           FROM read_parquet('{OUT}/aux_extracted/*.parquet')),
-              m AS (SELECT url, mess_case,
-                  CASE mess_case
-                    WHEN 1 THEN upper(scheme) || '://' || upper(host) || rest
-                    WHEN 2 THEN scheme || '://' || host || ':443' || rest
-                    WHEN 3 THEN url || '#sec-2'
-                    WHEN 4 THEN url || '?utm_source=feed&utm_medium=cpc'
-                    WHEN 5 THEN url || '/'
-                    ELSE url END AS messy
-           FROM p),
-              x AS (SELECT url, mess_case,
-                  lower(regexp_extract(messy, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS cs,
-                  lower(regexp_extract(messy, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)) AS ch0,
-                  regexp_extract(messy, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*(.*)$', 1) AS cr0
-           FROM m),
-              y AS (SELECT url, mess_case,
-                  cs || '://' ||
-                  (CASE WHEN cs = 'https' THEN regexp_replace(ch0, ':443$', '')
-                        WHEN cs = 'http' THEN regexp_replace(ch0, ':80$', '')
-                        ELSE ch0 END) ||
-                  regexp_replace(regexp_replace(regexp_replace(
-                    cr0, '#.*$', ''), '\?utm_[^&#]*(&utm_[^&#]*)*$', ''), '/+$', '') AS canon
-           FROM x)
-         SELECT mess_case, COUNT(*) AS n_pages,
-                CAST(SUM(CASE WHEN canon = url THEN 1 ELSE 0 END) AS BIGINT) AS n_roundtrip
-         FROM y GROUP BY 1""",
-    // kg_neg_samples: the sampler is a pure integer function of the edge
-    // set, so DuckDB re-derives the capped edges, every candidate, and the
-    // filtered-protocol anti-join from the encoded dump independently
-    "kg_neg_samples" ->
-      """WITH m AS (SELECT DISTINCT page_id, ent_id
-                    FROM read_parquet('{OUT}/aux_enc_triples/*.parquet')
-                    WHERE pred_id = 4),
-              l AS (SELECT page_id, ent_id FROM (
-                      SELECT page_id, ent_id,
-                             ROW_NUMBER() OVER (PARTITION BY page_id ORDER BY ent_id) AS rn
-                      FROM m) WHERE rn <= 64),
-              e AS MATERIALIZED (
-                    SELECT DISTINCT a.ent_id AS src, b.ent_id AS dst
-                    FROM l a JOIN l b ON a.page_id = b.page_id AND a.ent_id < b.ent_id),
-              v AS (SELECT GREATEST(MAX(src), MAX(dst)) + 1 AS n_vocab FROM e),
-              c AS (SELECT e.src, e.dst, k.k,
-                           (CAST(e.src AS BIGINT) * 40503
-                            + CAST(e.dst AS BIGINT) * 69069
-                            + k.k * 97561) % v.n_vocab AS neg
-                    FROM e, v, (SELECT UNNEST(range(1, 4)) AS k) k)
-         SELECT CAST(c.src AS INTEGER) AS src_id, CAST(c.dst AS INTEGER) AS dst_id,
-                CAST(c.k AS INTEGER) AS k, CAST(c.neg AS INTEGER) AS neg_id
-         FROM c
-         WHERE c.neg <> c.src AND c.neg <> c.dst
-           AND NOT EXISTS (SELECT 1 FROM e t
-                           WHERE t.src = LEAST(c.src, c.neg)
-                             AND t.dst = GREATEST(c.src, c.neg))""",
-    "kg_random_walks" -> (walkOracleSql(4) + "SELECT seed, step, node FROM walks"),
-    "kg_node2vec_walks" -> (node2vecOracleSql(4, pM = 500000L, qM = 2000000L) +
-      "SELECT seed, step, node FROM walks"),
-    "kg_node2vec_skipgrams" -> (node2vecOracleSql(4, pM = 500000L, qM = 2000000L) +
-      """SELECT a.node AS center, b.node AS context, COUNT(*) AS n_pairs
-         FROM walks a JOIN walks b
-           ON a.seed = b.seed AND a.step <> b.step AND ABS(a.step - b.step) <= 2
-         GROUP BY 1, 2"""),
-    "kg_fuzzy_link" ->
-      """WITH al AS (SELECT alias_norm, entity_iri, prior
-                     FROM read_parquet('{OUT}/aux_aliases/*.parquet')),
-              an AS (SELECT DISTINCT alias_norm FROM al),
-              best AS (SELECT alias_norm, entity_iri, prior FROM (
-                         SELECT alias_norm, entity_iri, prior,
-                                ROW_NUMBER() OVER (PARTITION BY alias_norm
-                                  ORDER BY prior DESC, entity_iri) AS rn
-                         FROM al) WHERE rn = 1),
-              s AS (SELECT DISTINCT
-                      substr(alias_norm, 1, length(alias_norm) // 2 - 1)
-                        || substr(alias_norm, length(alias_norm) // 2 + 1) AS surface
-                    FROM an WHERE length(alias_norm) >= 4),
-              sk AS (SELECT surface, surface AS k FROM s
-                     UNION
-                     SELECT surface, substr(surface, 1, i - 1) || substr(surface, i + 1) AS k
-                     FROM (SELECT surface, unnest(range(1, length(surface) + 1)) AS i FROM s)),
-              ak AS (SELECT alias_norm, alias_norm AS k FROM an
-                     UNION
-                     SELECT alias_norm, substr(alias_norm, 1, i - 1) || substr(alias_norm, i + 1) AS k
-                     FROM (SELECT alias_norm, unnest(range(1, length(alias_norm) + 1)) AS i FROM an)),
-              cand AS (SELECT DISTINCT sk.surface, ak.alias_norm
-                       FROM sk JOIN ak USING (k)),
-              v AS (SELECT surface, alias_norm,
-                           CAST(levenshtein(surface, alias_norm) AS BIGINT) AS lev
-                    FROM cand WHERE levenshtein(surface, alias_norm) <= 1),
-              r AS (SELECT v.surface, v.alias_norm, b.entity_iri, v.lev,
-                           ROW_NUMBER() OVER (PARTITION BY v.surface
-                             ORDER BY v.lev, b.prior DESC, b.entity_iri, v.alias_norm) AS rn
-                    FROM v JOIN best b USING (alias_norm))
-         SELECT surface, alias_norm, entity_iri, lev FROM r WHERE rn = 1""",
-    "kg_link_prediction" -> (walkGraphHead +
-      """, adj AS (SELECT src, dst FROM (
-               SELECT src, dst, ROW_NUMBER() OVER (PARTITION BY src ORDER BY dst) AS rn
-               FROM sym) WHERE rn <= 64),
-            wedge AS (SELECT a.dst AS src, b.dst AS dst
-                      FROM adj a JOIN adj b ON a.src = b.src AND a.dst < b.dst),
-            cn AS (SELECT src, dst, COUNT(*) AS n_common FROM wedge GROUP BY 1, 2),
-            cand AS (SELECT cn.src, cn.dst, cn.n_common
-                     FROM cn LEFT JOIN e ON e.src = cn.src AND e.dst = cn.dst
-                     WHERE e.src IS NULL)
-         SELECT CAST(src AS BIGINT) AS src, CAST(dst AS BIGINT) AS dst,
-                CAST(n_common AS BIGINT) AS n_common
-         FROM cand ORDER BY n_common DESC, src, dst LIMIT 50"""),
-    "kg_sameas_canonical" ->
-      """WITH RECURSIVE
-         al AS (SELECT DISTINCT alias_norm, entity_iri
-                FROM read_parquet('{OUT}/aux_aliases/*.parquet')),
-         cap AS (SELECT alias_norm, entity_iri FROM (
-                   SELECT alias_norm, entity_iri,
-                          ROW_NUMBER() OVER (PARTITION BY alias_norm ORDER BY entity_iri) AS rn
-                   FROM al) WHERE rn <= 64),
-         p AS (SELECT DISTINCT a.entity_iri AS src, b.entity_iri AS dst
-               FROM cap a JOIN cap b
-                 ON a.alias_norm = b.alias_norm AND a.entity_iri < b.entity_iri),
-         sym AS (SELECT src AS a, dst AS b FROM p UNION SELECT dst, src FROM p),
-         r(x, y) AS (SELECT a, b FROM sym
-                     UNION SELECT r.x, sym.b FROM r JOIN sym ON r.y = sym.a)
-         SELECT x AS entity_iri, LEAST(x, MIN(y)) AS canonical FROM r GROUP BY x""",
-    "kg_link_prediction_ra" -> (walkGraphHead +
-      """, deg AS (SELECT src AS z, COUNT(*) AS deg FROM sym GROUP BY 1),
-            adj AS (SELECT src, dst FROM (
-               SELECT src, dst, ROW_NUMBER() OVER (PARTITION BY src ORDER BY dst) AS rn
-               FROM sym) WHERE rn <= 64),
-            wedge AS (SELECT a.src AS z, a.dst AS u, b.dst AS v
-                      FROM adj a JOIN adj b ON a.src = b.src AND a.dst < b.dst),
-            ww AS (SELECT w.u, w.v, CAST(1000000000000 // d.deg AS BIGINT) AS wt
-                   FROM wedge w JOIN deg d ON d.z = w.z),
-            ra AS (SELECT u AS src, v AS dst, CAST(SUM(wt) AS BIGINT) AS ra_micro
-                   FROM ww GROUP BY 1, 2),
-            cand AS (SELECT ra.src, ra.dst, ra.ra_micro
-                     FROM ra LEFT JOIN e ON e.src = ra.src AND e.dst = ra.dst
-                     WHERE e.src IS NULL)
-         SELECT CAST(src AS BIGINT) AS src, CAST(dst AS BIGINT) AS dst, ra_micro
-         FROM cand ORDER BY ra_micro DESC, src, dst LIMIT 50"""),
-    "kg_triple_split" -> (walkGraphHead +
-      """, sp AS (SELECT src, dst,
-                CASE WHEN bkt < 80 THEN 'train' WHEN bkt < 90 THEN 'valid'
-                     ELSE 'test' END AS split
-              FROM (SELECT src, dst,
-                      (ascii(substr(md5(CAST(src AS VARCHAR) || ':' || CAST(dst AS VARCHAR)), 1, 1)) * 256
-                       + ascii(substr(md5(CAST(src AS VARCHAR) || ':' || CAST(dst AS VARCHAR)), 2, 1))) % 100 AS bkt
-                    FROM e)),
-            te AS (SELECT DISTINCT src AS ent FROM sp WHERE split = 'train'
-                   UNION
-                   SELECT DISTINCT dst AS ent FROM sp WHERE split = 'train')
-         SELECT CAST(src AS BIGINT) AS src, CAST(dst AS BIGINT) AS dst, split
-         FROM sp
-         WHERE split = 'train'
-            OR (src IN (SELECT ent FROM te) AND dst IN (SELECT ent FROM te))"""),
-    "kg_mention_contexts" ->
-      """WITH m AS (SELECT url, span_start, cp_start, cp_end
-                    FROM read_parquet('{OUT}/aux_mentions/*.parquet')),
-              x AS (SELECT url, text FROM read_parquet('{OUT}/aux_extracted/*.parquet'))
-         SELECT m.url, m.span_start,
-                substr(x.text, greatest(0, m.cp_start - 20) + 1,
-                       least(length(x.text), m.cp_end + 20)
-                         - greatest(0, m.cp_start - 20)) AS context
-         FROM m JOIN x USING (url)""",
-    "doc_trigram_topk" ->
-      """WITH toks AS (SELECT string_split(text, ' ') AS ws
-                       FROM documents WHERE len(string_split(text, ' ')) >= 3),
-              ix AS (SELECT ws, unnest(range(1, len(ws) - 1)) AS i FROM toks),
-              tg AS (SELECT ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS trigram FROM ix),
-              freq AS (SELECT trigram, CAST(COUNT(*) AS BIGINT) AS freq
-                       FROM tg GROUP BY 1 HAVING COUNT(*) >= 2)
-         SELECT trigram, freq FROM freq ORDER BY freq DESC, trigram LIMIT 100""",
-    "kg_walk_skipgrams" -> (walkOracleSql(4) +
-      """SELECT a.node AS center, b.node AS context, COUNT(*) AS n_pairs
-         FROM walks a JOIN walks b
-           ON a.seed = b.seed AND a.step <> b.step AND ABS(a.step - b.step) <= 2
-         GROUP BY 1, 2"""),
-    "kg_clustered_rect" ->
-      """WITH t AS (SELECT * FROM read_parquet('{OUT}/aux_enc_triples/*.parquet')),
-              b AS (SELECT MAX(page_id) // 4 AS lo, MAX(page_id) // 2 AS hi FROM t)
-         SELECT ent_id, COUNT(*) AS n_mentions
-         FROM t, b
-         WHERE pred_id = 4 AND page_id BETWEEN b.lo AND b.hi
-           AND ent_id BETWEEN 100 AND 300
-         GROUP BY 1""",
-    "kg_stored_neighbors" ->
-      """WITH e AS (SELECT DISTINCT url AS page, entity_iri AS ent
-                    FROM read_parquet('{OUT}/aux_links/*.parquet')),
-              seeds AS (SELECT DISTINCT ent AS seed FROM e ORDER BY seed LIMIT 3),
-              se AS (SELECT a.page, s.seed FROM e a JOIN seeds s ON a.ent = s.seed)
-         SELECT se.seed, b.ent AS neighbor, CAST(COUNT(DISTINCT se.page) AS BIGINT) AS n_pages
-         FROM se JOIN e b ON b.page = se.page AND b.ent <> se.seed
-         GROUP BY 1, 2""",
-    "doc_sample_stratified" ->
-      """SELECT doc_id, lang,
-           (ascii(substr(md5(text), 1, 1)) * 256 + ascii(substr(md5(text), 2, 1))) % 100 <
-             (CASE lang WHEN 'en' THEN 60 WHEN 'de' THEN 35 WHEN 'fr' THEN 35
-                        WHEN 'es' THEN 25 ELSE 10 END) AS sampled
-         FROM documents""",
-    "doc_mixture_sample" ->
-      """WITH c AS (SELECT lang, COUNT(*) AS n_docs FROM documents GROUP BY 1),
-              w AS (SELECT lang,
-                           CAST(FLOOR(SQRT(CAST(n_docs AS DOUBLE)) * 1000000) AS BIGINT) AS w
-                    FROM c),
-              q AS (SELECT lang,
-                           CAST((200 * w) // (SELECT SUM(w) FROM w) AS BIGINT) AS quota
-                    FROM w),
-              r AS (SELECT doc_id, lang,
-                           ROW_NUMBER() OVER (PARTITION BY lang ORDER BY md5(text), doc_id) AS rk
-                    FROM documents)
-         SELECT r.doc_id, r.lang, q.quota
-         FROM r JOIN q USING (lang) WHERE r.rk <= q.quota""",
-    "doc_shuffle_global" ->
-      """SELECT doc_id, ROW_NUMBER() OVER (ORDER BY md5(text), doc_id) AS pos
-         FROM documents""",
-    "doc_mixture_upsample" ->
-      """WITH c AS (SELECT lang, COUNT(*) AS n_docs FROM documents GROUP BY 1),
-              w AS (SELECT lang, n_docs,
-                           CAST(FLOOR(SQRT(CAST(n_docs AS DOUBLE)) * 1000000) AS BIGINT) AS w
-                    FROM c),
-              q AS (SELECT lang, n_docs,
-                           CAST((2 * (SELECT SUM(n_docs) FROM c) * w)
-                                // (SELECT SUM(w) FROM w) AS BIGINT) AS quota
-                    FROM w),
-              r AS (SELECT doc_id, lang,
-                           ROW_NUMBER() OVER (PARTITION BY lang ORDER BY md5(text), doc_id) AS rk
-                    FROM documents),
-              j AS (SELECT r.doc_id, r.lang, r.rk,
-                           q.quota // q.n_docs AS n_full, q.quota % q.n_docs AS rem
-                    FROM r JOIN q USING (lang))
-         SELECT doc_id, lang,
-                CAST(unnest(range(0, n_full + CASE WHEN rk <= rem THEN 1 ELSE 0 END)) AS BIGINT) AS epoch
-         FROM j""",
-    "doc_source_quota" ->
-      """SELECT doc_id, source, rn FROM (
-           SELECT doc_id, source,
-             ROW_NUMBER() OVER (PARTITION BY source ORDER BY doc_id) AS rn
-           FROM documents) t WHERE rn <= 20""",
-    "kg_merge_incremental" ->
-      """WITH u AS (
-           SELECT doc_id, text, 1 AS version FROM documents
-           UNION ALL
-           SELECT doc_id, text || ' v2' AS text, 2 AS version FROM documents WHERE doc_id % 7 = 0),
-         r AS (SELECT doc_id, md5(text) AS text_md5, CAST(version AS BIGINT) AS version,
-                 ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY version DESC) AS rn
-               FROM u)
-         SELECT doc_id, text_md5, version FROM r WHERE rn = 1""",
-    "ev_props_json" ->
-      """SELECT CAST(json_extract_string(props, '$.k') AS INTEGER) // 10 AS k_decile,
-              COUNT(*) AS n_events,
-              CAST(SUM(CAST(json_extract_string(props, '$.k') AS INTEGER)) AS BIGINT) AS sum_k
-         FROM events
-         GROUP BY k_decile""",
-    "doc_langid_eval" ->
-      """SELECT d.lang, f.lang_pred, COUNT(*) AS n_docs
-         FROM documents d
-         JOIN read_parquet('/root/repo/golden/frozen/{SF}/doc_langid.parquet') f USING (doc_id)
-         GROUP BY d.lang, f.lang_pred""",
-    "kg_top_entities" ->
-      """WITH best AS (SELECT alias_norm, entity_iri FROM (
-           SELECT alias_norm, entity_iri,
-             ROW_NUMBER() OVER (PARTITION BY alias_norm ORDER BY prior DESC, entity_iri ASC) AS rn
-           FROM read_parquet('{OUT}/aux_aliases/*.parquet')) WHERE rn = 1)
-         SELECT b.entity_iri, COUNT(*) AS n_mentions
-         FROM read_parquet('{OUT}/aux_mentions/*.parquet') m JOIN best b USING (alias_norm)
-         GROUP BY b.entity_iri""",
-    "kg_link_relational" ->
-      """WITH best AS (SELECT alias_norm, entity_iri FROM (
-           SELECT alias_norm, entity_iri,
-             ROW_NUMBER() OVER (PARTITION BY alias_norm ORDER BY prior DESC, entity_iri ASC) AS rn
-           FROM read_parquet('{OUT}/aux_aliases/*.parquet')) WHERE rn = 1)
-         SELECT b.entity_iri, COUNT(*) AS n_links
-         FROM read_parquet('{OUT}/aux_mentions/*.parquet') m JOIN best b USING (alias_norm)
-         GROUP BY b.entity_iri""",
-    "kg_comention_triangles" ->
-      """WITH l0 AS (SELECT DISTINCT url, entity_iri
-                     FROM read_parquet('{OUT}/aux_links/*.parquet')),
-              l AS (SELECT url, entity_iri FROM (
-                      SELECT url, entity_iri,
-                             ROW_NUMBER() OVER (PARTITION BY url ORDER BY entity_iri) AS rn
-                      FROM l0) WHERE rn <= 64),
-              e AS (SELECT DISTINCT a.entity_iri AS src, b.entity_iri AS dst
-                    FROM l a JOIN l b
-                    ON a.url = b.url AND a.entity_iri < b.entity_iri)
-         SELECT COUNT(*) AS n_triangles
-         FROM e e1
-         JOIN e e2 ON e2.src = e1.src AND e2.dst > e1.dst
-         JOIN e e3 ON e3.src = e1.dst AND e3.dst = e2.dst""",
-    "doc_tfidf_topterms" ->
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE doc_id < 100),
-              toks AS (SELECT doc_id, term FROM (
-                SELECT doc_id, unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS term
-                FROM d) WHERE term <> ''),
-              tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term),
-              df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-              nd AS (SELECT COUNT(DISTINCT doc_id) AS n FROM d),
-              scored AS (SELECT tf.doc_id, tf.term, tf.tf, df.df,
-                                tf.tf * (CAST(nd.n AS DOUBLE) / df.df) AS score
-                         FROM tf JOIN df USING (term), nd),
-              r AS (SELECT *, ROW_NUMBER() OVER (
-                      PARTITION BY doc_id ORDER BY score DESC, term ASC) AS rank
-                    FROM scored)
-         SELECT doc_id, term, tf, df, score, rank FROM r WHERE rank <= 3""",
-    "doc_pack_shards" ->
-      """WITH t AS (SELECT doc_id, lang,
-                           CASE WHEN trim(text)='' THEN 0
-                                ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_tokens
-                    FROM documents),
-              c AS (SELECT doc_id, lang, CAST(n_tokens AS BIGINT) AS n_tokens,
-                           CAST(COALESCE(SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_before
-                    FROM t)
-         SELECT doc_id, lang, n_tokens,
-                cum_before // 4096 AS shard_id,
-                cum_before % 4096 AS shard_offset
-         FROM c""",
-    "doc_chunk_sliding" ->
-      """WITH tkn AS (SELECT doc_id,
-                             CASE WHEN trim(text)='' THEN 0
-                                  ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_tokens
-                      FROM documents),
-              c AS (SELECT doc_id, n_tokens,
-                           CASE WHEN n_tokens <= 128 THEN 1
-                                ELSE (n_tokens - 128 + 63) // 64 + 1 END AS n_chunks
-                    FROM tkn)
-         SELECT doc_id, i AS chunk_id, i * 64 AS tok_start,
-                LEAST(128, n_tokens - i * 64) AS tok_len
-         FROM c, LATERAL (SELECT unnest(range(0, n_chunks)) AS i) t""",
-    "doc_redact" ->
-      """SELECT doc_id,
-                len(regexp_extract_all(text, '\b(customer|secret|password)\b')) AS n_blocked,
-                len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_emails,
-                md5(regexp_replace(regexp_replace(text,
-                      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-                    '\b(customer|secret|password)\b', '<TERM>', 'g')) AS redacted_md5
-         FROM documents""",
-    "doc_bigram_freq_stats" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS ws
-                       FROM documents WHERE len(string_split(text, ' ')) >= 2),
-              ix AS (SELECT doc_id, ws, unnest(range(1, len(ws))) AS i FROM toks),
-              bg AS (SELECT doc_id, ws[i] || ' ' || ws[i+1] AS bigram FROM ix),
-              freq AS (SELECT bigram, COUNT(*) AS freq FROM bg GROUP BY 1)
-         SELECT b.doc_id,
-                COUNT(*) AS n_bigrams,
-                CAST(MIN(f.freq) AS BIGINT) AS min_freq,
-                CAST(SUM(f.freq) AS BIGINT) AS sum_freq
-         FROM bg b JOIN freq f USING (bigram)
-         GROUP BY 1""",
-    "doc_repetition" ->
-      """WITH l AS (SELECT doc_id, string_split_regex(lower(text), '[^a-z0-9]+') AS toks
-                    FROM documents),
-              t0 AS (SELECT doc_id, unnest(toks) AS term,
-                            unnest(range(1, len(toks)+1)) AS pos FROM l),
-              t AS (SELECT * FROM t0 WHERE term <> ''),
-              tf AS (SELECT doc_id, term, COUNT(*) AS c FROM t GROUP BY doc_id, term),
-              ts AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_tokens,
-                            COUNT(*) AS n_distinct_tokens, MAX(c) AS max_tf
-                     FROM tf GROUP BY doc_id),
-              b0 AS (SELECT doc_id, term,
-                            LEAD(term) OVER (PARTITION BY doc_id ORDER BY pos) AS nxt
-                     FROM t),
-              b AS (SELECT doc_id, term || ' ' || nxt AS bigram FROM b0 WHERE nxt IS NOT NULL),
-              bs AS (SELECT doc_id, COUNT(*) AS n_bigrams,
-                            COUNT(DISTINCT bigram) AS n_distinct_bigrams
-                     FROM b GROUP BY doc_id)
-         SELECT ts.doc_id, n_tokens, n_distinct_tokens, max_tf,
-                COALESCE(n_bigrams, 0) AS n_bigrams,
-                COALESCE(n_distinct_bigrams, 0) AS n_distinct_bigrams
-         FROM ts LEFT JOIN bs ON ts.doc_id = bs.doc_id""",
-    "doc_length_quantiles" ->
-      """WITH r AS (SELECT lang, n_chars,
-                           ROW_NUMBER() OVER (PARTITION BY lang ORDER BY n_chars) AS rn,
-                           COUNT(*) OVER (PARTITION BY lang) AS n
-                    FROM documents)
-         SELECT lang,
-                MAX(CASE WHEN rn = (50*n + 99) // 100 THEN n_chars END) AS p50,
-                MAX(CASE WHEN rn = (90*n + 99) // 100 THEN n_chars END) AS p90,
-                MAX(CASE WHEN rn = (99*n + 99) // 100 THEN n_chars END) AS p99
-         FROM r GROUP BY lang""",
-    // the distributed part of extract-identity is the frozen-hash extract_ok
-    // flag (non-SQL); the oracle re-aggregates it from the per-page dump so
-    // the count/sum layer is independently recomputed
-    "kg_extract_identity" ->
-      """SELECT COUNT(*) AS n_pages,
-                CAST(SUM(CASE WHEN extract_ok THEN 1 ELSE 0 END) AS BIGINT) AS n_byte_identical
-         FROM read_parquet('{OUT}/aux_extracted/*.parquet')""",
-    // P/R re-derived in DuckDB: distinct + three-way intersection join over
-    // the produced-link and synthetic-gold dumps; both divisions are IEEE
-    // double over exact counts on both engines
-    "kg_link_precision_recall" ->
-      """WITH produced AS (SELECT DISTINCT url, surface, entity_iri
-                           FROM read_parquet('{OUT}/aux_links/*.parquet')),
-              gold AS (SELECT DISTINCT url, surface, entity_iri
-                       FROM read_parquet('{OUT}/aux_golds/*.parquet')),
-              tp AS (SELECT COUNT(*) AS c FROM produced JOIN gold
-                     USING (url, surface, entity_iri)),
-              np AS (SELECT COUNT(*) AS c FROM produced),
-              ng AS (SELECT COUNT(*) AS c FROM gold)
-         SELECT CASE WHEN np.c = 0 THEN CAST(1.0 AS DOUBLE)
-                     ELSE CAST(tp.c AS DOUBLE) / np.c END AS precision,
-                CASE WHEN ng.c = 0 THEN CAST(1.0 AS DOUBLE)
-                     ELSE CAST(tp.c AS DOUBLE) / ng.c END AS recall
-         FROM tp, np, ng""",
-    "kg_triples_by_pred" ->
-      """WITH p AS (SELECT COUNT(*) AS n FROM read_parquet('{OUT}/aux_extracted/*.parquet')),
-              l AS (SELECT COUNT(*) AS n FROM read_parquet('{OUT}/aux_links/*.parquet'))
-         SELECT pred, CAST(n AS BIGINT) AS n_triples FROM (
-           SELECT 'rdf:type' AS pred, p.n + 6 + 400 AS n FROM p
-           UNION ALL SELECT 'web:lang', p.n FROM p
-           UNION ALL SELECT 'web:warc_ts', p.n FROM p
-           UNION ALL SELECT 'web:n_chars', p.n FROM p
-           UNION ALL SELECT 'web:mentions', l.n FROM l
-           UNION ALL SELECT 'graft:range', 1
-           UNION ALL SELECT 'rdf:name', 400)""",
-    "doc_minhash_pairs" ->
-      """WITH b AS (SELECT doc_id, band, band_hash FROM read_parquet('{OUT}/aux_minhash_bands/*.parquet')),
-         cand AS (SELECT DISTINCT a.doc_id AS doc_a, c.doc_id AS doc_b
-                  FROM b a JOIN b c ON a.band = c.band AND a.band_hash = c.band_hash AND a.doc_id < c.doc_id),
-         s AS (SELECT doc_id, shingle_hash FROM read_parquet('{OUT}/aux_shingles/*.parquet')),
-         n AS (SELECT doc_id, COUNT(*) AS n FROM s GROUP BY doc_id),
-         i AS (SELECT doc_a, doc_b, COUNT(*) AS ni
-               FROM cand JOIN s sa ON sa.doc_id = doc_a
-                         JOIN s sb ON sb.doc_id = doc_b AND sb.shingle_hash = sa.shingle_hash
-               GROUP BY doc_a, doc_b)
-         SELECT c.doc_a, c.doc_b
-         FROM cand c
-         LEFT JOIN i ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b
-         LEFT JOIN n na ON na.doc_id = c.doc_a
-         LEFT JOIN n nb ON nb.doc_id = c.doc_b
-         WHERE (COALESCE(na.n, 0) = 0 AND COALESCE(nb.n, 0) = 0)
-            OR COALESCE(i.ni, 0) * 10 >=
-               (COALESCE(na.n, 0) + COALESCE(nb.n, 0) - COALESCE(i.ni, 0)) * 3""",
-    "doc_minhash_calibration" ->
-      """WITH b AS (SELECT doc_id, band, band_hash FROM read_parquet('{OUT}/aux_minhash_bands/*.parquet')),
-         cand AS (SELECT DISTINCT a.doc_id AS doc_a, c.doc_id AS doc_b
-                  FROM b a JOIN b c ON a.band = c.band AND a.band_hash = c.band_hash AND a.doc_id < c.doc_id),
-         sg AS (SELECT doc_id, slot, sig FROM read_parquet('{OUT}/aux_minhash_sigs/*.parquet')),
-         m AS (SELECT doc_a, doc_b, COUNT(*) AS matching_slots
-               FROM cand JOIN sg x ON x.doc_id = doc_a
-                         JOIN sg y ON y.doc_id = doc_b AND y.slot = x.slot AND y.sig = x.sig
-               GROUP BY doc_a, doc_b),
-         s AS (SELECT doc_id, shingle_hash FROM read_parquet('{OUT}/aux_shingles/*.parquet')),
-         n AS (SELECT doc_id, COUNT(*) AS n FROM s GROUP BY doc_id),
-         i AS (SELECT doc_a, doc_b, COUNT(*) AS ni
-               FROM cand JOIN s sa ON sa.doc_id = doc_a
-                         JOIN s sb ON sb.doc_id = doc_b AND sb.shingle_hash = sa.shingle_hash
-               GROUP BY doc_a, doc_b),
-         p AS (SELECT c.doc_a, c.doc_b,
-                      CAST(COALESCE(m.matching_slots, 0) AS INTEGER) AS matching_slots,
-                      COALESCE(i.ni, 0) AS inter,
-                      COALESCE(na.n, 0) + COALESCE(nb.n, 0) - COALESCE(i.ni, 0) AS un
-               FROM cand c
-               LEFT JOIN m ON m.doc_a = c.doc_a AND m.doc_b = c.doc_b
-               LEFT JOIN i ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b
-               LEFT JOIN n na ON na.doc_id = c.doc_a
-               LEFT JOIN n nb ON nb.doc_id = c.doc_b)
-         SELECT matching_slots, COUNT(*) AS n_pairs,
-                CAST(SUM(inter) AS BIGINT) AS sum_inter,
-                CAST(SUM(un) AS BIGINT) AS sum_union
-         FROM p GROUP BY matching_slots""",
-    "doc_dedup_incremental" -> incrementalDedupSql,
-    // the stored-index path must reproduce the recompute path EXACTLY, so it
-    // legitimately shares the oracle (the independent SQL re-derivation
-    // cannot tell which side computed the bands)
-    "doc_dedup_index" -> incrementalDedupSql,
-    "doc_simhash_pairs" ->
-      """WITH s AS (SELECT doc_id, simhash FROM read_parquet('{OUT}/aux_simhashes/*.parquet')),
-         b AS (SELECT doc_id, simhash, t.band, (simhash >> (16 * t.band)) & 65535 AS key
-               FROM s, (SELECT UNNEST([0,1,2,3]) AS band) t),
-         cand AS (SELECT DISTINCT a.doc_id AS doc_a, a.simhash AS sa, c.doc_id AS doc_b, c.simhash AS sb
-                  FROM b a JOIN b c ON a.band = c.band AND a.key = c.key AND a.doc_id < c.doc_id)
-         SELECT doc_a, doc_b, CAST(bit_count(xor(sa, sb)) AS INTEGER) AS hamming
-         FROM cand WHERE bit_count(xor(sa, sb)) <= 10""",
-    "doc_dedup_telemetry" ->
-      """WITH b AS (SELECT band, band_hash, COUNT(*) AS n
-                    FROM read_parquet('{OUT}/aux_minhash_bands/*.parquet') GROUP BY band, band_hash)
-         SELECT COUNT(*) AS n_buckets,
-           CAST(SUM(CASE WHEN n > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_multi_buckets,
-           CAST(SUM(CASE WHEN n > 1000 THEN 1 ELSE 0 END) AS BIGINT) AS n_capped_buckets,
-           CAST(SUM(CASE WHEN n > 1000 THEN n * (n - 1) // 2 - 499500 ELSE 0 END) AS BIGINT) AS dropped_candidate_pairs
-         FROM b""",
-    // sf-keyed frozen oracles ({SF} = the sweep's scale directory name,
-    // substituted by Verify): a sweep at a scale with no frozen fixture
-    // fails loudly at read_parquet instead of as a fake hash mismatch
-    "doc_simhash" ->
-      "SELECT * FROM read_parquet('/root/repo/golden/frozen/{SF}/doc_simhash.parquet')",
-    "doc_fingerprint" ->
-      "SELECT * FROM read_parquet('/root/repo/golden/frozen/{SF}/doc_fingerprint.parquet')",
-    "doc_split_hash64" ->
-      "SELECT * FROM read_parquet('/root/repo/golden/frozen/{SF}/doc_split_hash64.parquet')",
-    "doc_langid" ->
-      "SELECT * FROM read_parquet('/root/repo/golden/frozen/{SF}/doc_langid.parquet')",
-    "doc_quality_score" ->
-      "SELECT * FROM read_parquet('/root/repo/golden/frozen/{SF}/doc_quality_score.parquet')",
-    // the mm_* codec queries run on a fixed 500-blob synthetic input
-    // (sf-independent), so their frozen fixtures live under common/; DuckDB
-    // never decodes a PNG/WAV/AVI — it only compares the frozen table
-    "mm_decode_meta" ->
-      "SELECT * FROM read_parquet('/root/repo/golden/frozen/common/mm_decode_meta.parquet')",
-    "mm_features" ->
-      "SELECT * FROM read_parquet('/root/repo/golden/frozen/common/mm_features.parquet')",
-    "mm_frame_sample" ->
-      "SELECT * FROM read_parquet('/root/repo/golden/frozen/common/mm_frame_sample.parquet')",
-    "mm_resize" ->
-      "SELECT * FROM read_parquet('/root/repo/golden/frozen/common/mm_resize.parquet')",
-    "emb_label_knn_purity" ->
-      """WITH q AS (SELECT vec_id AS qid, embedding AS qe, label AS q_label
-                    FROM embeddings ORDER BY vec_id LIMIT 50),
-         r AS (SELECT q.qid, q.q_label, e.label AS n_label,
-                 ROW_NUMBER() OVER (PARTITION BY q.qid
-                   ORDER BY list_cosine_similarity(q.qe, e.embedding) DESC, e.vec_id ASC) AS rnk
-               FROM q, embeddings e WHERE e.vec_id <> q.qid)
-         SELECT COUNT(*) AS n_queries,
-                CAST(SUM(CASE WHEN q_label = n_label THEN 1 ELSE 0 END) AS BIGINT) AS n_same_label
-         FROM r WHERE rnk = 1""",
-    "cj_triples_by_pred" ->
-      """SELECT pred, COUNT(*) AS n_triples
-         FROM read_ndjson_auto('/root/repo/golden/*.triples.ndjson')
-         GROUP BY pred""",
-    "cj_doc_stats" ->
-      """SELECT 'cj:' || fixture AS doc_iri, CAST(triples AS BIGINT) AS n_triples,
-              CAST(error_logs AS BIGINT) AS n_errors, FALSE AS failed
-         FROM read_csv('/root/repo/golden/SUMMARY.tsv', delim='\t', header=true)""",
-    "cj_log_categories" ->
-      """SELECT level, COUNT(*) AS n_categories FROM (
-           SELECT DISTINCT level, category
-           FROM read_csv('/root/repo/golden/*.logs.tsv', delim='\t', header=true, quote=''))
-         GROUP BY level""",
-    "q1_pricing" ->
-      """SELECT l_returnflag, l_linestatus,
-           CAST(SUM(l_quantity) AS BIGINT) AS sum_qty,
-           CAST(SUM(ROUND(l_extendedprice*100)) AS BIGINT) AS sum_base_cents,
-           CAST(SUM(ROUND(l_extendedprice*(1-l_discount)*100)) AS BIGINT) AS sum_disc_cents,
-           COUNT(*) AS count_order
-         FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-01'
-         GROUP BY l_returnflag, l_linestatus""",
-    "q3_priority_revenue" ->
-      """SELECT o_orderpriority,
-           CAST(SUM(ROUND(l_extendedprice*(1-l_discount)*100)) AS BIGINT) AS revenue_cents,
-           COUNT(DISTINCT o_orderkey) AS n_orders
-         FROM customer JOIN orders ON c_custkey=o_custkey JOIN lineitem ON o_orderkey=l_orderkey
-         WHERE c_mktsegment='BUILDING' GROUP BY o_orderpriority""",
-    "q_join_broadcast" ->
-      """SELECT r_name, COUNT(*) AS n_customers,
-           CAST(SUM(ROUND(c_acctbal*100)) AS BIGINT) AS acctbal_cents
-         FROM customer JOIN nation ON c_nationkey=n_nationkey JOIN region ON n_regionkey=r_regionkey
-         GROUP BY r_name""",
-    "q_window_topk" ->
-      """SELECT o_custkey, o_orderkey, rnk FROM (
-           SELECT o_custkey, o_orderkey,
-             ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC) AS rnk
-           FROM orders) t WHERE rnk <= 3""",
-    "q_anti_join" ->
-      """SELECT c_nationkey, COUNT(*) AS n_customers_no_orders FROM customer
-         WHERE NOT EXISTS (SELECT 1 FROM orders
-                           WHERE o_custkey=c_custkey AND o_orderdate < TIMESTAMP '1995-07-01')
-         GROUP BY c_nationkey""",
-    "q_semi_join" ->
-      """SELECT s_nationkey, COUNT(*) AS n_suppliers_with_lineitems FROM supplier
-         WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_suppkey=s_suppkey)
-         GROUP BY s_nationkey""",
-    "q_setops" ->
-      """SELECT l_orderkey AS early_only_orderkey FROM lineitem WHERE l_shipdate < TIMESTAMP '1996-01-01'
-         EXCEPT
-         SELECT l_orderkey FROM lineitem WHERE l_shipdate >= TIMESTAMP '1996-01-01'""",
-    "q_rollup" ->
-      """SELECT COALESCE(l_returnflag,'ALL') AS returnflag,
-              COALESCE(l_linestatus,'ALL') AS linestatus, COUNT(*) AS n_rows
-         FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)""",
-    "q_cheapest_lineitem" ->
-      """SELECT o_orderkey,
-           CAST((SELECT MIN(ROUND(l_extendedprice * 100)) FROM lineitem
-                 WHERE l_orderkey = o_orderkey) AS BIGINT) AS min_price_cents
-         FROM orders
-         WHERE o_totalprice > 400000""",
-    "ev_hourly" ->
-      """SELECT event_type, CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_epoch,
-           COUNT(*) AS n_events,
-           CAST(SUM(ROUND(value*100)) AS BIGINT) AS value_cents
-         FROM events GROUP BY event_type, date_trunc('hour', ts)""",
-    "ev_asof_join" ->
-      """SELECT p.event_id, v.event_id AS view_event_id
-         FROM (SELECT * FROM events WHERE event_type='purchase') p
-         ASOF LEFT JOIN (SELECT * FROM events WHERE event_type='view') v
-           ON p.user_id = v.user_id AND p.ts >= v.ts""",
-    "ev_asof_join_native" ->
-      """SELECT p.event_id, v.event_id AS view_event_id
-         FROM (SELECT * FROM events WHERE event_type='purchase') p
-         ASOF LEFT JOIN (SELECT * FROM events WHERE event_type='view') v
-           ON p.user_id = v.user_id AND p.ts >= v.ts""",
-    "ev_asof_join_tol" ->
-      """SELECT p.event_id,
-           CASE WHEN v.ts IS NOT NULL AND epoch_us(p.ts) - epoch_us(v.ts) <= 203000000
-                THEN v.event_id END AS view_event_id
-         FROM (SELECT * FROM events WHERE event_type='purchase') p
-         ASOF LEFT JOIN (SELECT * FROM events WHERE event_type='view') v
-           ON p.user_id = v.user_id AND p.ts >= v.ts""",
-    "ev_asof_join_native_tol" ->
-      """SELECT p.event_id,
-           CASE WHEN v.ts IS NOT NULL AND epoch_us(p.ts) - epoch_us(v.ts) <= 203000000
-                THEN v.event_id END AS view_event_id
-         FROM (SELECT * FROM events WHERE event_type='purchase') p
-         ASOF LEFT JOIN (SELECT * FROM events WHERE event_type='view') v
-           ON p.user_id = v.user_id AND p.ts >= v.ts""",
-    "ev_asof_join_fwd" ->
-      """SELECT p.event_id, v.event_id AS view_event_id
-         FROM (SELECT * FROM events WHERE event_type='purchase') p
-         ASOF LEFT JOIN (SELECT * FROM events WHERE event_type='view') v
-           ON p.user_id = v.user_id AND p.ts <= v.ts""",
-    "ev_value_1h_running" ->
-      """SELECT event_id,
-              CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) OVER (
-                PARTITION BY user_id ORDER BY epoch_us(ts)
-                RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW) AS BIGINT) AS value_1h_cents
-         FROM events""",
-    "q_rank_stats" ->
-      """SELECT c_custkey,
-              NTILE(4) OVER w AS quartile,
-              PERCENT_RANK() OVER w AS pct_rank,
-              CUME_DIST() OVER w AS cume
-         FROM customer
-         WINDOW w AS (PARTITION BY c_nationkey ORDER BY c_acctbal, c_custkey)""",
-    "ev_funnel" ->
-      """WITH u AS (SELECT user_id,
-                           MIN(CASE WHEN event_type='signup' THEN ts END) AS t_signup,
-                           MIN(CASE WHEN event_type='view' THEN ts END) AS t_view,
-                           MIN(CASE WHEN event_type='purchase' THEN ts END) AS t_purchase
-                    FROM events GROUP BY user_id)
-         SELECT COUNT(*) AS n_users,
-                CAST(SUM(CASE WHEN t_signup IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_signup,
-                CAST(SUM(CASE WHEN t_signup < t_view THEN 1 ELSE 0 END) AS BIGINT) AS n_signup_then_view,
-                CAST(SUM(CASE WHEN t_signup < t_view AND t_view < t_purchase
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_full_funnel
-         FROM u""",
-    "kg_degree_hist" ->
-      """WITH l0 AS (SELECT DISTINCT url, entity_iri
-                     FROM read_parquet('{OUT}/aux_links/*.parquet')),
-              l AS (SELECT url, entity_iri FROM (
-                      SELECT url, entity_iri,
-                             ROW_NUMBER() OVER (PARTITION BY url ORDER BY entity_iri) AS rn
-                      FROM l0) WHERE rn <= 64),
-              e AS (SELECT DISTINCT a.entity_iri AS src, b.entity_iri AS dst
-                    FROM l a JOIN l b ON a.url = b.url AND a.entity_iri < b.entity_iri),
-              d AS (SELECT node, COUNT(*) AS degree FROM (
-                      SELECT src AS node FROM e UNION ALL SELECT dst FROM e) t
-                    GROUP BY node)
-         SELECT degree, COUNT(*) AS n_nodes FROM d GROUP BY degree""",
-    "ev_sessions" ->
-      """SELECT user_id, CAST(SUM(new_session) AS BIGINT) AS n_sessions, COUNT(*) AS n_events FROM (
-           SELECT user_id,
-             CASE WHEN prev_ts IS NULL OR ts > prev_ts + INTERVAL 1800 SECOND THEN 1 ELSE 0 END AS new_session
-           FROM (SELECT user_id, ts,
-                   LAG(ts) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) AS prev_ts
-                 FROM events) a) b GROUP BY user_id""",
-    // independent lag-based re-derivation of session_window; the guard term
-    // poisons every row if the equivalence precondition (no exact-gap
-    // boundary) ever stops holding on the corpus, turning a silently-wrong
-    // oracle into a loud mismatch
-    "ev_session_window" ->
-      """WITH g AS (SELECT user_id, ts,
-                           LAG(ts) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) AS prev_ts
-                    FROM events),
-              guard AS (SELECT COUNT(*) AS n FROM g WHERE ts = prev_ts + INTERVAL 1800 SECOND)
-         SELECT user_id,
-                CAST(SUM(CASE WHEN prev_ts IS NULL OR ts > prev_ts + INTERVAL 1800 SECOND
-                         THEN 1 ELSE 0 END) + (SELECT n FROM guard) * 1000000000 AS BIGINT) AS n_sessions,
-                COUNT(*) AS n_events
-         FROM g GROUP BY user_id""",
-    "ev_range_join" ->
-      """SELECT p.event_id, COUNT(*) AS n_views_1h
-         FROM (SELECT user_id, ts, event_id FROM events WHERE event_type='purchase') p
-         JOIN (SELECT user_id, ts FROM events WHERE event_type='view') w
-           ON p.user_id = w.user_id
-          AND w.ts >= p.ts - INTERVAL 3600 SECOND AND w.ts <= p.ts
-         GROUP BY p.event_id""",
-    "q_cube" ->
-      """SELECT COALESCE(l_returnflag,'ALL') AS returnflag,
-              COALESCE(l_linestatus,'ALL') AS linestatus, COUNT(*) AS n_rows,
-              CAST(SUM(l_quantity) AS BIGINT) AS sum_qty
-         FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)""",
-    "q_top_orders" ->
-      """SELECT o_orderkey, CAST(ROUND(o_totalprice*100) AS BIGINT) AS totalprice_cents
-         FROM orders ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 100""",
-    "q_pivot" ->
-      """SELECT l_linestatus,
-           CAST(SUM(CASE WHEN l_returnflag='A' THEN l_quantity END) AS BIGINT) AS qty_a,
-           CAST(SUM(CASE WHEN l_returnflag='N' THEN l_quantity END) AS BIGINT) AS qty_n,
-           CAST(SUM(CASE WHEN l_returnflag='R' THEN l_quantity END) AS BIGINT) AS qty_r
-         FROM lineitem GROUP BY l_linestatus""",
-    "q_grouping_sets" ->
-      """SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
-              COALESCE(l_linestatus, 'ALL') AS linestatus,
-              COUNT(*) AS n_rows
-         FROM lineitem GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""",
-    "doc_dedup_exact" ->
-      """SELECT md5(text) AS text_md5, COUNT(*) AS n_docs, MIN(doc_id) AS canonical_doc_id
-         FROM documents GROUP BY md5(text)""",
-    "doc_curation" ->
-      """SELECT doc_id,
-           CASE WHEN doc_id <> MIN(doc_id) OVER (PARTITION BY md5(text)) THEN 'duplicate'
-                WHEN LENGTH(text) < 100 THEN 'too_short'
-                WHEN (LENGTH(text) - LENGTH(regexp_replace(text, '[.,!?;:]', '', 'g'))) * 10 > LENGTH(text) THEN 'punct_heavy'
-                ELSE 'keep' END AS verdict
-         FROM documents""",
-    "doc_split_md5" ->
-      """SELECT doc_id,
-           CASE WHEN substr(md5(text),1,1) IN ('0','1') THEN 'val'
-                WHEN substr(md5(text),1,1) IN ('2','3') THEN 'test'
-                ELSE 'train' END AS split
-         FROM documents""",
-    "doc_dedup_keep" ->
-      """SELECT doc_id, md5(text) AS text_md5,
-           doc_id = MIN(doc_id) OVER (PARTITION BY md5(text)) AS keep
-         FROM documents""",
-    "doc_dup_spans" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-                    WHERE len(string_split(text, ' ')) >= 5),
-              p AS (SELECT doc_id, unnest(range(1, len(ws) - 3)) AS pos, ws FROM t),
-              g AS (SELECT doc_id, pos, array_to_string(ws[pos:pos+4], ' ') AS gram FROM p),
-              d AS (SELECT gram FROM g GROUP BY 1 HAVING COUNT(*) > 1),
-              m AS (SELECT doc_id, pos FROM g WHERE gram IN (SELECT gram FROM d)),
-              i AS (SELECT doc_id, pos,
-                           pos - ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) AS island
-                    FROM m)
-         SELECT doc_id, MIN(pos) AS span_start,
-                MAX(pos) - MIN(pos) + 5 AS span_tokens,
-                COUNT(*) AS n_grams
-         FROM i GROUP BY doc_id, island""",
-    "doc_dup_cut" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-              g0 AS (SELECT doc_id, unnest(range(1, len(ws) - 3)) AS pos, ws FROM t
-                     WHERE len(ws) >= 5),
-              g2 AS (SELECT doc_id, pos, array_to_string(ws[pos:pos+4], ' ') AS gram FROM g0),
-              c AS (SELECT gram, doc_id AS c_doc, pos AS c_pos FROM (
-                      SELECT gram, doc_id, pos,
-                             COUNT(*) OVER (PARTITION BY gram) AS n,
-                             ROW_NUMBER() OVER (PARTITION BY gram ORDER BY doc_id, pos) AS rn
-                      FROM g2) WHERE n > 1 AND rn = 1),
-              cov AS (SELECT g2.doc_id, unnest(range(g2.pos, g2.pos + 5)) AS i,
-                             (g2.doc_id = c.c_doc AND g2.pos = c.c_pos) AS is_canon
-                      FROM g2 JOIN c USING (gram)),
-              tokcov AS (SELECT doc_id, i, MAX(is_canon) AS any_canon FROM cov GROUP BY 1, 2),
-              tok AS (SELECT doc_id, unnest(ws) AS tok, unnest(range(1, len(ws) + 1)) AS i FROM t),
-              kt AS (SELECT tok.doc_id, tok.i, tok.tok,
-                            COALESCE(tc.any_canon, TRUE) AS keep
-                     FROM tok LEFT JOIN tokcov tc ON tok.doc_id = tc.doc_id AND tok.i = tc.i)
-         SELECT doc_id, COUNT(*) AS n_tokens,
-                CAST(SUM(CASE WHEN keep THEN 0 ELSE 1 END) AS BIGINT) AS n_cut,
-                COALESCE(string_agg(tok, ' ' ORDER BY i) FILTER (WHERE keep), '') AS text_cut
-         FROM kt GROUP BY doc_id""",
-    "q_approx_distinct" ->
-      """SELECT COUNT(DISTINCT l_partkey) AS exact_parts, TRUE AS approx_within_10pct
-         FROM lineitem""",
-    "doc_token_count" ->
-      """SELECT doc_id,
-           CASE WHEN trim(text)='' THEN 0 ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_ws_tokens
-         FROM documents""",
-    "doc_token_count_bpe" ->
-      """SELECT doc_id,
-           len(regexp_extract_all(text, ' ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\t\n\r\f ]+|[\t\n\r\f ]+')) AS n_bpe_tokens
-         FROM documents""",
-    "doc_bpe_pair_counts" ->
-      """WITH w AS (SELECT unnest(regexp_extract_all(text, ' ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\t\n\r\f ]+|[\t\n\r\f ]+')) AS word
-                    FROM documents),
-         wf AS (SELECT word, COUNT(*) AS f FROM w GROUP BY word),
-         ix AS (SELECT word, f, unnest(range(1, length(word))) AS i FROM wf WHERE length(word) >= 2),
-         p AS (SELECT substr(word, CAST(i AS INT), 1) AS l,
-                      substr(word, CAST(i AS INT) + 1, 1) AS r, f FROM ix)
-         SELECT l, r, CAST(SUM(f) AS BIGINT) AS freq FROM p GROUP BY l, r
-         ORDER BY freq DESC, l, r LIMIT 50""",
-    "doc_bpe_merges" ->
-      "SELECT * FROM read_parquet('/root/repo/golden/frozen/{SF}/doc_bpe_merges.parquet')",
-    "doc_bpe_encode" ->
-      "SELECT * FROM read_parquet('/root/repo/golden/frozen/{SF}/doc_bpe_encode.parquet')",
-    "doc_quality_sql" ->
-      """SELECT doc_id, LENGTH(text) AS n_chars,
-           LENGTH(text) - LENGTH(regexp_replace(text, '[.,!?;:]', '', 'g')) AS n_punct,
-           LENGTH(text) - LENGTH(regexp_replace(text, '[0-9]', '', 'g')) AS n_digits
-         FROM documents""",
-    "doc_ngram_jaccard" ->
-      """WITH w AS (SELECT doc_id, regexp_split_to_array(text, ' ') AS ws FROM documents WHERE doc_id < 100),
-         g AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] AS sh
-               FROM w, LATERAL (SELECT unnest(generate_series(1, len(ws)-1)) AS i) t),
-         s AS (SELECT doc_id, COUNT(*) AS n FROM g GROUP BY doc_id),
-         p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-               FROM g a JOIN g b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2)
-         SELECT p.doc_a, p.doc_b, p.n_inter, sa.n + sb.n - p.n_inter AS n_union
-         FROM p JOIN s sa ON sa.doc_id = p.doc_a JOIN s sb ON sb.doc_id = p.doc_b
-         WHERE p.n_inter * 100 >= (sa.n + sb.n - p.n_inter) * 8""",
-    "doc_decontaminate" ->
-      """WITH w AS (SELECT doc_id, regexp_split_to_array(text, ' ') AS ws FROM documents),
-         g AS (SELECT DISTINCT doc_id, list_aggregate(ws[i:i+3], 'string_agg', ' ') AS sh
-               FROM w, LATERAL (SELECT unnest(generate_series(1, len(ws)-3)) AS i) t),
-         ev AS (SELECT DISTINCT sh FROM g WHERE doc_id < 50),
-         hits AS (SELECT DISTINCT g.doc_id FROM g JOIN ev ON g.sh = ev.sh WHERE g.doc_id >= 50)
-         SELECT d.doc_id, (h.doc_id IS NOT NULL) AS contaminated
-         FROM (SELECT doc_id FROM documents WHERE doc_id >= 50) d
-         LEFT JOIN hits h ON h.doc_id = d.doc_id""",
-    "doc_dup_components" ->
-      """WITH RECURSIVE
-         w AS (SELECT doc_id, regexp_split_to_array(text, ' ') AS ws FROM documents WHERE doc_id < 100),
-         g AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] AS sh
-               FROM w, LATERAL (SELECT unnest(generate_series(1, len(ws)-1)) AS i) t),
-         s AS (SELECT doc_id, COUNT(*) AS n FROM g GROUP BY doc_id),
-         p0 AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-                FROM g a JOIN g b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2),
-         p AS (SELECT doc_a, doc_b FROM p0 JOIN s sa ON sa.doc_id = doc_a JOIN s sb ON sb.doc_id = doc_b
-               WHERE n_inter * 100 >= (sa.n + sb.n - n_inter) * 8),
-         sym AS (SELECT doc_a AS a, doc_b AS b FROM p UNION SELECT doc_b, doc_a FROM p),
-         r(x, y) AS (SELECT a, b FROM sym UNION SELECT r.x, sym.b FROM r JOIN sym ON r.y = sym.a)
-         SELECT x AS doc_id, LEAST(x, MIN(y)) AS component FROM r GROUP BY x""",
-    "emb_pairs_cosine" ->
-      """SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-         FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-         WHERE a.vec_id < 120 AND b.vec_id < 120
-           AND list_cosine_similarity(a.embedding, b.embedding) >= 0.357""",
-    // bucket pairs + threshold sweep re-derived from the bucket dump; the
-    // float comparisons are safe cross-engine because every cosine sits
-    // >= 7e-4 from the nearest threshold on this corpus (measured), six
-    // orders of magnitude beyond any accumulation-order divergence
-    "emb_dedup_cosine" ->
-      """WITH vb AS (SELECT vec_id, bucket FROM read_parquet('{OUT}/aux_emb_buckets/*.parquet')),
-              capped AS (SELECT vec_id, bucket FROM (
-                SELECT vec_id, bucket,
-                       ROW_NUMBER() OVER (PARTITION BY bucket ORDER BY vec_id) AS rn
-                FROM vb) WHERE rn <= 1000),
-              p AS (SELECT a.vec_id AS va, b.vec_id AS vbb
-                    FROM capped a JOIN capped b
-                    ON a.bucket = b.bucket AND a.vec_id < b.vec_id),
-              c AS (SELECT list_cosine_similarity(ea.embedding, eb.embedding) AS cos
-                    FROM p JOIN embeddings ea ON ea.vec_id = p.va
-                           JOIN embeddings eb ON eb.vec_id = p.vbb)
-         SELECT COUNT(*) AS bucket_pairs,
-                CAST(SUM(CASE WHEN cos >= 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS ge_050,
-                CAST(SUM(CASE WHEN cos >= 0.8 THEN 1 ELSE 0 END) AS BIGINT) AS ge_080,
-                CAST(SUM(CASE WHEN cos >= 0.95 THEN 1 ELSE 0 END) AS BIGINT) AS ge_095
-         FROM c WHERE cos >= 0.0""",
-    // candidate set from the dumped bucket/probe assignments; scoring and
-    // ranking re-derived in DuckDB (same list_cosine_similarity ordering
-    // contract as emb_knn_brute — the cosine itself never leaves the engine)
-    "emb_knn_lsh" ->
-      """WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings ORDER BY vec_id LIMIT 20),
-              vb AS (SELECT vec_id, bucket FROM read_parquet('{OUT}/aux_emb_buckets/*.parquet')),
-              pb AS (SELECT query_id, probe_bucket FROM read_parquet('{OUT}/aux_emb_probes/*.parquet')),
-              cand AS (SELECT DISTINCT pb.query_id, vb.vec_id
-                       FROM pb JOIN vb ON vb.bucket = pb.probe_bucket
-                       WHERE vb.vec_id <> pb.query_id),
-              scored AS (SELECT c.query_id, c.vec_id,
-                           ROW_NUMBER() OVER (PARTITION BY c.query_id
-                             ORDER BY list_cosine_similarity(q.qe, e.embedding) DESC,
-                                      c.vec_id ASC) AS rank
-                         FROM cand c JOIN q ON q.qid = c.query_id
-                                     JOIN embeddings e ON e.vec_id = c.vec_id)
-         SELECT query_id, vec_id, rank FROM scored WHERE rank <= 5""",
-    "emb_knn_ivf" ->
-      """WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings ORDER BY vec_id LIMIT 20),
-              vl AS (SELECT vec_id, list FROM read_parquet('{OUT}/aux_ivf_lists/*.parquet')),
-              pl AS (SELECT query_id, probe_list FROM read_parquet('{OUT}/aux_ivf_probes/*.parquet')),
-              cand AS (SELECT DISTINCT pl.query_id, vl.vec_id
-                       FROM pl JOIN vl ON vl.list = pl.probe_list
-                       WHERE vl.vec_id <> pl.query_id),
-              scored AS (SELECT c.query_id, c.vec_id,
-                           ROW_NUMBER() OVER (PARTITION BY c.query_id
-                             ORDER BY list_cosine_similarity(q.qe, e.embedding) DESC,
-                                      c.vec_id ASC) AS rank
-                         FROM cand c JOIN q ON q.qid = c.query_id
-                                     JOIN embeddings e ON e.vec_id = c.vec_id)
-         SELECT query_id, vec_id, rank FROM scored WHERE rank <= 5""",
-    "emb_knn_brute" ->
-      """WITH q AS (SELECT vec_id qid, embedding qe FROM embeddings ORDER BY vec_id LIMIT 20)
-         SELECT qid AS query_id, vec_id, rank FROM (
-           SELECT q.qid, e.vec_id,
-             ROW_NUMBER() OVER (PARTITION BY q.qid
-               ORDER BY list_cosine_similarity(q.qe, e.embedding) DESC, e.vec_id ASC) AS rank
-           FROM q, embeddings e WHERE e.vec_id <> q.qid) t WHERE rank <= 5""",
-    "emb_hard_negatives" ->
-      """WITH q AS (SELECT vec_id qid, embedding qe, label ql
-                    FROM embeddings ORDER BY vec_id LIMIT 20)
-         SELECT qid AS query_id, vec_id, rank FROM (
-           SELECT q.qid, e.vec_id,
-             ROW_NUMBER() OVER (PARTITION BY q.qid
-               ORDER BY list_cosine_similarity(q.qe, e.embedding) DESC, e.vec_id ASC) AS rank
-           FROM q, embeddings e
-           WHERE e.vec_id <> q.qid AND e.label <> q.ql) t WHERE rank <= 5""",
-    "emb_hard_negatives_indexed" ->
-      """WITH q AS (SELECT vec_id AS qid, embedding AS qe, label AS ql
-                    FROM embeddings ORDER BY vec_id LIMIT 20),
-              vl AS (SELECT vec_id, list FROM read_parquet('{OUT}/aux_ivf_lists/*.parquet')),
-              pl AS (SELECT query_id, probe_list FROM read_parquet('{OUT}/aux_ivf_probes/*.parquet')),
-              cand AS (SELECT DISTINCT pl.query_id, vl.vec_id
-                       FROM pl JOIN vl ON vl.list = pl.probe_list
-                       WHERE vl.vec_id <> pl.query_id),
-              scored AS (SELECT c.query_id, c.vec_id,
-                           ROW_NUMBER() OVER (PARTITION BY c.query_id
-                             ORDER BY list_cosine_similarity(q.qe, e.embedding) DESC,
-                                      c.vec_id ASC) AS rank
-                         FROM cand c JOIN q ON q.qid = c.query_id
-                                     JOIN embeddings e ON e.vec_id = c.vec_id
-                         WHERE e.label <> q.ql)
-         SELECT query_id, vec_id, rank FROM scored WHERE rank <= 5""",
-    "kg_property_table" ->
-      """SELECT page_id,
-                MAX(CASE WHEN pred_id = 1 THEN lit END) AS lang_id,
-                MAX(CASE WHEN pred_id = 2 THEN lit END) AS warc_ts_ms,
-                MAX(CASE WHEN pred_id = 3 THEN lit END) AS n_chars,
-                CAST(SUM(CASE WHEN pred_id = 4 THEN 1 ELSE 0 END) AS BIGINT) AS n_mentions
-         FROM read_parquet('{OUT}/aux_enc_triples/*.parquet')
-         GROUP BY 1""",
-    "kg_void_stats" ->
-      """SELECT pred_id,
-                CAST(COUNT(*) AS BIGINT) AS n_triples,
-                CAST(COUNT(DISTINCT page_id) AS BIGINT) AS n_subjects,
-                CAST(COUNT(DISTINCT CASE WHEN pred_id = 4 THEN CAST(ent_id AS BIGINT)
-                                         ELSE lit END) AS BIGINT) AS n_objects
-         FROM read_parquet('{OUT}/aux_enc_triples/*.parquet')
-         GROUP BY 1""",
-    "kg_comention_lift" ->
-      """WITH m AS (SELECT DISTINCT page_id, ent_id
-                    FROM read_parquet('{OUT}/aux_enc_triples/*.parquet')
-                    WHERE pred_id = 4),
-              l AS (SELECT page_id, ent_id FROM (
-                      SELECT page_id, ent_id,
-                             ROW_NUMBER() OVER (PARTITION BY page_id ORDER BY ent_id) AS rn
-                      FROM m) WHERE rn <= 64),
-              p AS (SELECT a.ent_id AS src, b.ent_id AS dst, CAST(COUNT(*) AS BIGINT) AS n_pair
-                    FROM l a JOIN l b ON a.page_id = b.page_id AND a.ent_id < b.ent_id
-                    GROUP BY 1, 2),
-              d AS (SELECT ent_id, CAST(COUNT(*) AS BIGINT) AS deg FROM l GROUP BY 1),
-              tot AS (SELECT CAST(COUNT(DISTINCT page_id) AS BIGINT) AS n_pages FROM l),
-              sc AS (SELECT p.src, p.dst, p.n_pair,
-                            ((p.n_pair * 1000000) // ds.deg) * tot.n_pages // dd.deg AS lift_micro
-                     FROM p JOIN d ds ON ds.ent_id = p.src
-                            JOIN d dd ON dd.ent_id = p.dst, tot)
-         SELECT CAST(src AS BIGINT) AS src, CAST(dst AS BIGINT) AS dst, n_pair,
-                CAST(lift_micro AS BIGINT) AS lift_micro
-         FROM sc ORDER BY lift_micro DESC, src, dst LIMIT 50""",
-    "doc_oov_rate" ->
-      """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-              vocab AS (SELECT tok FROM (SELECT tok, COUNT(*) AS cnt FROM toks GROUP BY 1)
-                        ORDER BY cnt DESC, tok LIMIT 16)
-         SELECT toks.doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-                CAST(SUM(CASE WHEN vocab.tok IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov
-         FROM toks LEFT JOIN vocab ON vocab.tok = toks.tok
-         GROUP BY 1""",
-    "kg_bgp_star" ->
-      """WITH enc AS (SELECT * FROM read_parquet('{OUT}/aux_enc_triples/*.parquet')),
-              en AS (SELECT page_id FROM enc WHERE pred_id = 1 AND lit = 0),
-              m AS (SELECT page_id, ent_id FROM enc WHERE pred_id = 4)
-         SELECT 'ent:e' || ent_id AS ent,
-                CAST(COUNT(DISTINCT m.page_id) AS BIGINT) AS n_pages
-         FROM m JOIN en USING (page_id)
-         GROUP BY 1""",
-    "kg_bgp_chain" ->
-      """WITH m AS (SELECT ent_id FROM read_parquet('{OUT}/aux_enc_triples/*.parquet')
-                    WHERE pred_id = 4),
-              e AS (SELECT ent_id, name FROM read_parquet('{OUT}/aux_entities/*.parquet'))
-         SELECT e.name, CAST(COUNT(*) AS BIGINT) AS n_mentions
-         FROM m JOIN e USING (ent_id)
-         GROUP BY 1""",
-    "kg_bgp_optional" ->
-      """WITH enc AS (SELECT * FROM read_parquet('{OUT}/aux_enc_triples/*.parquet')),
-              lp AS (SELECT page_id,
-                            CASE lit WHEN 0 THEN 'en' WHEN 1 THEN 'de' WHEN 2 THEN 'fr'
-                                     WHEN 3 THEN 'es' ELSE 'nl' END AS lang
-                     FROM enc WHERE pred_id = 1),
-              m AS (SELECT DISTINCT page_id FROM enc WHERE pred_id = 4)
-         SELECT lp.lang, CAST(COUNT(DISTINCT lp.page_id) AS BIGINT) AS n_pages,
-                CAST(COUNT(DISTINCT CASE WHEN m.page_id IS NULL
-                                         THEN lp.page_id END) AS BIGINT) AS n_no_mentions
-         FROM lp LEFT JOIN m USING (page_id)
-         GROUP BY 1""",
-    "kg_bgp_construct" ->
-      """WITH m AS (SELECT DISTINCT page_id, 'ent:e' || ent_id AS ent
-                    FROM read_parquet('{OUT}/aux_enc_triples/*.parquet')
-                    WHERE pred_id = 4)
-         SELECT DISTINCT a.ent AS subj, 'web:coMentioned' AS pred, b.ent AS obj
-         FROM m a JOIN m b ON a.page_id = b.page_id AND a.ent < b.ent""",
-    "kg_bgp_minus" ->
-      """WITH enc AS (SELECT * FROM read_parquet('{OUT}/aux_enc_triples/*.parquet')),
-              en AS (SELECT page_id FROM enc WHERE pred_id = 1 AND lit = 0),
-              m AS (SELECT page_id, ent_id FROM enc WHERE pred_id = 4)
-         SELECT 'ent:e' || ent_id AS ent,
-                CAST(COUNT(DISTINCT page_id) AS BIGINT) AS n_pages
-         FROM m
-         WHERE page_id NOT IN (SELECT page_id FROM en)
-         GROUP BY 1""",
-    "kg_forget_subjects" ->
-      """SELECT CASE pred_id WHEN 0 THEN 'rdf:type' WHEN 1 THEN 'web:lang'
-                             WHEN 2 THEN 'web:warc_ts' WHEN 3 THEN 'web:n_chars'
-                             ELSE 'web:mentions' END AS pred,
-                CAST(COUNT(*) AS BIGINT) AS n_triples
-         FROM read_parquet('{OUT}/aux_enc_triples/*.parquet')
-         WHERE page_id % 10 <> 0
-         GROUP BY 1""",
-    "kg_nquads_roundtrip" ->
-      """SELECT 'graft:seg_' || CAST(page_id // 1000 AS VARCHAR) AS graph,
-                CAST(COUNT(*) AS BIGINT) AS n_triples
-         FROM read_parquet('{OUT}/aux_enc_triples/*.parquet')
-         GROUP BY 1""",
-    "kg_mention_reified" ->
-      """WITH m AS (SELECT page_id, ent_id,
-                           lit // 4294967296 AS s0, lit % 4294967296 AS s1
-                    FROM read_parquet('{OUT}/aux_enc_triples/*.parquet')
-                    WHERE pred_id = 4),
-              d AS (SELECT page_id, url FROM read_parquet('{OUT}/aux_page_ids/*.parquet')),
-              b AS (SELECT 'graft:stmt_' || page_id || '_' || s0 || '_' || s1 AS stmt,
-                           page_id, ent_id, s0, s1 FROM m)
-         SELECT stmt, pred, obj FROM (
-           SELECT stmt, 'rdf:type' AS pred, 'rdf:Statement' AS obj FROM b
-           UNION ALL SELECT stmt, 'rdf:subject', d.url FROM b JOIN d USING (page_id)
-           UNION ALL SELECT stmt, 'rdf:predicate', 'web:mentions' FROM b
-           UNION ALL SELECT stmt, 'rdf:object', 'ent:e' || ent_id FROM b
-           UNION ALL SELECT stmt, 'web:spanStart', CAST(s0 AS VARCHAR) FROM b
-           UNION ALL SELECT stmt, 'web:spanEnd', CAST(s1 AS VARCHAR) FROM b)""",
-    "ev_hourly_gapfill" ->
-      """WITH b AS (SELECT date_trunc('hour', MIN(ts)) AS h0,
-                           date_trunc('hour', MAX(ts)) AS h1 FROM events),
-              hrs AS (SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hr FROM b),
-              c AS (SELECT date_trunc('hour', ts) AS hr, CAST(COUNT(*) AS BIGINT) AS n
-                    FROM events GROUP BY 1)
-         SELECT CAST(epoch(hrs.hr) AS BIGINT) AS hour_epoch,
-                COALESCE(c.n, 0) AS n_events
-         FROM hrs LEFT JOIN c USING (hr)""",
-    "ev_cohort_retention" ->
-      """WITH f AS (SELECT user_id, MIN(ts) AS first_ts FROM events GROUP BY 1),
-              r AS (SELECT e.user_id, CAST(f.first_ts AS DATE) AS cohort,
-                           date_diff('day', CAST(f.first_ts AS DATE), CAST(e.ts AS DATE)) AS day_offset
-                    FROM events e JOIN f ON f.user_id = e.user_id)
-         SELECT cohort, day_offset, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
-         FROM r GROUP BY 1, 2"""
-  )
 }

@@ -143,32 +143,45 @@ object KgPipeline {
     * tiny dictionary sidecars, strings only at the consumer edge. */
   def encodedTriples(spark: SparkSession, n: Long): Dataset[EncTriple] = {
     import spark.implicits._
-    // alias -> (entity dictionary id, prior), top-1 pre-resolved like
-    // Linker.resolve's broadcast map (candidates sorted best-first)
-    val aliasEnt: Map[String, Int] = PagesSynth.aliasMap.map { case (k, v) =>
-      k -> v.head._1.stripPrefix("ent:e").toInt
-    }
-    val bAlias = spark.sparkContext.broadcast(aliasEnt)
-    val bDict = spark.sparkContext.broadcast(MentionDetect.buildDictionary(PagesSynth.aliasMap.keys))
+    val bEnc = encoder(spark)
     spark.range(0, n, 1, PagesSynth.rangeParts(spark, n)).mapPartitions { it =>
-      val am = bAlias.value
-      val dict = bDict.value
+      val enc = bEnc.value
       it.flatMap { i =>
         val p = PagesSynth.pageAt(i, n).page
-        val text = TextExtract.extract(p.html)
-        val base = Iterator(
-          EncTriple(i, PredType, -1, 0L),
-          EncTriple(i, PredLang, -1, Langs.indexOf(p.lang).toLong),
-          EncTriple(i, PredWarcTs, -1, p.warc_ts.getTime),
-          EncTriple(i, PredNChars, -1, text.length.toLong))
-        val mentions = MentionDetect.detect(p.url, text, dict).iterator.flatMap { mn =>
-          am.get(mn.alias_norm).map(ent =>
-            EncTriple(i, PredMentions, ent,
-              (mn.span_start.toLong << 32) | (mn.span_end.toLong & 0xffffffffL)))
-        }
-        base ++ mentions
+        enc.page(TextExtract.extract(p.html), p.lang, p.warc_ts.getTime)(EncTriple(i, _, _, _))
       }
     }
+  }
+
+  /** The per-page encoder of both encoded paths: the alias dictionary and,
+    * by dictionary entry, its top-1 entity's dictionary id (−1 if the alias
+    * has no candidate), pre-resolved like [[Linker.best]]. */
+  private final class PageEncoder(dict: MentionDetect.Dictionary, entOf: Array[Int]) extends Serializable {
+    /** a page's rows as `row(pred_id, ent_id, lit)`: the four page rows,
+      * then one mention row per resolved scan hit, span packed
+      * (start << 32 | end) */
+    def page[R](text: String, lang: String, warcMs: Long)(row: (Int, Int, Long) => R): ArrayBuffer[R] = {
+      val out = new ArrayBuffer[R](8)
+      out += row(PredType, -1, 0L)
+      out += row(PredLang, -1, Langs.indexOf(lang).toLong)
+      out += row(PredWarcTs, -1, warcMs)
+      out += row(PredNChars, -1, text.length.toLong)
+      MentionDetect.scan(text, dict, (s, e, entry) => {
+        val ent = entOf(entry.id)
+        if (ent >= 0) out += row(PredMentions, ent, (s.toLong << 32) | (e.toLong & 0xffffffffL))
+      })
+      out
+    }
+  }
+
+  private def encoder(spark: SparkSession) = {
+    val dict = MentionDetect.buildDictionary(PagesSynth.aliasMap.keys)
+    val entId = (0 until PagesSynth.NumEntities).map(i => PagesSynth.entityIri(i) -> i).toMap
+    val entOf = dict.norms.map(Linker.best(_, PagesSynth.aliasMap) match {
+      case null => -1
+      case (iri, _) => entId(iri)
+    })
+    spark.sparkContext.broadcast(new PageEncoder(dict, entOf))
   }
 
   /** Column-level triple decode shared by the in-memory stream and the
@@ -262,26 +275,10 @@ object KgPipeline {
   def encodeExtracted(ext: Dataset[ExtractedPage], pageDict: DataFrame): Dataset[EncTriple] = {
     val spark = ext.sparkSession
     import spark.implicits._
-    val aliasEnt: Map[String, Int] = PagesSynth.aliasMap.map { case (k, v) =>
-      k -> v.head._1.stripPrefix("ent:e").toInt
-    }
-    val bAlias = spark.sparkContext.broadcast(aliasEnt)
-    val bDict = spark.sparkContext.broadcast(MentionDetect.buildDictionary(PagesSynth.aliasMap.keys))
+    val bEnc = encoder(spark)
     val rows = ext.mapPartitions { it =>
-      val am = bAlias.value
-      val dict = bDict.value
-      it.flatMap { p =>
-        val base = Iterator(
-          (p.url, PredType, -1, 0L),
-          (p.url, PredLang, -1, Langs.indexOf(p.lang).toLong),
-          (p.url, PredWarcTs, -1, p.warc_ms),
-          (p.url, PredNChars, -1, p.text.length.toLong))
-        val mentions = MentionDetect.detect(p.url, p.text, dict).iterator.flatMap { mn =>
-          am.get(mn.alias_norm).map(ent =>
-            (p.url, PredMentions, ent, (mn.span_start.toLong << 32) | (mn.span_end.toLong & 0xffffffffL)))
-        }
-        base ++ mentions
-      }
+      val enc = bEnc.value
+      it.flatMap(p => enc.page(p.text, p.lang, p.warc_ms)((p.url, _, _, _)))
     }.toDF("url", "pred_id", "ent_id", "lit")
     // LEFT join + raise_error: an inner join would silently DROP every
     // triple of a page absent from the dictionary (a genuinely new page in

@@ -34,7 +34,7 @@ class PackShardsSpec extends SparkTestBase {
   test("two-phase prefix sum is bit-identical across block sizes (incl. the flat single-block case)") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     def canon(blockSize: Long) =
-      SparkEntry.packShards(docs, cap = 4096L, blockSize = blockSize)
+      graft.contract.DocContracts.packShards(docs, cap = 4096L, blockSize = blockSize)
         .collect().map(_.toString).sorted.toSeq
     // blockSize >= corpus: one block per lang == the flat formulation;
     // tiny blocks force many offset-joined ranges through the same math

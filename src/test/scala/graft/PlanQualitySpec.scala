@@ -236,19 +236,19 @@ class PlanQualitySpec extends SparkTestBase {
   test("shuffleGlobalPos: output is block-fan invariant and the 4-hex plan holds (r7)") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     // the derived prefix keeps per-block row counts bounded
-    assert(SparkEntry.shufflePrefixLen(5000L) === 1)
-    assert(SparkEntry.shufflePrefixLen(1L << 30) === 2)
-    assert(SparkEntry.shufflePrefixLen(1L << 40, maxBlockRows = 1L << 22) === 5)
+    assert(graft.contract.DocContracts.shufflePrefixLen(5000L) === 1)
+    assert(graft.contract.DocContracts.shufflePrefixLen(1L << 30) === 2)
+    assert(graft.contract.DocContracts.shufflePrefixLen(1L << 40, maxBlockRows = 1L << 22) === 5)
     // positions are IDENTICAL at any fan — blocks are contiguous digest
     // ranges, so block rank + exclusive offset is the same total order
-    val p1 = SparkEntry.shuffleGlobalPos(docs, 1).collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-    val p2 = SparkEntry.shuffleGlobalPos(docs, 2).collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-    val p4 = SparkEntry.shuffleGlobalPos(docs, 4).collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+    val p1 = graft.contract.DocContracts.shuffleGlobalPos(docs, 1).collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+    val p2 = graft.contract.DocContracts.shuffleGlobalPos(docs, 2).collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+    val p4 = graft.contract.DocContracts.shuffleGlobalPos(docs, 4).collect().map(r => (r.getLong(0), r.getLong(1))).sorted
     assert(p1.sameElements(p2))
     assert(p1.sameElements(p4))
     // at the 4-hex fan the unpartitioned window still consumes only the
     // block-subtotal aggregate, never the document stream
-    val plan4 = SparkEntry.shuffleGlobalPos(docs, 4).queryExecution.executedPlan match {
+    val plan4 = graft.contract.DocContracts.shuffleGlobalPos(docs, 4).queryExecution.executedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
       case p => p
     }

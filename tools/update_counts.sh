@@ -19,6 +19,7 @@ total=$(grep -oE "Total number of tests run: [0-9]+" "$log" | tail -1 | grep -oE
 suites=$(grep -oE "Suites: completed [0-9]+" "$log" | tail -1 | grep -oE "[0-9]+$")
 
 counts=$(sbt -batch "runMain graft.tools.ContractCounts" 2>/dev/null | grep contract_counts)
+queries=$(echo "$counts" | grep -oE '"queries":[0-9]+' | grep -oE '[0-9]+')
 oracles=$(echo "$counts" | grep -oE '"oracles":[0-9]+' | grep -oE '[0-9]+')
 
 sed -i -E "s/\| tests \| [0-9]+ tests\+properties green \(([0-9]+ suites, )?\`sbt -batch test\`\)/| tests | $total tests+properties green ($suites suites, \`sbt -batch test\`)/" README.md
@@ -30,7 +31,7 @@ grep -q "| tests | $total tests+properties green ($suites suites" README.md \
   || { echo "ERROR: tests row not updated — README table format drifted"; exit 1; }
 grep -q "| DuckDB oracle gate | \*\*$oracles/$oracles\*\*" README.md \
   || { echo "ERROR: oracle row not updated — README table format drifted"; exit 1; }
-sed -i -E "s/Driver contract: [0-9]+ \`SparkEntry.queries\`, ALL [0-9]+/Driver contract: $oracles \`SparkEntry.queries\`, ALL $oracles/" README.md
-grep -q "Driver contract: $oracles \`SparkEntry.queries\`, ALL $oracles" README.md \
+sed -i -E "s/Driver contract: [0-9]+ \`SparkEntry.queries\`, ALL [0-9]+/Driver contract: $queries \`SparkEntry.queries\`, ALL $oracles/" README.md
+grep -q "Driver contract: $queries \`SparkEntry.queries\`, ALL $oracles" README.md \
   || { echo "ERROR: driver-contract line not updated — README format drifted"; exit 1; }
-echo "README updated: $total tests / $suites suites / $oracles oracles"
+echo "README updated: $total tests / $suites suites / $queries queries / $oracles oracles"
